@@ -685,9 +685,8 @@ object Dedup {
         // exchange reuse: the pruned copies are not canonically
         // equal). Same surviving rows; the output stays clustered by
         // fp for the downstream equi-join. The proportional branch
-        // above keeps the join shape — its distinct-carrier count has
-        // no bounded-buffer window form, and it is the non-default
-        // path.
+        // above counts distinct carriers with two stacked windows over
+        // the same one exchange.
         b0.withColumn("__c",
             count(lit(1)).over(Window.partitionBy(col("fp"))))
           .filter(col("__c") <= maxBenchFpFreq)

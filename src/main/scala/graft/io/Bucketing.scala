@@ -40,31 +40,21 @@ object Bucketing {
     * EnsureRequirements dropping it against a bucketed scan — see
     * [[compactBucketed]]'s note, both observed). The pin is scoped to
     * this one action: everything in `df`'s plan is O(input) and
-    * per-call; callers' other queries run outside it.
+    * per-call; callers' other queries run outside it. A caller that
+    * overlaps this write with other queries on its session passes a
+    * frame rebound to a cloned session (`DatasetBridge.rebindToClone`,
+    * as StreamingDedup does), so the pin lands on the clone.
     */
   def writeBucketedAligned(df: DataFrame, table: String, key: String,
-      buckets: Int, mode: String, pinConf: Boolean = true): Unit = {
-    // pinConf=false is for the ONE caller that runs this write
-    // CONCURRENTLY with other queries on the same session
-    // (StreamingDedup overlaps the append with the caller's sink):
-    // the conf pin is session-scoped, so toggling it there would race
-    // the sibling query's planning. For that caller's plan shape — a
-    // user-specified repartition over checkpoint-leaf children, no
-    // bucketed scan below — alignment was measured to hold under AQE
-    // (32 files per append); the two optimizer behaviors the pin
-    // guards against need a bucketed-scan child (EnsureRequirements
-    // elision) or a distribution-free local-read rewrite that AQE
-    // skips for user-specified repartitions.
+      buckets: Int, mode: String): Unit = {
     val sess = df.sparkSession
     val aqe = "spark.sql.adaptive.enabled"
     val abs = "spark.sql.sources.bucketing.autoBucketedScan.enabled"
     val aqeWas = sess.conf.get(aqe, "true")
     val absWas = sess.conf.get(abs, "true")
     try {
-      if (pinConf) {
-        sess.conf.set(aqe, "false")
-        sess.conf.set(abs, "false")
-      }
+      sess.conf.set(aqe, "false")
+      sess.conf.set(abs, "false")
       df.repartition(buckets, org.apache.spark.sql.functions.col(key))
         .write
         .bucketBy(buckets, key)
@@ -73,10 +63,8 @@ object Bucketing {
         .mode(mode)
         .saveAsTable(table)
     } finally {
-      if (pinConf) {
-        sess.conf.set(aqe, aqeWas)
-        sess.conf.set(abs, absWas)
-      }
+      sess.conf.set(aqe, aqeWas)
+      sess.conf.set(abs, absWas)
     }
   }
 

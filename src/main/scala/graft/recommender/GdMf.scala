@@ -17,7 +17,7 @@ import graft.encode.{Encoding, RatingStats}
   * the error is a *relation* on observed cells only (the inner join IS
   * the mask, SURVEY §1.3) and every update is join + groupBy +
   * scaled-vector-sum — O(nnz·k) work. Factor states broadcast when
-  * they fit (exact size known from the stats pass), so the epoch loop
+  * they fit (exact size known from the dimension counts), so the epoch loop
   * shuffles only post-combine gradient vectors, (n_users + n_items)·k
   * per epoch — never fact-sized rows; oversized dims degrade to
   * shuffle joins. This formulation scales to any nnz that fits a
@@ -52,12 +52,12 @@ object GdMf {
       // interval=1, 16 s at 2, 40 s at 3), so letting plans grow even
       // a little costs far more driver time than the cut jobs save.
       checkpointInterval: Int = 1,
-      // Fact-table partition count for the epoch loop. 0 (default) =
-      // auto: size by bytes (~24 B/row against 32 MB partitions,
-      // floored at 1) — local test scales get a handful of partitions
-      // instead of inheriting the global shuffle width (32 tasks over
-      // 2 MB is pure scheduler overhead), while 100 TB of facts gets
-      // thousands, same rule as files.maxPartitionBytes.
+      // Partition count of EVERY fit stage. 0 (default) = auto: bytes /
+      // 32 MB, floored at 1 — the input slice by its plan's size
+      // estimate, the facts (and the template plans' shuffles, which run
+      // outside AQE) at ~24 B/row. Local scales get 1 partition, not the
+      // session's shuffle width (32 tasks over 2 MB is pure scheduler
+      // overhead); 100 TB gets thousands, like files.maxPartitionBytes.
       factsPartitions: Int = 0,
       // Factor-state joins broadcast when the estimated state size
       // (ids × (16 + 8k) bytes) fits under this cap, which removes every
@@ -87,14 +87,18 @@ object GdMf {
       itemState: DataFrame, // item, i_factors ARRAY<DOUBLE>, i_bias
       stats: RatingStats,
       trainErrors: Seq[(Int, Metrics)],
+      private val nFactors: Int,
       // checkpoint handles backing userState/itemState (the final
       // generation's cuts, or the dim checkpoints when epochs == 0) —
       // private so release() is the only door
       private val backing: Seq[
         org.apache.spark.sql.graftbridge.DatasetBridge.FreshCheckpoint] = Nil) {
 
+    // the state sizes are known from the fit: no probe jobs at predict
     def predict(test: DataFrame): DataFrame =
-      Serving.predict(test, userState, itemState, stats)
+      Serving.predict(test, userState, itemState, stats,
+        userStateStats = Some(Serving.StateStats(stats.nUsers, nFactors)),
+        itemStateStats = Some(Serving.StateStats(stats.nItems, nFactors)))
 
     /** Drop the checkpoint blocks backing this model's states. Call when
       * the model is no longer needed — a session that fits many models
@@ -160,27 +164,34 @@ object GdMf {
   def fit(ratings: DataFrame, cfg: Config): Model = {
     val spark = ratings.sparkSession
     val orderCol = if (ratings.columns.contains("time")) "time" else "rating"
-    // ONE scan of the source: the raw ratings (often a parse-heavy scan)
-    // feed both dimension builds and the fact encode — persist the
-    // 4-column slice so the source is read once, not once per consumer.
-    val ratingsP = ratings
+    // Every stage is as wide as its data (Config.factsPartitions).
+    def width(bytes: BigInt): Int =
+      if (cfg.factsPartitions > 0) cfg.factsPartitions
+      else (bytes / (32L << 20)).max(1).min(Int.MaxValue).toInt
+    // ONE narrow scan of the source, which feeds both dimension builds
+    // and the fact encode: the 4-column slice, persisted and coalesced
+    // to its estimated size (row order kept: same dims and facts). Null
+    // user/item rows drop here, not in the inner encode joins, so the
+    // dims hold exactly the keys the facts use.
+    val slice = ratings
       .select(Seq("user", "item", "rating", orderCol).distinct.map(col): _*)
+      .where(col("user").isNotNull && col("item").isNotNull)
+    val ratingsP = slice
+      .coalesce(width(slice.queryExecution.optimizedPlan.stats.sizeInBytes))
       .persist(StorageLevel.MEMORY_AND_DISK)
-    // materializes ratingsP and sizes the fact partitioning (24 B/row
-    // encoded facts vs 32 MB target); the approximate key counts in the
-    // same pass drive the dimension-build scale switch below
+    // materializes ratingsP; yields the fact count and rating stats, and
+    // approximate key counts for the dimension-build scale switch
     val probe = ratingsP.agg(
       count(lit(1)).as("nnz"),
       approx_count_distinct(col("user")).as("au"),
       approx_count_distinct(col("item")).as("ai"),
       // key widths feed the encode-join broadcast gates below
       avg(length(col("user").cast("string"))).as("ukb"),
-      avg(length(col("item").cast("string"))).as("ikb")).head()
+      avg(length(col("item").cast("string"))).as("ikb"),
+      min(col("rating")), max(col("rating")), avg(col("rating"))).head()
     val nnz = probe.getLong(0)
     def keyBytes(i: Int): Double = if (probe.isNullAt(i)) 0.0 else probe.getDouble(i)
-    val factParts =
-      if (cfg.factsPartitions > 0) cfg.factsPartitions
-      else math.max(1L, nnz * 24L / (32L << 20)).toInt
+    val factParts = width(BigInt(nnz) * 24)
     // Checkpoint the DIMENSIONS, not the derived factor states: every
     // broadcast of a dim (the fact encode below + each epoch's state
     // broadcasts) would otherwise re-run the dimension's groupBy+window
@@ -194,19 +205,26 @@ object GdMf {
     import scala.concurrent.{Await, ExecutionContext, Future}
     import scala.concurrent.duration.Duration
     implicit val ec: ExecutionContext = ExecutionContext.global
-    // the two dimension builds are independent jobs over the shared
-    // cache — run them concurrently (finite await: a hung job must
+    // independent checkpoint jobs (the two dims here, the two initial
+    // states below) run concurrently (finite await: a hung job must
     // surface, not wedge the fit)
-    val setupTimeout = Duration(3600L, "s")
-    val (userDimCp, itemDimCp) = {
-      val u = Future(DatasetBridge.localCheckpointFresh(
-        Encoding.dimensionAuto(ratingsP, "user", orderCol, "u_id", probe.getLong(1))))
-      val i = Future(DatasetBridge.localCheckpointFresh(
-        Encoding.dimensionAuto(ratingsP, "item", orderCol, "i_id", probe.getLong(2))))
-      (Await.result(u, setupTimeout), Await.result(i, setupTimeout))
+    def both(a: => DataFrame, b: => DataFrame) = {
+      val (fa, fb) = (Future(DatasetBridge.localCheckpointFresh(a)),
+        Future(DatasetBridge.localCheckpointFresh(b)))
+      val t = Duration(3600L, "s")
+      (Await.result(fa, t), Await.result(fb, t))
     }
+    val (userDimCp, itemDimCp) = both(
+      Encoding.dimensionAuto(ratingsP, "user", orderCol, "u_id", probe.getLong(1)),
+      Encoding.dimensionAuto(ratingsP, "item", orderCol, "i_id", probe.getLong(2)))
     val userDim = userDimCp.df
     val itemDim = itemDimCp.df
+
+    // Global statistics: Encoding.ratingStats over the facts, from the
+    // passes above — the facts are the slice's rows, and the dims' row
+    // counts (from their checkpoint jobs) the distinct users and items.
+    val stats = graft.encode.RatingStats(nnz, userDimCp.rows, itemDimCp.rows,
+      probe.getDouble(5), probe.getDouble(6), probe.getDouble(7))
 
     // The fact table: encoded observed cells, hash-partitioned by u_id so
     // every user-side join/groupBy in the epoch loop reuses the
@@ -222,23 +240,8 @@ object GdMf {
       .select(col("u_id"), col("i_id"), col("rating"))
       .repartition(factParts, col("u_id"))
       .persist(StorageLevel.MEMORY_AND_DISK)
-
-    // Global statistics — same six values as
-    // Encoding.ratingStats(ratings) (the encode joins are inner on
-    // dimension tables derived from the same relation, so no row is
-    // gained or lost). This agg is ALSO the action that materializes the
-    // `facts` cache: one pass does both, no separate count() job.
-    val stats = {
-      val row = facts.agg(
-        count(lit(1)).as("n_ratings"),
-        countDistinct(col("u_id")).as("n_users"),
-        countDistinct(col("i_id")).as("n_items"),
-        min(col("rating")).as("min_rating"),
-        max(col("rating")).as("max_rating"),
-        avg(col("rating")).as("mean_rating")).head()
-      graft.encode.RatingStats(row.getLong(0), row.getLong(1), row.getLong(2),
-        row.getDouble(3), row.getDouble(4), row.getDouble(5))
-    }
+    // drop the slice once the epochs' fact cache is built (an epochs = 0 fit never reads it)
+    if (cfg.epochs > 0) facts.count()
     ratingsP.unpersist()
 
     // Initial states stay LAZY plans over the checkpointed dims: the
@@ -254,7 +257,7 @@ object GdMf {
       .withColumn("i_bias", lit(0.0))
 
     // Broadcast factor states when they fit (size known exactly from
-    // the stats pass — no reliance on planner estimates, which are
+    // the dimension counts — no reliance on planner estimates, which are
     // unavailable for localCheckpoint'd frames): the epoch loop then
     // never shuffles fact-sized data for its joins, only the tiny
     // post-combine gradient vectors.
@@ -278,13 +281,14 @@ object GdMf {
             col("i_bias") + Serving.dot(col("u_factors"), col("i_factors"))))
         .select("u_id", "i_id", "e")
 
+    // training error from one (Σ|e|, Σe²) aggregate over err
+    def errSums(err: DataFrame): DataFrame =
+      err.agg(sum(abs(col("e"))).as("sae"), sum(col("e") * col("e")).as("sse"))
+    def metrics(sae: Double, sse: Double): Metrics =
+      Metrics(sae / stats.nRatings, sse / stats.nRatings, math.sqrt(sse / stats.nRatings))
     def metricsOf(err: DataFrame): Metrics = {
-      val r = err.agg(
-        sum(abs(col("e"))).as("sae"),
-        sum(col("e") * col("e")).as("sse")).head()
-      val mae = r.getDouble(0) / stats.nRatings
-      val mse = r.getDouble(1) / stats.nRatings
-      Metrics(mae, mse, math.sqrt(mse))
+      val r = errSums(err).head()
+      metrics(r.getDouble(0), r.getDouble(1))
     }
 
     // Σᵢ e·Qᵢ and Σᵢ e per user (scaled-vector-sum UDAF: compiled
@@ -339,7 +343,6 @@ object GdMf {
     // the next cut — the cut is the materialization barrier, and
     // dropping a cache before its consumers materialize would silently
     // void it and recompute.
-    import org.apache.spark.sql.graftbridge.DatasetBridge
     val pendingErr = scala.collection.mutable.ArrayBuffer.empty[DataFrame]
     var lastCpU: Option[DatasetBridge.FreshCheckpoint] = None
     var lastCpI: Option[DatasetBridge.FreshCheckpoint] = None
@@ -398,17 +401,13 @@ object GdMf {
       // — GdMfSpec asserts exact state equality between the two paths.
       import org.apache.spark.rdd.RDD
       import org.apache.spark.sql.catalyst.InternalRow
+      import org.apache.spark.sql.catalyst.plans.logical.LogicalPlan
       import org.apache.spark.sql.graftbridge.PlanTemplate
       import org.apache.spark.sql.graftbridge.PlanTemplate.Bind
 
       // materialize the initial states once (the legacy loop does this
-      // through epoch 0's cut instead) — two independent jobs, run
-      // concurrently like the dim builds
-      var (uCp, iCp) = {
-        val u = Future(DatasetBridge.localCheckpointFresh(uState))
-        val i = Future(DatasetBridge.localCheckpointFresh(iState))
-        (Await.result(u, setupTimeout), Await.result(i, setupTimeout))
-      }
+      // through epoch 0's cut instead)
+      var (uCp, iCp) = both(uState, iState)
 
       def nullable(s: org.apache.spark.sql.types.StructType) =
         org.apache.spark.sql.types.StructType(s.fields.map(_.copy(nullable = true)))
@@ -435,9 +434,7 @@ object GdMf {
         Templates(
           uLeaf, iLeaf, errLeaf, factsLeaf,
           tErr = PlanTemplate.template(errProto),
-          tMetrics = PlanTemplate.template(
-            errLeaf.agg(sum(abs(col("e"))).as("sae"),
-              sum(col("e") * col("e")).as("sse"))),
+          tMetrics = PlanTemplate.template(errSums(errLeaf)),
           tU = PlanTemplate.template(
             updated(uLeaf, userGrad(errLeaf, iLeaf), "u_id", "u_factors",
               "u_bias", stats.nItems, bcastU).select(uCols: _*)),
@@ -454,9 +451,11 @@ object GdMf {
         Bind(factsLeaf, facts.queryExecution.toRdd,
           hashPartCols = Seq("u_id"), numPartitions = factParts)
 
+      // every exchange in the template plans is as wide as the facts
+      def plan(t: LogicalPlan, binds: Bind*) =
+        PlanTemplate.instantiate(spark, t, binds, factParts)
       def errOf(u: RDD[InternalRow], i: RDD[InternalRow]): RDD[InternalRow] =
-        PlanTemplate.runToRdd(PlanTemplate.instantiate(spark, tErr,
-          Seq(factsBind, Bind(uLeaf, u), Bind(iLeaf, i))))
+        PlanTemplate.runToRdd(plan(tErr, factsBind, Bind(uLeaf, u), Bind(iLeaf, i)))
           // released: every errOf result is unpersisted by the epoch loop below
           .persist(StorageLevel.MEMORY_AND_DISK)
       // the err rows inherit the facts' hash(u_id) partitioning
@@ -466,28 +465,29 @@ object GdMf {
       def bindErr(err: RDD[InternalRow]): Bind =
         Bind(errLeaf, err, hashPartCols = Seq("u_id"))
       def metricsOfRdd(err: RDD[InternalRow]): Metrics = {
-        val row = PlanTemplate.collectRows(PlanTemplate.instantiate(
-          spark, tMetrics, Seq(Bind(errLeaf, err)))).head
-        val mae = row.getDouble(0) / stats.nRatings
-        val mse = row.getDouble(1) / stats.nRatings
-        Metrics(mae, mse, math.sqrt(mse))
+        val row = PlanTemplate.collectRows(plan(tMetrics, Bind(errLeaf, err))).head
+        metrics(row.getDouble(0), row.getDouble(1))
       }
-      def advance(uNew: RDD[InternalRow], iNew: RDD[InternalRow]): Unit = {
+      // one side's update, cut: tU over (uLeaf, iLeaf, err), tI likewise
+      def step(t: LogicalPlan, leaf: DataFrame, binds: Bind*) =
+        DatasetBridge.checkpointRows(spark,
+          PlanTemplate.runToRdd(plan(t, binds: _*)), leaf.schema)
+      def advance(uNew: DatasetBridge.FreshCheckpoint,
+          iNew: DatasetBridge.FreshCheckpoint): Unit = {
         uCp.release(); iCp.release()
-        uCp = PlanTemplate.asFreshCheckpoint(spark, uNew, uLeaf.schema)
-        iCp = PlanTemplate.asFreshCheckpoint(spark, iNew, iLeaf.schema)
+        uCp = uNew; iCp = iNew
       }
 
       if (cfg.alternating) {
         var err = errOf(uCp.rdd, iCp.rdd)
         for (epoch <- 0 until cfg.epochs) {
           if (cfg.collectErrors) history += ((epoch, metricsOfRdd(err)))
-          val uNew = PlanTemplate.runToCheckpoint(PlanTemplate.instantiate(
-            spark, tU, Seq(Bind(uLeaf, uCp.rdd), Bind(iLeaf, iCp.rdd), bindErr(err))))
-          val err1 = errOf(uNew, iCp.rdd)
-          val iNew = PlanTemplate.runToCheckpoint(PlanTemplate.instantiate(
-            spark, tI, Seq(Bind(iLeaf, iCp.rdd), Bind(uLeaf, uNew), bindErr(err1))))
-          val err2 = errOf(uNew, iNew) // lazy; consumed next epoch
+          val uNew = step(tU, uLeaf,
+            Bind(uLeaf, uCp.rdd), Bind(iLeaf, iCp.rdd), bindErr(err))
+          val err1 = errOf(uNew.rdd, iCp.rdd)
+          val iNew = step(tI, iLeaf,
+            Bind(iLeaf, iCp.rdd), Bind(uLeaf, uNew.rdd), bindErr(err1))
+          val err2 = errOf(uNew.rdd, iNew.rdd) // lazy; consumed next epoch
           err.unpersist(blocking = false)
           err1.unpersist(blocking = false)
           advance(uNew, iNew)
@@ -498,12 +498,12 @@ object GdMf {
         for (epoch <- 0 until cfg.epochs) {
           val err = errOf(uCp.rdd, iCp.rdd)
           if (cfg.collectErrors) history += ((epoch, metricsOfRdd(err)))
-          val uNew = PlanTemplate.runToCheckpoint(PlanTemplate.instantiate(
-            spark, tU, Seq(Bind(uLeaf, uCp.rdd), Bind(iLeaf, iCp.rdd), bindErr(err))))
+          val uNew = step(tU, uLeaf,
+            Bind(uLeaf, uCp.rdd), Bind(iLeaf, iCp.rdd), bindErr(err))
           // trap 2 holds: tI joins the epoch error against the NEW user
           // factors (uLeaf re-bound to the fresh checkpoint)
-          val iNew = PlanTemplate.runToCheckpoint(PlanTemplate.instantiate(
-            spark, tI, Seq(Bind(iLeaf, iCp.rdd), Bind(uLeaf, uNew), bindErr(err))))
+          val iNew = step(tI, iLeaf,
+            Bind(iLeaf, iCp.rdd), Bind(uLeaf, uNew.rdd), bindErr(err))
           err.unpersist(blocking = false)
           advance(uNew, iNew)
         }
@@ -564,6 +564,7 @@ object GdMf {
         col("i_factors"), col("i_bias")),
       stats = stats,
       trainErrors = history.toSeq,
+      nFactors = cfg.nFactors,
       backing = backing)
   }
 }

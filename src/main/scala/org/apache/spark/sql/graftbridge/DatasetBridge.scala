@@ -1,8 +1,9 @@
 package org.apache.spark.sql.graftbridge
 
 import org.apache.spark.rdd.RDD
-import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.catalyst.InternalRow
+import org.apache.spark.sql.types.StructType
 
 /** Stats-free eager local checkpoint.
   *
@@ -28,7 +29,8 @@ import org.apache.spark.sql.catalyst.InternalRow
   */
 object DatasetBridge {
 
-  final case class FreshCheckpoint(df: DataFrame, rdd: RDD[InternalRow]) {
+  // rows: the count the materializing job returned
+  final case class FreshCheckpoint(df: DataFrame, rdd: RDD[InternalRow], rows: Long) {
     /** Drop the checkpointed blocks (old epochs' state). Non-blocking. */
     def release(): Unit = rdd.unpersist(blocking = false)
   }
@@ -55,12 +57,17 @@ object DatasetBridge {
       .asInstanceOf[org.apache.spark.sql.classic.SparkSession]
       .cloneSession())
 
-  def localCheckpointFresh(df: DataFrame): FreshCheckpoint = {
-    val spark = df.sparkSession.asInstanceOf[org.apache.spark.sql.classic.SparkSession]
-    val rdd = df.queryExecution.toRdd.map(_.copy())
+  def localCheckpointFresh(df: DataFrame): FreshCheckpoint =
+    checkpointRows(df.sparkSession, df.queryExecution.toRdd.map(_.copy()), df.schema)
+
+  /** [[localCheckpointFresh]]'s cut of rows already produced as an RDD
+    * of `schema` (e.g. by an instantiated [[PlanTemplate]]). */
+  def checkpointRows(spark: SparkSession, rdd: RDD[InternalRow],
+      schema: StructType): FreshCheckpoint = {
     rdd.localCheckpoint()
-    rdd.count() // eager: materialize the cut now, like localCheckpoint(true)
-    FreshCheckpoint(spark.internalCreateDataFrame(rdd, df.schema), rdd)
+    val rows = rdd.count() // eager: materialize the cut now, like localCheckpoint(true)
+    FreshCheckpoint(spark.asInstanceOf[org.apache.spark.sql.classic.SparkSession]
+      .internalCreateDataFrame(rdd, schema), rdd, rows)
   }
 
   /** [[localCheckpointFresh]] whose materialization action ALSO returns
@@ -103,7 +110,7 @@ object DatasetBridge {
     }.collect().foldLeft((0L, 0L)) { case ((c1, x1), (c2, x2)) =>
       (c1 + c2, x1 ^ x2)
     }
-    (FreshCheckpoint(spark.internalCreateDataFrame(rdd, df.schema), rdd),
+    (FreshCheckpoint(spark.internalCreateDataFrame(rdd, df.schema), rdd, cnt),
       (cnt, xor))
   }
 }

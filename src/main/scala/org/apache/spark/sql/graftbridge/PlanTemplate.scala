@@ -8,6 +8,7 @@ import org.apache.spark.sql.catalyst.plans.logical.LogicalPlan
 import org.apache.spark.sql.catalyst.plans.physical.{HashPartitioning, UnknownPartitioning}
 import org.apache.spark.sql.catalyst.types.DataTypeUtils
 import org.apache.spark.sql.execution.{LogicalRDD, QueryExecution, SparkPlan}
+import org.apache.spark.sql.internal.SQLConf
 import org.apache.spark.sql.types.StructType
 
 /** Compiled-plan templates for iterative loops.
@@ -33,7 +34,9 @@ import org.apache.spark.sql.types.StructType
   * The optimized template must make its own join strategies explicit
   * (broadcast hints): substituted leaves carry default (huge) stats, so
   * nothing auto-broadcasts — the same contract as
-  * [[DatasetBridge.localCheckpointFresh]].
+  * [[DatasetBridge.localCheckpointFresh]]. Instantiated plans also run
+  * WITHOUT AQE, so no shuffle in them is ever coalesced: the caller
+  * gives their shuffle width, sized to its data, at [[instantiate]].
   */
 object PlanTemplate {
 
@@ -78,10 +81,11 @@ object PlanTemplate {
   def template(df: DataFrame): LogicalPlan = df.queryExecution.optimizedPlan
 
   /** Substitute bound leaves into `template` and produce an executable
-    * physical plan WITHOUT re-running analysis or optimization.
+    * physical plan WITHOUT re-running analysis or optimization; every
+    * exchange the planner inserts is `shufflePartitions` wide.
     */
   def instantiate(spark: SparkSession, template: LogicalPlan,
-      binds: Seq[Bind]): SparkPlan = {
+      binds: Seq[Bind], shufflePartitions: Int): SparkPlan = {
     val s = classic(spark)
     val byKey = binds.map(b => keyOf(b.leaf) -> b).toMap
     var seen = 0
@@ -100,7 +104,14 @@ object PlanTemplate {
     }
     require(seen == binds.size,
       s"only $seen of ${binds.size} leaves found in template — key mismatch")
-    s.withActive { QueryExecution.prepareExecutedPlan(s, substituted) }
+    // the width is read through SQLConf.get while planning: give this
+    // thread a private copy of the conf so the shared session's
+    // spark.sql.shuffle.partitions is never written
+    val conf = s.sessionState.conf.clone()
+    conf.setConf(SQLConf.SHUFFLE_PARTITIONS, shufflePartitions)
+    conf.unsetConf(SQLConf.COALESCE_PARTITIONS_INITIAL_PARTITION_NUM)
+    s.withActive(SQLConf.withExistingConf(conf)(
+      QueryExecution.prepareExecutedPlan(s, substituted)))
   }
 
   /** Run an instantiated plan to a fresh RDD (rows copied out of the
@@ -109,26 +120,6 @@ object PlanTemplate {
   def runToRdd(plan: SparkPlan): RDD[InternalRow] =
     plan.execute().map(_.copy())
 
-  /** Run an instantiated plan into an eager local checkpoint —
-    * releasable, lineage-free; the template-loop analog of
-    * [[DatasetBridge.localCheckpointFresh]].
-    */
-  def runToCheckpoint(plan: SparkPlan): RDD[InternalRow] = {
-    val rdd = runToRdd(plan)
-    rdd.localCheckpoint()
-    rdd.count()
-    rdd
-  }
-
   /** Collect an instantiated (small!) plan's rows on the driver. */
   def collectRows(plan: SparkPlan): Array[InternalRow] = plan.executeCollect()
-
-  /** Wrap a checkpointed RDD produced by [[runToCheckpoint]] back into
-    * a DataFrame + releasable handle (same contract as
-    * `DatasetBridge.localCheckpointFresh`).
-    */
-  def asFreshCheckpoint(spark: SparkSession, rdd: RDD[InternalRow],
-      schema: StructType): DatasetBridge.FreshCheckpoint =
-    DatasetBridge.FreshCheckpoint(
-      classic(spark).internalCreateDataFrame(rdd, schema), rdd)
 }

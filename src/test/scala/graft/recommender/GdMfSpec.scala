@@ -21,6 +21,37 @@ class GdMfSpec extends SparkSpec {
     } yield Rating(s"u$u", s"i$i", (u % 3) + (i % 2) + 1.0, (u * 5 + i).toLong)
   }
 
+  /** `df` cached as 32 partitions and counted — the shape a persisted
+    * `Pipelines.prepare` split hands the fit at a 32-wide session.
+    */
+  private def cached32(df: org.apache.spark.sql.DataFrame) = {
+    val c = df.repartition(32).persist()
+    c.count()
+    c
+  }
+
+  /** Tasks per submitted stage and the job count of `f`'s jobs. */
+  private def shapeOf[T](f: => T): (T, Seq[Int], Int) = {
+    import org.apache.spark.scheduler._
+    import org.apache.spark.sql.graftbridge.ListenerBridge
+    val sc = spark.sparkContext
+    val stages = new java.util.concurrent.ConcurrentLinkedQueue[Int]()
+    val jobs = new java.util.concurrent.atomic.AtomicInteger()
+    val l = new SparkListener {
+      override def onJobStart(j: SparkListenerJobStart): Unit = jobs.incrementAndGet()
+      override def onStageSubmitted(st: SparkListenerStageSubmitted): Unit =
+        stages.add(st.stageInfo.numTasks)
+    }
+    ListenerBridge.waitUntilListenerBusEmpty(sc)
+    sc.addSparkListener(l)
+    try {
+      val r = f
+      ListenerBridge.waitUntilListenerBusEmpty(sc)
+      import scala.jdk.CollectionConverters._
+      (r, stages.asScala.toSeq, jobs.get())
+    } finally sc.removeSparkListener(l)
+  }
+
   private def state(df: org.apache.spark.sql.DataFrame, idCol: String,
       fCol: String, bCol: String): Map[String, (Array[Double], Double)] =
     df.select(idCol, fCol, bCol).collect()
@@ -184,11 +215,13 @@ class GdMfSpec extends SparkSpec {
     val cells = for {
       u <- 0 until 25; i <- 0 until 15 if rnd.nextDouble() < 0.4
     } yield Rating(s"u$u", s"i$i", 1.0 + rnd.nextInt(5), (u * 100 + i).toLong)
-    for (alternating <- Seq(false, true)) {
+    // the wide cached input takes the coalesced input pass
+    val wide = cached32(cells.toDF)
+    for (input <- Seq(cells.toDF, wide); alternating <- Seq(false, true)) {
       val base = GdMf.Config(nFactors = 3, epochs = 4, lr = 0.01, reg = 0.01,
         alternating = alternating, collectErrors = true)
-      val templ = GdMf.fit(cells.toDF, base.copy(planTemplates = true))
-      val legacy = GdMf.fit(cells.toDF, base.copy(planTemplates = false))
+      val templ = GdMf.fit(input, base.copy(planTemplates = true))
+      val legacy = GdMf.fit(input, base.copy(planTemplates = false))
       def states(m: GdMf.Model): (Seq[(String, Seq[Double], Double)], Seq[(String, Seq[Double], Double)]) = (
         m.userState.as[(String, Seq[Double], Double)].collect().sortBy(_._1).toSeq,
         m.itemState.as[(String, Seq[Double], Double)].collect().sortBy(_._1).toSeq)
@@ -198,6 +231,56 @@ class GdMfSpec extends SparkSpec {
         s"history divergence (alternating=$alternating)")
       templ.release(); legacy.release()
     }
+    wide.unpersist()
+  }
+
+  test("every fit stage is as wide as the data; a setup-only fit is a few jobs") {
+    // a few thousand ratings, 1 partition by the 32 MB rule, handed over
+    // 32 partitions wide: no stage may run the input's or the session's
+    // shuffle width, and no separate stats job may come back
+    val rnd = new scala.util.Random(3)
+    val cells = for {
+      u <- 0 until 200; i <- 0 until 60 if rnd.nextDouble() < 0.25
+    } yield Rating(s"u$u", s"i$i", 1.0 + rnd.nextInt(5), (u * 100 + i).toLong)
+    assert(cells.size > 2000)
+    val df = cached32(cells.toDF)
+    val widthWas = spark.conf.get("spark.sql.shuffle.partitions")
+    for (alternating <- Seq(false, true)) {
+      val (m, stages, _) = shapeOf(GdMf.fit(df, GdMf.Config(nFactors = 4,
+        epochs = 2, alternating = alternating)))
+      assert(stages.nonEmpty && stages.forall(_ <= 1),
+        s"stage widths $stages (alternating=$alternating)")
+      m.release()
+    }
+    val (m0, _, jobs) = shapeOf(GdMf.fit(df, GdMf.Config(nFactors = 4, epochs = 0)))
+    assert(jobs <= 4, s"an epochs = 0 fit ran $jobs jobs")
+    m0.release()
+    assert(spark.conf.get("spark.sql.shuffle.partitions") === widthWas)
+    df.unpersist()
+  }
+
+  test("fit stats equal ratingStats over the encoded facts (duplicates, null keys and ratings)") {
+    import graft.encode.Encoding
+    val raw = Seq[(String, String, Option[Double], Long)](
+      ("u1", "i1", Some(4.0), 1L), ("u1", "i1", Some(4.0), 1L), // exact duplicate
+      ("u2", "i1", Some(2.0), 2L), ("u2", "i2", None, 3L), // null rating
+      (null, "i2", Some(5.0), 4L), // null user
+      ("u3", null, Some(1.0), 5L), // null item; u3 has no other rating
+      ("u4", "i3", Some(3.0), 6L), ("u1", "i3", Some(2.5), 7L))
+      .toDF("user", "item", "rating", "time")
+    val df = cached32(raw)
+    val facts = Encoding.encode(df, Encoding.dimension(df, "user", "time", "u_id"),
+      Encoding.dimension(df, "item", "time", "i_id"))
+    def six(s: graft.encode.RatingStats) =
+      (s.nRatings, s.nUsers, s.nItems, s.minRating, s.maxRating, s.meanRating)
+    val m = GdMf.fit(df, GdMf.Config(nFactors = 2, epochs = 0))
+    assert(six(m.stats) === six(Encoding.ratingStats(facts)))
+    assert(six(m.stats) === ((6L, 3L, 3L, 2.0, 4.0, 3.1)))
+    // the states hold exactly the counted ids
+    assert(m.userState.count() === m.stats.nUsers)
+    assert(m.itemState.count() === m.stats.nItems)
+    m.release()
+    df.unpersist()
   }
 
   test("Model.release drops the backing checkpoint blocks") {
