@@ -45,37 +45,26 @@ object GdMf {
       seed: Long = 42L,
       alternating: Boolean = false, // false = FunkSVD, true = ALS-GD
       collectErrors: Boolean = false,
-      // localCheckpoint cadence. 1 (default) = cut lineage every epoch:
-      // measured to dominate — Catalyst's analysis/optimization time on
-      // the epoch plan (nested joins + lambda-bearing aggregates) grows
-      // superlinearly with depth (sf0.1 k=30 6-epoch fit: 9.0 s at
-      // interval=1, 16 s at 2, 40 s at 3), so letting plans grow even
-      // a little costs far more driver time than the cut jobs save.
-      checkpointInterval: Int = 1,
       // Partition count of EVERY fit stage. 0 (default) = auto: bytes /
       // 32 MB, floored at 1 — the input slice by its plan's size
       // estimate, the facts (and the template plans' shuffles, which run
       // outside AQE) at ~24 B/row. Local scales get 1 partition, not the
       // session's shuffle width (32 tasks over 2 MB is pure scheduler
       // overhead); 100 TB gets thousands, like files.maxPartitionBytes.
+      // With a low autoBroadcastDimBytes it reaches, at test scale, the
+      // multi-partition shuffle-join plans that large inputs pick — the
+      // regime where the error rows' declared partitioning follows bcastI.
       factsPartitions: Int = 0,
       // Factor-state joins broadcast when the estimated state size
       // (ids × (16 + 8k) bytes) fits under this cap, which removes every
       // fact-sized shuffle from the epoch loop. Above the cap (dims too
       // big for executor memory — the regime where MLlib ALS's block
       // formulation is the right tool anyway) the joins fall back to
-      // shuffle hash/sort-merge automatically.
-      autoBroadcastDimBytes: Long = 64L << 20,
-      // Compile the epoch body ONCE and re-execute it with substituted
-      // leaf RDDs each epoch (graftbridge.PlanTemplate) instead of
-      // rebuilding the DataFrame graph per epoch: Catalyst
-      // analyze+optimize on the lambda-bearing epoch plan measured
-      // ~0.4 s/epoch at sf0.1 — ~40% of epoch wall — and the template
-      // path pays it once per fit. Identical model to the legacy loop
-      // (GdMfSpec asserts exact equality). Applies when
-      // checkpointInterval == 1 (the measured-optimal default); other
-      // intervals use the legacy loop.
-      planTemplates: Boolean = true)
+      // shuffle hash/sort-merge automatically. The persisted error rows
+      // keep the facts' hash(u_id) partitioning only while the item
+      // state broadcasts; a shuffled item join leaves them hashed on
+      // i_id, and the epoch loop declares them unpartitioned.
+      autoBroadcastDimBytes: Long = 64L << 20)
 
   /** Trained model: distributed per-id state, driver-side scalars, and
     * the optional per-epoch training-error history (reference
@@ -270,8 +259,7 @@ object GdMf {
     // err(u_id, i_id, e) on observed cells only — NARROW: the factor
     // vectors are re-joined where a consumer needs them, so the
     // per-epoch cache/shuffle rows are 24 bytes, not 2·k doubles wide.
-    // The fact relation is a parameter so the template path can build
-    // the same plan over a placeholder leaf.
+    // Built once, over the template's placeholder leaves.
     def errRelOn(f: DataFrame, u: DataFrame, i: DataFrame): DataFrame =
       f
         .join(bu(u.select("u_id", "u_factors", "u_bias")), "u_id")
@@ -286,10 +274,6 @@ object GdMf {
       err.agg(sum(abs(col("e"))).as("sae"), sum(col("e") * col("e")).as("sse"))
     def metrics(sae: Double, sse: Double): Metrics =
       Metrics(sae / stats.nRatings, sse / stats.nRatings, math.sqrt(sse / stats.nRatings))
-    def metricsOf(err: DataFrame): Metrics = {
-      val r = errSums(err).head()
-      metrics(r.getDouble(0), r.getDouble(1))
-    }
 
     // Σᵢ e·Qᵢ and Σᵢ e per user (scaled-vector-sum UDAF: compiled
     // multiply-accumulate, map-side combine — one k-vector per
@@ -327,86 +311,33 @@ object GdMf {
         .drop("fgrad", "esum")
 
     val history = scala.collection.mutable.ArrayBuffer.empty[(Int, Metrics)]
+    // an epochs = 0 fit keeps the lazy init states over the dim
+    // checkpoints, which must then stay resident for the Model's life
+    var backing = Seq(userDimCp, itemDimCp)
 
-    // Lineage management (SURVEY §4.1): checkpoint every
-    // checkpointInterval epochs (and on the final one); between cuts
-    // the states stay lazy plans over the last checkpoint. Cuts use
-    // DatasetBridge.localCheckpointFresh, NOT Dataset.localCheckpoint:
-    // Spark 4's localCheckpoint copies the cut plan's ESTIMATED
-    // STATISTICS into the replacement leaf, and in an iterative loop
-    // that estimate compounds geometrically epoch over epoch (each
-    // epoch's size estimate is a product involving the last epoch's) —
-    // by ~epoch 16 Catalyst spends minutes in BigInteger.multiply
-    // inside the stats visitor. Fresh leaves take default stats; every
-    // join in the loop is explicitly broadcast-hinted, so the planner
-    // loses nothing. Persisted error relations are unpersisted only AT
-    // the next cut — the cut is the materialization barrier, and
-    // dropping a cache before its consumers materialize would silently
-    // void it and recompute.
-    val pendingErr = scala.collection.mutable.ArrayBuffer.empty[DataFrame]
-    var lastCpU: Option[DatasetBridge.FreshCheckpoint] = None
-    var lastCpI: Option[DatasetBridge.FreshCheckpoint] = None
-    var prevU: Option[DatasetBridge.FreshCheckpoint] = None
-    def persistErr(df: DataFrame): DataFrame = {
-      // released: drained by pendingErr.foreach(_.unpersist()) at the
-      // checkpoint cuts and at trainer exit
-      val p = df.persist(StorageLevel.MEMORY_AND_DISK)
-      pendingErr += p
-      p
-    }
-    def cutting(epoch: Int): Boolean =
-      (epoch + 1) % math.max(cfg.checkpointInterval, 1) == 0 ||
-        epoch == cfg.epochs - 1
-    // The ORDER of cuts matters: the item-side plan references the new
-    // user state, so the user side is checkpointed FIRST and the item
-    // side derived from the checkpointed frame — otherwise the item
-    // cut's job silently re-executes the whole user-side update
-    // (gradient aggregation + join) a second time (measured ~2× epoch
-    // cost before this ordering).
-    //
-    // Releases are deferred to the END of cutI: until the item cut has
-    // materialized, the (possibly uncut, interval > 1) item-side chain
-    // and the persisted error relations can still recompute through the
-    // PREVIOUS generation's checkpoint RDDs, whose lineage is truncated
-    // — releasing them any earlier throws
-    // CHECKPOINT_RDD_BLOCK_ID_NOT_FOUND (hit at interval=2). After
-    // cutI, both live states and the next epoch's errors reference only
-    // the new generation.
-    def cutU(epoch: Int, u: DataFrame): DataFrame =
-      if (cutting(epoch)) {
-        val cu = DatasetBridge.localCheckpointFresh(u) // eager cut
-        prevU = lastCpU
-        lastCpU = Some(cu)
-        cu.df
-      } else u
-    def cutI(epoch: Int, i: DataFrame): DataFrame =
-      if (cutting(epoch)) {
-        val ci = DatasetBridge.localCheckpointFresh(i)
-        prevU.foreach(_.release())
-        prevU = None
-        lastCpI.foreach(_.release())
-        lastCpI = Some(ci)
-        pendingErr.foreach(_.unpersist())
-        pendingErr.clear()
-        ci.df
-      } else i
-
-    val useTemplates =
-      cfg.planTemplates && cfg.checkpointInterval <= 1 && cfg.epochs > 0
-    if (useTemplates) {
+    if (cfg.epochs > 0) {
       // Template loop: the epoch body is analyzed+optimized ONCE against
       // placeholder leaves; each epoch substitutes the current
       // generation's RDDs and pays physical planning only (codegen is
-      // cached by source). Semantics identical to the legacy loop below
-      // — GdMfSpec asserts exact state equality between the two paths.
+      // cached by source). GdMfSpec checks it against a naive driver-side
+      // reference in every broadcast regime.
+      //
+      // Lineage (SURVEY §4.1) is cut every epoch, user side FIRST: the
+      // item-side plan reads the new user state, and binding it to the
+      // fresh checkpoint keeps the item job from re-running the user
+      // update. Cuts are fresh checkpoints (DatasetBridge), not
+      // Dataset.localCheckpoint: Spark 4's copies the cut plan's
+      // estimated statistics into the new leaf, and in an iterative loop
+      // that estimate compounds until Catalyst spends minutes in
+      // BigInteger.multiply. Every state join is explicitly
+      // broadcast-gated, so the default leaf stats lose nothing.
       import org.apache.spark.rdd.RDD
       import org.apache.spark.sql.catalyst.InternalRow
       import org.apache.spark.sql.catalyst.plans.logical.LogicalPlan
       import org.apache.spark.sql.graftbridge.PlanTemplate
       import org.apache.spark.sql.graftbridge.PlanTemplate.Bind
 
-      // materialize the initial states once (the legacy loop does this
-      // through epoch 0's cut instead)
+      // materialize the initial states once
       var (uCp, iCp) = both(uState, iState)
 
       def nullable(s: org.apache.spark.sql.types.StructType) =
@@ -458,12 +389,12 @@ object GdMf {
         PlanTemplate.runToRdd(plan(tErr, factsBind, Bind(uLeaf, u), Bind(iLeaf, i)))
           // released: every errOf result is unpersisted by the epoch loop below
           .persist(StorageLevel.MEMORY_AND_DISK)
-      // the err rows inherit the facts' hash(u_id) partitioning
-      // (broadcast joins preserve the streamed side); declaring it on
-      // the bound leaf lets the user-side aggregation skip its exchange,
-      // exactly like the legacy loop's persisted err frame does
+      // the err rows keep the facts' hash(u_id) partitioning only when
+      // the item join broadcasts (it preserves the streamed side), and
+      // declaring it then lets the user-side aggregation skip its
+      // exchange; a shuffled item join leaves them hashed on i_id
       def bindErr(err: RDD[InternalRow]): Bind =
-        Bind(errLeaf, err, hashPartCols = Seq("u_id"))
+        Bind(errLeaf, err, hashPartCols = if (bcastI) Seq("u_id") else Nil)
       def metricsOfRdd(err: RDD[InternalRow]): Metrics = {
         val row = PlanTemplate.collectRows(plan(tMetrics, Bind(errLeaf, err))).head
         metrics(row.getDouble(0), row.getDouble(1))
@@ -479,6 +410,8 @@ object GdMf {
       }
 
       if (cfg.alternating) {
+        // ALS-GD (reference models/als.py:158-174): the epoch-start error
+        // is the previous epoch's final one; metrics are pre-update
         var err = errOf(uCp.rdd, iCp.rdd)
         for (epoch <- 0 until cfg.epochs) {
           if (cfg.collectErrors) history += ((epoch, metricsOfRdd(err)))
@@ -495,6 +428,8 @@ object GdMf {
         }
         err.unpersist(blocking = false)
       } else {
+        // FunkSVD (reference models/funk_svd.py:157-170): ONE error per
+        // epoch, shared by both sides' updates
         for (epoch <- 0 until cfg.epochs) {
           val err = errOf(uCp.rdd, iCp.rdd)
           if (cfg.collectErrors) history += ((epoch, metricsOfRdd(err)))
@@ -510,53 +445,12 @@ object GdMf {
       }
       uState = uCp.df
       iState = iCp.df
-      lastCpU = Some(uCp)
-      lastCpI = Some(iCp)
-    } else if (cfg.alternating) {
-      // ALS-GD (reference models/als.py:158-174): error at epoch start is
-      // the previous epoch's final error; metrics recorded pre-update.
-      var err = persistErr(errRelOn(facts, uState, iState))
-      for (epoch <- 0 until cfg.epochs) {
-        if (cfg.collectErrors) history += ((epoch, metricsOf(err)))
-        uState = cutU(epoch,
-          updated(uState, userGrad(err, iState), "u_id", "u_factors", "u_bias", stats.nItems, bcastU))
-        val err1 = persistErr(errRelOn(facts, uState, iState))
-        iState = cutI(epoch,
-          updated(iState, itemGrad(err1, uState), "i_id", "i_factors", "i_bias", stats.nUsers, bcastI))
-        err = persistErr(errRelOn(facts, uState, iState))
-      }
-      err.unpersist()
-    } else {
-      // FunkSVD (reference models/funk_svd.py:157-170): ONE error per
-      // epoch; item-side factor gradient uses the UPDATED user factors
-      // (trap 2); biases both update from the shared epoch error.
-      for (epoch <- 0 until cfg.epochs) {
-        val err = persistErr(errRelOn(facts, uState, iState))
-        if (cfg.collectErrors) history += ((epoch, metricsOf(err)))
-        uState = cutU(epoch,
-          updated(uState, userGrad(err, iState), "u_id", "u_factors", "u_bias", stats.nItems, bcastU))
-        // trap 2: item grad joins the epoch error against the NEW user
-        // factors (checkpointed, so this job doesn't redo the user side)
-        iState = cutI(epoch,
-          updated(iState, itemGrad(err, uState), "i_id", "i_factors", "i_bias", stats.nUsers, bcastI))
-      }
-    }
-    pendingErr.foreach(_.unpersist())
-    pendingErr.clear()
-
-    facts.unpersist()
-    if (cfg.epochs > 0) {
-      // the final states are checkpointed by the last epoch's cut and no
-      // longer reference the dims; with epochs=0 the lazy init states
-      // still do, so the dims must stay resident for the Model's life.
+      // the final states no longer reference the dims
       userDimCp.release()
       itemDimCp.release()
+      backing = Seq(uCp, iCp)
     }
-    // what the Model's release() must drop: the last generation's cuts
-    // when the loop ran, the dim checkpoints when it didn't
-    val backing =
-      if (cfg.epochs > 0) Seq(lastCpU, lastCpI).flatten
-      else Seq(userDimCp, itemDimCp)
+    facts.unpersist()
     Model(
       userState = uState.select(col("user"),
         col("u_factors"), col("u_bias")),

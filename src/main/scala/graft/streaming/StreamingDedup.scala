@@ -225,15 +225,26 @@ object StreamingDedup {
           // as sequential: a failure of either side replays the batch,
           // the probe's batch_id guard reproduces the verdicts, and
           // the fold's no-owner rule suppresses duplicate re-appends.
-          val appendF = scala.concurrent.Future(
+          // A failing sink still awaits the append before its exception
+          // propagates, so no append job outlives the failed batch. Both
+          // waits are bounded (3600 s, as GdMf's checkpoint awaits): a
+          // hung append must surface, not wedge the stream.
+          import scala.concurrent.{Await, Future}
+          val bound = scala.concurrent.duration.Duration(3600L, "s")
+          val appendF = Future(
             timed("append")(writeIndex(
               org.apache.spark.sql.graftbridge.DatasetBridge
                 .rebindToClone(newRows),
               tbl, indexBuckets,
               overwrite = false)))(scala.concurrent.ExecutionContext.global)
-          timed("onBatch")(onBatch(verdicts, batchId))
-          scala.concurrent.Await.result(appendF,
-            scala.concurrent.duration.Duration.Inf)
+          try timed("onBatch")(onBatch(verdicts, batchId))
+          catch {
+            case sinkFailure: Throwable =>
+              try Await.ready(appendF, bound)
+              catch { case t: Throwable => sinkFailure.addSuppressed(t) }
+              throw sinkFailure
+          }
+          Await.result(appendF, bound)
           // the append refreshed the CLONE's relation cache, not this
           // session's — refresh here so the next batch's probe lists
           // the files it just wrote (a stale listing silently misses

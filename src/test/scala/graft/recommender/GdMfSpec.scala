@@ -52,38 +52,38 @@ class GdMfSpec extends SparkSpec {
     } finally sc.removeSparkListener(l)
   }
 
+  private type States = Map[String, (Array[Double], Double)]
+
   private def state(df: org.apache.spark.sql.DataFrame, idCol: String,
-      fCol: String, bCol: String): Map[String, (Array[Double], Double)] =
+      fCol: String, bCol: String): States =
     df.select(idCol, fCol, bCol).collect()
       .map(r => r.getString(0) -> (r.getSeq[Double](1).toArray, r.getDouble(2)))
       .toMap
 
   /** Naive dense implementation of reference models/funk_svd.py:157-170
-    * and models/als.py:158-174, over observed cells.
+    * and models/als.py:158-174, over observed cells. Also returns each
+    * epoch's pre-update training (MAE, MSE, RMSE): FunkSVD's epoch-start
+    * error, which for ALS-GD is the previous epoch's final error.
     */
   private def naive(
       obs: Seq[(String, String, Double)],
-      u0: Map[String, (Array[Double], Double)],
-      i0: Map[String, (Array[Double], Double)],
+      u0: States, i0: States,
       mean: Double, lr: Double, reg: Double, epochs: Int,
-      alternating: Boolean): (Map[String, (Array[Double], Double)], Map[String, (Array[Double], Double)]) = {
+      alternating: Boolean): (States, States, Seq[(Double, Double, Double)]) = {
     var uS = u0.map { case (k, (f, b)) => k -> (f.clone(), b) }
     var iS = i0.map { case (k, (f, b)) => k -> (f.clone(), b) }
     val nUsers = u0.size.toDouble
     val nItems = i0.size.toDouble
     val k = u0.head._2._1.length
 
-    def err(u: Map[String, (Array[Double], Double)],
-        i: Map[String, (Array[Double], Double)]): Map[(String, String), Double] =
+    def err(u: States, i: States): Map[(String, String), Double] =
       obs.map { case (uu, ii, r) =>
         val (p, ub) = u(uu); val (q, ib) = i(ii)
         val dot = (0 until k).map(f => p(f) * q(f)).sum
         (uu, ii) -> (r - (mean + ub + ib + dot))
       }.toMap
 
-    def userUpdate(e: Map[(String, String), Double],
-        u: Map[String, (Array[Double], Double)],
-        i: Map[String, (Array[Double], Double)]) =
+    def userUpdate(e: Map[(String, String), Double], u: States, i: States) =
       u.map { case (uu, (p, ub)) =>
         val cells = obs.filter(_._1 == uu)
         val grad = Array.fill(k)(0.0)
@@ -96,9 +96,7 @@ class GdMfSpec extends SparkSpec {
         uu -> (p2, ub + lr * (esum - reg * ub * nItems))
       }
 
-    def itemUpdate(e: Map[(String, String), Double],
-        uForGrad: Map[String, (Array[Double], Double)],
-        i: Map[String, (Array[Double], Double)]) =
+    def itemUpdate(e: Map[(String, String), Double], uForGrad: States, i: States) =
       i.map { case (ii, (q, ib)) =>
         val cells = obs.filter(_._2 == ii)
         val grad = Array.fill(k)(0.0)
@@ -111,24 +109,25 @@ class GdMfSpec extends SparkSpec {
         ii -> (q2, ib + lr * (esum - reg * ib * nUsers))
       }
 
-    for (_ <- 0 until epochs) {
+    val history = (0 until epochs).map { _ =>
+      val e = err(uS, iS)
       if (alternating) {
-        val e0 = err(uS, iS)
-        uS = userUpdate(e0, uS, iS)
+        uS = userUpdate(e, uS, iS)
         val e1 = err(uS, iS)
         iS = itemUpdate(e1, uS, iS)
       } else {
-        val e = err(uS, iS)
         val newU = userUpdate(e, uS, iS)
         iS = itemUpdate(e, newU, iS) // trap 2: item grad uses updated P
         uS = newU
       }
+      val n = obs.size.toDouble
+      val mse = e.values.map(v => v * v).sum / n
+      (e.values.map(math.abs).sum / n, mse, math.sqrt(mse))
     }
-    (uS, iS)
+    (uS, iS, history)
   }
 
-  private def assertClose(got: Map[String, (Array[Double], Double)],
-      want: Map[String, (Array[Double], Double)]): Unit = {
+  private def assertClose(got: States, want: States): Unit = {
     assert(got.keySet === want.keySet)
     got.foreach { case (id, (f, b)) =>
       val (wf, wb) = want(id)
@@ -140,20 +139,31 @@ class GdMfSpec extends SparkSpec {
     }
   }
 
-  private def parityCheck(alternating: Boolean): Unit = {
-    val df = ratingsSeq.toDF
-    val cfg0 = GdMf.Config(nFactors = 3, epochs = 0, lr = 0.01, reg = 0.1,
-      alternating = alternating)
-    val init = GdMf.fit(df, cfg0)
-    val m = GdMf.fit(df, cfg0.copy(epochs = 3))
-    val obs = ratingsSeq.map(r => (r.user, r.item, r.rating))
-    val (wu, wi) = naive(obs,
+  /** Fits `df` under `cfg` and checks the states and the per-epoch
+    * training errors against [[naive]] from the same initial states.
+    */
+  private def assertMatchesNaive(df: org.apache.spark.sql.DataFrame,
+      obs: Seq[(String, String, Double)], cfg: GdMf.Config): Unit = {
+    val init = GdMf.fit(df, cfg.copy(epochs = 0))
+    val m = GdMf.fit(df, cfg.copy(collectErrors = true))
+    val (wu, wi, wh) = naive(obs,
       state(init.userState, "user", "u_factors", "u_bias"),
       state(init.itemState, "item", "i_factors", "i_bias"),
-      init.stats.meanRating, 0.01, 0.1, 3, alternating)
+      init.stats.meanRating, cfg.lr, cfg.reg, cfg.epochs, cfg.alternating)
     assertClose(state(m.userState, "user", "u_factors", "u_bias"), wu)
     assertClose(state(m.itemState, "item", "i_factors", "i_bias"), wi)
+    assert(m.trainErrors.map(_._1) === (0 until cfg.epochs))
+    m.trainErrors.map(_._2).zip(wh).foreach { case (got, (mae, mse, rmse)) =>
+      assert(math.abs(got.mae - mae) < 1e-9 && math.abs(got.mse - mse) < 1e-9 &&
+        math.abs(got.rmse - rmse) < 1e-9, s"history mismatch: $got vs ($mae, $mse, $rmse)")
+    }
+    init.release(); m.release()
   }
+
+  private def parityCheck(alternating: Boolean): Unit =
+    assertMatchesNaive(ratingsSeq.toDF, ratingsSeq.map(r => (r.user, r.item, r.rating)),
+      GdMf.Config(nFactors = 3, epochs = 3, lr = 0.01, reg = 0.1,
+        alternating = alternating))
 
   test("FunkSVD matches the reference formulas over 3 epochs (incl. both traps)") {
     parityCheck(alternating = false)
@@ -161,32 +171,6 @@ class GdMfSpec extends SparkSpec {
 
   test("ALS-GD matches the reference's alternating schedule over 3 epochs") {
     parityCheck(alternating = true)
-  }
-
-  test("checkpointInterval=2 yields the identical model to interval=1") {
-    // locks the deferred-release ordering: with interval > 1 the item
-    // side's uncut lazy chain still reads the previous generation's
-    // checkpoint blocks when the user cut runs (premature release threw
-    // CHECKPOINT_RDD_BLOCK_ID_NOT_FOUND); results must also be
-    // bit-identical since cadence only changes WHERE lineage is cut
-    val df = ratingsSeq.toDF
-    def fitWith(ci: Int) = {
-      val m = GdMf.fit(df, GdMf.Config(nFactors = 3, epochs = 4,
-        lr = 0.01, reg = 0.01, checkpointInterval = ci))
-      (state(m.userState, "user", "u_factors", "u_bias"),
-        state(m.itemState, "item", "i_factors", "i_bias"))
-    }
-    val (u1, i1) = fitWith(1)
-    val (u2, i2) = fitWith(2)
-    assert(u1.keySet === u2.keySet && i1.keySet === i2.keySet)
-    for (k <- u1.keySet) {
-      assert(u1(k)._1.zip(u2(k)._1).forall { case (a, b) => math.abs(a - b) < 1e-12 })
-      assert(math.abs(u1(k)._2 - u2(k)._2) < 1e-12)
-    }
-    for (k <- i1.keySet) {
-      assert(i1(k)._1.zip(i2(k)._1).forall { case (a, b) => math.abs(a - b) < 1e-12 })
-      assert(math.abs(i1(k)._2 - i2(k)._2) < 1e-12)
-    }
   }
 
   test("FunkSVD converges on an exactly-factorizable rank-1 matrix") {
@@ -210,28 +194,27 @@ class GdMfSpec extends SparkSpec {
     })
   }
 
-  test("plan-template loop produces the identical model to the legacy loop") {
+  test("both schedules match naive in every broadcast regime, history included") {
     val rnd = new scala.util.Random(7)
     val cells = for {
       u <- 0 until 25; i <- 0 until 15 if rnd.nextDouble() < 0.4
     } yield Rating(s"u$u", s"i$i", 1.0 + rnd.nextInt(5), (u * 100 + i).toLong)
-    // the wide cached input takes the coalesced input pass
-    val wide = cached32(cells.toDF)
-    for (input <- Seq(cells.toDF, wide); alternating <- Seq(false, true)) {
-      val base = GdMf.Config(nFactors = 3, epochs = 4, lr = 0.01, reg = 0.01,
-        alternating = alternating, collectErrors = true)
-      val templ = GdMf.fit(input, base.copy(planTemplates = true))
-      val legacy = GdMf.fit(input, base.copy(planTemplates = false))
-      def states(m: GdMf.Model): (Seq[(String, Seq[Double], Double)], Seq[(String, Seq[Double], Double)]) = (
-        m.userState.as[(String, Seq[Double], Double)].collect().sortBy(_._1).toSeq,
-        m.itemState.as[(String, Seq[Double], Double)].collect().sortBy(_._1).toSeq)
-      assert(states(templ) === states(legacy),
-        s"state divergence (alternating=$alternating)")
-      assert(templ.trainErrors === legacy.trainErrors,
-        s"history divergence (alternating=$alternating)")
-      templ.release(); legacy.release()
+    val obs = cells.map(r => (r.user, r.item, r.rating))
+    val df = cached32(cells.toDF)
+    // default caps: both states broadcast; 0: neither does, so the item
+    // join shuffles and the error rows are hashed on i_id; 800: the 25
+    // user states (40 B each at k = 3) shuffle, the 15 item states
+    // broadcast. factsPartitions = 3 gives the shuffles several partitions.
+    val base = GdMf.Config(nFactors = 3, epochs = 3, lr = 0.01, reg = 0.01)
+    for {
+      alternating <- Seq(false, true)
+      cfg <- Seq(base,
+        base.copy(autoBroadcastDimBytes = 0L, factsPartitions = 3),
+        base.copy(autoBroadcastDimBytes = 800L, factsPartitions = 3))
+    } withClue(s"$cfg: ") {
+      assertMatchesNaive(df, obs, cfg.copy(alternating = alternating))
     }
-    wide.unpersist()
+    df.unpersist()
   }
 
   test("every fit stage is as wide as the data; a setup-only fit is a few jobs") {

@@ -242,4 +242,41 @@ class StreamingDedupSpec extends SparkSpec {
       spark.sql(s"DROP TABLE IF EXISTS $tbl")
     }
   }
+
+  test("a throwing sink awaits its batch's index append: no orphaned job") {
+    def doc(i: Int): String = (0 until 30).map(j => s"f${i}w$j").mkString(" ")
+    val tbl = s"graft_sd_fail_${System.nanoTime()}"
+    val sinkDown = new RuntimeException("sink down at batch 1")
+    val mem = MemoryStream[(Long, String)](spark)
+    val run = StreamingDedup.start(
+      mem.toDF().toDF("doc_id", "text"), "doc_id", "text",
+      indexTable = Some(tbl)) { (_, batchId) => if (batchId == 1) throw sinkDown }
+    val batch1 = (101 to 140).map(i => (i.toLong, doc(i)))
+    try {
+      mem.addData((1L, doc(1)), (2L, doc(2)))
+      run.query.processAllAvailable()
+      mem.addData(batch1: _*)
+      val ex = intercept[org.apache.spark.sql.streaming.StreamingQueryException] {
+        run.query.awaitTermination(120000L)
+      }
+      assert(Iterator.iterate[Throwable](ex)(_.getCause).takeWhile(_ != null)
+        .exists(_ eq sinkDown), s"not the sink's exception: $ex")
+      val sc = spark.sparkContext
+      org.apache.spark.sql.graftbridge.ListenerBridge.waitUntilListenerBusEmpty(sc)
+      assert(sc.statusTracker.getActiveJobIds.isEmpty,
+        "an index append outlived its failed batch")
+      // batch 1's docs are all novel: its appended rows are exactly their
+      // buckets
+      val want = graft.dedup.Dedup.bucketIndex(batch1.toDF("doc_id", "text"),
+        "doc_id", "text")
+      def rows(df: org.apache.spark.sql.DataFrame) =
+        df.select("owner_id", "band", "band_hash").as[(Long, Int, Long)].collect().toSet
+      spark.catalog.refreshTable(tbl)
+      assert(rows(spark.table(tbl).filter(col("batch_id") === 1L)) === rows(want))
+      want.unpersist()
+    } finally {
+      run.query.stop()
+      spark.sql(s"DROP TABLE IF EXISTS $tbl")
+    }
+  }
 }
