@@ -14,14 +14,21 @@ import graft.encode.{Encoding, RatingStats}
   * per epoch (`error = x - pred * x_mask`) and runs blocked dense
   * algebra over it — O(n_users·n_items) work on ~0.075 %-dense data,
   * which is why its distributed runs OOM'd (`report.pdf` §7.1.2). Here
-  * the error is a *relation* on observed cells only (the inner join IS
-  * the mask, SURVEY §1.3) and every update is join + groupBy +
-  * scaled-vector-sum — O(nnz·k) work. Factor states broadcast when
-  * they fit (exact size known from the dimension counts), so the epoch loop
-  * shuffles only post-combine gradient vectors, (n_users + n_items)·k
-  * per epoch — never fact-sized rows; oversized dims degrade to
-  * shuffle joins. This formulation scales to any nnz that fits a
-  * cluster.
+  * the error lives on observed cells only (SURVEY §1.3) — O(nnz·k) work
+  * per epoch — and sizes exact from the dimension counts, against
+  * `Config.autoBroadcastDimBytes`, pick the epoch:
+  *  - the user state plus one item state per fact partition under the
+  *    cap (every caller in the tree): the fused kernel ([[FusedEpoch]]) —
+  *    the states sit on the driver as dense arrays, are broadcast each
+  *    epoch, and ONE job over the user-blocked facts computes the error,
+  *    its sums and both gradients; nothing fact-sized is shuffled or
+  *    materialized, and the driver receives at most that cap per epoch;
+  *  - otherwise: the relational plan-template loop — the error is a
+  *    relation (the inner join IS the mask) and every update is join +
+  *    groupBy + scaled-vector-sum, a broadcast join for a state that fits
+  *    and a shuffle join for one that does not, checkpointed every
+  *    epoch. Gradients combine on the executors, so it scales to any nnz
+  *    that fits a cluster; the fused kernel is bounded by the driver.
   *
   * Semantics traps preserved (SURVEY §7.1):
   *  1. the bias regularizer sums over the FULL dimension (reference
@@ -47,23 +54,27 @@ object GdMf {
       collectErrors: Boolean = false,
       // Partition count of EVERY fit stage. 0 (default) = auto: bytes /
       // 32 MB, floored at 1 — the input slice by its plan's size
-      // estimate, the facts (and the template plans' shuffles, which run
-      // outside AQE) at ~24 B/row. Local scales get 1 partition, not the
+      // estimate, the facts (so the fused epoch's tasks, one per user
+      // block, and the template plans' shuffles, which run outside AQE)
+      // at ~24 B/row. Local scales get 1 partition, not the
       // session's shuffle width (32 tasks over 2 MB is pure scheduler
       // overhead); 100 TB gets thousands, like files.maxPartitionBytes.
       // With a low autoBroadcastDimBytes it reaches, at test scale, the
       // multi-partition shuffle-join plans that large inputs pick — the
       // regime where the error rows' declared partitioning follows bcastI.
       factsPartitions: Int = 0,
-      // Factor-state joins broadcast when the estimated state size
-      // (ids × (16 + 8k) bytes) fits under this cap, which removes every
-      // fact-sized shuffle from the epoch loop. Above the cap (dims too
-      // big for executor memory — the regime where MLlib ALS's block
-      // formulation is the right tool anyway) the joins fall back to
-      // shuffle hash/sort-merge automatically. The persisted error rows
-      // keep the facts' hash(u_id) partitioning only while the item
-      // state broadcasts; a shuffled item join leaves them hashed on
-      // i_id, and the epoch loop declares them unpartitioned.
+      // A factor state is broadcast when its estimated size (ids ×
+      // (16 + 8k) bytes) fits under this cap. When the user state plus
+      // one item state per fact partition fit (what a fused epoch sends
+      // the driver), the fused epoch runs: both states on the driver, one
+      // job per epoch; otherwise the template loop runs. Above the cap
+      // (dims too big for executor memory — the regime where MLlib ALS's
+      // block formulation is the right tool anyway) that state's
+      // template-loop joins fall back to shuffle hash/sort-merge, and the
+      // loop's persisted error rows keep the facts'
+      // hash(u_id) partitioning only while the item state broadcasts; a
+      // shuffled item join leaves them hashed on i_id, and the loop
+      // declares them unpartitioned.
       autoBroadcastDimBytes: Long = 64L << 20)
 
   /** Trained model: distributed per-id state, driver-side scalars, and
@@ -127,27 +138,6 @@ object GdMf {
       sqrt(lit(-2.0) * log(a)) * cos(lit(2.0 * math.Pi) * b) * 0.1
     }: _*)
 
-  // --- plan-template cache ----------------------------------------------
-  // The captured epoch-body templates depend only on the leaf schemas,
-  // the hyper-parameters baked in as literals, and the broadcast
-  // decisions — NOT on the data (facts bind as a leaf at instantiation).
-  // Re-fitting with the same shape+config (benchmark reps,
-  // cross-validation sweeps, scheduled retrains) therefore skips the
-  // one-time Catalyst capture cost entirely.
-  private final case class TemplateKey(
-      sessionId: Int, factsSchema: String, uSchema: String, iSchema: String,
-      k: Int, lr: Double, reg: Double, bcastU: Boolean, bcastI: Boolean,
-      meanRating: Double, nUsers: Long, nItems: Long)
-  private final case class Templates(
-      uLeaf: DataFrame, iLeaf: DataFrame, errLeaf: DataFrame,
-      factsLeaf: DataFrame,
-      tErr: org.apache.spark.sql.catalyst.plans.logical.LogicalPlan,
-      tMetrics: org.apache.spark.sql.catalyst.plans.logical.LogicalPlan,
-      tU: org.apache.spark.sql.catalyst.plans.logical.LogicalPlan,
-      tI: org.apache.spark.sql.catalyst.plans.logical.LogicalPlan)
-  private val templateCache =
-    new java.util.concurrent.ConcurrentHashMap[TemplateKey, Templates]()
-
   // ---------------------------------------------------------------------
 
   def fit(ratings: DataFrame, cfg: Config): Model = {
@@ -194,18 +184,20 @@ object GdMf {
     import scala.concurrent.{Await, ExecutionContext, Future}
     import scala.concurrent.duration.Duration
     implicit val ec: ExecutionContext = ExecutionContext.global
-    // independent checkpoint jobs (the two dims here, the two initial
-    // states below) run concurrently (finite await: a hung job must
-    // surface, not wedge the fit)
-    def both(a: => DataFrame, b: => DataFrame) = {
-      val (fa, fb) = (Future(DatasetBridge.localCheckpointFresh(a)),
-        Future(DatasetBridge.localCheckpointFresh(b)))
+    // independent user- and item-side jobs (the two dims here, the two
+    // initial and final states below) run concurrently (finite await: a
+    // hung job must surface, not wedge the fit)
+    def par[A, B](a: => A, b: => B): (A, B) = {
+      val (fa, fb) = (Future(a), Future(b))
       val t = Duration(3600L, "s")
       (Await.result(fa, t), Await.result(fb, t))
     }
-    val (userDimCp, itemDimCp) = both(
-      Encoding.dimensionAuto(ratingsP, "user", orderCol, "u_id", probe.getLong(1)),
-      Encoding.dimensionAuto(ratingsP, "item", orderCol, "i_id", probe.getLong(2)))
+    import DatasetBridge.localCheckpointFresh
+    val (userDimCp, itemDimCp) = par(
+      localCheckpointFresh(Encoding.dimensionAuto(
+        ratingsP, "user", orderCol, "u_id", probe.getLong(1))),
+      localCheckpointFresh(Encoding.dimensionAuto(
+        ratingsP, "item", orderCol, "i_id", probe.getLong(2))))
     val userDim = userDimCp.df
     val itemDim = itemDimCp.df
 
@@ -216,8 +208,9 @@ object GdMf {
       probe.getDouble(5), probe.getDouble(6), probe.getDouble(7))
 
     // The fact table: encoded observed cells, hash-partitioned by u_id so
-    // every user-side join/groupBy in the epoch loop reuses the
-    // partitioning without a new exchange (reference chunk grid → §1.3).
+    // each user's rows sit in one partition — a fused-epoch task holds
+    // whole users, and the template loop's user-side joins/groupBys reuse
+    // the partitioning without a new exchange (reference chunk grid → §1.3).
     // Dim broadcasts size-gated on the exact probe counts + sampled key
     // widths (checkpointed dims have no planner estimates, so the gate
     // can't be left to auto-broadcast; an unconditional hint was the
@@ -228,15 +221,38 @@ object GdMf {
       cfg.autoBroadcastDimBytes)
       .select(col("u_id"), col("i_id"), col("rating"))
       .repartition(factParts, col("u_id"))
-      .persist(StorageLevel.MEMORY_AND_DISK)
-    // drop the slice once the epochs' fact cache is built (an epochs = 0 fit never reads it)
-    if (cfg.epochs > 0) facts.count()
+
+    // Factor states broadcast when they fit (size known exactly from
+    // the dimension counts — no reliance on planner estimates, which are
+    // unavailable for localCheckpoint'd frames). The states live on the
+    // driver and each epoch is one fused job (FusedEpoch) when what an
+    // epoch sends the driver fits the same cap: the user gradients (one
+    // user state) plus one item-partial array per task (at most one item
+    // state each). The cap is also held under 2^31 bytes, so every dense
+    // array fits one JVM array. Otherwise the template loop below runs
+    // and broadcasts whichever state fits.
+    def stateBytes(ids: Long): Long = ids * (16L + 8L * cfg.nFactors)
+    val bcastU = stateBytes(stats.nUsers) <= cfg.autoBroadcastDimBytes
+    val bcastI = stateBytes(stats.nItems) <= cfg.autoBroadcastDimBytes
+    val epochBytes = BigInt(stateBytes(stats.nUsers)) + BigInt(factParts) * stateBytes(stats.nItems)
+    val fused = cfg.epochs > 0 &&
+      epochBytes <= cfg.autoBroadcastDimBytes.min(Int.MaxValue.toLong)
+    def bu(df: DataFrame): DataFrame = if (bcastU) broadcast(df) else df
+    def bi(df: DataFrame): DataFrame = if (bcastI) broadcast(df) else df
+
+    // The epochs' fact cache — user-sorted blocks for the fused epoch,
+    // the rows for the template loop — built before the slice is dropped
+    // (an epochs = 0 fit never reads the facts).
+    val blocks = if (fused) FusedEpoch.blocks(facts) else null
+    if (fused) blocks.count()
+    else if (cfg.epochs > 0) facts.persist(StorageLevel.MEMORY_AND_DISK).count()
     ratingsP.unpersist()
 
     // Initial states stay LAZY plans over the checkpointed dims: the
     // init columns are pure per-id hash expressions (no shuffle, no
-    // scan), so epoch-0 consumers recompute them for pennies — cheaper
-    // than two more eager checkpoint jobs here.
+    // scan), so their one consumer (an epochs = 0 Model, the fused
+    // epoch's collect or the template loop's first cut) computes them
+    // for pennies.
     val init = if (cfg.alternating) uniformFactors _ else normalFactors _
     var uState = userDim
       .withColumn("u_factors", init(col("u_id"), cfg.nFactors, cfg.seed))
@@ -244,17 +260,6 @@ object GdMf {
     var iState = itemDim
       .withColumn("i_factors", init(col("i_id"), cfg.nFactors, cfg.seed + 1))
       .withColumn("i_bias", lit(0.0))
-
-    // Broadcast factor states when they fit (size known exactly from
-    // the dimension counts — no reliance on planner estimates, which are
-    // unavailable for localCheckpoint'd frames): the epoch loop then
-    // never shuffles fact-sized data for its joins, only the tiny
-    // post-combine gradient vectors.
-    def stateBytes(ids: Long): Long = ids * (16L + 8L * cfg.nFactors)
-    val bcastU = stateBytes(stats.nUsers) <= cfg.autoBroadcastDimBytes
-    val bcastI = stateBytes(stats.nItems) <= cfg.autoBroadcastDimBytes
-    def bu(df: DataFrame): DataFrame = if (bcastU) broadcast(df) else df
-    def bi(df: DataFrame): DataFrame = if (bcastI) broadcast(df) else df
 
     // err(u_id, i_id, e) on observed cells only — NARROW: the factor
     // vectors are re-joined where a consumer needs them, so the
@@ -314,13 +319,44 @@ object GdMf {
     // an epochs = 0 fit keeps the lazy init states over the dim
     // checkpoints, which must then stay resident for the Model's life
     var backing = Seq(userDimCp, itemDimCp)
+    // the trained states are checkpoints that no longer reference the dims
+    def adopt(uCp: DatasetBridge.FreshCheckpoint, iCp: DatasetBridge.FreshCheckpoint): Unit = {
+      uState = uCp.df
+      iState = iCp.df
+      userDimCp.release()
+      itemDimCp.release()
+      backing = Seq(uCp, iCp)
+    }
 
-    if (cfg.epochs > 0) {
-      // Template loop: the epoch body is analyzed+optimized ONCE against
-      // placeholder leaves; each epoch substitutes the current
-      // generation's RDDs and pays physical planning only (codegen is
-      // cached by source). GdMfSpec checks it against a naive driver-side
-      // reference in every broadcast regime.
+    if (fused) {
+      // One job per epoch over the user blocks (FusedEpoch); the history
+      // comes from the same pass. The initial states are collected once,
+      // the final ones checkpointed over the dims' rows, so the Model's
+      // states hold exactly the dims' keys.
+      val rule = FusedEpoch.Rule(cfg.nFactors, cfg.lr, cfg.reg,
+        stats.meanRating, stats.nUsers, stats.nItems, cfg.alternating)
+      var (u, i) = par(
+        FusedEpoch.collect(uState, "u_id", "u_factors", "u_bias", stats.nUsers, cfg.nFactors),
+        FusedEpoch.collect(iState, "i_id", "i_factors", "i_bias", stats.nItems, cfg.nFactors))
+      for (epoch <- 0 until cfg.epochs) {
+        val (u1, i1, sae, sse) = FusedEpoch.epoch(blocks, u, i, rule)
+        if (cfg.collectErrors) history += ((epoch, metrics(sae, sse)))
+        u = u1
+        i = i1
+      }
+      blocks.unpersist()
+      val (uCp, iCp) = par(
+        FusedEpoch.checkpoint(spark, userDimCp, "u_id", u, cfg.nFactors, uState.schema),
+        FusedEpoch.checkpoint(spark, itemDimCp, "i_id", i, cfg.nFactors, iState.schema))
+      adopt(uCp, iCp)
+    } else if (cfg.epochs > 0) {
+      // Template loop, for a state or the fused epoch's driver share
+      // over the cap: the epoch body is analyzed+optimized ONCE per fit
+      // against placeholder leaves; each epoch
+      // substitutes the current generation's RDDs and pays physical
+      // planning only (codegen is cached by source). GdMfSpec checks it
+      // against a naive driver-side reference with both states, neither
+      // and only the item state under the cap.
       //
       // Lineage (SURVEY §4.1) is cut every epoch, user side FIRST: the
       // item-side plan reads the new user state, and binding it to the
@@ -338,42 +374,31 @@ object GdMf {
       import org.apache.spark.sql.graftbridge.PlanTemplate.Bind
 
       // materialize the initial states once
-      var (uCp, iCp) = both(uState, iState)
+      var (uCp, iCp) = par(localCheckpointFresh(uState), localCheckpointFresh(iState))
 
+      // placeholder leaves with nullable schemas: epoch outputs may be
+      // nullable where the hash-init columns are not, and a nullable
+      // leaf reading never-null rows is safe while the reverse breaks
+      // codegen'd null checks
       def nullable(s: org.apache.spark.sql.types.StructType) =
         org.apache.spark.sql.types.StructType(s.fields.map(_.copy(nullable = true)))
-      val key = TemplateKey(
-        System.identityHashCode(spark), nullable(facts.schema).json,
-        nullable(uCp.df.schema).json, nullable(iCp.df.schema).json,
-        cfg.nFactors, cfg.lr, cfg.reg, bcastU, bcastI,
-        stats.meanRating, stats.nUsers, stats.nItems)
-      val tpl = templateCache.computeIfAbsent(key, _ => {
-        if (templateCache.size > 32) templateCache.clear() // bounded
-        // placeholder leaves with nullable schemas: epoch outputs may be
-        // nullable where the hash-init columns are not, and a nullable
-        // leaf reading never-null rows is safe while the reverse breaks
-        // codegen'd null checks
-        val uLeaf = PlanTemplate.leafFrame(spark, nullable(uCp.df.schema))
-        val iLeaf = PlanTemplate.leafFrame(spark, nullable(iCp.df.schema))
-        val factsLeaf = PlanTemplate.leafFrame(spark, nullable(facts.schema))
-        val errProto = errRelOn(factsLeaf, uLeaf, iLeaf)
-        val errLeaf = PlanTemplate.leafFrame(spark, nullable(errProto.schema))
-        // epoch outputs re-bind to the same state leaves next epoch —
-        // normalize the column order to the leaf schema
-        val uCols = uCp.df.columns.toSeq.map(col)
-        val iCols = iCp.df.columns.toSeq.map(col)
-        Templates(
-          uLeaf, iLeaf, errLeaf, factsLeaf,
-          tErr = PlanTemplate.template(errProto),
-          tMetrics = PlanTemplate.template(errSums(errLeaf)),
-          tU = PlanTemplate.template(
-            updated(uLeaf, userGrad(errLeaf, iLeaf), "u_id", "u_factors",
-              "u_bias", stats.nItems, bcastU).select(uCols: _*)),
-          tI = PlanTemplate.template(
-            updated(iLeaf, itemGrad(errLeaf, uLeaf), "i_id", "i_factors",
-              "i_bias", stats.nUsers, bcastI).select(iCols: _*)))
-      })
-      import tpl.{errLeaf, factsLeaf, iLeaf, tErr, tI, tMetrics, tU, uLeaf}
+      val uLeaf = PlanTemplate.leafFrame(spark, nullable(uCp.df.schema))
+      val iLeaf = PlanTemplate.leafFrame(spark, nullable(iCp.df.schema))
+      val factsLeaf = PlanTemplate.leafFrame(spark, nullable(facts.schema))
+      val errProto = errRelOn(factsLeaf, uLeaf, iLeaf)
+      val errLeaf = PlanTemplate.leafFrame(spark, nullable(errProto.schema))
+      // epoch outputs re-bind to the same state leaves next epoch —
+      // normalize the column order to the leaf schema
+      val uCols = uCp.df.columns.toSeq.map(col)
+      val iCols = iCp.df.columns.toSeq.map(col)
+      val tErr = PlanTemplate.template(errProto)
+      val tMetrics = PlanTemplate.template(errSums(errLeaf))
+      val tU = PlanTemplate.template(
+        updated(uLeaf, userGrad(errLeaf, iLeaf), "u_id", "u_factors",
+          "u_bias", stats.nItems, bcastU).select(uCols: _*))
+      val tI = PlanTemplate.template(
+        updated(iLeaf, itemGrad(errLeaf, uLeaf), "i_id", "i_factors",
+          "i_bias", stats.nUsers, bcastI).select(iCols: _*))
 
       // the fact rows bind as a leaf, declared with the hash(u_id)
       // partitioning the repartition above gave them (read through the
@@ -443,14 +468,9 @@ object GdMf {
           advance(uNew, iNew)
         }
       }
-      uState = uCp.df
-      iState = iCp.df
-      // the final states no longer reference the dims
-      userDimCp.release()
-      itemDimCp.release()
-      backing = Seq(uCp, iCp)
+      adopt(uCp, iCp)
+      facts.unpersist()
     }
-    facts.unpersist()
     Model(
       userState = uState.select(col("user"),
         col("u_factors"), col("u_bias")),

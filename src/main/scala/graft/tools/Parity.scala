@@ -16,7 +16,7 @@ import graft.recommender.{AlsRecommender, GdMf}
 object Parity {
   def main(args: Array[String]): Unit = {
     val epochs = args.headOption.map(_.toInt).getOrElse(100)
-    val spark = SparkSession.builder().master("local[32]")
+    val spark = SparkSession.builder().master("local[*]")
       .appName("graft-parity")
       .config("spark.sql.shuffle.partitions", "32")
       .config("spark.sql.adaptive.enabled", "true")

@@ -21,6 +21,14 @@ class GdMfSpec extends SparkSpec {
     } yield Rating(s"u$u", s"i$i", (u % 3) + (i % 2) + 1.0, (u * 5 + i).toLong)
   }
 
+  /** A `users × items` grid with each cell rated 1-5 with probability `p`. */
+  private def grid(seed: Int, users: Int, items: Int, p: Double): Seq[Rating] = {
+    val rnd = new scala.util.Random(seed)
+    for {
+      u <- 0 until users; i <- 0 until items if rnd.nextDouble() < p
+    } yield Rating(s"u$u", s"i$i", 1.0 + rnd.nextInt(5), (u * 100 + i).toLong)
+  }
+
   /** `df` cached as 32 partitions and counted — the shape a persisted
     * `Pipelines.prepare` split hands the fit at a 32-wide session.
     */
@@ -141,23 +149,28 @@ class GdMfSpec extends SparkSpec {
 
   /** Fits `df` under `cfg` and checks the states and the per-epoch
     * training errors against [[naive]] from the same initial states.
+    * Returns the trained states and history, exactly, for comparing fits.
     */
   private def assertMatchesNaive(df: org.apache.spark.sql.DataFrame,
-      obs: Seq[(String, String, Double)], cfg: GdMf.Config): Unit = {
+      obs: Seq[(String, String, Double)], cfg: GdMf.Config) = {
     val init = GdMf.fit(df, cfg.copy(epochs = 0))
     val m = GdMf.fit(df, cfg.copy(collectErrors = true))
     val (wu, wi, wh) = naive(obs,
       state(init.userState, "user", "u_factors", "u_bias"),
       state(init.itemState, "item", "i_factors", "i_bias"),
       init.stats.meanRating, cfg.lr, cfg.reg, cfg.epochs, cfg.alternating)
-    assertClose(state(m.userState, "user", "u_factors", "u_bias"), wu)
-    assertClose(state(m.itemState, "item", "i_factors", "i_bias"), wi)
+    val (mu, mi) = (state(m.userState, "user", "u_factors", "u_bias"),
+      state(m.itemState, "item", "i_factors", "i_bias"))
+    assertClose(mu, wu)
+    assertClose(mi, wi)
     assert(m.trainErrors.map(_._1) === (0 until cfg.epochs))
     m.trainErrors.map(_._2).zip(wh).foreach { case (got, (mae, mse, rmse)) =>
       assert(math.abs(got.mae - mae) < 1e-9 && math.abs(got.mse - mse) < 1e-9 &&
         math.abs(got.rmse - rmse) < 1e-9, s"history mismatch: $got vs ($mae, $mse, $rmse)")
     }
     init.release(); m.release()
+    def exact(s: States) = s.map { case (id, (f, b)) => id -> ((f.toSeq, b)) }
+    (exact(mu), exact(mi), m.trainErrors)
   }
 
   private def parityCheck(alternating: Boolean): Unit =
@@ -195,24 +208,31 @@ class GdMfSpec extends SparkSpec {
   }
 
   test("both schedules match naive in every broadcast regime, history included") {
-    val rnd = new scala.util.Random(7)
-    val cells = for {
-      u <- 0 until 25; i <- 0 until 15 if rnd.nextDouble() < 0.4
-    } yield Rating(s"u$u", s"i$i", 1.0 + rnd.nextInt(5), (u * 100 + i).toLong)
+    val cells = grid(seed = 7, users = 25, items = 15, p = 0.4)
     val obs = cells.map(r => (r.user, r.item, r.rating))
     val df = cached32(cells.toDF)
-    // default caps: both states broadcast; 0: neither does, so the item
-    // join shuffles and the error rows are hashed on i_id; 800: the 25
-    // user states (40 B each at k = 3) shuffle, the 15 item states
-    // broadcast. factsPartitions = 3 gives the shuffles several partitions.
+    // default caps: the fused epoch, on 1 and on 3 partitions (the
+    // driver folds several tasks' partials); 1000: both states (40 B per
+    // id at k = 3) broadcast, but 25 user states plus 3 item-partial
+    // arrays (2800 B) overflow the cap, so the template loop runs; 0:
+    // neither state broadcasts, so the item join shuffles and the error
+    // rows are hashed on i_id; 800: the 25 user states shuffle, the 15
+    // item states broadcast. factsPartitions = 3 gives the shuffles
+    // several partitions.
     val base = GdMf.Config(nFactors = 3, epochs = 3, lr = 0.01, reg = 0.01)
+    val fused3 = base.copy(factsPartitions = 3)
     for {
       alternating <- Seq(false, true)
-      cfg <- Seq(base,
+      cfg <- Seq(base, fused3,
+        base.copy(autoBroadcastDimBytes = 1000L, factsPartitions = 3),
         base.copy(autoBroadcastDimBytes = 0L, factsPartitions = 3),
         base.copy(autoBroadcastDimBytes = 800L, factsPartitions = 3))
-    } withClue(s"$cfg: ") {
-      assertMatchesNaive(df, obs, cfg.copy(alternating = alternating))
+    } withClue(s"$cfg alternating=$alternating: ") {
+      val fit = assertMatchesNaive(df, obs, cfg.copy(alternating = alternating))
+      // the driver folds task results in partition order, not arrival
+      // order: a refit is bit-identical
+      if (cfg == fused3)
+        assert(assertMatchesNaive(df, obs, cfg.copy(alternating = alternating)) == fit)
     }
     df.unpersist()
   }
@@ -221,10 +241,7 @@ class GdMfSpec extends SparkSpec {
     // a few thousand ratings, 1 partition by the 32 MB rule, handed over
     // 32 partitions wide: no stage may run the input's or the session's
     // shuffle width, and no separate stats job may come back
-    val rnd = new scala.util.Random(3)
-    val cells = for {
-      u <- 0 until 200; i <- 0 until 60 if rnd.nextDouble() < 0.25
-    } yield Rating(s"u$u", s"i$i", 1.0 + rnd.nextInt(5), (u * 100 + i).toLong)
+    val cells = grid(seed = 3, users = 200, items = 60, p = 0.25)
     assert(cells.size > 2000)
     val df = cached32(cells.toDF)
     val widthWas = spark.conf.get("spark.sql.shuffle.partitions")
@@ -238,6 +255,32 @@ class GdMfSpec extends SparkSpec {
     val (m0, _, jobs) = shapeOf(GdMf.fit(df, GdMf.Config(nFactors = 4, epochs = 0)))
     assert(jobs <= 4, s"an epochs = 0 fit ran $jobs jobs")
     m0.release()
+    // with both states under the cap an epoch is ONE job, and the
+    // history rides on it
+    for (alternating <- Seq(false, true)) {
+      def jobsOf(epochs: Int, collectErrors: Boolean) = {
+        val (m, _, n) = shapeOf(GdMf.fit(df, GdMf.Config(nFactors = 4, epochs = epochs,
+          alternating = alternating, collectErrors = collectErrors)))
+        m.release()
+        n
+      }
+      val one = jobsOf(1, collectErrors = false)
+      for (collectErrors <- Seq(false, true)) {
+        val three = jobsOf(3, collectErrors)
+        assert(three === one + 2, s"alternating=$alternating collectErrors=$collectErrors: " +
+          s"3 epochs ran $three jobs, 1 epoch $one")
+      }
+    }
+    // ...but not when the user state plus one item state per task (200
+    // and 60 ids at 48 B each, 4 tasks: 21 120 B) would overflow the cap
+    // on the driver, though both states broadcast: the template loop runs
+    val capped = GdMf.Config(nFactors = 4, epochs = 1, factsPartitions = 4,
+      autoBroadcastDimBytes = 20000L)
+    val (c1, _, templateOne) = shapeOf(GdMf.fit(df, capped))
+    val (c3, _, templateThree) = shapeOf(GdMf.fit(df, capped.copy(epochs = 3)))
+    assert(templateThree > templateOne + 2,
+      s"3 epochs ran $templateThree jobs, 1 epoch $templateOne")
+    c1.release(); c3.release()
     assert(spark.conf.get("spark.sql.shuffle.partitions") === widthWas)
     df.unpersist()
   }
@@ -256,13 +299,22 @@ class GdMfSpec extends SparkSpec {
       Encoding.dimension(df, "item", "time", "i_id"))
     def six(s: graft.encode.RatingStats) =
       (s.nRatings, s.nUsers, s.nItems, s.minRating, s.maxRating, s.meanRating)
-    val m = GdMf.fit(df, GdMf.Config(nFactors = 2, epochs = 0))
-    assert(six(m.stats) === six(Encoding.ratingStats(facts)))
-    assert(six(m.stats) === ((6L, 3L, 3L, 2.0, 4.0, 3.1)))
-    // the states hold exactly the counted ids
-    assert(m.userState.count() === m.stats.nUsers)
-    assert(m.itemState.count() === m.stats.nItems)
-    m.release()
+    def keys(state: org.apache.spark.sql.DataFrame, c: String) =
+      (state.schema(c).dataType, state.select(c).collect().map(_.get(0)).toSet)
+    val m0 = GdMf.fit(df, GdMf.Config(nFactors = 2, epochs = 0))
+    // a trained fit's states are rebuilt from the driver-side arrays
+    for (epochs <- Seq(0, 2)) withClue(s"epochs = $epochs: ") {
+      val m = GdMf.fit(df, GdMf.Config(nFactors = 2, epochs = epochs))
+      assert(six(m.stats) === six(Encoding.ratingStats(facts)))
+      assert(six(m.stats) === ((6L, 3L, 3L, 2.0, 4.0, 3.1)))
+      // the states hold exactly the counted ids, keyed as the untrained ones
+      assert(m.userState.count() === m.stats.nUsers)
+      assert(m.itemState.count() === m.stats.nItems)
+      assert(keys(m.userState, "user") === keys(m0.userState, "user"))
+      assert(keys(m.itemState, "item") === keys(m0.itemState, "item"))
+      m.release()
+    }
+    m0.release()
     df.unpersist()
   }
 
