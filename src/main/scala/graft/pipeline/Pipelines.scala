@@ -1,6 +1,7 @@
 package graft.pipeline
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{DataFrame, Observation, SparkSession}
+import org.apache.spark.sql.graftbridge.DatasetBridge
 import org.apache.spark.sql.functions._
 
 import graft.encode.Encoding
@@ -16,32 +17,46 @@ object Pipelines {
 
   /** `json-to-csv.py` equivalent: NDJSON reviews → project 4 of N
     * fields → rename → headerless CSV (reference `json-to-csv.py:5-12`).
-    * Fully distributed scan→sink; returns the row count written.
+    * Fully distributed scan→sink, one job; returns the row count
+    * written, observed on the write itself rather than by re-reading
+    * the CSV.
     */
   def jsonToCsv(spark: SparkSession, inPath: String, outPath: String): Long = {
-    val ratings = RatingsIO.readReviewsJson(spark, inPath)
-    RatingsIO.writeCsv(ratings, outPath)
-    spark.read.schema(graft.model.Schemas.rating).csv(outPath).count()
+    val written = Observation()
+    RatingsIO.writeCsv(RatingsIO.readReviewsJson(spark, inPath)
+      .observe(written, count(lit(1)).as("rows")), outPath)
+    written.get("rows").asInstanceOf[Long]
   }
 
   /** The shared ETL prefix of both runners (reference `run_als.py:8-14`,
-    * `run_funk_svd.py:6-12`): CSV scan with positional schema → full-row
-    * dedup → keep-last-per-(item,user) by time → drop time → seeded
-    * 70/30 split.
+    * `run_funk_svd.py:6-12`): CSV scan with positional schema →
+    * keep-last-per-(item,user) by time → drop time → seeded 70/30
+    * split.
+    *
+    * Runs one job: the one shuffle, a hash partitioning by
+    * (item, user) at the session's `spark.sql.shuffle.partitions`
+    * (the distribution the keep-last window needs; AQE never coalesces
+    * an explicit repartition), has its map stage run here. Train and
+    * test are split from a frame over that shuffle's output, so both
+    * read the same shuffle files and nothing is cached. The split is a
+    * function of the data, the seed and the shuffle width, whether or
+    * not the caller persists it.
     */
   def prepare(ratings: DataFrame, trainFrac: Double = 0.7, seed: Long = 7L)
       : (DataFrame, DataFrame) = {
-    // rating as tie-break: after dedupExact, equal (item,user,time) rows
-    // differ in rating, so the survivor is deterministic (Prep.dedupKeepLast
-    // requires a total order for that)
+    val width = ratings.sparkSession.conf.get("spark.sql.shuffle.partitions").toInt
+    // No full-row dedup first (reference `drop_duplicates()`): with
+    // rating as the tie-break, keep-last leaves one row per key, and the
+    // rows it could choose between are identical (Prep.dedupKeepLast
+    // requires a total order for that).
     val deduped = Prep.dedupKeepLast(
-      Prep.dedupExact(ratings),
+      ratings.repartition(width, col("item"), col("user")),
       keys = Seq("item", "user"),
       orderBy = Seq(col("time"), col("rating")))
     // `time` is dropped after dedup in the reference; kept logically
     // equivalent here (Catalyst prunes it wherever unused)
     val cleaned = Prep.dropColumns(deduped, "time")
-    Prep.randomSplit(cleaned, trainFrac, seed)
+    Prep.randomSplit(DatasetBridge.shuffledOnce(cleaned), trainFrac, seed)
   }
 
   final case class RunResult(metrics: Metrics, predictions: DataFrame)

@@ -70,6 +70,15 @@ object Prep {
     * shuffles, unlike the reference's driver-side index anti-join.
     * Returns (train, test); complement is exact (each row lands in
     * exactly one side).
+    *
+    * The draw is per partition (each partition sorted, then sampled
+    * with a seed offset by its index), so the split is a function of
+    * `df`'s partitioning as well as its rows: the same rows spread over
+    * other partitions split differently. A plan whose partitions AQE
+    * may coalesce therefore splits differently persisted (a cached plan
+    * keeps its shuffle partitions) and unpersisted;
+    * [[graft.pipeline.Pipelines.prepare]] splits a frame over a fixed,
+    * already-run shuffle for that reason.
     */
   def randomSplit(df: DataFrame, trainFrac: Double, seed: Long): (DataFrame, DataFrame) = {
     val parts = df.randomSplit(Array(trainFrac, 1.0 - trainFrac), seed)

@@ -188,9 +188,9 @@ object BprMf {
     def bi(df: DataFrame): DataFrame = if (bcastI) broadcast(df) else df
 
     var uState = userDim.withColumn("u_factors",
-      GdMf.normalFactors(col("u_id"), cfg.nFactors, cfg.seed))
+      GdMf.initColumn(col("u_id"), cfg.nFactors, cfg.seed, normal = true))
     var iState = itemDim.withColumn("i_factors",
-      GdMf.normalFactors(col("i_id"), cfg.nFactors, cfg.seed + 1))
+      GdMf.initColumn(col("i_id"), cfg.nFactors, cfg.seed + 1, normal = true))
 
     // scored(u_id, p_id, n_id, x): NARROW — factors re-join at the
     // consumers, exactly GdMf's err-relation discipline

@@ -102,32 +102,6 @@ private[recommender] object FusedEpoch {
       // released by the caller once the last epoch has run
       .persist(StorageLevel.MEMORY_AND_DISK)
 
-  /** Collect a state frame's (id, factors, bias) rows into a [[Dense]]
-    * of `n` ids (one job).
-    */
-  def collect(state: DataFrame, idCol: String, factorsCol: String,
-      biasCol: String, n: Long, k: Int): Dense = {
-    val parts = state
-      .select(col(idCol).cast("int"), col(factorsCol), col(biasCol))
-      .queryExecution.toRdd.mapPartitions { rows =>
-        val (ids, fs, bs) =
-          (ArrayBuilder.make[Int], ArrayBuilder.make[Double], ArrayBuilder.make[Double])
-        rows.foreach { r =>
-          ids += r.getInt(0)
-          fs ++= r.getArray(1).toDoubleArray()
-          bs += r.getDouble(2)
-        }
-        Iterator.single((ids.result(), fs.result(), bs.result()))
-      }.collect()
-    val d = new Dense(new Array[Double](Math.toIntExact(n * k)),
-      new Array[Double](Math.toIntExact(n)))
-    for ((ids, fs, bs) <- parts; j <- ids.indices) {
-      System.arraycopy(fs, j * k, d.factors, ids(j) * k, k)
-      d.bias(ids(j)) = bs(j)
-    }
-    d
-  }
-
   /** One task's pass over its block against the epoch-start states. */
   private def pass(b: Block, u: Dense, i: Dense, r: Rule): Partial = {
     val k = r.k

@@ -1,7 +1,10 @@
 package graft.recommender
 
 import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.spark.sql.api.java.UDF1
+import org.apache.spark.sql.catalyst.expressions.XXH64
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.{ArrayType, DoubleType, LongType}
 import org.apache.spark.storage.StorageLevel
 
 import graft.encode.{Encoding, RatingStats}
@@ -119,24 +122,57 @@ object GdMf {
   // --- deterministic per-id initialization (SURVEY §4.3.4) -------------
   // The reference's dask RNG is chunking-dependent; ours is a pure
   // function of (id, factor index, seed), reproducible at any
-  // parallelism. xxhash64 → U(0,1) → Box-Muller for the normal path.
+  // parallelism: SQL xxhash64(id, index, seed) → U(0,1) → uniform, or
+  // Box-Muller for the normal path. One Scala function computes it, on
+  // the driver for the fused epoch's arrays and in a UDF everywhere
+  // else, bit-identical to the SQL expression chain it replaces.
 
-  private def u01(id: Column, salt: Int, seed: Long): Column =
-    xxhash64(id, lit(salt), lit(seed)).cast("double") / lit(1.8446744073709552e19) + lit(0.5)
-
-  /** ALS init: uniform(0, 0.1) (reference `models/als.py:74-75`). */
-  private def uniformFactors(id: Column, k: Int, seed: Long): Column =
-    array((0 until k).map(f => u01(id, f, seed) * 0.1): _*)
-
-  /** FunkSVD init: normal(0, 0.1) (reference `models/funk_svd.py:76-77`).
-    * Shared with [[BprMf]] — same deterministic per-id init family.
+  /** U(0,1) from `xxhash64(id, salt, seed)`, `idHash` being the XXH64
+    * chain's state after the id (seed 42, hashInt for an int id,
+    * hashLong for a long one).
     */
-  private[recommender] def normalFactors(id: Column, k: Int, seed: Long): Column =
-    array((0 until k).map { f =>
-      val a = greatest(u01(id, 2 * f, seed), lit(1e-12))
-      val b = u01(id, 2 * f + 1, seed)
-      sqrt(lit(-2.0) * log(a)) * cos(lit(2.0 * math.Pi) * b) * 0.1
-    }: _*)
+  private def u01(idHash: Long, salt: Int, seed: Long): Double =
+    XXH64.hashLong(seed, XXH64.hashInt(salt, idHash)).toDouble /
+      1.8446744073709552e19 + 0.5
+
+  /** Writes `id`'s `k` initial factors to `out(at until at + k)`:
+    * uniform(0, 0.1), the ALS init (reference `models/als.py:74-75`), or
+    * normal(0, 0.1), the FunkSVD and [[BprMf]] init (reference
+    * `models/funk_svd.py:76-77`).
+    */
+  private[recommender] def initFactors(id: Long, longId: Boolean, k: Int, seed: Long,
+      normal: Boolean, out: Array[Double], at: Int): Unit = {
+    val h = if (longId) XXH64.hashLong(id, 42L) else XXH64.hashInt(id.toInt, 42L)
+    var f = 0
+    while (f < k) {
+      out(at + f) =
+        if (!normal) u01(h, f, seed) * 0.1
+        else {
+          val a = math.max(u01(h, 2 * f, seed), 1e-12)
+          val b = u01(h, 2 * f + 1, seed)
+          // the functions Spark's generated code calls: StrictMath.log, Math.cos
+          math.sqrt(-2.0 * StrictMath.log(a)) * math.cos(2.0 * math.Pi * b) * 0.1
+        }
+      f += 1
+    }
+  }
+
+  /** [[initFactors]] over an int or long id column. Its elements are
+    * nullable, as the SQL forms' (divide, log) were, so the states keep
+    * their schema.
+    */
+  private[recommender] def initColumn(id: Column, k: Int, seed: Long,
+      normal: Boolean): Column =
+    udf(new UDF1[Any, Array[Double]] {
+      def call(id: Any): Array[Double] = {
+        val out = new Array[Double](k)
+        id match {
+          case i: Int => initFactors(i, longId = false, k, seed, normal, out, 0)
+          case l: Long => initFactors(l, longId = true, k, seed, normal, out, 0)
+        }
+        out
+      }
+    }, ArrayType(DoubleType, containsNull = true)).asNonNullable()(id)
 
   // ---------------------------------------------------------------------
 
@@ -248,18 +284,16 @@ object GdMf {
     else if (cfg.epochs > 0) facts.persist(StorageLevel.MEMORY_AND_DISK).count()
     ratingsP.unpersist()
 
-    // Initial states stay LAZY plans over the checkpointed dims: the
-    // init columns are pure per-id hash expressions (no shuffle, no
-    // scan), so their one consumer (an epochs = 0 Model, the fused
-    // epoch's collect or the template loop's first cut) computes them
-    // for pennies.
-    val init = if (cfg.alternating) uniformFactors _ else normalFactors _
-    var uState = userDim
-      .withColumn("u_factors", init(col("u_id"), cfg.nFactors, cfg.seed))
-      .withColumn("u_bias", lit(0.0))
-    var iState = itemDim
-      .withColumn("i_factors", init(col("i_id"), cfg.nFactors, cfg.seed + 1))
-      .withColumn("i_bias", lit(0.0))
+    // Initial states: the per-id init (initFactors) and a zero bias.
+    // The fused epoch builds them as driver arrays; otherwise they are
+    // LAZY plans over the checkpointed dims (the init is a UDF of the id:
+    // no shuffle, no scan), computed by their one consumer — an
+    // epochs = 0 Model or the template loop's first cut.
+    val normal = !cfg.alternating
+    def initState(dim: DataFrame, idCol: String, factorsCol: String,
+        biasCol: String, seed: Long): DataFrame =
+      dim.withColumn(factorsCol, initColumn(col(idCol), cfg.nFactors, seed, normal))
+        .withColumn(biasCol, lit(0.0))
 
     // err(u_id, i_id, e) on observed cells only — NARROW: the factor
     // vectors are re-joined where a consumer needs them, so the
@@ -316,28 +350,32 @@ object GdMf {
         .drop("fgrad", "esum")
 
     val history = scala.collection.mutable.ArrayBuffer.empty[(Int, Metrics)]
-    // an epochs = 0 fit keeps the lazy init states over the dim
-    // checkpoints, which must then stay resident for the Model's life
-    var backing = Seq(userDimCp, itemDimCp)
-    // the trained states are checkpoints that no longer reference the dims
-    def adopt(uCp: DatasetBridge.FreshCheckpoint, iCp: DatasetBridge.FreshCheckpoint): Unit = {
-      uState = uCp.df
-      iState = iCp.df
+    // a trained fit's states are checkpoints that no longer reference
+    // the dims
+    def adopt(uCp: DatasetBridge.FreshCheckpoint, iCp: DatasetBridge.FreshCheckpoint) = {
       userDimCp.release()
       itemDimCp.release()
-      backing = Seq(uCp, iCp)
+      (uCp.df, iCp.df, Seq(uCp, iCp))
     }
 
-    if (fused) {
+    val (uState, iState, backing) = if (fused) {
       // One job per epoch over the user blocks (FusedEpoch); the history
-      // comes from the same pass. The initial states are collected once,
-      // the final ones checkpointed over the dims' rows, so the Model's
+      // comes from the same pass. The initial states are made on the
+      // driver (the ids are dense from 0), the final ones checkpointed
+      // over the dims' rows with initState's schema, so the Model's
       // states hold exactly the dims' keys.
-      val rule = FusedEpoch.Rule(cfg.nFactors, cfg.lr, cfg.reg,
+      val k = cfg.nFactors
+      def initDense(dim: DataFrame, idCol: String, n: Long, seed: Long) = {
+        val longId = dim.schema(idCol).dataType == LongType
+        val d = new FusedEpoch.Dense(new Array[Double](Math.toIntExact(n * k)),
+          new Array[Double](Math.toIntExact(n)))
+        for (id <- d.bias.indices) initFactors(id, longId, k, seed, normal, d.factors, id * k)
+        d
+      }
+      val rule = FusedEpoch.Rule(k, cfg.lr, cfg.reg,
         stats.meanRating, stats.nUsers, stats.nItems, cfg.alternating)
-      var (u, i) = par(
-        FusedEpoch.collect(uState, "u_id", "u_factors", "u_bias", stats.nUsers, cfg.nFactors),
-        FusedEpoch.collect(iState, "i_id", "i_factors", "i_bias", stats.nItems, cfg.nFactors))
+      var u = initDense(userDim, "u_id", stats.nUsers, cfg.seed)
+      var i = initDense(itemDim, "i_id", stats.nItems, cfg.seed + 1)
       for (epoch <- 0 until cfg.epochs) {
         val (u1, i1, sae, sse) = FusedEpoch.epoch(blocks, u, i, rule)
         if (cfg.collectErrors) history += ((epoch, metrics(sae, sse)))
@@ -346,8 +384,10 @@ object GdMf {
       }
       blocks.unpersist()
       val (uCp, iCp) = par(
-        FusedEpoch.checkpoint(spark, userDimCp, "u_id", u, cfg.nFactors, uState.schema),
-        FusedEpoch.checkpoint(spark, itemDimCp, "i_id", i, cfg.nFactors, iState.schema))
+        FusedEpoch.checkpoint(spark, userDimCp, "u_id", u, k,
+          initState(userDim, "u_id", "u_factors", "u_bias", cfg.seed).schema),
+        FusedEpoch.checkpoint(spark, itemDimCp, "i_id", i, k,
+          initState(itemDim, "i_id", "i_factors", "i_bias", cfg.seed + 1).schema))
       adopt(uCp, iCp)
     } else if (cfg.epochs > 0) {
       // Template loop, for a state or the fused epoch's driver share
@@ -374,7 +414,9 @@ object GdMf {
       import org.apache.spark.sql.graftbridge.PlanTemplate.Bind
 
       // materialize the initial states once
-      var (uCp, iCp) = par(localCheckpointFresh(uState), localCheckpointFresh(iState))
+      var (uCp, iCp) = par(
+        localCheckpointFresh(initState(userDim, "u_id", "u_factors", "u_bias", cfg.seed)),
+        localCheckpointFresh(initState(itemDim, "i_id", "i_factors", "i_bias", cfg.seed + 1)))
 
       // placeholder leaves with nullable schemas: epoch outputs may be
       // nullable where the hash-init columns are not, and a nullable
@@ -468,8 +510,14 @@ object GdMf {
           advance(uNew, iNew)
         }
       }
-      adopt(uCp, iCp)
       facts.unpersist()
+      adopt(uCp, iCp)
+    } else {
+      // an untrained Model keeps the lazy init states over the dim
+      // checkpoints, which then stay resident for its life
+      (initState(userDim, "u_id", "u_factors", "u_bias", cfg.seed),
+        initState(itemDim, "i_id", "i_factors", "i_bias", cfg.seed + 1),
+        Seq(userDimCp, itemDimCp))
     }
     Model(
       userState = uState.select(col("user"),

@@ -70,6 +70,24 @@ object DatasetBridge {
       .internalCreateDataFrame(rdd, schema), rdd, rows)
   }
 
+  /** `df` as a frame over its final-stage RDD, with the same schema and
+    * `df`'s estimated statistics. Building that RDD under adaptive
+    * execution runs every shuffle map stage of `df`'s plan now, once;
+    * each later job over the returned frame (persisted or not) reads
+    * the same shuffle files, so frames derived from it share that work
+    * with no cache to release. The plan's partitions stay as AQE left
+    * them, whatever a consumer persists.
+    */
+  def shuffledOnce(df: DataFrame): DataFrame = {
+    import org.apache.spark.sql.catalyst.types.DataTypeUtils
+    val spark = df.sparkSession.asInstanceOf[org.apache.spark.sql.classic.SparkSession]
+    val qe = df.queryExecution
+    org.apache.spark.sql.classic.Dataset.ofRows(spark,
+      org.apache.spark.sql.execution.LogicalRDD(
+        DataTypeUtils.toAttributes(df.schema), qe.toRdd)(
+        spark, originStats = Some(qe.optimizedPlan.stats)))
+  }
+
   /** [[localCheckpointFresh]] whose materialization action ALSO returns
     * `(count, xor of xxhash64(col0, col1))` over the checkpointed rows —
     * for iterative loops that detect convergence by relation checksum

@@ -1,6 +1,7 @@
 package org.apache.spark.sql.graftbridge
 
 import org.apache.spark.SparkContext
+import org.apache.spark.scheduler.StageInfo
 
 /** Deterministic listener-metric reads for the shuffle-volume specs:
   * `LiveListenerBus.waitUntilEmpty` is `private[spark]`, so tests
@@ -12,4 +13,9 @@ import org.apache.spark.SparkContext
 object ListenerBridge {
   def waitUntilListenerBusEmpty(sc: SparkContext): Unit =
     sc.listenerBus.waitUntilEmpty()
+
+  /** Whether `s` is a shuffle map stage (`shuffleDepId` is
+    * `private[spark]`).
+    */
+  def isShuffleMap(s: StageInfo): Boolean = s.shuffleDepId.isDefined
 }

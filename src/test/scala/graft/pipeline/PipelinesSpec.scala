@@ -32,12 +32,15 @@ class PipelinesSpec extends SparkSpec {
 
   test("jsonToCsv roundtrips the review ETL") {
     val tmp = java.nio.file.Files.createTempDirectory("graft_e2e").toString
-    synthetic.toDF
+    val reviews = synthetic.toDF
       .select($"user".as("reviewerID"), $"item".as("asin"),
         $"rating".as("overall"), $"time".as("unixReviewTime"))
-      .write.mode("overwrite").json(s"$tmp/reviews")
+    reviews.write.mode("overwrite").json(s"$tmp/reviews")
     val n = Pipelines.jsonToCsv(spark, s"$tmp/reviews", s"$tmp/ratings_csv")
     assert(n === synthetic.size)
+    // the count is observed on the write: an empty input counts 0 rows
+    reviews.limit(0).write.mode("overwrite").json(s"$tmp/none")
+    assert(Pipelines.jsonToCsv(spark, s"$tmp/none", s"$tmp/none_csv") === 0L)
   }
 
   test("prepare dedups and splits exhaustively") {
@@ -47,6 +50,40 @@ class PipelinesSpec extends SparkSpec {
     val expected = synthetic.map(r => (r.user, r.item)).distinct.size
     assert(total === expected)
     assert(train.intersect(test).count() === 0)
+  }
+
+  test("prepare's split is the same whether or not the caller persists it") {
+    def split(persist: Boolean) = {
+      val (train, test) = Pipelines.prepare(synthetic.toDF, seed = 7L)
+      if (persist) { train.persist(); test.persist() }
+      val sides = (train.collect().toSet, test.collect().toSet)
+      train.unpersist(); test.unpersist()
+      sides
+    }
+    val (train, test) = split(persist = false)
+    val (trainP, testP) = split(persist = true)
+    assert(train.size === trainP.size)
+    assert(train === trainP)
+    assert(test === testP)
+  }
+
+  test("prepare runs the source's one shuffle once, for both sides, and caches nothing") {
+    val tmp = java.nio.file.Files.createTempDirectory("graft_prep").toString
+    synthetic.toDF.write.mode("overwrite").csv(s"$tmp/ratings")
+    val sc = spark.sparkContext
+    val cached = sc.getPersistentRDDs.keySet
+    val ((nTrain, nTest), shape) = shapeOf {
+      val (train, test) = Pipelines.prepare(
+        graft.io.RatingsIO.readRatingsCsv(spark, s"$tmp/ratings"), seed = 7L)
+      (train.count(), test.count())
+    }
+    assert(nTrain + nTest === synthetic.map(r => (r.user, r.item)).distinct.size)
+    def readsSource(s: org.apache.spark.scheduler.StageInfo) =
+      s.rddInfos.exists(_.name == "FileScanRDD")
+    assert(shape.shuffleMapStages.count(readsSource) === 1 &&
+      shape.stages.count(readsSource) === 1,
+      "stages: " + shape.stages.map(s => (s.stageId, s.rddInfos.map(_.name))))
+    assert(sc.getPersistentRDDs.keySet === cached)
   }
 
   test("runAls end-to-end beats the global-mean baseline on held-out data") {

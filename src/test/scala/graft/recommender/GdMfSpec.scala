@@ -1,5 +1,8 @@
 package graft.recommender
 
+import org.apache.spark.sql.Column
+import org.apache.spark.sql.functions._
+
 import graft.SparkSpec
 import graft.model.Rating
 
@@ -36,28 +39,6 @@ class GdMfSpec extends SparkSpec {
     val c = df.repartition(32).persist()
     c.count()
     c
-  }
-
-  /** Tasks per submitted stage and the job count of `f`'s jobs. */
-  private def shapeOf[T](f: => T): (T, Seq[Int], Int) = {
-    import org.apache.spark.scheduler._
-    import org.apache.spark.sql.graftbridge.ListenerBridge
-    val sc = spark.sparkContext
-    val stages = new java.util.concurrent.ConcurrentLinkedQueue[Int]()
-    val jobs = new java.util.concurrent.atomic.AtomicInteger()
-    val l = new SparkListener {
-      override def onJobStart(j: SparkListenerJobStart): Unit = jobs.incrementAndGet()
-      override def onStageSubmitted(st: SparkListenerStageSubmitted): Unit =
-        stages.add(st.stageInfo.numTasks)
-    }
-    ListenerBridge.waitUntilListenerBusEmpty(sc)
-    sc.addSparkListener(l)
-    try {
-      val r = f
-      ListenerBridge.waitUntilListenerBusEmpty(sc)
-      import scala.jdk.CollectionConverters._
-      (r, stages.asScala.toSeq, jobs.get())
-    } finally sc.removeSparkListener(l)
   }
 
   private type States = Map[String, (Array[Double], Double)]
@@ -246,23 +227,24 @@ class GdMfSpec extends SparkSpec {
     val df = cached32(cells.toDF)
     val widthWas = spark.conf.get("spark.sql.shuffle.partitions")
     for (alternating <- Seq(false, true)) {
-      val (m, stages, _) = shapeOf(GdMf.fit(df, GdMf.Config(nFactors = 4,
+      val (m, shape) = shapeOf(GdMf.fit(df, GdMf.Config(nFactors = 4,
         epochs = 2, alternating = alternating)))
+      val stages = shape.stageWidths
       assert(stages.nonEmpty && stages.forall(_ <= 1),
         s"stage widths $stages (alternating=$alternating)")
       m.release()
     }
-    val (m0, _, jobs) = shapeOf(GdMf.fit(df, GdMf.Config(nFactors = 4, epochs = 0)))
-    assert(jobs <= 4, s"an epochs = 0 fit ran $jobs jobs")
+    val (m0, setup) = shapeOf(GdMf.fit(df, GdMf.Config(nFactors = 4, epochs = 0)))
+    assert(setup.jobs <= 4, s"an epochs = 0 fit ran ${setup.jobs} jobs")
     m0.release()
     // with both states under the cap an epoch is ONE job, and the
     // history rides on it
     for (alternating <- Seq(false, true)) {
       def jobsOf(epochs: Int, collectErrors: Boolean) = {
-        val (m, _, n) = shapeOf(GdMf.fit(df, GdMf.Config(nFactors = 4, epochs = epochs,
+        val (m, shape) = shapeOf(GdMf.fit(df, GdMf.Config(nFactors = 4, epochs = epochs,
           alternating = alternating, collectErrors = collectErrors)))
         m.release()
-        n
+        shape.jobs
       }
       val one = jobsOf(1, collectErrors = false)
       for (collectErrors <- Seq(false, true)) {
@@ -276,13 +258,70 @@ class GdMfSpec extends SparkSpec {
     // on the driver, though both states broadcast: the template loop runs
     val capped = GdMf.Config(nFactors = 4, epochs = 1, factsPartitions = 4,
       autoBroadcastDimBytes = 20000L)
-    val (c1, _, templateOne) = shapeOf(GdMf.fit(df, capped))
-    val (c3, _, templateThree) = shapeOf(GdMf.fit(df, capped.copy(epochs = 3)))
-    assert(templateThree > templateOne + 2,
-      s"3 epochs ran $templateThree jobs, 1 epoch $templateOne")
+    val (c1, one) = shapeOf(GdMf.fit(df, capped))
+    val (c3, three) = shapeOf(GdMf.fit(df, capped.copy(epochs = 3)))
+    assert(three.jobs > one.jobs + 2,
+      s"3 epochs ran ${three.jobs} jobs, 1 epoch ${one.jobs}")
     c1.release(); c3.release()
     assert(spark.conf.get("spark.sql.shuffle.partitions") === widthWas)
     df.unpersist()
+  }
+
+  // The SQL forms of the init, which initFactors replaced: its reference.
+  private def u01Sql(id: Column, salt: Int, seed: Long): Column =
+    xxhash64(id, lit(salt), lit(seed)).cast("double") / lit(1.8446744073709552e19) + lit(0.5)
+  private def uniformFactorsSql(id: Column, k: Int, seed: Long): Column =
+    array((0 until k).map(f => u01Sql(id, f, seed) * 0.1): _*)
+  private def normalFactorsSql(id: Column, k: Int, seed: Long): Column =
+    array((0 until k).map { f =>
+      val a = greatest(u01Sql(id, 2 * f, seed), lit(1e-12))
+      val b = u01Sql(id, 2 * f + 1, seed)
+      sqrt(lit(-2.0) * log(a)) * cos(lit(2.0 * math.Pi) * b) * 0.1
+    }: _*)
+  private def factorsSql(normal: Boolean) =
+    if (normal) normalFactorsSql _ else uniformFactorsSql _
+
+  test("the init equals its SQL form bit for bit: int and long ids, both distributions") {
+    val (k, n, seed) = (30, 12000, 42L)
+    for (longId <- Seq(false, true); normal <- Seq(false, true))
+      withClue(s"longId=$longId normal=$normal: ") {
+        val id = if (longId) col("id") else col("id").cast("int")
+        val rows = spark.range(n).select(col("id"), factorsSql(normal)(id, k, seed),
+          GdMf.initColumn(id, k, seed, normal)).collect()
+        assert(rows.length === n)
+        def bits(xs: Iterable[Double]) = xs.map(java.lang.Double.doubleToRawLongBits).toSeq
+        val bad = rows.filterNot { r =>
+          val driver = new Array[Double](k)
+          GdMf.initFactors(r.getLong(0), longId, k, seed, normal, driver, 0)
+          val want = bits(r.getSeq[Double](1))
+          bits(driver) == want && bits(r.getSeq[Double](2)) == want
+        }
+        assert(bad.isEmpty, s"${bad.length} ids differ, first ${bad.headOption}")
+      }
+  }
+
+  test("the states keep the SQL init's schema, trained or not, fused or not") {
+    import graft.encode.Encoding
+    val df = ratingsSeq.toDF
+    // the fit's dims come from its non-null-key slice
+    val keyed = df.where(col("user").isNotNull && col("item").isNotNull)
+    for (alternating <- Seq(false, true); epochs <- Seq(0, 1);
+         cap <- Seq(64L << 20, 0L)) withClue(s"$alternating $epochs $cap: ") {
+      val m = GdMf.fit(df, GdMf.Config(nFactors = 3, epochs = epochs,
+        alternating = alternating, autoBroadcastDimBytes = cap))
+      def sqlState(key: String, id: String, f: String, b: String, seed: Long) =
+        Encoding.dimension(keyed, key, "time", id)
+          .withColumn(f, factorsSql(!alternating)(col(id), 3, seed))
+          .withColumn(b, lit(0.0)).select(key, f, b).schema
+      // the template loop's states come out of nullable placeholder leaves
+      def relaxed(s: org.apache.spark.sql.types.StructType) =
+        if (epochs > 0 && cap == 0L) org.apache.spark.sql.types.StructType(
+          s.fields.map(_.copy(nullable = true)))
+        else s
+      assert(m.userState.schema === relaxed(sqlState("user", "u_id", "u_factors", "u_bias", 42L)))
+      assert(m.itemState.schema === relaxed(sqlState("item", "i_id", "i_factors", "i_bias", 43L)))
+      m.release()
+    }
   }
 
   test("fit stats equal ratingStats over the encoded facts (duplicates, null keys and ratings)") {
