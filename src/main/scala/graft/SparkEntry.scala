@@ -1815,7 +1815,7 @@ object SparkEntry {
     }
     try {
       run.query.processAllAvailable()
-      run.result().localCheckpoint()
+      run.result().get.localCheckpoint()
     } finally { run.query.stop(); s.sql(s"DROP TABLE IF EXISTS $tbl") }
   }
 
@@ -2489,7 +2489,7 @@ object SparkEntry {
       stream, "source", "text", v, tbl) { (_, _) => () }
     try {
       run.query.processAllAvailable()
-      run.coverage().localCheckpoint()
+      run.coverage().get.localCheckpoint()
     } finally { run.query.stop(); s.sql(s"DROP TABLE IF EXISTS $tbl") }
   }
 
@@ -7526,29 +7526,22 @@ object SparkEntry {
       .select("doc_id", "text")
     val tbl = "graft_selfm_" +
       java.util.UUID.randomUUID().toString.replace("-", "")
-    val q = stream.writeStream.outputMode("append")
-      .foreachBatch { (b: DataFrame, _: Long) =>
+    val hulls = graft.streaming.StandingTable(tbl)
+    val q = graft.streaming.StandingTable.foreachBatch(stream, tbl) {
+      (b: DataFrame, batchId: Long) =>
         // q95 discipline: write through the stream's clone session.
-        // SINGLE-RUN HARNESS ASSUMPTION (r17 ADVICE): this append is
-        // NOT keyed by batchId — a retried micro-batch would append
-        // its hull rows twice, perturbing the end-of-ingest
-        // doc-frequency cap. The registry harness runs each stream
-        // exactly once with no checkpoint/restart (processAllAvailable
-        // then stop), so no retry path exists here; a production
-        // deployment of this pattern keys writes by batchId (see
-        // StreamingCuration's batch_id column + replay guard).
-        Dedup.winnowSelfHulls(b.localCheckpoint(true),
-            "doc_id", "text", k = 20, w = 8)
-          .write.format("parquet").mode("append").saveAsTable(tbl)
-        ()
-      }.start()
+        // Keyed by batchId: a retried micro-batch replaces its own
+        // hull partition instead of appending its rows twice, which
+        // would perturb the end-of-ingest doc-frequency cap
+        hulls.foldPartition(Dedup.winnowSelfHulls(b.localCheckpoint(true),
+          "doc_id", "text", k = 20, w = 8), batchId)
+    }
     try q.processAllAvailable()
     finally q.stop()
     import s.implicits._
     val out =
       try {
-        s.catalog.refreshTable(tbl)
-        Dedup.winnowSelfPairsFromHulls(s.table(tbl), k = 20,
+        Dedup.winnowSelfPairsFromHulls(hulls.read(s).get, k = 20,
             minSharedFps = 2, maxFpDocs = 4L, raw = false)
           .collect()
           .map(r => (r.getLong(0), r.getLong(1), r.getLong(2),
@@ -7771,28 +7764,22 @@ object SparkEntry {
       .select("doc_id", "text", "source")
     val tbl = "graft_rtrep_" +
       java.util.UUID.randomUUID().toString.replace("-", "")
-    val q = stream.writeStream.outputMode("append")
-      .foreachBatch { (b: DataFrame, _: Long) =>
-        // single-run harness assumption (r17 ADVICE): not keyed by
-        // batchId — a retried batch would double its report partials
-        // in the end-of-ingest group-sum. The registry harness runs
-        // each stream once with no checkpoint/restart; production
-        // deployments key writes by batchId (StreamingCuration's
-        // replay guard).
-        Dedup.winnowRouteReport(b.localCheckpoint(true),
+    val partials = graft.streaming.StandingTable(tbl)
+    val q = graft.streaming.StandingTable.foreachBatch(stream, tbl) {
+      (b: DataFrame, batchId: Long) =>
+        // keyed by batchId: a retried batch replaces its own report
+        // partials instead of doubling them in the end-of-ingest sum
+        partials.foldPartition(Dedup.winnowRouteReport(b.localCheckpoint(true),
             "doc_id", "text", "source", bench, "bench_id", "text",
             cutFloor = 0.05, dropFloor = 0.4,
-            k = 20, w = 8, minSharedFps = 2, maxBenchFpFreq = 64L)
-          .write.format("parquet").mode("append").saveAsTable(tbl)
-        ()
-      }.start()
+            k = 20, w = 8, minSharedFps = 2, maxBenchFpFreq = 64L), batchId)
+    }
     try q.processAllAvailable()
     finally q.stop()
     import s.implicits._
     val out =
       try {
-        s.catalog.refreshTable(tbl)
-        s.table(tbl).groupBy(col("source"))
+        partials.read(s).get.groupBy(col("source"))
           .agg(sum("n_docs").as("n_docs"),
             sum("n_keep").as("n_keep"),
             sum("n_cut").as("n_cut"),
@@ -7888,35 +7875,30 @@ object SparkEntry {
     val sfx = java.util.UUID.randomUUID().toString.replace("-", "")
     val hullTbl = s"graft_fcap_h_$sfx"
     val docTbl = s"graft_fcap_d_$sfx"
-    val q = stream.writeStream.outputMode("append")
-      .foreachBatch { (b: DataFrame, _: Long) =>
+    val hulls = graft.streaming.StandingTable(hullTbl)
+    val roster = graft.streaming.StandingTable(docTbl)
+    val q = graft.streaming.StandingTable.foreachBatch(stream, hullTbl) {
+      (b: DataFrame, batchId: Long) =>
         val bb = b.localCheckpoint(true)
-        // single-run harness assumption (r17 ADVICE): neither append
-        // is keyed by batchId — a retried batch would duplicate hull
-        // and roster rows, perturbing the fp-frequency cap and the
-        // rank assembly. The registry harness runs each stream once
-        // with no checkpoint/restart; production deployments key
-        // writes by batchId (StreamingCuration's replay guard).
-        Dedup.winnowSelfHulls(bb, "doc_id", "text", k = 20, w = 8)
-          .write.format("parquet").mode("append").saveAsTable(hullTbl)
-        bb.select("doc_id")
-          .write.format("parquet").mode("append").saveAsTable(docTbl)
-        ()
-      }.start()
+        // keyed by batchId: a retried batch replaces its own hull and
+        // roster rows instead of duplicating them, which would perturb
+        // the fp-frequency cap and the rank assembly
+        hulls.foldPartition(
+          Dedup.winnowSelfHulls(bb, "doc_id", "text", k = 20, w = 8), batchId)
+        roster.foldPartition(bb.select("doc_id"), batchId)
+    }
     try q.processAllAvailable()
     finally q.stop()
     import s.implicits._
     val out =
       try {
-        s.catalog.refreshTable(hullTbl)
-        s.catalog.refreshTable(docTbl)
-        val pairs = Dedup.winnowSelfPairsFromHulls(s.table(hullTbl),
+        val pairs = Dedup.winnowSelfPairsFromHulls(hulls.read(s).get,
             k = 20, minSharedFps = 2, maxFpDocs = 4L, raw = false)
           .select(col("doc_a").as("id_a"), col("doc_b").as("id_b"))
         val labels = Dedup.clustersStar(pairs)
           .select(col("id").as("doc_id"), col("cluster_id"))
-        Dedup.winnowFamilyCapFromLabels(s.table(docTbl), labels,
-            capPerFamily = 2)
+        Dedup.winnowFamilyCapFromLabels(roster.read(s).get.select("doc_id"),
+            labels, capPerFamily = 2)
           .collect()
           .map(r => (r.getLong(0),
             if (r.isNullAt(1)) null.asInstanceOf[java.lang.Long]

@@ -74,26 +74,18 @@ object Bucketing {
     * table the same way any continuously-ingested lake path
     * fragments). [[Lake.compact]] must NOT be used on these — a plain
     * rewrite drops the bucket spec and every probe join regains its
-    * index-side exchange. This rewrites THROUGH the same
-    * bucketBy(+sortBy) into a fresh table and swaps it in under the
-    * original name (drop + rename — Spark's catalog has no atomic
-    * swap, so run between streaming runs, never under a live query;
-    * same dest-then-swap contract as Lake.compact / IvfIndex.rebuild).
-    *
-    * `key`/`buckets` must match the table's creation spec (the
-    * catalog's bucket metadata is not exposed through the public API;
-    * index creators in this repo fix both by construction). Returns
+    * index-side exchange. This rewrites THROUGH the table's own bucket
+    * spec, read back from its catalog entry, into a fresh table and
+    * swaps it in under the original name
+    * ([[graft.streaming.StandingTable.swap]]: aside first, so run
+    * between streaming runs, never under a live query). Returns
     * (rows, files before, files after).
     */
   def compactBucketed(spark: org.apache.spark.sql.SparkSession,
-      table: String, key: String, buckets: Int): (Long, Long, Long) = {
-    def location(t: String): org.apache.hadoop.fs.Path = {
-      val loc = spark.sql(s"DESCRIBE FORMATTED $t")
-        .filter(org.apache.spark.sql.functions.col("col_name") === "Location")
-        .head().getString(1)
-      new org.apache.hadoop.fs.Path(loc)
-    }
-    def parquetFiles(p: org.apache.hadoop.fs.Path): Long = {
+      table: String): (Long, Long, Long) = {
+    import org.apache.spark.sql.graftbridge.CatalogBridge
+    def parquetFiles(t: String): Long = {
+      val p = new org.apache.hadoop.fs.Path(CatalogBridge.entry(spark, t).location)
       val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
       val it = fs.listFiles(p, true)
       var n = 0L
@@ -101,7 +93,9 @@ object Bucketing {
         if (it.next().getPath.getName.endsWith(".parquet")) n += 1
       n
     }
-    val before = parquetFiles(location(table))
+    val (key, buckets) = CatalogBridge.entry(spark, table).bucket.getOrElse(
+      throw new IllegalArgumentException(s"table '$table' is not bucketed"))
+    val before = parquetFiles(table)
     val tmp = table + "__compact"
     spark.sql(s"DROP TABLE IF EXISTS $tmp")
     // File count = writing tasks × buckets-per-task, so the write must
@@ -118,9 +112,8 @@ object Bucketing {
     val rows = spark.table(table)
     val nRows = rows.count()
     writeBucketedAligned(rows, tmp, key, buckets, "overwrite")
-    spark.sql(s"DROP TABLE $table")
-    spark.sql(s"ALTER TABLE $tmp RENAME TO $table")
-    (nRows, before, parquetFiles(location(table)))
+    graft.streaming.StandingTable.swap(spark, Seq(tmp -> table))
+    (nRows, before, parquetFiles(table))
   }
 
   /** Create-if-absent variant: reuse an already-materialized bucketed

@@ -199,12 +199,13 @@ object IvfIndex {
   }
 
   /** Offline REBUILD: retrain the quantizer on the current corpus into
-    * fresh tables, then swap them in under `name` (drop + rename —
-    * Spark's catalog has no multi-table atomic swap, so schedule
-    * rebuilds in maintenance windows, the same dest-then-swap contract
-    * as [[graft.io.Lake.compact]]). This is the periodic counterpart
-    * to [[refresh]]: refresh keeps ingest O(batch) under frozen
-    * centroids, rebuild re-levels the lists once drift accumulates.
+    * fresh tables, then swap them in under `name`
+    * ([[graft.streaming.StandingTable.swap]]: aside first, so a failed
+    * swap leaves the previous index recoverable; no multi-table atomic
+    * swap, so schedule rebuilds in maintenance windows). This is the
+    * periodic counterpart to [[refresh]]: refresh keeps ingest
+    * O(batch) under frozen centroids, rebuild re-levels the lists once
+    * drift accumulates.
     */
   def rebuild(corpus: DataFrame, idCol: String, vecCol: String, name: String,
       nlist: Int = 16, seed: Long = 42L,
@@ -214,9 +215,9 @@ object IvfIndex {
     drop(spark, tmp)
     build(corpus, idCol, vecCol, tmp, nlist, seed, trainSampleFraction,
       listBuckets)
-    drop(spark, name)
-    spark.sql(s"ALTER TABLE ${centroidsTable(tmp)} RENAME TO ${centroidsTable(name)}")
-    spark.sql(s"ALTER TABLE ${listsTable(tmp)} RENAME TO ${listsTable(name)}")
+    graft.streaming.StandingTable.swap(spark, Seq(
+      centroidsTable(tmp) -> centroidsTable(name),
+      listsTable(tmp) -> listsTable(name)))
   }
 
   /** Drop both tables (test/maintenance convenience). */

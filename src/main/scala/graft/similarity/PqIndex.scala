@@ -217,8 +217,7 @@ object PqIndex {
   }
 
   /** Offline REBUILD: retrain codebooks + re-encode into fresh tables,
-    * swap in under `name` — see [[IvfIndex.rebuild]] for the contract
-    * (drop + rename; schedule in maintenance windows).
+    * swap in under `name` — see [[IvfIndex.rebuild]] for the contract.
     */
   def rebuild(corpus: DataFrame, idCol: String, vecCol: String, name: String,
       m: Int = 8, ks: Int = 16, seed: Long = 42L,
@@ -229,9 +228,9 @@ object PqIndex {
     drop(spark, tmp)
     build(corpus, idCol, vecCol, tmp, m, ks, seed, trainSampleFraction,
       fitTimeoutSec, codeBuckets)
-    drop(spark, name)
-    spark.sql(s"ALTER TABLE ${codebooksTable(tmp)} RENAME TO ${codebooksTable(name)}")
-    spark.sql(s"ALTER TABLE ${codesTable(tmp)} RENAME TO ${codesTable(name)}")
+    graft.streaming.StandingTable.swap(spark, Seq(
+      codebooksTable(tmp) -> codebooksTable(name),
+      codesTable(tmp) -> codesTable(name)))
   }
 
   /** Drop both tables (test/maintenance convenience). */

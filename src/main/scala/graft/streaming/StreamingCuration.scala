@@ -88,7 +88,6 @@ object StreamingCuration {
   def start(docs: DataFrame, idCol: String, benchmark: DataFrame,
       cfg: FrozenConfig, mixtureRates: Option[DataFrame],
       fpIndexTable: String, packStateTable: String,
-      indexBuckets: Int = 32,
       // production resume point: with a checkpoint dir, a crashed query
       // restarts on the SAME batch id, so the batch_id < current probe
       // guard makes the replay exactly idempotent (the failed attempt's
@@ -98,25 +97,14 @@ object StreamingCuration {
       checkpointLocation: Option[String] = None)
       (onBatch: (DataFrame, Long) => Unit): StreamingQuery = {
     val setup = docs.sparkSession
-    if (!setup.catalog.tableExists(fpIndexTable))
-      graft.io.Bucketing.writeBucketedAligned(setup.createDataFrame(
-        setup.sparkContext.emptyRDD[org.apache.spark.sql.Row],
-        StructType(Seq(StructField("h", StringType),
-          StructField("batch_id", LongType)))),
-        fpIndexTable, "h", indexBuckets, "overwrite")
-    else
-      IndexTables.requireBatchIdColumn(setup, fpIndexTable)
-    if (!setup.catalog.tableExists(packStateTable))
-      setup.createDataFrame(
-        setup.sparkContext.emptyRDD[org.apache.spark.sql.Row],
-        StructType(Seq(StructField("shard", StringType),
-          StructField("cum", LongType), StructField("batch_id", LongType))))
-        .write.format("parquet").mode("overwrite").saveAsTable(packStateTable)
+    val fpIndex = StandingTable.open(setup, fpIndexTable,
+      StructType(Seq(StructField("h", StringType))), Some("h"))
+    val packState = StandingTable.open(setup, packStateTable,
+      StructType(Seq(StructField("shard", StringType),
+        StructField("cum", LongType))), None)
 
-    val writer = docs.writeStream.outputMode("append")
-    checkpointLocation.foreach(writer.option("checkpointLocation", _))
-    writer
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
+    StandingTable.foreachBatch(docs, fpIndexTable, checkpointLocation) {
+      (batch: DataFrame, batchId: Long) =>
         val sess = batch.sparkSession
         // ---- stateless byte-hygiene intake (exact curateCorpus stage)
         val intaken =
@@ -181,8 +169,7 @@ object StreamingCuration {
           } else Curation.decontaminate(selected, benchmark, "text")
 
         // ---- cross-batch exact keep-first dedup (fingerprint index)
-        val index = sess.table(fpIndexTable)
-          .filter(col("batch_id") < batchId).select("h").distinct()
+        val index = fpIndex.before(sess, batchId).select("h").distinct()
         val w = Window.partitionBy(col("__fp")).orderBy(col(idCol))
         val deduped = cleaned
           .withColumn("__fp", TextAnalysis.fingerprint(col("text")))
@@ -192,13 +179,8 @@ object StreamingCuration {
           .filter(col("__rn") === 1 && col("__hit").isNull)
           .drop("__rn", "__hit")
           .localCheckpoint()
-        val newFps = deduped.select(col("__fp").as("h")).distinct()
-          .withColumn("batch_id", lit(batchId))
-          .localCheckpoint()
-        // bucket-aligned append: one file per bucket per trigger, not
-        // one per (task, bucket) — see Bucketing.writeBucketedAligned
-        graft.io.Bucketing.writeBucketedAligned(
-          newFps, fpIndexTable, "h", indexBuckets, "append")
+        fpIndex.append(deduped.select(col("__fp").as("h")).distinct()
+          .localCheckpoint(), batchId)
 
         // ---- frozen mixture rebalance
         val sampled = mixtureRates.fold(deduped.drop("__fp"))(r =>
@@ -209,8 +191,7 @@ object StreamingCuration {
         // monotone per shard, so the latest committed total is max(cum)
         // over batch_id < current — a replay's duplicate appends carry
         // identical values and max() absorbs them.
-        val base = sess.table(packStateTable)
-          .filter(col("batch_id") < batchId)
+        val base = packState.before(sess, batchId)
           .groupBy(col("shard")).agg(max(col("cum")).as("__base"))
         val wp = Window.partitionBy(col(cfg.shardCol)).orderBy(col(idCol))
         val packed = sampled
@@ -227,16 +208,12 @@ object StreamingCuration {
           .withColumn("seq_offset",
             (col("__total") - col("n_tokens")) % lit(cfg.seqLen.toLong))
           .localCheckpoint()
-        val newState = packed
+        packState.append(packed
           .groupBy(col(cfg.shardCol).as("shard"))
           .agg(max(col("__total")).as("cum"))
-          .withColumn("batch_id", lit(batchId))
-          .localCheckpoint()
-        newState.write.format("parquet").mode("append")
-          .saveAsTable(packStateTable)
+          .localCheckpoint(), batchId)
         onBatch(packed.drop("__cum_in", "__base", "__total"), batchId)
-      }
-      .start()
+    }
   }
 
   /** Ingest-time per-domain admission quota — the streaming face of

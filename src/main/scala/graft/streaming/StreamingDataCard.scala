@@ -12,7 +12,7 @@ import graft.text.{Quality, TextAnalysis}
   * re-scanned per release cut.
   *
   * State (the q130 sum-merge fold class — every piece lands in a
-  * `batch_id`-partitioned table via static-partition INSERT OVERWRITE,
+  * `batch_id`-partitioned table via [[StandingTable.foldPartition]],
   * so an at-least-once foreachBatch replay overwrites its OWN
   * partition and cannot double-count):
   *
@@ -45,29 +45,6 @@ object StreamingDataCard {
   private def sumsTable(t: String): String = t + "_sums"
   private def fpsTable(t: String): String = t + "_fps"
 
-  /** Idempotent per-batch fold: land `rows` as `table`'s
-    * `batch_id = batchId` partition, replacing any previous attempt
-    * for the same batch (the [[StreamingSketches]] sum-merge sink —
-    * the static-partition SQL form, because v1 insertInto silently
-    * ignores the DataFrameWriter partitionOverwriteMode option).
-    */
-  private[streaming] def foldPartition(spark: SparkSession, rows: DataFrame,
-      table: String, batchId: Long): Unit = {
-    val tagged = rows.withColumn("batch_id", lit(batchId))
-    if (!spark.catalog.tableExists(table)) {
-      tagged.write.partitionBy("batch_id").format("parquet")
-        .saveAsTable(table)
-    } else {
-      val cols = rows.columns.map(c => s"`$c`").mkString(", ")
-      val view = s"graft_card_fold_${math.abs(batchId)}_${System.nanoTime()}"
-      tagged.createOrReplaceTempView(view)
-      try spark.sql(
-        s"""INSERT OVERWRITE TABLE $table PARTITION (batch_id = $batchId)
-           |SELECT $cols FROM $view""".stripMargin)
-      finally spark.catalog.dropTempView(view)
-    }
-  }
-
   /** Start the card stream. `onBatch(card, batchId)` receives the
     * card-so-far after each trigger.
     */
@@ -76,14 +53,14 @@ object StreamingDataCard {
       w: Quality.Weights = Quality.defaultWeights)
       (onBatch: (DataFrame, Long) => Unit): Run = {
     val caller = stream.sparkSession
-    val query = stream.writeStream
-      .outputMode("append")
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
+    val sums = StandingTable(sumsTable(table))
+    val fps = StandingTable(fpsTable(table))
+    val query = StandingTable.foreachBatch(stream, table) {
+      (batch: DataFrame, batchId: Long) =>
         // table ops through the stream's CLONED session — the
         // StreamingDedup relation-cache lesson
-        val sess = batch.sparkSession
         val score = Quality.scoreQuality(col(textCol), w)
-        val sums = batch
+        sums.foldPartition(batch
           .groupBy(col(sourceCol).as("source"), col(langCol).as("lang"))
           .agg(
             count(lit(1)).as("n_docs"),
@@ -93,29 +70,20 @@ object StreamingDataCard {
             count(when(score > 0, lit(1))).as("n_keep"),
             sum(floor(score * 1e6)
               .cast(org.apache.spark.sql.types.DecimalType(38, 0)))
-              .as("q_fp"))
-        foldPartition(sess, sums, sumsTable(table), batchId)
-        foldPartition(sess,
+              .as("q_fp")), batchId)
+        fps.foldPartition(
           batch.select(col(sourceCol).as("source"),
-            TextAnalysis.fingerprint(col(textCol)).as("fp")),
-          fpsTable(table), batchId)
-        onBatch(cardOf(sess, table), batchId)
-      }
-      .start()
+            TextAnalysis.fingerprint(col(textCol)).as("fp")), batchId)
+        onBatch(cardOf(batch.sparkSession, table), batchId)
+    }
     Run(query,
-      // None until the first batch creates BOTH tables — the
-      // StreamingSketches.startCm pre-first-trigger contract. Gating on
-      // the sums table alone would race the first trigger: between the
+      // None until the first batch creates BOTH tables. Gating on the
+      // sums table alone would race the first trigger: between the
       // _sums fold and the _fps fold a concurrent card() would pass the
       // guard and cardOf would throw on the missing _fps table.
       card = () =>
-        if (!caller.catalog.tableExists(sumsTable(table))
-          || !caller.catalog.tableExists(fpsTable(table))) None
-        else {
-          caller.catalog.refreshTable(sumsTable(table))
-          caller.catalog.refreshTable(fpsTable(table))
-          Some(cardOf(caller, table))
-        })
+        for (_ <- sums.read(caller); _ <- fps.read(caller))
+          yield cardOf(caller, table))
   }
 
   /** Assemble the card from the state tables — the exact

@@ -1,6 +1,6 @@
 package graft.streaming
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.StreamingQuery
 import org.apache.spark.sql.types._
@@ -63,14 +63,13 @@ import graft.dedup.Dedup
   * doc to its OWN entry (owner_id == id means "already admitted"),
   * which covers caller-seeded snapshots of the same corpus.
   *
-  * The guard assumes batchIds from ONE checkpoint lineage (monotonic
-  * across restarts of the same checkpoint) — resume this stream with
-  * its checkpoint. Seeding a NEW stream (batchIds restart at 0) from
-  * an existing index requires its rows re-tagged to batch_id = -1
-  * first ([[IndexTables.migrateLegacy]] does this for pre-batch_id
-  * tables; `initialIndex` snapshots are tagged -1 automatically). The
-  * in-memory mode's index dies with the JVM, so replay-into-own-state
-  * cannot arise there.
+  * The guard assumes batchIds from ONE checkpoint lineage
+  * ([[StandingTable]]): the query is named after the index table, so
+  * with `spark.sql.streaming.checkpointLocation` set a restart over the
+  * same table resumes its checkpoint. `initialIndex` snapshots are
+  * tagged -1 automatically; pre-batch_id tables are rejected at start,
+  * naming [[StandingTable.migrateLegacy]]. The in-memory mode's index
+  * dies with the JVM, so replay-into-own-state cannot arise there.
   */
 object StreamingDedup {
 
@@ -82,29 +81,11 @@ object StreamingDedup {
       finalIndex: () => Option[DataFrame],
       release: () => Unit)
 
-  private val indexCols =
-    Seq("owner_id", "owner_sig", "band", "band_hash", "batch_id")
-
-  // bucket-ALIGNED (r19, guide §6): an unaligned bucketed append emits
-  // one file per (task, bucket) — measured ~1000 row-sized files and
-  // ~1.5 s per micro-batch at sf0.1, the dominant q95 per-batch cost;
-  // aligned it is one file per bucket and ~3× cheaper, and every later
-  // probe scan lists per-trigger files instead of per-(trigger×task)
-  private def writeIndex(df: DataFrame, table: String, buckets: Int,
-      overwrite: Boolean): Unit =
-    graft.io.Bucketing.writeBucketedAligned(
-      df.select(indexCols.map(col): _*), table, "band_hash", buckets,
-      if (overwrite) "overwrite" else "append")
-
-  private def emptyIndex(spark: SparkSession, idType: DataType): DataFrame =
-    spark.createDataFrame(
-      spark.sparkContext.emptyRDD[org.apache.spark.sql.Row],
-      StructType(Seq(
-        StructField("owner_id", idType),
-        StructField("owner_sig", ArrayType(LongType)),
-        StructField("band", IntegerType),
-        StructField("band_hash", LongType),
-        StructField("batch_id", LongType))))
+  private def indexSchema(idType: DataType): StructType = StructType(Seq(
+    StructField("owner_id", idType),
+    StructField("owner_sig", ArrayType(LongType)),
+    StructField("band", IntegerType),
+    StructField("band_hash", LongType)))
 
   /** Start the dedup stream. `onBatch(verdicts, batchId)` receives
     * every micro-batch's rows with their `dup_of` column (the caller
@@ -124,30 +105,12 @@ object StreamingDedup {
 
     case Some(tbl) =>
       val spark = docs.sparkSession
-      if (!spark.catalog.tableExists(tbl)) {
-        // seed rows are pre-history: batch_id = -1 makes them visible
-        // to batch 0's probe. UNCONDITIONALLY retag — a snapshot from
-        // Run.finalIndex() carries the OLD lineage's batchIds, and this
-        // stream's batchIds restart at 0, so keeping them would hide
-        // every snapshot row with batch_id >= 0 from batch 0's
-        // `batch_id < 0` probe (missed duplicates). Lineage-carrying
-        // batchIds are only meaningful when resuming the SAME
-        // checkpoint, and that path goes through the tableExists branch
-        // below, never through seeding.
-        val seed = initialIndex
-          .map(_.drop("batch_id").withColumn("batch_id", lit(-1L)))
-          .getOrElse(emptyIndex(spark, docs.schema(idCol).dataType))
-        writeIndex(seed, tbl, indexBuckets, overwrite = true)
-      } else {
-        require(initialIndex.isEmpty,
-          s"index table '$tbl' already exists; refusing to silently ignore " +
-            "initialIndex — drop the table to seed from the snapshot, or " +
-            "omit initialIndex to resume from the table")
-        IndexTables.requireBatchIdColumn(spark, tbl)
-      }
-      val query = docs.writeStream
-        .outputMode("append")
-        .foreachBatch { (batch: DataFrame, batchId: Long) =>
+      // indexBuckets only sizes a NEW table; a resumed one keeps its own
+      val index = StandingTable.open(spark, tbl,
+        indexSchema(docs.schema(idCol).dataType), Some("band_hash"),
+        indexBuckets, initialIndex)
+      val query = StandingTable.foreachBatch(docs, tbl) {
+        (batch: DataFrame, batchId: Long) =>
           // the stream executes in a CLONED SparkSession whose table-
           // relation cache is separate from the caller's: read AND
           // write the index through the batch's own session, or the
@@ -204,7 +167,7 @@ object StreamingDedup {
           // join + verdicts, so the append below is its single
           // materialization pass (the earlier fold checkpoint was a
           // second full pass before the write). The write itself is
-          // bucket-ALIGNED (see writeIndex): one file per bucket per
+          // bucket-ALIGNED (StandingTable.append): one file per bucket per
           // trigger, parallel across buckets — strictly better than
           // both the earlier unaligned multi-file write and the
           // coalesce(1) single-task variant. Per-trigger bucket files
@@ -232,11 +195,10 @@ object StreamingDedup {
           import scala.concurrent.{Await, Future}
           val bound = scala.concurrent.duration.Duration(3600L, "s")
           val appendF = Future(
-            timed("append")(writeIndex(
+            timed("append")(index.append(
               org.apache.spark.sql.graftbridge.DatasetBridge
                 .rebindToClone(newRows),
-              tbl, indexBuckets,
-              overwrite = false)))(scala.concurrent.ExecutionContext.global)
+              batchId)))(scala.concurrent.ExecutionContext.global)
           try timed("onBatch")(onBatch(verdicts, batchId))
           catch {
             case sinkFailure: Throwable =>
@@ -250,15 +212,10 @@ object StreamingDedup {
           // the files it just wrote (a stale listing silently misses
           // duplicates; the original found-empirically failure mode)
           sess.catalog.refreshTable(tbl)
-        }
-        .start()
-      Run(query,
-        // refresh first: the appends happened in the stream's cloned
-        // session, and this session's relation cache is stale
-        finalIndex = () => {
-          spark.catalog.refreshTable(tbl); Some(spark.table(tbl))
-        },
-        release = () => ())
+      }
+      // the appends happened in the stream's cloned session; read
+      // refreshes this session's stale relation cache first
+      Run(query, finalIndex = () => index.read(spark), release = () => ())
 
     case None =>
       // one mutable reference, only touched inside foreachBatch (which

@@ -42,15 +42,10 @@ import graft.dedup.Dedup
   * storage; the probe's `distinct` (exchange-free on the h-bucketed
   * table) absorbs them for all later batches.
   *
-  * The guard assumes batchIds from ONE checkpoint lineage (Structured
-  * Streaming keeps them monotonic across restarts of the same
-  * checkpoint) — so resuming this stream MUST reuse its checkpoint,
-  * the standard restart story. Seeding a NEW stream (fresh
-  * checkpoint, batchIds restart at 0) from an existing index table
-  * requires re-tagging its rows to batch_id = -1 first so batch 0 can
-  * see them — `IndexTables.migrateLegacy` is that rewrite (or start
-  * with a fresh table). Tables created before the batch_id column
-  * existed are rejected at start with the same migration pointer.
+  * The guard assumes batchIds from ONE checkpoint lineage
+  * ([[StandingTable]]): resume this stream over the same table with
+  * its checkpoint. Tables created before the batch_id column existed
+  * are rejected at start, naming [[StandingTable.migrateLegacy]].
   */
 object StreamingParagraphDedup {
 
@@ -58,32 +53,17 @@ object StreamingParagraphDedup {
     * reassembled docs as (doc_id, text, n_kept, n_dropped).
     */
   def start(docs: DataFrame, idCol: String, textCol: String,
-      indexTable: String, sep: String = "\n", indexBuckets: Int = 32)
+      indexTable: String, sep: String = "\n")
       (onBatch: (DataFrame, Long) => Unit): StreamingQuery = {
-    val setup = docs.sparkSession
-    if (!setup.catalog.tableExists(indexTable))
-      graft.io.Bucketing.writeBucketedAligned(setup.createDataFrame(
-        setup.sparkContext.emptyRDD[org.apache.spark.sql.Row],
-        StructType(Seq(StructField("h", StringType),
-          StructField("batch_id", LongType)))),
-        indexTable, "h", indexBuckets, "overwrite")
-    else
-      // a pre-batch_id table would fail the probe's filter mid-stream
-      // with an opaque missing-column error; fail at start instead,
-      // naming the migration step (IndexTables.migrateLegacy)
-      IndexTables.requireBatchIdColumn(setup, indexTable)
-
-    docs.writeStream
-      .outputMode("append")
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
+    val index = StandingTable.open(docs.sparkSession, indexTable,
+      StructType(Seq(StructField("h", StringType))), Some("h"))
+    StandingTable.foreachBatch(docs, indexTable) {
+      (batch: DataFrame, batchId: Long) =>
         val sess = batch.sparkSession
         // replay guard: only hashes admitted by EARLIER batches probe;
-        // a failed attempt's own rows (batch_id == batchId) are
-        // invisible, so the replay reproduces the original verdicts.
         // distinct absorbs re-append duplicates; both it and the probe
         // join are exchange-free on the h-bucketed scan.
-        val index = sess.table(indexTable)
-          .filter(col("batch_id") < batchId).select("h").distinct()
+        val admitted = index.before(sess, batchId).select("h").distinct()
         val paras = Dedup.explodedParas(batch, idCol, textCol, sep)
         val nonEmpty = paras.filter(!col("__empty"))
         // within-batch keep-first, then the cross-batch probe
@@ -92,7 +72,7 @@ object StreamingParagraphDedup {
         val batchOwners = nonEmpty
           .withColumn("__rn", row_number().over(w))
         val flagged = batchOwners
-          .join(index.withColumnRenamed("h", "__k").withColumn("__hit", lit(true)),
+          .join(admitted.withColumnRenamed("h", "__k").withColumn("__hit", lit(true)),
             Seq("__k"), "left")
           .withColumn("__keep", col("__rn") === 1 && col("__hit").isNull)
           .drop("__rn", "__hit")
@@ -100,18 +80,12 @@ object StreamingParagraphDedup {
           .localCheckpoint()
         val out = Dedup.reassembleParas(flagged, sep)
           .localCheckpoint()
-        // admitted = this batch's kept non-empty hashes, appended once
-        val newHashes = flagged
+        // this batch's kept non-empty hashes, appended once
+        index.append(flagged
           .filter(col("__keep") && !col("__empty"))
           .select(col("__k").as("h")).distinct()
-          .withColumn("batch_id", lit(batchId))
-          .localCheckpoint()
-        // bucket-aligned append: one file per bucket per trigger, not
-        // one per (task, bucket) — see Bucketing.writeBucketedAligned
-        graft.io.Bucketing.writeBucketedAligned(
-          newHashes, indexTable, "h", indexBuckets, "append")
+          .localCheckpoint(), batchId)
         onBatch(out, batchId)
-      }
-      .start()
+    }
   }
 }

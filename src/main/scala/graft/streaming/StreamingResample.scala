@@ -30,53 +30,41 @@ object StreamingResample {
   final case class Run(
       query: StreamingQuery,
       /** The resampled + LOCF-filled table-so-far (fresh plan per
-        * call — reads the state table's current contents).
+        * call — reads the state table's current contents); None
+        * before the first trigger creates the table.
         */
-      result: () => DataFrame)
+      result: () => Option[DataFrame])
 
   def start(stream: DataFrame, keyCol: String, tsUsCol: Column,
       valueCol: String, tieCol: String, intervalUs: Long,
       table: String)(onBatch: (Long) => Unit): Run = {
     val caller = stream.sparkSession
-    val query = stream.writeStream
-      .outputMode("append")
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
+    val query = StandingTable.foreachBatch(stream, table) {
+      (batch: DataFrame, batchId: Long) =>
         // write through the BATCH's session (the stream's clone —
         // appends refresh its relation cache, the verify-skill gotcha)
-        val spark = batch.sparkSession
-        val obs = Prep.resampleObserved(batch, keyCol, tsUsCol,
-          valueCol, tieCol, intervalUs)
-          .groupBy(col("key"), col("bucket"))
-          .agg(max(col("o")).as("o"))
-        if (!spark.catalog.tableExists(table)) {
-          obs.write.format("parquet").saveAsTable(table)
-        } else {
-          obs.write.mode("append").format("parquet").saveAsTable(table)
-        }
+        foldBatch(batch.sparkSession, batch, keyCol, tsUsCol, valueCol,
+          tieCol, intervalUs, table)
         onBatch(batchId)
-      }
-      .start()
-    Run(query, result = () => {
-      caller.catalog.refreshTable(table)
+    }
+    Run(query, result = () => StandingTable(table).read(caller).map(t =>
       Prep.locfExpand(
-        caller.table(table)
-          .groupBy(col("key"), col("bucket")).agg(max(col("o")).as("o")),
-        intervalUs)
-    })
+        t.groupBy(col("key"), col("bucket")).agg(max(col("o")).as("o")),
+        intervalUs)))
   }
 
   /** Direct fold of a static batch into the state table — the replay/
     * out-of-order test surface, and the path a backfill job uses to
-    * seed the table before the stream starts.
+    * seed the table before the stream starts. Rows are tagged
+    * `batch_id = -1` whichever batch folds them: the max election is
+    * order-free, so no replay guard ever reads the tag.
     */
   def foldBatch(spark: SparkSession, batch: DataFrame, keyCol: String,
       tsUsCol: Column, valueCol: String, tieCol: String,
-      intervalUs: Long, table: String): Unit = {
-    val obs = Prep.resampleObserved(batch, keyCol, tsUsCol, valueCol,
-      tieCol, intervalUs)
-      .groupBy(col("key"), col("bucket")).agg(max(col("o")).as("o"))
-    if (!spark.catalog.tableExists(table))
-      obs.write.format("parquet").saveAsTable(table)
-    else obs.write.mode("append").format("parquet").saveAsTable(table)
-  }
+      intervalUs: Long, table: String): Unit =
+    StandingTable(table).append(
+      Prep.resampleObserved(batch, keyCol, tsUsCol, valueCol, tieCol,
+        intervalUs)
+        .groupBy(col("key"), col("bucket")).agg(max(col("o")).as("o")),
+      -1L)
 }

@@ -55,24 +55,18 @@ object StreamingSemanticDedup {
       /** Current index contents (fresh plan per call). */
       finalIndex: () => DataFrame)
 
-  private val indexCols = Seq("id", "cluster", "vf", "batch_id")
+  private def indexSchema(idType: DataType): StructType = StructType(Seq(
+    StructField("id", idType),
+    StructField("cluster", LongType),
+    StructField("vf", ArrayType(LongType, containsNull = false))))
 
-  // bucket-aligned: one file per bucket per trigger, not one per
-  // (task, bucket) — see Bucketing.writeBucketedAligned
-  private def writeIndex(df: DataFrame, table: String, buckets: Int,
-      overwrite: Boolean): Unit =
-    graft.io.Bucketing.writeBucketedAligned(
-      df.select(indexCols.map(col): _*), table, "cluster", buckets,
-      if (overwrite) "overwrite" else "append")
-
-  private def emptyIndex(spark: SparkSession, idType: DataType): DataFrame =
-    spark.createDataFrame(
-      spark.sparkContext.emptyRDD[org.apache.spark.sql.Row],
-      StructType(Seq(
-        StructField("id", idType),
-        StructField("cluster", LongType),
-        StructField("vf", ArrayType(LongType, containsNull = false)),
-        StructField("batch_id", LongType))))
+  /** Create the cluster-bucketed index (`indexBuckets` only sizes a NEW
+    * table) or require the batch_id column of an existing one.
+    */
+  private def open(spark: SparkSession, table: String, idType: DataType,
+      indexBuckets: Int): StandingTable =
+    StandingTable.open(spark, table, indexSchema(idType), Some("cluster"),
+      indexBuckets)
 
   /** Fold one batch into the index table and return its verdicts
     * `(id, cluster, dup_of)` — the direct replay/out-of-order test
@@ -82,17 +76,20 @@ object StreamingSemanticDedup {
     */
   def foldBatch(spark: SparkSession, batch: DataFrame, idCol: String,
       vecCol: String, centroids: Seq[Seq[Double]], thresholdFp: Long,
-      table: String, indexBuckets: Int, batchId: Long): DataFrame = {
+      table: String, indexBuckets: Int, batchId: Long): DataFrame =
+    fold(spark, batch, idCol, vecCol, centroids, thresholdFp,
+      open(spark, table, batch.schema(idCol).dataType, indexBuckets), batchId)
+
+  private def fold(spark: SparkSession, batch: DataFrame, idCol: String,
+      vecCol: String, centroids: Seq[Seq[Double]], thresholdFp: Long,
+      table: StandingTable, batchId: Long): DataFrame = {
     require(centroids.nonEmpty, "need at least one centroid")
     val F = graft.functions.FixedAnnExpressions
     val asg = batch.select(col(idCol).as("id"),
       Curation.assignFixedCentroids(col(vecCol), centroids).as("cluster"),
       F.fixedPoint(F.unitVec(col(vecCol))).as("vf"))
       .localCheckpoint()
-    if (!spark.catalog.tableExists(table))
-      writeIndex(emptyIndex(spark, asg.schema("id").dataType), table,
-        indexBuckets, overwrite = true)
-    val index = spark.table(table)
+    val index = spark.table(table.name)
     val live = asg.filter(col("cluster") >= 0)
     val probeSide = live.select(col("cluster"), col("id"), col("vf"))
 
@@ -137,8 +134,7 @@ object StreamingSemanticDedup {
     val newRows = live
       .join(idxAgg.filter(col("already") === 1).select(col("id")),
         Seq("id"), "left_anti")
-      .withColumn("batch_id", lit(batchId))
-    writeIndex(newRows, table, indexBuckets, overwrite = false)
+    table.append(newRows, batchId)
     verdicts
   }
 
@@ -150,21 +146,16 @@ object StreamingSemanticDedup {
       indexTable: String, indexBuckets: Int = 32)
       (onBatch: (DataFrame, Long) => Unit): Run = {
     val caller = stream.sparkSession
-    val query = stream.writeStream
-      .outputMode("append")
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
+    val index = open(caller, indexTable, stream.schema(idCol).dataType,
+      indexBuckets)
+    val query = StandingTable.foreachBatch(stream, indexTable) {
+      (batch: DataFrame, batchId: Long) =>
         // fold through the BATCH's session (the stream's clone —
         // appends refresh its relation cache, the verify-skill gotcha)
-        val verdicts = foldBatch(batch.sparkSession, batch, idCol,
-          vecCol, centroids, thresholdFp, indexTable, indexBuckets,
-          batchId)
-        onBatch(verdicts, batchId)
-      }
-      .start()
-    Run(query, finalIndex = () => {
-      caller.catalog.refreshTable(indexTable)
-      caller.table(indexTable)
-    })
+        onBatch(fold(batch.sparkSession, batch, idCol, vecCol, centroids,
+          thresholdFp, index, batchId), batchId)
+    }
+    Run(query, finalIndex = () => index.read(caller).get)
   }
 
   /** ID-ORDERED ingest under OUT-OF-ORDER arrival — the watermark-
@@ -231,17 +222,12 @@ object StreamingSemanticDedup {
           ready.iterator
       }
       .toDF("id", "v")
-    val query = ordered.writeStream
-      .outputMode("append")
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        val verdicts = foldBatch(batch.sparkSession, batch, "id", "v",
-          centroids, thresholdFp, indexTable, indexBuckets, batchId)
-        onBatch(verdicts, batchId)
-      }
-      .start()
-    Run(query, finalIndex = () => {
-      caller.catalog.refreshTable(indexTable)
-      caller.table(indexTable)
-    })
+    val index = open(caller, indexTable, LongType, indexBuckets)
+    val query = StandingTable.foreachBatch(ordered, indexTable) {
+      (batch: DataFrame, batchId: Long) =>
+        onBatch(fold(batch.sparkSession, batch, "id", "v", centroids,
+          thresholdFp, index, batchId), batchId)
+    }
+    Run(query, finalIndex = () => index.read(caller).get)
   }
 }

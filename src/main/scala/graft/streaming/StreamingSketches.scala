@@ -1,6 +1,6 @@
 package graft.streaming
 
-import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.StreamingQuery
 
@@ -67,35 +67,6 @@ object StreamingSketches {
       release = () => Option(regs).foreach(_.release()))
   }
 
-  /** Fold one batch's Count-Min cells into the batchId-partitioned
-    * table — the idempotent-sink half of [[startCm]], split out so the
-    * replay property is directly testable: re-folding the SAME batchId
-    * dynamically overwrites only that batch's partition, leaving the
-    * read-time sums unchanged.
-    */
-  private[streaming] def foldCmBatch(spark: SparkSession, cells: DataFrame,
-      table: String, batchId: Long): Unit = {
-    val tagged = cells
-      .select(col("row"), col("col"), col("cnt"), lit(batchId).as("batch_id"))
-    if (!spark.catalog.tableExists(table)) {
-      tagged.write.partitionBy("batch_id").format("parquet")
-        .saveAsTable(table)
-    } else {
-      // STATIC-partition INSERT OVERWRITE: replaces exactly this
-      // batch's partition (a replay cannot double-count) and leaves
-      // every other partition untouched, independent of the session's
-      // partitionOverwriteMode — the DataFrameWriter option form is
-      // silently ignored by v1 insertInto (found empirically: batch 1
-      // wiped batch 0's partition)
-      val view = s"graft_cm_fold_${math.abs(batchId)}_${System.nanoTime()}"
-      tagged.createOrReplaceTempView(view)
-      try spark.sql(
-        s"""INSERT OVERWRITE TABLE $table PARTITION (batch_id = $batchId)
-           |SELECT `row`, col, cnt FROM $view""".stripMargin)
-      finally spark.catalog.dropTempView(view)
-    }
-  }
-
   /** Continuous Count-Min — the sum-merge case [[startHll]]'s scaladoc
     * promises: per-batch cells land in a `batch_id`-partitioned table
     * (each batch's fold is a dynamic overwrite of its OWN partition,
@@ -108,28 +79,21 @@ object StreamingSketches {
       depth: Int = 4, width: Int = 1024)
       (onBatch: (DataFrame, Long) => Unit): Run = {
     val caller = stream.sparkSession
-    val query = stream.writeStream
-      .outputMode("append")
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
+    val cells = StandingTable(table)
+    def sums(t: DataFrame): DataFrame =
+      t.groupBy("row", "col").agg(sum(col("cnt")).as("cnt"))
+    val query = StandingTable.foreachBatch(stream, table) {
+      (batch: DataFrame, batchId: Long) =>
         // table ops through the stream's CLONED session — the
         // StreamingDedup relation-cache lesson
-        val sess = batch.sparkSession
-        foldCmBatch(sess, PortableSketches.cmSketch(batch, key, depth, width),
-          table, batchId)
-        onBatch(sess.table(table)
-          .groupBy("row", "col").agg(sum(col("cnt")).as("cnt")), batchId)
-      }
-      .start()
+        cells.foldPartition(
+          PortableSketches.cmSketch(batch, key, depth, width), batchId)
+        onBatch(sums(batch.sparkSession.table(table)), batchId)
+    }
     Run(query,
       // None until the first batch creates the table — the same
       // pre-first-trigger contract as startHll's registers()
-      registers = () =>
-        if (!caller.catalog.tableExists(table)) None
-        else {
-          caller.catalog.refreshTable(table)
-          Some(caller.table(table)
-            .groupBy("row", "col").agg(sum(col("cnt")).as("cnt")))
-        },
+      registers = () => cells.read(caller).map(sums),
       release = () => ())
   }
 }

@@ -28,43 +28,29 @@ import graft.dedup.Dedup
   * at-least-once REPLAY probes the exact pre-batch index instead of
   * self-matching its own failed attempt's grams; `distinct` (no
   * exchange on the h-bucketed scan) absorbs re-append duplicates.
-  * As there, the guard assumes one checkpoint lineage — resume with
-  * the stream's checkpoint; a NEW stream over an old index needs its
-  * rows re-tagged to batch_id = -1 first
-  * ([[IndexTables.migrateLegacy]]), and pre-batch_id tables are
-  * rejected at start with the same migration pointer.
+  * As there, the guard assumes one checkpoint lineage
+  * ([[StandingTable]]), and pre-batch_id tables are rejected at start,
+  * naming [[StandingTable.migrateLegacy]].
   */
 object StreamingSubstringDedup {
 
   def start(docs: DataFrame, idCol: String, textCol: String,
-      indexTable: String, windowTokens: Int = 50, indexBuckets: Int = 32)
+      indexTable: String, windowTokens: Int = 50)
       (onBatch: (DataFrame, Long) => Unit): StreamingQuery = {
     require(windowTokens >= 2, "windowTokens must be >= 2")
     val w = windowTokens
-    val setup = docs.sparkSession
-    if (!setup.catalog.tableExists(indexTable))
-      graft.io.Bucketing.writeBucketedAligned(setup.createDataFrame(
-        setup.sparkContext.emptyRDD[org.apache.spark.sql.Row],
-        StructType(Seq(StructField("h", StringType),
-          StructField("batch_id", LongType)))),
-        indexTable, "h", indexBuckets, "overwrite")
-    else
-      // fail at start with the migration step, not mid-stream with a
-      // missing-column error (see StreamingParagraphDedup)
-      IndexTables.requireBatchIdColumn(setup, indexTable)
-
-    docs.writeStream
-      .outputMode("append")
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        val sess = batch.sparkSession
+    val index = StandingTable.open(docs.sparkSession, indexTable,
+      StructType(Seq(StructField("h", StringType))), Some("h"))
+    StandingTable.foreachBatch(docs, indexTable) {
+      (batch: DataFrame, batchId: Long) =>
         // replay guard: see StreamingParagraphDedup — earlier batches
         // only, distinct absorbs a failed attempt's re-appends
-        val index = sess.table(indexTable)
-          .filter(col("batch_id") < batchId).select("h").distinct()
+        val admitted = index.before(batch.sparkSession, batchId)
+          .select("h").distinct()
         val probed = Dedup.rollingGrams(batch, idCol, textCol, w)
           .withColumn("__rn", row_number().over(
             Window.partitionBy(col("h")).orderBy(col("doc_id"), col("pos"))))
-          .join(index.withColumn("__hit", lit(true)), Seq("h"), "left")
+          .join(admitted.withColumn("__hit", lit(true)), Seq("h"), "left")
           .localCheckpoint()
         val covered = Dedup.coveredPositions(probed
           .filter(col("__rn") > 1 || col("__hit").isNotNull)
@@ -73,17 +59,11 @@ object StreamingSubstringDedup {
         val out = Dedup.reassembleTokens(batch, idCol, textCol, covered)
           .localCheckpoint()
         // grams first OWNED in this batch enter the index
-        val newHashes = probed
+        index.append(probed
           .filter(col("__rn") === 1 && col("__hit").isNull)
           .select(col("h")).distinct()
-          .withColumn("batch_id", lit(batchId))
-          .localCheckpoint()
-        // bucket-aligned append: one file per bucket per trigger, not
-        // one per (task, bucket) — see Bucketing.writeBucketedAligned
-        graft.io.Bucketing.writeBucketedAligned(
-          newHashes, indexTable, "h", indexBuckets, "append")
+          .localCheckpoint(), batchId)
         onBatch(out, batchId)
-      }
-      .start()
+    }
   }
 }

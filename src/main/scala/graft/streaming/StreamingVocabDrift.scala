@@ -1,6 +1,6 @@
 package graft.streaming
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.StreamingQuery
 
@@ -15,9 +15,10 @@ import graft.pipeline.Profiling
   * frozen-model discipline — a drift monitor that re-derives its
   * baseline per trigger would chase its own tail). Each micro-batch
   * pays one tokenize+count aggregate (vocabulary-sized result) folded
-  * into a `batch_id`-partitioned table via static-partition INSERT
-  * OVERWRITE (the q130 sum-merge class — an at-least-once replay
-  * overwrites its OWN partition and cannot double-count). The drift
+  * into a `batch_id`-partitioned table
+  * ([[StandingTable.foldPartition]], the q130 sum-merge class — an
+  * at-least-once replay overwrites its OWN partition and cannot
+  * double-count). The drift
   * report re-aggregates the vocabulary-sized state and runs
   * [[Profiling.vocabDriftFromCounts]] against the frozen baseline —
   * counts commute, so the report equals the batch operator over
@@ -43,28 +44,19 @@ object StreamingVocabDrift {
     // per-trigger reports never rescan the reference corpus
     val refCounts = Profiling.tokenCounts(reference, refTextCol, "cnt_a")
       .localCheckpoint()
-    def report(spark: SparkSession): DataFrame =
+    val counts = StandingTable(table)
+    def report(folded: DataFrame): DataFrame =
       Profiling.vocabDriftFromCounts(refCounts,
-        spark.table(table).groupBy(col("token"))
-          .agg(sum(col("cnt_b")).as("cnt_b")),
+        folded.groupBy(col("token")).agg(sum(col("cnt_b")).as("cnt_b")),
         topK, factorNum, factorDen)
-    val query = stream.writeStream
-      .outputMode("append")
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
+    val query = StandingTable.foreachBatch(stream, table) {
+      (batch: DataFrame, batchId: Long) =>
         // table ops through the stream's CLONED session — the
         // StreamingDedup relation-cache lesson
-        val sess = batch.sparkSession
-        StreamingDataCard.foldPartition(sess,
-          Profiling.tokenCounts(batch, textCol, "cnt_b"), table, batchId)
-        onBatch(report(sess), batchId)
-      }
-      .start()
-    Run(query,
-      drift = () =>
-        if (!caller.catalog.tableExists(table)) None
-        else {
-          caller.catalog.refreshTable(table)
-          Some(report(caller))
-        })
+        counts.foldPartition(
+          Profiling.tokenCounts(batch, textCol, "cnt_b"), batchId)
+        onBatch(report(batch.sparkSession.table(table)), batchId)
+    }
+    Run(query, drift = () => counts.read(caller).map(report))
   }
 }

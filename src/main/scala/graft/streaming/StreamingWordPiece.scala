@@ -1,6 +1,6 @@
 package graft.streaming
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.StreamingQuery
 
@@ -17,8 +17,8 @@ import graft.text.WordPiece
   * ([[StreamingSketches.startCm]]'s scaladoc taxonomy): an
   * at-least-once foreachBatch replay would double-count a naive
   * running total, so each batch's per-source sums land in a
-  * `batch_id`-partitioned table via static-partition INSERT OVERWRITE
-  * (a replay overwrites exactly its own partition) and the read-time
+  * `batch_id`-partitioned table ([[StandingTable.foldPartition]]: a
+  * replay overwrites exactly its own partition) and the read-time
   * view sums across batches. Per-trigger cost is one O(batch)
   * coverage pass + a ≤|sources|-row write; nothing ingested earlier
   * is ever re-read or re-tokenized.
@@ -27,42 +27,17 @@ object StreamingWordPiece {
 
   final case class Run(
       query: StreamingQuery,
-      coverage: () => DataFrame)
+      /** None before the first trigger creates the table. */
+      coverage: () => Option[DataFrame])
 
-  /** The read-time view: per-source totals over every folded batch. */
-  def coverageOf(spark: SparkSession, table: String,
-      groupCol: String): DataFrame =
-    spark.table(table).groupBy(col(groupCol)).agg(
+  /** The read-time view of the fold table: per-source totals over
+    * every folded batch.
+    */
+  def coverageOf(folded: DataFrame, groupCol: String): DataFrame =
+    folded.groupBy(col(groupCol)).agg(
       sum(col("n_words")).as("n_words"),
       sum(col("n_unk_words")).as("n_unk_words"),
       sum(col("n_pieces")).as("n_pieces"))
-
-  /** Fold one batch's per-source coverage into the batchId-partitioned
-    * table — split out so the replay property is directly testable:
-    * re-folding the SAME batchId overwrites only that batch's
-    * partition, leaving read-time totals unchanged.
-    */
-  private[streaming] def foldCoverageBatch(spark: SparkSession,
-      cov: DataFrame, groupCol: String, table: String,
-      batchId: Long): Unit = {
-    val tagged = cov.select(col(groupCol), col("n_words"),
-      col("n_unk_words"), col("n_pieces"), lit(batchId).as("batch_id"))
-    if (!spark.catalog.tableExists(table)) {
-      tagged.write.partitionBy("batch_id").format("parquet")
-        .saveAsTable(table)
-    } else {
-      // static-partition INSERT OVERWRITE, the q130 sink exactly (the
-      // DataFrameWriter partitionOverwriteMode option is silently
-      // ignored by v1 insertInto — found empirically there)
-      val view = s"graft_wpcov_fold_${math.abs(batchId)}_${System.nanoTime()}"
-      tagged.createOrReplaceTempView(view)
-      try spark.sql(
-        s"""INSERT OVERWRITE TABLE $table PARTITION (batch_id = $batchId)
-           |SELECT `$groupCol`, n_words, n_unk_words, n_pieces FROM $view"""
-          .stripMargin)
-      finally spark.catalog.dropTempView(view)
-    }
-  }
 
   /** Start the rolling coverage stream. `onBatch(totals, batchId)`
     * receives the per-source totals-so-far after each trigger (safe
@@ -72,18 +47,16 @@ object StreamingWordPiece {
       v: WordPiece.Vocab, table: String)
       (onBatch: (DataFrame, Long) => Unit): Run = {
     val caller = stream.sparkSession
-    val query = stream.writeStream
-      .outputMode("append")
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
+    val folded = StandingTable(table)
+    val query = StandingTable.foreachBatch(stream, table) {
+      (batch: DataFrame, batchId: Long) =>
         // table ops through the stream's CLONED session — the
         // StreamingDedup relation-cache lesson
-        val sess = batch.sparkSession
-        foldCoverageBatch(sess,
-          WordPiece.coverageReport(batch, groupCol, textCol, v),
-          groupCol, table, batchId)
-        onBatch(coverageOf(sess, table, groupCol), batchId)
-      }
-      .start()
-    Run(query, coverage = () => coverageOf(caller, table, groupCol))
+        folded.foldPartition(
+          WordPiece.coverageReport(batch, groupCol, textCol, v), batchId)
+        onBatch(coverageOf(batch.sparkSession.table(table), groupCol), batchId)
+    }
+    Run(query,
+      coverage = () => folded.read(caller).map(coverageOf(_, groupCol)))
   }
 }

@@ -132,33 +132,20 @@ object Bm25Index {
 
   /** Offline REBUILD: re-tokenize and re-freeze on the current corpus
     * into fresh `__rebuild` tables, then swap them in under `name`
-    * with an aside-first rename (live → `__old`, rebuilt → live, drop
-    * `__old`). The expensive build happens entirely before the live
-    * index is touched, and a failure mid-swap leaves the previous
-    * index recoverable under `__old` (rename it back) — never
-    * silently gone, which a drop-then-rename order would risk. The
-    * swap itself is NOT atomic across the three tables (the catalog
-    * has no multi-table rename): a probe racing the rename instants
-    * can observe a missing or mixed generation, so schedule rebuilds
-    * in maintenance windows (the
+    * ([[graft.streaming.StandingTable.swap]]). The expensive build
+    * happens entirely before the live index is touched, and the swap
+    * moves the live tables aside first; it is not atomic across the
+    * three tables, so schedule rebuilds in maintenance windows (the
     * [[graft.similarity.IvfIndex.rebuild]] contract).
     */
   def rebuild(corpus: DataFrame, idCol: String, textCol: String,
       name: String, buckets: Int = 16): Unit = {
     val spark = corpus.sparkSession
     val tmp = name + "__rebuild"
-    val old = name + "__old"
     drop(spark, tmp)
-    drop(spark, old)
     build(corpus, idCol, textCol, tmp, buckets)
-    Seq(postingsTable _, dfTable _, statsTable _).foreach { t =>
-      if (spark.catalog.tableExists(t(name)))
-        spark.sql(s"ALTER TABLE ${t(name)} RENAME TO ${t(old)}")
-    }
-    Seq(postingsTable _, dfTable _, statsTable _).foreach { t =>
-      spark.sql(s"ALTER TABLE ${t(tmp)} RENAME TO ${t(name)}")
-    }
-    drop(spark, old)
+    graft.streaming.StandingTable.swap(spark,
+      Seq(postingsTable _, dfTable _, statsTable _).map(t => t(tmp) -> t(name)))
   }
 
   /** Drop all three tables (test/maintenance convenience). */

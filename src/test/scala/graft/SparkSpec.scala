@@ -32,6 +32,16 @@ trait SparkSpec extends AnyFunSuite {
       (r, SparkSpec.Shape(jobs.get(), stages.asScala.toSeq))
     } finally sc.removeSparkListener(l)
   }
+
+  /** Tables named from `prefix` that a rebuild, compaction or
+    * migration stages or moves aside while it swaps; none may remain
+    * once it returns.
+    */
+  def swapLeftovers(prefix: String): Seq[String] =
+    spark.catalog.listTables().collect().map(_.name)
+      .filter(n => n.startsWith(prefix.toLowerCase) &&
+        Seq("__rebuild", "__old", "__compact", "__migrated").exists(n.contains))
+      .toSeq
 }
 
 object SparkSpec {

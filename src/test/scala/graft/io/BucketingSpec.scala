@@ -54,8 +54,9 @@ class BucketingSpec extends SparkSpec {
           .format("parquet").mode("append").saveAsTable(tbl)
       }
       val (rows, before, after) =
-        Bucketing.compactBucketed(spark, tbl, "key", 8)
+        Bucketing.compactBucketed(spark, tbl)
       assert(rows === 600L)
+      assert(swapLeftovers(tbl).isEmpty)
       assert(after < before, s"no shrink: $before -> $after")
       assert(after <= 8L, s"more files than buckets: $after")
       assert(spark.table(tbl).count() === 600L)

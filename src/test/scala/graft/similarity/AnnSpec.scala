@@ -382,7 +382,7 @@ class AnnSpec extends SparkSpec {
       IvfIndex.rebuild(e, "vec_id", "embedding", name, nlist = 8)
       // swapped artifact covers the FULL corpus, temp tables are gone
       assert(spark.table(s"${name}_lists").count() === e.count())
-      assert(!spark.catalog.tableExists(s"${name}__rebuild_lists"))
+      assert(swapLeftovers(name).isEmpty)
       val got = IvfIndex.probe(spark, name, e.filter($"vec_id" < 3),
         "vec_id", "embedding", k = 5, nprobe = 4)
       assert(got.count() > 0)

@@ -58,10 +58,10 @@ class StreamingDataCardSpec extends SparkSpec {
     val tbl = s"graft_card_replay_${System.nanoTime()}"
     try {
       def count() = spark.table(tbl).count()
-      StreamingDataCard.foldPartition(spark, rows, tbl, 0L)
-      StreamingDataCard.foldPartition(spark, rows, tbl, 0L) // replay
+      StandingTable(tbl).foldPartition(rows, 0L)
+      StandingTable(tbl).foldPartition(rows, 0L) // replay
       assert(count() === 2L, "replayed batch double-counted")
-      StreamingDataCard.foldPartition(spark, rows, tbl, 1L) // new batch
+      StandingTable(tbl).foldPartition(rows, 1L) // new batch
       assert(count() === 4L, "second batch must add")
     } finally spark.sql(s"DROP TABLE IF EXISTS $tbl")
   }

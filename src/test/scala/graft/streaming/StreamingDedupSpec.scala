@@ -184,9 +184,10 @@ class StreamingDedupSpec extends SparkSpec {
           "doc_id", "text", indexTable = Some(tbl)) { (_, _) => () }
       }
       assert(ex.getMessage.contains("migrateLegacy"))
-      IndexTables.migrateLegacy(spark, tbl, "band_hash", 32)
+      StandingTable.migrateLegacy(spark, tbl)
       // idempotent: a second call is a no-op, not a second rewrite
-      IndexTables.migrateLegacy(spark, tbl, "band_hash", 32)
+      StandingTable.migrateLegacy(spark, tbl)
+      assert(swapLeftovers(tbl).isEmpty)
       assert(spark.table(tbl).filter(col("batch_id") =!= -1L).count() === 0)
       val verdicts = mutable.ArrayBuffer.empty[(Long, Option[Long])]
       val run = StreamingDedup.start(

@@ -22,8 +22,9 @@ class StreamingParagraphDedupSpec extends SparkSpec {
           "doc_id", "text", indexTable = tbl) { (_, _) => () }
       }
       assert(ex.getMessage.contains("migrateLegacy"))
-      IndexTables.migrateLegacy(spark, tbl, "h", 32)
+      StandingTable.migrateLegacy(spark, tbl)
       assert(spark.table(tbl).columns.contains("batch_id"))
+      assert(swapLeftovers(tbl).isEmpty)
     } finally spark.sql(s"DROP TABLE IF EXISTS $tbl")
   }
 

@@ -58,7 +58,7 @@ class StreamingResampleSpec extends SparkSpec {
       100L, tbl) { _ => () }
     try {
       run.query.processAllAvailable()
-      val got = run.result().orderBy("key", "bucket_start_us")
+      val got = run.result().get.orderBy("key", "bucket_start_us")
         .collect().toSeq
       val expected = graft.prep.Prep
         .resampleLocf(docs, "k", col("t"), "v", "id", 100L)

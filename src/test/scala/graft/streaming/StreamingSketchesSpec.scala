@@ -63,10 +63,10 @@ class StreamingSketchesSpec extends SparkSpec {
       def summed() = spark.table(tbl).groupBy("row", "col")
         .agg(sum(col("cnt")).as("cnt")).as[(Int, Long, Long)].collect().toSet
       val want = cells.as[(Int, Long, Long)].collect().toSet
-      StreamingSketches.foldCmBatch(spark, cells, tbl, 0L)
-      StreamingSketches.foldCmBatch(spark, cells, tbl, 0L) // replay
+      StandingTable(tbl).foldPartition(cells, 0L)
+      StandingTable(tbl).foldPartition(cells, 0L) // replay
       assert(summed() === want, "replayed batch double-counted")
-      StreamingSketches.foldCmBatch(spark, cells, tbl, 1L) // real new batch
+      StandingTable(tbl).foldPartition(cells, 1L) // real new batch
       assert(summed() === want.map { case (r, c, n) => (r, c, 2 * n) },
         "second batch must add")
     } finally spark.sql(s"DROP TABLE IF EXISTS $tbl")

@@ -38,7 +38,7 @@ class StreamingWordPieceSpec extends SparkSpec {
       run.query.processAllAvailable()
       mem.addData(docs.drop(2): _*)
       run.query.processAllAvailable()
-      val got = run.coverage()
+      val got = run.coverage().get
         .as[(String, Long, Long, Long)].collect().toSet
       val want = WordPiece.coverageReport(
         docs.toDF("doc_id", "text", "source"), "source", "text", vocab)
@@ -51,16 +51,16 @@ class StreamingWordPieceSpec extends SparkSpec {
     val tbl = s"graft_wpcov_replay_${System.nanoTime()}"
     val half = docs.take(3).toDF("doc_id", "text", "source")
     val rest = docs.drop(3).toDF("doc_id", "text", "source")
-    def totals = StreamingWordPiece.coverageOf(spark, tbl, "source")
+    def totals = StreamingWordPiece.coverageOf(spark.table(tbl), "source")
       .as[(String, Long, Long, Long)].collect().toSet
     try {
       val cov0 = WordPiece.coverageReport(half, "source", "text", vocab)
-      StreamingWordPiece.foldCoverageBatch(spark, cov0, "source", tbl, 0L)
+      StandingTable(tbl).foldPartition(cov0, 0L)
       val once = totals
-      StreamingWordPiece.foldCoverageBatch(spark, cov0, "source", tbl, 0L)
+      StandingTable(tbl).foldPartition(cov0, 0L)
       assert(totals === once, "replaying batch 0 changed the totals")
       val cov1 = WordPiece.coverageReport(rest, "source", "text", vocab)
-      StreamingWordPiece.foldCoverageBatch(spark, cov1, "source", tbl, 1L)
+      StandingTable(tbl).foldPartition(cov1, 1L)
       val want = WordPiece.coverageReport(
         docs.toDF("doc_id", "text", "source"), "source", "text", vocab)
         .as[(String, Long, Long, Long)].collect().toSet

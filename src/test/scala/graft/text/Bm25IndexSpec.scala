@@ -95,11 +95,8 @@ class Bm25IndexSpec extends SparkSpec {
       assert(got === oneShot)
       // post-rebuild, the once-unseen token q now scores
       assert(got.map(_._2).contains(3L))
-      assert(spark.catalog.tableExists(s"${name}__rebuild_postings") === false)
       // the aside-first swap cleans up the previous generation too
-      assert(spark.catalog.tableExists(s"${name}__old_postings") === false)
-      assert(spark.catalog.tableExists(s"${name}__old_df") === false)
-      assert(spark.catalog.tableExists(s"${name}__old_stats") === false)
+      assert(swapLeftovers(name).isEmpty)
     } finally Bm25Index.drop(spark, name)
   }
 
