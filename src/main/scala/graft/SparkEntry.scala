@@ -1969,7 +1969,7 @@ object SparkEntry {
   /** Semantic dup CLUSTERING: the SemDeDup pair set
     * ([[graft.pipeline.Curation.semanticPairsFixed]], threshold 0.9 —
     * components stay exact-copy-sized) fed to the distributed
-    * min-label propagation ([[graft.dedup.Dedup.clusterSurvivors]]) —
+    * connected components ([[graft.dedup.Dedup.clusterSurvivors]]) —
     * the aggressive transitive policy next to q168's greedy local one
     * (a local-min doc q168 keeps can drop here when its component's
     * global min is elsewhere). Oracle replays the closure recursively
@@ -3094,8 +3094,8 @@ object SparkEntry {
     * 6 epochs here — BASELINE's 9.47 s/epoch is a 100-epoch total
     * divided by 100, i.e. setup amortized away, so the comparable
     * figure needs enough epochs that the one-time setup (scan/parse,
-    * dims, facts, template capture) stops dominating the division.
-    * Marginal epoch cost is constant (plan-template loop), so sec/6 is
+    * dims, fact blocks) stops dominating the division.
+    * Marginal epoch cost is constant (one job per epoch), so sec/6 is
     * still a conservative stand-in for the reference's sec/100.
     */
   private def q34(s: SparkSession, dir: String): DataFrame =
@@ -5220,8 +5220,8 @@ object SparkEntry {
   /** Duplicate-cluster labeling ([[graft.dedup.Dedup.clustersStar]]):
     * connected components over q43's verified MinHash near-dup pairs
     * by alternating large-star/small-star rounds (O(log² n) rounds on
-    * any component shape — the scale twin of the O(diameter)
-    * min-label `clusters`). Output = (doc_id, cluster_id = component
+    * any component shape, where min-label propagation takes
+    * O(diameter)). Output = (doc_id, cluster_id = component
     * min) for every doc in a pair; the oracle replays the closure as a
     * DuckDB recursive min-reachable-label CTE.
     */

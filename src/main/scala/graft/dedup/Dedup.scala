@@ -1749,7 +1749,7 @@ object Dedup {
       threshold: Double = 0.7): DataFrame = {
     val pairs = minHashPairs(batch, idCol, textCol,
       shingleK, bands, rowsPerBand, threshold)
-    val owners = clusters(pairs)
+    val owners = clustersStar(pairs)
       .filter(col("id") =!= col("cluster_id"))
       .select(col("id").as(idCol), col("cluster_id").as("__batch_owner"))
     val tagged = batch.join(owners, Seq(idCol), "left")
@@ -1943,61 +1943,13 @@ object Dedup {
 
   // ------------------------------------------------- dup clustering
 
-  /** Connected components over near-dup pairs → (id, cluster_id) with
-    * cluster_id = min id of the component; the pipeline then keeps one
-    * doc per cluster (`cluster_id === id`).
-    *
-    * Iterative min-label propagation: each round every node adopts the
-    * smallest label among itself and its neighbors — converges in
-    * O(component diameter) rounds (near-dup components are shallow:
-    * mostly pairs/stars, so the default cap is generous). Each round is
-    * one join + one aggregation; labels localCheckpoint per round to
-    * cut lineage, same discipline as GdMf.
-    */
-  def clusters(pairs: DataFrame, idA: String = "id_a", idB: String = "id_b",
-      maxIterations: Int = 20): DataFrame = {
-    val edges = pairs.select(col(idA).as("a"), col(idB).as("b"))
-      .unionAll(pairs.select(col(idB).as("a"), col(idA).as("b")))
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    var labels = edges.groupBy(col("a").as("id"))
-      .agg(least(min(col("b")), first(col("a"))).as("cluster_id"))
-      .localCheckpoint(true)
-    var converged = false
-    var iter = 0
-    while (!converged && iter < maxIterations) {
-      // every node adopts min(own label, neighbors' labels)
-      val neighborLabels = edges
-        .join(labels.withColumnRenamed("id", "b")
-          .withColumnRenamed("cluster_id", "nb_label"), "b")
-        .groupBy(col("a").as("id"))
-        .agg(min(col("nb_label")).as("nb_min"))
-      val next = labels.join(neighborLabels, Seq("id"), "left_outer")
-        .select(col("id"),
-          least(col("cluster_id"), coalesce(col("nb_min"), col("cluster_id")))
-            .as("cluster_id"))
-        .localCheckpoint(true)
-      val changed = next.as("n").join(labels.as("o"), "id")
-        .filter(col("n.cluster_id") =!= col("o.cluster_id")).count()
-      labels.unpersist()
-      labels = next
-      converged = changed == 0
-      iter += 1
-    }
-    if (!converged)
-      System.err.println(s"[graft] Dedup.clusters: not converged after " +
-        s"$maxIterations rounds — components deeper than the cap exist; " +
-        "labels are an upper approximation (raise maxIterations)")
-    edges.unpersist()
-    labels
-  }
-
   /** Connected components by alternating large-star / small-star
     * (Kiveris et al., "Connected Components in MapReduce and Beyond",
-    * SOCC 2014) — the scale twin of [[clusters]]. Same contract:
-    * (id, cluster_id) with cluster_id = the component min, for every
-    * id appearing in `pairs`.
+    * SOCC 2014): (id, cluster_id) with cluster_id = the component min,
+    * for every id appearing in `pairs`; the pipeline then keeps one doc
+    * per cluster (`cluster_id === id`).
     *
-    * Why a twin: min-label propagation converges in O(diameter) rounds,
+    * Why not min-label propagation: it converges in O(diameter) rounds,
     * which is fine for the shallow star/pair components near-dup
     * pipelines produce but degenerates on chain-shaped components (a
     * path of 1000 nodes = 999 shuffle rounds). The star rounds square
@@ -2125,13 +2077,9 @@ object Dedup {
     * pair are implicitly their own survivors.
     *
     * Components come from [[clustersStar]] (O(log² n) rounds on any
-    * shape) rather than min-label [[clusters]] (O(diameter)): this is
-    * the entry the batch pipelines route through, and at 100 TB the
-    * component shape — chains of pairwise-similar revisions, template
-    * families — is not under our control. Both produce the identical
-    * labeling (cluster_id = component min), so survivors are unchanged;
-    * [[clusters]] stays as the fast path for per-micro-batch graphs
-    * ([[dedupBatchThenIndex]]) where components are provably shallow.
+    * shape, where min-label propagation takes O(diameter)): at 100 TB
+    * the component shape — chains of pairwise-similar revisions,
+    * template families — is not under our control.
     */
   def clusterSurvivors(docs: DataFrame, idCol: String, pairs: DataFrame): DataFrame = {
     val cl = clustersStar(pairs)

@@ -135,7 +135,7 @@ object Encoding {
     * counts are already known from a stats/probe pass (zero extra
     * jobs). Each dim is hinted only while its estimated bytes fit
     * `thresholdBytes`; an oversized dim degrades to a shuffle join
-    * instead of a driver OOM (the GdMf.stateBytes pattern, SURVEY
+    * instead of a driver OOM (the BprMf.stateBytes pattern, SURVEY
     * §1.3).
     */
   def encode(ratings: DataFrame, userDim: DataFrame, itemDim: DataFrame,

@@ -650,8 +650,8 @@ object Curation {
     * under the frozen centroids — the edge set every SemDeDup policy
     * consumes: [[semanticDedupFixed]]'s greedy min-id drop is
     * `distinct id_b`; connected-component clustering (q171) feeds the
-    * same edges to [[graft.dedup.Dedup.clusters]] for the aggressive
-    * transitive policy. Same assignment kernel, sub-bucket skew guard
+    * same edges to [[graft.dedup.Dedup.clusterSurvivors]] for the
+    * aggressive transitive policy. Same assignment kernel, sub-bucket skew guard
     * and Σ|cluster|² scale bound as [[semanticDedupFixed]]; the pairs
     * are localCheckpoint-materialized (iterative consumers re-read
     * them every propagation round).

@@ -210,7 +210,7 @@ object Prep {
     * (single-partition window below ~50M items, range-partition +
     * zipWithIndex above — identical mapping, so the hash gate is
     * unaffected by the switch) and broadcast for the index join ONLY
-    * while its estimated bytes fit `autoBroadcastDimBytes` (the GdMf
+    * while its estimated bytes fit `autoBroadcastDimBytes` (the BprMf
     * stateBytes pattern — a 10^9-item catalog degrades to a shuffle
     * join instead of a driver OOM); rejection is one (user, item)
     * anti-join against the ratings; the final selection is
@@ -250,7 +250,7 @@ object Prep {
     val itemDim = graft.encode.Encoding
       .dimensionAuto(base, "item", "item", "idx", approxKeys = nItems)
       .withColumn("idx", col("idx").cast("long"))
-    // size-gate the dimension broadcast exactly like GdMf.stateBytes:
+    // size-gate the dimension broadcast exactly like BprMf.stateBytes:
     // row overhead + 8-byte idx + the SAMPLED key width
     val dimFits = graft.encode.Encoding.dimBytes(nItems, keyBytes + 8.0) <=
       autoBroadcastDimBytes

@@ -1,7 +1,8 @@
 package graft.recommender
 
+import org.apache.spark.{HashPartitioner, TaskContext}
 import org.apache.spark.rdd.RDD
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.expressions.UnsafeArrayData
 import org.apache.spark.sql.functions.col
@@ -11,51 +12,52 @@ import org.apache.spark.storage.StorageLevel
 
 import scala.collection.mutable.ArrayBuilder
 
-/** [[GdMf]]'s epoch while both factor states fit the broadcast cap: ONE
-  * Spark job per epoch (the FuseME move — the operator chain err →
-  * metrics → both gradients runs as one pass, and the error relation is
-  * never materialized).
+/** [[GdMf]]'s epoch: ONE Spark job per epoch (the FuseME move — the
+  * operator chain err → metrics → both gradients runs as one pass over
+  * partitioned blocks, and the error relation is never materialized).
   *
-  * The states live on the driver as dense arrays indexed by
-  * `u_id` / `i_id` and reach the tasks through `sc.broadcast` (no job).
   * The facts are cached once as one [[Block]] per hash(u_id) partition,
   * sorted by user, so each task holds every row of its users and
-  * computes, in one pass: the epoch-start error and its (Σ|e|, Σe²);
+  * computes, in one [[pass]]: the epoch-start error and its (Σ|e|, Σe²);
   * its users' gradients and new factors; and item-gradient partials
   * against those new user factors — FunkSVD's from the epoch-start error
   * (trap 2), ALS-GD's from the error recomputed with the new user
-  * state, so its alternation stays inside the pass. The driver folds the
-  * task results in PARTITION order (a fit is bit-reproducible: no sum
-  * depends on task timing) and steps both states with the same
-  * [[Rule]] the tasks used. Per epoch it receives every user's gradient
-  * and one item-partial array per task, up to the user state plus
-  * parts × the item state, so [[GdMf]] runs this only while that sum
-  * fits its broadcast cap.
+  * state, so its alternation stays inside the pass.
+  *
+  * The states live on the executors ([[States]]): the user state beside
+  * its blocks, the item state in contiguous i_id ranges. Each range
+  * sends each block the item rows it reads, each block sends each range
+  * its partials, and each range folds them in block order and steps its
+  * items with the same [[Rule]] — a job of three stages in which nothing
+  * state-sized reaches the driver and no sum depends on task timing, so
+  * a fit is bit-reproducible.
   */
 private[recommender] object FusedEpoch {
 
-  /** One partition's facts sorted by (u_id, i_id, rating): user
-    * `users(j)` owns rows `from(j) until from(j + 1)`.
+  /** One partition's facts sorted by (u_id, i_id, rating), over every
+    * user the partition holds (one with no non-null rating too): user
+    * `users(j)` owns rows `from(j) until from(j + 1)`, and `items(row)`
+    * is a position in `itemIds`, the block's items ascending.
     */
-  final class Block(val users: Array[Int], val from: Array[Int],
+  final class Block(val users: Array[Int], val from: Array[Int], val itemIds: Array[Int],
       val items: Array[Int], val ratings: Array[Double]) extends Serializable
 
-  /** A factor state: `factors(id·k + f)` and `bias(id)`. */
+  /** A factor state: `factors(x·k + f)` and `bias(x)` for the `x`-th id. */
   final class Dense(val factors: Array[Double], val bias: Array[Double])
       extends Serializable
 
-  /** One task's share of an epoch: error sums, its users' gradients
-    * (`uGrad(j·k + f)` for `users(j)`), and item partials for the items
-    * its rows touch, ascending.
+  /** Item partials for `items` (ascending), with the error sums of the
+    * block they came from.
     */
-  final class Partial(val sae: Double, val sse: Double,
-      val users: Array[Int], val uGrad: Array[Double], val uEsum: Array[Double],
-      val items: Array[Int], val iGrad: Array[Double], val iEsum: Array[Double])
-      extends Serializable
+  final class Partial(val sae: Double, val sse: Double, val items: Array[Int],
+      val iGrad: Array[Double], val iEsum: Array[Double]) extends Serializable {
+    /** Positions `a until z`, with the error sums or with zeros. */
+    def slice(a: Int, z: Int, k: Int, sums: Boolean): Partial =
+      new Partial(if (sums) sae else 0.0, if (sums) sse else 0.0,
+        items.slice(a, z), iGrad.slice(a * k, z * k), iEsum.slice(a, z))
+  }
 
-  /** The reference's update, shared by tasks and driver so that a user
-    * state stepped in a task equals the driver's bit for bit.
-    */
+  /** The reference's update, which steps both states. */
   final case class Rule(k: Int, lr: Double, reg: Double, mean: Double,
       nUsers: Long, nItems: Long, alternating: Boolean) {
     def factor(p: Double, g: Double): Double = p + lr * (g - reg * p)
@@ -72,16 +74,18 @@ private[recommender] object FusedEpoch {
     }
   }
 
-  /** Cache `facts` (hash(u_id)-partitioned u_id, i_id, rating) as one
-    * sorted block per partition. The sort makes every task's summation
-    * order a function of the data alone. Null ratings are dropped: their
-    * error is null, which every relational sum skips.
+  /** Cache `facts` (u_id, i_id, rating) as `parts` hash(u_id) blocks.
+    * The sort makes every task's summation order a function of the data
+    * alone. Null ratings add no row: their error is null, which the
+    * reference's sums skip. They still place their user in its block, so
+    * a user whose ratings are all null steps too (decay only): every id
+    * of a dimension built from the facts' keys sits in one block.
     */
-  def blocks(facts: DataFrame): RDD[Block] =
+  def blocks(facts: DataFrame, parts: Int): RDD[Block] =
     facts
       .select(col("u_id").cast("int").as("u_id"), col("i_id").cast("int").as("i_id"),
         col("rating").cast("double").as("rating"))
-      .where(col("rating").isNotNull)
+      .repartition(parts, col("u_id"))
       .sortWithinPartitions("u_id", "i_id", "rating")
       .queryExecution.toRdd.mapPartitions { rows =>
         val (users, from) = (ArrayBuilder.make[Int], ArrayBuilder.make[Int])
@@ -91,35 +95,35 @@ private[recommender] object FusedEpoch {
         rows.foreach { r =>
           val u = r.getInt(0)
           if (u != last) { users += u; from += n; last = u }
-          items += r.getInt(1)
-          ratings += r.getDouble(2)
-          n += 1
+          if (!r.isNullAt(2)) { items += r.getInt(1); ratings += r.getDouble(2); n += 1 }
         }
         from += n
-        Iterator.single(new Block(users.result(), from.result(), items.result(),
-          ratings.result()))
+        val global = items.result()
+        val itemIds = global.distinct.sorted
+        Iterator.single(new Block(users.result(), from.result(), itemIds,
+          global.map(java.util.Arrays.binarySearch(itemIds, _)), ratings.result()))
       }
-      // released by the caller once the last epoch has run
+      // released by the transport once the final states are checkpointed
       .persist(StorageLevel.MEMORY_AND_DISK)
 
-  /** One task's pass over its block against the epoch-start states. */
-  private def pass(b: Block, u: Dense, i: Dense, r: Rule): Partial = {
+  /** One block's pass against the epoch-start states of its users (`u`,
+    * by position in `b.users`) and items (`i`, by position in
+    * `b.itemIds`): the users stepped, and the item partials.
+    */
+  private def pass(b: Block, u: Dense, i: Dense, r: Rule): (Dense, Partial) = {
     val k = r.k
-    val nItems = i.bias.length
-    val uGrad = new Array[Double](b.users.length * k)
-    val uEsum = new Array[Double](b.users.length)
-    val iGrad = new Array[Double](nItems * k)
-    val iEsum = new Array[Double](nItems)
-    val touched = new java.util.BitSet(nItems)
+    val u1 = new Dense(new Array[Double](u.factors.length), new Array[Double](u.bias.length))
+    val g = new Array[Double](k) // the current user's gradient
+    val iGrad = new Array[Double](i.factors.length)
+    val iEsum = new Array[Double](i.bias.length)
     val e = new Array[Double](b.ratings.length)
-    val p1 = new Array[Double](k) // the current user's new factors
     var sae = 0.0
     var sse = 0.0
     var j = 0
     while (j < b.users.length) {
-      val pAt = b.users(j) * k
-      val bu = u.bias(b.users(j))
-      val gAt = j * k
+      val pAt = j * k
+      val bu = u.bias(j)
+      java.util.Arrays.fill(g, 0.0)
       var es = 0.0
       var row = b.from(j)
       while (row < b.from(j + 1)) {
@@ -129,93 +133,202 @@ private[recommender] object FusedEpoch {
         sae += math.abs(ev)
         sse += ev * ev
         var f = 0
-        while (f < k) { uGrad(gAt + f) += ev * i.factors(it * k + f); f += 1 }
+        while (f < k) { g(f) += ev * i.factors(it * k + f); f += 1 }
         es += ev
         row += 1
       }
-      uEsum(j) = es
       var f = 0
-      while (f < k) { p1(f) = r.factor(u.factors(pAt + f), uGrad(gAt + f)); f += 1 }
-      val bu1 = r.bias(bu, es, r.nItems)
+      while (f < k) { u1.factors(pAt + f) = r.factor(u.factors(pAt + f), g(f)); f += 1 }
+      u1.bias(j) = r.bias(bu, es, r.nItems)
       row = b.from(j)
       while (row < b.from(j + 1)) {
         val it = b.items(row)
         // ALS-GD recomputes the error with the new user state
         val ev =
-          if (r.alternating) r.err(b.ratings(row), bu1, i.bias(it), p1, 0, i.factors, it * k)
+          if (r.alternating) r.err(b.ratings(row), u1.bias(j), i.bias(it), u1.factors, pAt, i.factors, it * k)
           else e(row)
         f = 0
-        while (f < k) { iGrad(it * k + f) += ev * p1(f); f += 1 }
+        while (f < k) { iGrad(it * k + f) += ev * u1.factors(pAt + f); f += 1 }
         iEsum(it) += ev
-        touched.set(it)
         row += 1
       }
       j += 1
     }
-    val items = touched.stream().toArray
-    val iGradOut = new Array[Double](items.length * k)
-    for (x <- items.indices) System.arraycopy(iGrad, items(x) * k, iGradOut, x * k, k)
-    new Partial(sae, sse, b.users, uGrad, uEsum, items, iGradOut, items.map(it => iEsum(it)))
+    (u1, new Partial(sae, sse, b.itemIds, iGrad, iEsum))
+  }
+
+  /** The rows of `s` (whose first id is `lo`) for `ids`. */
+  private def gather(s: Dense, ids: Array[Int], lo: Int, k: Int): Dense = {
+    val d = new Dense(new Array[Double](ids.length * k), new Array[Double](ids.length))
+    for (x <- ids.indices) {
+      System.arraycopy(s.factors, (ids(x) - lo) * k, d.factors, x * k, k)
+      d.bias(x) = s.bias(ids(x) - lo)
+    }
+    d
+  }
+
+  /** Adds `parts`, in their order, into the gradient of the state whose
+    * first id is `lo`; returns their error sums, added in the same order.
+    */
+  private def fold(parts: Seq[Partial], lo: Int, k: Int, grad: Array[Double],
+      esum: Array[Double]): (Double, Double) = {
+    var sae = 0.0
+    var sse = 0.0
+    for (p <- parts) {
+      sae += p.sae
+      sse += p.sse
+      for (x <- p.items.indices) {
+        val at = (p.items(x) - lo) * k
+        for (f <- 0 until k) grad(at + f) += p.iGrad(x * k + f)
+        esum(p.items(x) - lo) += p.iEsum(x)
+      }
+    }
+    (sae, sse)
   }
 
   /** Step every id of `s` by its folded gradient (zero for an id no fact
-    * touched: decay only, like the relational left join).
+    * touched: decay only).
     */
   private def stepped(s: Dense, grad: Array[Double], esum: Array[Double],
       dimSize: Long, r: Rule): Dense =
     new Dense(Array.tabulate(s.factors.length)(x => r.factor(s.factors(x), grad(x))),
       Array.tabulate(s.bias.length)(id => r.bias(s.bias(id), esum(id), dimSize)))
 
-  /** One epoch: one job over `facts`. Returns the stepped states and the
-    * epoch-start (Σ|e|, Σe²).
+  /** What partition `j` holds between epochs: block `j`'s users (by
+    * position in the block's `users`), the item ids from `lo` of range
+    * `j` with their state, and the ids each block reads from that range
+    * (`sends`, by block; only blocks that read some). On partition 0,
+    * `sae` and `sse` are the epoch-start error sums of the epoch that
+    * made it; elsewhere zeros.
     */
-  def epoch(facts: RDD[Block], u: Dense, i: Dense, r: Rule): (Dense, Dense, Double, Double) = {
-    val sc = facts.sparkContext
-    val (bu, bi) = (sc.broadcast(u), sc.broadcast(i))
-    val parts =
-      try facts.map(pass(_, bu.value, bi.value, r)).collect()
-      finally { bu.destroy(); bi.destroy() }
-    val k = r.k
-    val uGrad = new Array[Double](u.factors.length)
-    val uEsum = new Array[Double](u.bias.length)
-    val iGrad = new Array[Double](i.factors.length)
-    val iEsum = new Array[Double](i.bias.length)
-    var sae = 0.0
-    var sse = 0.0
-    for (p <- parts) { // partition order
-      sae += p.sae
-      sse += p.sse
-      // each user's rows sit in one partition: its gradient is copied
-      for (j <- p.users.indices) {
-        System.arraycopy(p.uGrad, j * k, uGrad, p.users(j) * k, k)
-        uEsum(p.users(j)) = p.uEsum(j)
-      }
-      for (x <- p.items.indices) {
-        val at = p.items(x) * k
-        for (f <- 0 until k) iGrad(at + f) += p.iGrad(x * k + f)
-        iEsum(p.items(x)) += p.iEsum(x)
-      }
+  final class Share(val users: Dense, val lo: Int, val sends: Array[(Int, Array[Int])],
+      val items: Dense, val sae: Double, val sse: Double) extends Serializable
+
+  /** What block `from` sends partition `g`: its partials for range `g`'s
+    * items, and its stepped users when `g` is its own partition.
+    */
+  final class Message(val from: Int, val partial: Partial, val users: Option[Dense])
+      extends Serializable
+
+  /** Positions `a until z` of ascending `ids` in each of `n` ranges of
+    * `span` ids, as (range, a, z).
+    */
+  private def segments(ids: Array[Int], span: Int, n: Int): IndexedSeq[(Int, Int, Int)] = {
+    var z = 0
+    (0 until n).map { g =>
+      val a = z
+      while (z < ids.length && ids(z) < (g + 1L) * span) z += 1
+      (g, a, z)
     }
-    (stepped(u, uGrad, uEsum, r.nItems, r), stepped(i, iGrad, iEsum, r.nUsers, r), sae, sse)
   }
 
-  /** `dim`'s rows (key, id) extended with `s`'s factors and bias, as a
-    * fresh checkpoint of `schema` (one job).
+  /** The factor states between epochs, and the epoch that steps them.
+    * Partition `j` holds block `j`'s users and item range `j` (the items
+    * cut into as many contiguous ranges as there are blocks). A block
+    * and a range exchange messages only where the block reads items of
+    * the range, so a shuffle carries Σ over blocks of the items they
+    * read, not blocks × ranges records; the stepped users go back to
+    * their own partition through the same shuffle. Range 0 also hears
+    * from every block (an empty message where it reads none of its
+    * items): only those messages carry the blocks' error sums, which
+    * range 0 adds in block order like its partials.
     */
-  def checkpoint(spark: SparkSession, dim: FreshCheckpoint, idCol: String,
-      s: Dense, k: Int, schema: StructType): FreshCheckpoint = {
-    val dimSchema = dim.df.schema
-    val idAt = dimSchema.fieldIndex(idCol)
-    val longId = dimSchema(idAt).dataType == LongType
-    // not destroyed: every later job over the checkpoint serializes this
-    // map's closure; the context cleaner drops it with the RDD
-    val bs = spark.sparkContext.broadcast(s)
-    checkpointRows(spark, dim.rdd.map { row =>
-      val id = if (longId) row.getLong(idAt).toInt else row.getInt(idAt)
-      val st = bs.value
-      InternalRow.fromSeq(row.toSeq(dimSchema) ++ Seq(
-        UnsafeArrayData.fromPrimitiveArray(st.factors.slice(id * k, id * k + k)),
-        st.bias(id)))
-    }, schema)
+  final class States(blocks: RDD[Block], r: Rule,
+      uInit: Array[Int] => Dense, iInit: Array[Int] => Dense) {
+    private val n = blocks.getNumPartitions
+    private val span = math.max(1, (r.nItems.toInt + n - 1) / n)
+    // one generation, cut by the epoch that made it; the first, with the
+    // set-up (the ids each range sends each block), is computed by the
+    // first epoch
+    private var shares: RDD[Share] = {
+      val (initU, initI, span, n, nItems) = (uInit, iInit, this.span, this.n, r.nItems.toInt)
+      val sends = blocks.mapPartitionsWithIndex { (b, it) =>
+        val ids = it.next().itemIds
+        segments(ids, span, n).iterator.collect { case (g, a, z) if a < z =>
+          (g, (b, ids.slice(a, z)))
+        }
+      }.partitionBy(new HashPartitioner(n))
+      // unpersisted by the first epoch, once the next generation is cut
+      blocks.zipPartitions(sends) { (bs, got) =>
+        val lo = TaskContext.getPartitionId() * span
+        Iterator.single(new Share(initU(bs.next().users), lo, got.map(_._2).toArray.sortBy(_._1),
+          initI(Array.range(lo, math.min(nItems, lo + span))), 0.0, 0.0))
+      }.persist(StorageLevel.MEMORY_AND_DISK)
+    }
+
+    /** One epoch, one job: steps both states and returns the epoch-start
+      * (Σ|e|, Σe²).
+      */
+    def epoch(): (Double, Double) = {
+      val (rule, k, span, n) = (r, r.k, this.span, this.n)
+      // stage 1: each range sends each block the item rows it reads
+      val toBlocks = shares.mapPartitionsWithIndex { (g, it) =>
+        val s = it.next()
+        s.sends.iterator.map { case (b, ids) => (b, (g, gather(s.items, ids, s.lo, k))) }
+      }.partitionBy(new HashPartitioner(n))
+      // stage 2: the pass; the partials go to the ranges, split, and the
+      // stepped users to their own partition
+      val toShares = blocks.zipPartitions(shares, toBlocks) { (bs, ss, got) =>
+        val b = bs.next()
+        val rows = got.map(_._2).toArray.sortBy(_._1).map(_._2) // ascending ids
+        val i = new Dense(Array.concat(rows.map(_.factors): _*), Array.concat(rows.map(_.bias): _*))
+        val (u1, p) = pass(b, ss.next().users, i, rule)
+        val j = TaskContext.getPartitionId()
+        segments(b.itemIds, span, n).iterator.collect {
+          case (g, a, z) if a < z || g == 0 || g == j =>
+            (g, new Message(j, p.slice(a, z, k, sums = g == 0), if (g == j) Some(u1) else None))
+        }
+      }.partitionBy(new HashPartitioner(n))
+      // stage 3: each partition takes its users back, folds its range's
+      // partials in block order and steps its items
+      val shares1 = shares.zipPartitions(toShares) { (ss, got) =>
+        val s = ss.next()
+        val msgs = got.map(_._2).toArray.sortBy(_.from)
+        val (grad, esum) =
+          (new Array[Double](s.items.factors.length), new Array[Double](s.items.bias.length))
+        val (sae, sse) = fold(msgs.map(_.partial).toSeq, s.lo, k, grad, esum)
+        Iterator.single(new Share(msgs.flatMap(_.users).head, s.lo, s.sends,
+          stepped(s.items, grad, esum, rule.nUsers, rule), sae, sse))
+      }.localCheckpoint()
+      val sums = shares1.map(s => (s.sae, s.sse)).collect().head // partition 0's
+      shares.unpersist(blocking = false)
+      shares = shares1
+      sums
+    }
+
+    /** The current generation's lineage. */
+    private[recommender] def lineage: String = shares.toDebugString
+
+    /** `dim`'s rows (key, `idCol`) extended with the users' or the items'
+      * states, as a fresh checkpoint of `schema` (one job).
+      */
+    def checkpoint(dim: FreshCheckpoint, idCol: String, users: Boolean,
+        schema: StructType): FreshCheckpoint = {
+      val k = r.k
+      val states: RDD[(Int, (Array[Double], Double))] =
+        if (users) blocks.zipPartitions(shares) { (bs, ss) =>
+          val (b, s) = (bs.next(), ss.next().users)
+          b.users.indices.iterator.map(j =>
+            (b.users(j), (s.factors.slice(j * k, j * k + k), s.bias(j))))
+        }
+        else shares.flatMap { s =>
+          s.items.bias.indices.map(x =>
+            (s.lo + x, (s.items.factors.slice(x * k, x * k + k), s.items.bias(x))))
+        }
+      val dimSchema = dim.df.schema
+      val idAt = dimSchema.fieldIndex(idCol)
+      val longId = dimSchema(idAt).dataType == LongType
+      val keyed = dim.rdd.map(row => (if (longId) row.getLong(idAt).toInt else row.getInt(idAt), row))
+      checkpointRows(dim.df.sparkSession, keyed.join(states, n).values.map {
+        case (row, (f, b)) =>
+          InternalRow.fromSeq(row.toSeq(dimSchema) ++ Seq(UnsafeArrayData.fromPrimitiveArray(f), b))
+      }, schema)
+    }
+
+    /** Drops the blocks and the states. */
+    def release(): Unit = {
+      shares.unpersist(blocking = false)
+      blocks.unpersist()
+    }
   }
 }

@@ -61,7 +61,7 @@ object DatasetBridge {
     checkpointRows(df.sparkSession, df.queryExecution.toRdd.map(_.copy()), df.schema)
 
   /** [[localCheckpointFresh]]'s cut of rows already produced as an RDD
-    * of `schema` (e.g. by an instantiated [[PlanTemplate]]). */
+    * of `schema` (e.g. by GdMf's epoch kernel). */
   def checkpointRows(spark: SparkSession, rdd: RDD[InternalRow],
       schema: StructType): FreshCheckpoint = {
     rdd.localCheckpoint()

@@ -8,9 +8,10 @@ import org.scalatest.funsuite.AnyFunSuite
 trait SparkSpec extends AnyFunSuite {
   lazy val spark: SparkSession = SparkSpec.session
 
-  /** `f`'s result, the number of jobs it ran and the stages it submitted
+  /** `f`'s result, the number of jobs it ran, the stages it submitted
     * (a stage whose output was already available is skipped, not
-    * submitted).
+    * submitted) and the shuffle records its tasks wrote — every job on
+    * the context meanwhile, a stream's micro-batches included.
     */
   def shapeOf[T](f: => T): (T, SparkSpec.Shape) = {
     import org.apache.spark.scheduler._
@@ -18,10 +19,14 @@ trait SparkSpec extends AnyFunSuite {
     val sc = spark.sparkContext
     val stages = new java.util.concurrent.ConcurrentLinkedQueue[StageInfo]()
     val jobs = new java.util.concurrent.atomic.AtomicInteger()
+    val shuffleRecords = new java.util.concurrent.atomic.AtomicLong()
     val l = new SparkListener {
       override def onJobStart(j: SparkListenerJobStart): Unit = jobs.incrementAndGet()
       override def onStageSubmitted(st: SparkListenerStageSubmitted): Unit =
         stages.add(st.stageInfo)
+      override def onTaskEnd(t: SparkListenerTaskEnd): Unit =
+        if (t.taskMetrics != null)
+          shuffleRecords.addAndGet(t.taskMetrics.shuffleWriteMetrics.recordsWritten)
     }
     ListenerBridge.waitUntilListenerBusEmpty(sc)
     sc.addSparkListener(l)
@@ -29,7 +34,7 @@ trait SparkSpec extends AnyFunSuite {
       val r = f
       ListenerBridge.waitUntilListenerBusEmpty(sc)
       import scala.jdk.CollectionConverters._
-      (r, SparkSpec.Shape(jobs.get(), stages.asScala.toSeq))
+      (r, SparkSpec.Shape(jobs.get(), stages.asScala.toSeq, shuffleRecords.get()))
     } finally sc.removeSparkListener(l)
   }
 
@@ -59,8 +64,10 @@ object SparkSpec {
     s
   }
 
-  /** What `SparkSpec#shapeOf` saw: jobs started, stages submitted. */
-  final case class Shape(jobs: Int, stages: Seq[StageInfo]) {
+  /** What `SparkSpec#shapeOf` saw: jobs started, stages submitted,
+    * shuffle records written.
+    */
+  final case class Shape(jobs: Int, stages: Seq[StageInfo], shuffleRecordsWritten: Long) {
     def stageWidths: Seq[Int] = stages.map(_.numTasks)
     def shuffleMapStages: Seq[StageInfo] =
       stages.filter(org.apache.spark.sql.graftbridge.ListenerBridge.isShuffleMap)

@@ -270,28 +270,17 @@ class DedupSpec extends SparkSpec {
     // a ratio against the explosion factor, not a plan-shape absolute.
     val text = (1 to 120).map(i => s"tok$i").mkString(" ")
     val docs = (1 to 30).map(i => (i.toLong, text)).toDF("doc_id", "text")
-    val shuffleRecords = new java.util.concurrent.atomic.AtomicLong
-    val listener = new org.apache.spark.scheduler.SparkListener {
-      override def onTaskEnd(
-          t: org.apache.spark.scheduler.SparkListenerTaskEnd): Unit = {
-        val m = t.taskMetrics
-        if (m != null) shuffleRecords.addAndGet(m.shuffleWriteMetrics.recordsWritten)
-      }
-    }
-    spark.sparkContext.addSparkListener(listener)
-    val got = try {
-      val out = Dedup.substringDedup(docs, "doc_id", "text", windowTokens = w)
+    val (got, shape) = shapeOf {
+      Dedup.substringDedup(docs, "doc_id", "text", windowTokens = w)
         .orderBy("doc_id").as[(Long, String, Long, Long)].collect().toSeq
-      org.apache.spark.sql.graftbridge.ListenerBridge
-        .waitUntilListenerBusEmpty(spark.sparkContext)
-      out
-    } finally spark.sparkContext.removeSparkListener(listener)
+    }
+    val shuffleRecords = shape.shuffleRecordsWritten
     // correctness unchanged: doc 1 owns everything, docs 2..30 empty
     assert(got.head === ((1L, text, 120L, 0L)))
     assert(got.tail.forall { case (_, t, k, d) => t == "" && k == 0L && d == 120L })
     val dupOccurrences = 29L * (120 - (w - 1))
-    assert(shuffleRecords.get < dupOccurrences * w / 2,
-      s"job shuffled ${shuffleRecords.get} records — ×w coverage " +
+    assert(shuffleRecords < dupOccurrences * w / 2,
+      s"job shuffled $shuffleRecords records — ×w coverage " +
         s"explosion regression (old shape: >${dupOccurrences * w} in " +
         "the coverage distinct alone)")
   }
@@ -345,11 +334,46 @@ class DedupSpec extends SparkSpec {
     assert(pairs === Set((1L, 2L)))
   }
 
+  /** Min-label connected components, the reference [[Dedup.clustersStar]]
+    * is checked against: each round every node adopts the smallest label
+    * among itself and its neighbors, so it converges in O(component
+    * diameter) rounds. (id, cluster_id = component min) for every id in
+    * an edge.
+    */
+  private def clusters(pairs: org.apache.spark.sql.DataFrame): org.apache.spark.sql.DataFrame = {
+    val edges = pairs.select(col("id_a").as("a"), col("id_b").as("b"))
+      .unionAll(pairs.select(col("id_b").as("a"), col("id_a").as("b")))
+      .localCheckpoint()
+    var labels = edges.groupBy(col("a").as("id"))
+      .agg(least(min(col("b")), first(col("a"))).as("cluster_id"))
+      .localCheckpoint()
+    var changed = 1L
+    var rounds = 0
+    while (changed > 0) {
+      assert(rounds < 20, "min-label propagation did not converge in 20 rounds")
+      val neighborLabels = edges
+        .join(labels.withColumnRenamed("id", "b")
+          .withColumnRenamed("cluster_id", "nb_label"), "b")
+        .groupBy(col("a").as("id"))
+        .agg(min(col("nb_label")).as("nb_min"))
+      val next = labels.join(neighborLabels, Seq("id"), "left_outer")
+        .select(col("id"),
+          least(col("cluster_id"), coalesce(col("nb_min"), col("cluster_id")))
+            .as("cluster_id"))
+        .localCheckpoint()
+      changed = next.as("n").join(labels.as("o"), "id")
+        .filter(col("n.cluster_id") =!= col("o.cluster_id")).count()
+      labels = next
+      rounds += 1
+    }
+    labels
+  }
+
   test("clusters finds connected components with min-id labels") {
     // components: {1,2,3,4} (chain), {10,11}, singletons absent
     val pairs = Seq((1L, 2L), (2L, 3L), (3L, 4L), (10L, 11L))
       .toDF("id_a", "id_b")
-    val got = Dedup.clusters(pairs)
+    val got = clusters(pairs)
       .as[(Long, Long)].collect().toMap
     assert(got === Map(1L -> 1L, 2L -> 1L, 3L -> 1L, 4L -> 1L,
       10L -> 10L, 11L -> 10L))
@@ -362,7 +386,7 @@ class DedupSpec extends SparkSpec {
       (40L, 40L))                         // self-loop only -> singleton
       .toDF("id_a", "id_b")
     val star = Dedup.clustersStar(pairs).as[(Long, Long)].collect().toMap
-    val naive = Dedup.clusters(pairs).as[(Long, Long)].collect().toMap
+    val naive = clusters(pairs).as[(Long, Long)].collect().toMap
     assert(star === naive + (40L -> 40L)) // naive drops self-loop-only ids
     assert(star(4L) === 1L && star(23L) === 20L && star(32L) === 30L)
   }
@@ -455,31 +479,15 @@ class DedupSpec extends SparkSpec {
     // shuffles; folding a 2-pair batch into the RESULTING star forest
     // must converge in ~1-2 rounds — the whole point of the
     // incremental entry. Shuffle records are the observable proxy.
-    def measure[A](body: => A): (A, Long) = {
-      val rec = new java.util.concurrent.atomic.AtomicLong
-      val l = new org.apache.spark.scheduler.SparkListener {
-        override def onTaskEnd(
-            t: org.apache.spark.scheduler.SparkListenerTaskEnd): Unit = {
-          val m = t.taskMetrics
-          if (m != null) rec.addAndGet(m.shuffleWriteMetrics.recordsWritten)
-        }
-      }
-      spark.sparkContext.addSparkListener(l)
-      try {
-        val r = body
-        org.apache.spark.sql.graftbridge.ListenerBridge
-          .waitUntilListenerBusEmpty(spark.sparkContext)
-        (r, rec.get)
-      } finally spark.sparkContext.removeSparkListener(l)
-    }
     val path = (0L until 1999L).map(i => (i, i + 1))
-    val (labels, fullVol) = measure {
+    val (labels, full) = shapeOf {
       Dedup.clustersStar(path.toDF("id_a", "id_b")) // eager checkpoint
     }
-    val (inc, foldVol) = measure {
+    val (inc, fold) = shapeOf {
       Dedup.clustersStarIncremental(labels,
         Seq((1999L, 2000L), (2000L, 2001L)).toDF("id_a", "id_b"))
     }
+    val (fullVol, foldVol) = (full.shuffleRecordsWritten, fold.shuffleRecordsWritten)
     val got = inc.as[(Long, Long)].collect()
     assert(got.length === 2002 && got.forall(_._2 === 0L))
     assert(foldVol < fullVol / 2,

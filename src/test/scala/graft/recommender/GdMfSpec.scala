@@ -191,31 +191,48 @@ class GdMfSpec extends SparkSpec {
   test("both schedules match naive in every broadcast regime, history included") {
     val cells = grid(seed = 7, users = 25, items = 15, p = 0.4)
     val obs = cells.map(r => (r.user, r.item, r.rating))
-    val df = cached32(cells.toDF)
-    // default caps: the fused epoch, on 1 and on 3 partitions (the
-    // driver folds several tasks' partials); 1000: both states (40 B per
-    // id at k = 3) broadcast, but 25 user states plus 3 item-partial
-    // arrays (2800 B) overflow the cap, so the template loop runs; 0:
-    // neither state broadcasts, so the item join shuffles and the error
-    // rows are hashed on i_id; 800: the 25 user states shuffle, the 15
-    // item states broadcast. factsPartitions = 3 gives the shuffles
-    // several partitions.
+    // plus a user whose only rating is null: it steps by decay only, and
+    // the history averages over the rated cells
+    val df = cached32((cells.map(r => (r.user, r.item, Option(r.rating), r.time)) :+
+      (("uNull", "i0", None, 0L))).toDF("user", "item", "rating", "time"))
+    // 1 block and 1 item range, then 3 of each (the ranges fold several
+    // blocks' partials), under the caps that pick the encode joins: the
+    // user dimension (~690 B) and the item dimension (~395 B) broadcast
+    // under the default cap and under 1000 B; under 500 B only the items
+    // broadcast; under 0 neither does.
     val base = GdMf.Config(nFactors = 3, epochs = 3, lr = 0.01, reg = 0.01)
-    val fused3 = base.copy(factsPartitions = 3)
     for {
       alternating <- Seq(false, true)
-      cfg <- Seq(base, fused3,
+      cfg <- Seq(base, base.copy(factsPartitions = 3),
         base.copy(autoBroadcastDimBytes = 1000L, factsPartitions = 3),
         base.copy(autoBroadcastDimBytes = 0L, factsPartitions = 3),
-        base.copy(autoBroadcastDimBytes = 800L, factsPartitions = 3))
+        base.copy(autoBroadcastDimBytes = 500L, factsPartitions = 3))
     } withClue(s"$cfg alternating=$alternating: ") {
       val fit = assertMatchesNaive(df, obs, cfg.copy(alternating = alternating))
-      // the driver folds task results in partition order, not arrival
-      // order: a refit is bit-identical
-      if (cfg == fused3)
-        assert(assertMatchesNaive(df, obs, cfg.copy(alternating = alternating)) == fit)
+      // partials fold in block order, not arrival order: a refit is
+      // bit-identical
+      assert(assertMatchesNaive(df, obs, cfg.copy(alternating = alternating)) == fit)
     }
     df.unpersist()
+  }
+
+  test("an epoch cuts the states' lineage") {
+    // each epoch's job cuts the generation it makes, so a long fit's
+    // lineage does not grow with its epochs
+    val facts = (for (u <- 0 until 20; i <- 0 until 12 if (u + i) % 3 != 0 || u == i)
+      yield (u, i, 1.0 + (u * 7 + i) % 5)).toDF("u_id", "i_id", "rating")
+    val init: Array[Int] => FusedEpoch.Dense =
+      GdMf.initDense(_, longId = false, k = 3, seed = 42L, normal = true)
+    for (alternating <- Seq(false, true)) withClue(s"alternating=$alternating: ") {
+      val fit = new FusedEpoch.States(FusedEpoch.blocks(facts, 3),
+        FusedEpoch.Rule(3, 0.01, 0.01, 3.0, 20, 12, alternating), init, init)
+      def length = fit.lineage.linesIterator.size
+      fit.epoch()
+      val afterOne = length
+      for (_ <- 2 to 5) fit.epoch()
+      assert(length === afterOne)
+      fit.release()
+    }
   }
 
   test("every fit stage is as wide as the data; a setup-only fit is a few jobs") {
@@ -237,8 +254,7 @@ class GdMfSpec extends SparkSpec {
     val (m0, setup) = shapeOf(GdMf.fit(df, GdMf.Config(nFactors = 4, epochs = 0)))
     assert(setup.jobs <= 4, s"an epochs = 0 fit ran ${setup.jobs} jobs")
     m0.release()
-    // with both states under the cap an epoch is ONE job, and the
-    // history rides on it
+    // an epoch is ONE job, and the history rides on it
     for (alternating <- Seq(false, true)) {
       def jobsOf(epochs: Int, collectErrors: Boolean) = {
         val (m, shape) = shapeOf(GdMf.fit(df, GdMf.Config(nFactors = 4, epochs = epochs,
@@ -253,14 +269,11 @@ class GdMfSpec extends SparkSpec {
           s"3 epochs ran $three jobs, 1 epoch $one")
       }
     }
-    // ...but not when the user state plus one item state per task (200
-    // and 60 ids at 48 B each, 4 tasks: 21 120 B) would overflow the cap
-    // on the driver, though both states broadcast: the template loop runs
-    val capped = GdMf.Config(nFactors = 4, epochs = 1, factsPartitions = 4,
-      autoBroadcastDimBytes = 20000L)
-    val (c1, one) = shapeOf(GdMf.fit(df, capped))
-    val (c3, three) = shapeOf(GdMf.fit(df, capped.copy(epochs = 3)))
-    assert(three.jobs > one.jobs + 2,
+    // ...over 4 blocks and 4 item ranges too
+    val blocked = GdMf.Config(nFactors = 4, epochs = 1, factsPartitions = 4)
+    val (c1, one) = shapeOf(GdMf.fit(df, blocked))
+    val (c3, three) = shapeOf(GdMf.fit(df, blocked.copy(epochs = 3)))
+    assert(three.jobs === one.jobs + 2,
       s"3 epochs ran ${three.jobs} jobs, 1 epoch ${one.jobs}")
     c1.release(); c3.release()
     assert(spark.conf.get("spark.sql.shuffle.partitions") === widthWas)
@@ -313,13 +326,8 @@ class GdMfSpec extends SparkSpec {
         Encoding.dimension(keyed, key, "time", id)
           .withColumn(f, factorsSql(!alternating)(col(id), 3, seed))
           .withColumn(b, lit(0.0)).select(key, f, b).schema
-      // the template loop's states come out of nullable placeholder leaves
-      def relaxed(s: org.apache.spark.sql.types.StructType) =
-        if (epochs > 0 && cap == 0L) org.apache.spark.sql.types.StructType(
-          s.fields.map(_.copy(nullable = true)))
-        else s
-      assert(m.userState.schema === relaxed(sqlState("user", "u_id", "u_factors", "u_bias", 42L)))
-      assert(m.itemState.schema === relaxed(sqlState("item", "i_id", "i_factors", "i_bias", 43L)))
+      assert(m.userState.schema === sqlState("user", "u_id", "u_factors", "u_bias", 42L))
+      assert(m.itemState.schema === sqlState("item", "i_id", "i_factors", "i_bias", 43L))
       m.release()
     }
   }
@@ -341,9 +349,12 @@ class GdMfSpec extends SparkSpec {
     def keys(state: org.apache.spark.sql.DataFrame, c: String) =
       (state.schema(c).dataType, state.select(c).collect().map(_.get(0)).toSet)
     val m0 = GdMf.fit(df, GdMf.Config(nFactors = 2, epochs = 0))
-    // a trained fit's states are rebuilt from the driver-side arrays
-    for (epochs <- Seq(0, 2)) withClue(s"epochs = $epochs: ") {
-      val m = GdMf.fit(df, GdMf.Config(nFactors = 2, epochs = epochs))
+    // a trained fit's states come from its blocks and item ranges, under
+    // encode joins that broadcast or (cap 0) shuffle
+    for ((epochs, cap) <- Seq((0, 64L << 20), (2, 64L << 20), (2, 0L)))
+      withClue(s"epochs = $epochs, cap = $cap: ") {
+      val m = GdMf.fit(df, GdMf.Config(nFactors = 2, epochs = epochs,
+        autoBroadcastDimBytes = cap))
       assert(six(m.stats) === six(Encoding.ratingStats(facts)))
       assert(six(m.stats) === ((6L, 3L, 3L, 2.0, 4.0, 3.1)))
       // the states hold exactly the counted ids, keyed as the untrained ones

@@ -44,25 +44,13 @@ class ServingSpec extends SparkSpec {
     // count jobs during PLAN CONSTRUCTION: without hints the size gate
     // runs one agg job per state; with hints it must run none (the
     // hot-serving-path contract)
-    val jobs = new java.util.concurrent.atomic.AtomicInteger(0)
-    val listener = new org.apache.spark.scheduler.SparkListener {
-      override def onJobStart(
-          js: org.apache.spark.scheduler.SparkListenerJobStart): Unit = {
-        jobs.incrementAndGet(); ()
-      }
-    }
-    spark.sparkContext.addSparkListener(listener)
-    try {
-      val hintedPlan = Serving.predict(test, userState, itemState, stats,
-        userStateStats = Some(Serving.StateStats(1L, 2)),
-        itemStateStats = Some(Serving.StateStats(1L, 2)))
-      // listener events post asynchronously — give the bus a moment
-      Thread.sleep(1500)
-      assert(jobs.get() === 0,
-        s"hinted predict must run zero probe jobs, ran ${jobs.get()}")
-      assert(hintedPlan.select("user", "item", "prediction")
-        .collect().toSet === probed)
-    } finally spark.sparkContext.removeSparkListener(listener)
+    val (hintedPlan, shape) = shapeOf(Serving.predict(test, userState, itemState, stats,
+      userStateStats = Some(Serving.StateStats(1L, 2)),
+      itemStateStats = Some(Serving.StateStats(1L, 2))))
+    assert(shape.jobs === 0,
+      s"hinted predict must run zero probe jobs, ran ${shape.jobs}")
+    assert(hintedPlan.select("user", "item", "prediction")
+      .collect().toSet === probed)
     // a hint over the broadcast threshold must degrade to shuffle
     // joins (auto-broadcast off so Catalyst can't mask the gate — the
     // AnnSpec size-gate discipline)

@@ -212,14 +212,6 @@ class StreamingDedupSpec extends SparkSpec {
     val run = StreamingDedup.start(
       mem.toDF().toDF("doc_id", "text"), "doc_id", "text",
       indexTable = Some(tbl)) { (_, _) => () }
-    val shuffleRecords = new java.util.concurrent.atomic.AtomicLong
-    val listener = new org.apache.spark.scheduler.SparkListener {
-      override def onTaskEnd(
-          t: org.apache.spark.scheduler.SparkListenerTaskEnd): Unit = {
-        val m = t.taskMetrics
-        if (m != null) shuffleRecords.addAndGet(m.shuffleWriteMetrics.recordsWritten)
-      }
-    }
     try {
       // seed a 400-doc index: ≈ 400 × 16 = 6400 bucket rows
       mem.addData((1 to 400).map(i => (i.toLong, doc(i))): _*)
@@ -229,16 +221,14 @@ class StreamingDedupSpec extends SparkSpec {
       // measure a 10-doc batch: if the fold re-shuffled the index
       // (round-5 updateIndex), shuffle records would exceed indexRows;
       // the bucketed append-only fold moves only batch-derived rows
-      spark.sparkContext.addSparkListener(listener)
-      mem.addData((1001 to 1010).map(i => (i.toLong, doc(i))): _*)
-      run.query.processAllAvailable()
-      org.apache.spark.sql.graftbridge.ListenerBridge
-        .waitUntilListenerBusEmpty(spark.sparkContext)
-      assert(shuffleRecords.get < indexRows / 2,
-        s"batch shuffle ${shuffleRecords.get} records vs index $indexRows — " +
+      val (_, batch) = shapeOf {
+        mem.addData((1001 to 1010).map(i => (i.toLong, doc(i))): _*)
+        run.query.processAllAvailable()
+      }
+      assert(batch.shuffleRecordsWritten < indexRows / 2,
+        s"batch shuffle ${batch.shuffleRecordsWritten} records vs index $indexRows — " +
           "index-sized re-shuffle regression")
     } finally {
-      spark.sparkContext.removeSparkListener(listener)
       run.query.stop()
       spark.sql(s"DROP TABLE IF EXISTS $tbl")
     }

@@ -69,33 +69,23 @@ class StreamingParagraphDedupSpec extends SparkSpec {
       mem.toDF().toDF("doc_id", "text"), "doc_id", "text", indexTable = tbl) {
       (_, _) => ()
     }
-    val shuffleRecords = new java.util.concurrent.atomic.AtomicLong
-    val listener = new org.apache.spark.scheduler.SparkListener {
-      override def onTaskEnd(
-          t: org.apache.spark.scheduler.SparkListenerTaskEnd): Unit = {
-        val m = t.taskMetrics
-        if (m != null) shuffleRecords.addAndGet(m.shuffleWriteMetrics.recordsWritten)
-      }
-    }
-    def drain(): Unit = org.apache.spark.sql.graftbridge.ListenerBridge
-      .waitUntilListenerBusEmpty(spark.sparkContext)
     try {
-      spark.sparkContext.addSparkListener(listener)
       // seed: 500 docs × 4 unique lines = 2000 indexed hashes; its own
       // shuffle volume is the measured index-sized baseline
-      mem.addData((1 to 500).map(i => (i.toLong, doc(i))): _*)
-      q.processAllAvailable()
-      drain()
-      val indexSizedBaseline = shuffleRecords.getAndSet(0L)
-      mem.addData((1001 to 1010).map(i => (i.toLong, doc(i))): _*)
-      q.processAllAvailable()
-      drain()
-      val batchRecords = shuffleRecords.get
+      val (_, seed) = shapeOf {
+        mem.addData((1 to 500).map(i => (i.toLong, doc(i))): _*)
+        q.processAllAvailable()
+      }
+      val indexSizedBaseline = seed.shuffleRecordsWritten
+      val (_, batch) = shapeOf {
+        mem.addData((1001 to 1010).map(i => (i.toLong, doc(i))): _*)
+        q.processAllAvailable()
+      }
+      val batchRecords = batch.shuffleRecordsWritten
       assert(batchRecords * 4 < indexSizedBaseline,
         s"batch shuffled $batchRecords records vs index-sized baseline " +
           s"$indexSizedBaseline — index-sized re-shuffle regression")
     } finally {
-      spark.sparkContext.removeSparkListener(listener)
       q.stop()
       spark.sql(s"DROP TABLE IF EXISTS $tbl")
     }

@@ -79,36 +79,26 @@ class StreamingSubstringDedupSpec extends SparkSpec {
     val q = StreamingSubstringDedup.start(
       mem.toDF().toDF("doc_id", "text"), "doc_id", "text",
       indexTable = tbl, windowTokens = 6) { (_, _) => () }
-    val shuffleRecords = new java.util.concurrent.atomic.AtomicLong
-    val listener = new org.apache.spark.scheduler.SparkListener {
-      override def onTaskEnd(
-          t: org.apache.spark.scheduler.SparkListenerTaskEnd): Unit = {
-        val m = t.taskMetrics
-        if (m != null) shuffleRecords.addAndGet(m.shuffleWriteMetrics.recordsWritten)
-      }
-    }
-    def drain(): Unit = org.apache.spark.sql.graftbridge.ListenerBridge
-      .waitUntilListenerBusEmpty(spark.sparkContext)
     try {
-      spark.sparkContext.addSparkListener(listener)
       // seed: 400 docs × 11 gram positions = 4400 indexed hashes; its
       // own shuffle volume IS the measured index-sized baseline
-      mem.addData((1 to 400).map(i => (i.toLong, doc(i))): _*)
-      q.processAllAvailable()
-      drain()
-      val indexSizedBaseline = shuffleRecords.getAndSet(0L)
+      val (_, seed) = shapeOf {
+        mem.addData((1 to 400).map(i => (i.toLong, doc(i))): _*)
+        q.processAllAvailable()
+      }
+      val indexSizedBaseline = seed.shuffleRecordsWritten
       // a 10-doc batch (2.5% of the index) must shuffle a small
       // FRACTION of the baseline — ratio assertion, so plan-shape
       // changes that move both numbers together don't flake it
-      mem.addData((1001 to 1010).map(i => (i.toLong, doc(i))): _*)
-      q.processAllAvailable()
-      drain()
-      val batchRecords = shuffleRecords.get
+      val (_, batch) = shapeOf {
+        mem.addData((1001 to 1010).map(i => (i.toLong, doc(i))): _*)
+        q.processAllAvailable()
+      }
+      val batchRecords = batch.shuffleRecordsWritten
       assert(batchRecords * 4 < indexSizedBaseline,
         s"batch shuffled $batchRecords records vs index-sized baseline " +
           s"$indexSizedBaseline — index-sized re-shuffle regression")
     } finally {
-      spark.sparkContext.removeSparkListener(listener)
       q.stop()
       spark.sql(s"DROP TABLE IF EXISTS $tbl")
     }
