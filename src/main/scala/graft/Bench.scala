@@ -218,7 +218,8 @@ object Bench {
   }
 
   /** Dictionary-encoded replay variant (the non-default arm of the
-    * A/B since the BpeAbProbe re-measure; bench key kept stable).
+    * A/B since the interleaved re-measure noted on
+    * [[graft.text.Bpe.tokenCountWithMerges]]; bench key kept stable).
     */
   private[graft] def bpe32kTokenize(spark: SparkSession, sfDir: String): Unit = {
     import org.apache.spark.sql.functions._

@@ -99,8 +99,8 @@ object Encoding {
     * estimated build-side bytes — comfortably executor-resident, far
     * above Catalyst's 10 MB auto threshold, far below driver OOM
     * territory. Shared by every size-gated broadcast in the engine
-    * (GdMf/BprMf factor states, negativeSample's proposal dim, the
-    * encode/bias joins here).
+    * (the fit paths' encode joins, negativeSample's proposal dim,
+    * AlsRecommender's bias joins).
     */
   val DefaultAutoBroadcastDimBytes: Long = 64L << 20
 
@@ -135,7 +135,7 @@ object Encoding {
     * counts are already known from a stats/probe pass (zero extra
     * jobs). Each dim is hinted only while its estimated bytes fit
     * `thresholdBytes`; an oversized dim degrades to a shuffle join
-    * instead of a driver OOM (the BprMf.stateBytes pattern, SURVEY
+    * instead of a driver OOM (the [[dimBytes]] estimate, SURVEY
     * §1.3).
     */
   def encode(ratings: DataFrame, userDim: DataFrame, itemDim: DataFrame,

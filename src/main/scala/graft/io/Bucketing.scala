@@ -42,7 +42,7 @@ object Bucketing {
     * this one action: everything in `df`'s plan is O(input) and
     * per-call; callers' other queries run outside it. A caller that
     * overlaps this write with other queries on its session passes a
-    * frame rebound to a cloned session (`DatasetBridge.rebindToClone`,
+    * frame rebound to a cloned session (`DatasetBridge.rebind`,
     * as StreamingDedup does), so the pin lands on the clone.
     */
   def writeBucketedAligned(df: DataFrame, table: String, key: String,

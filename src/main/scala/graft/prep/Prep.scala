@@ -210,8 +210,8 @@ object Prep {
     * (single-partition window below ~50M items, range-partition +
     * zipWithIndex above — identical mapping, so the hash gate is
     * unaffected by the switch) and broadcast for the index join ONLY
-    * while its estimated bytes fit `autoBroadcastDimBytes` (the BprMf
-    * stateBytes pattern — a 10^9-item catalog degrades to a shuffle
+    * while its estimated bytes fit `autoBroadcastDimBytes` (the
+    * Encoding.dimBytes estimate — a 10^9-item catalog degrades to a shuffle
     * join instead of a driver OOM); rejection is one (user, item)
     * anti-join against the ratings; the final selection is
     * `row_number <= k` under a (user)-partitioned window —
@@ -250,7 +250,7 @@ object Prep {
     val itemDim = graft.encode.Encoding
       .dimensionAuto(base, "item", "item", "idx", approxKeys = nItems)
       .withColumn("idx", col("idx").cast("long"))
-    // size-gate the dimension broadcast exactly like BprMf.stateBytes:
+    // size-gate the dimension broadcast on the Encoding.dimBytes estimate:
     // row overhead + 8-byte idx + the SAMPLED key width
     val dimFits = graft.encode.Encoding.dimBytes(nItems, keyBytes + 8.0) <=
       autoBroadcastDimBytes

@@ -220,7 +220,7 @@ object AlsRecommender {
     // (no planner estimates), so their broadcast hints are size-gated
     // on the exact stats counts — an oversized side degrades to a
     // shuffle join instead of a driver-side build (SURVEY §1.3; the
-    // BprMf.stateBytes pattern). Bias rows are key + one double.
+    // Encoding.dimBytes estimate). Bias rows are key + one double.
     val ubBytes = Encoding.dimBytes(stats.nUsers, stats.avgUserKeyBytes + 8.0)
     val ibBytes = Encoding.dimBytes(stats.nItems, stats.avgItemKeyBytes + 8.0)
     def gate(df: DataFrame, est: Long): DataFrame =

@@ -1,6 +1,6 @@
 package graft.recommender
 
-import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 import org.apache.spark.storage.StorageLevel
 
@@ -25,16 +25,16 @@ import graft.prep.Prep
   *   h_i += lr·(Σ_{i=p} s·w_u − Σ_{i=n} s·w_u − reg·h_i)
   * Both sides update SIMULTANEOUSLY from the epoch-start states (the
   * classic batch-gradient step; [[GdMf]]'s in-epoch ordering traps are
-  * reference artifacts that do not apply here).
+  * reference artifacts that do not apply here). No biases: the states
+  * are factors only.
   *
-  * Scale shape (the [[GdMf]] epoch discipline): the scored relation is
-  * NARROW — (u_id, p_id, n_id, x), no factor vectors — so the per-epoch
-  * cache is O(|triplets|)·32 B; factor joins are broadcast under the
-  * same exact-size gate as GdMf (oversized dims degrade to shuffle
-  * joins); gradients are map-side-combinable [[ScaledVectorSum]]
-  * aggregates, so one k-vector per (partition, id) crosses the wire;
-  * lineage is cut per epoch with releasable fresh checkpoints (the
-  * measured superlinear-analysis lesson from GdMf applies unchanged).
+  * Scale shape: [[GdMf]]'s. The encoded triplets are cached once as
+  * user blocks sorted by (u_id, p_id, n_id), every user in one (a user
+  * who rated every item has no triplet and steps by decay only), and
+  * each epoch is ONE job of the fused kernel ([[FusedEpoch]] with its
+  * [[FusedEpoch.bprPass]]): the states stay on the executors, and the
+  * partials and history sums add in block order, so a fit is
+  * bit-reproducible.
   */
 object BprMf {
 
@@ -106,10 +106,6 @@ object BprMf {
     }
   }
 
-  /** Numerically stable softplus(−x) = −ln σ(x). */
-  private def softplusNeg(x: Column): Column =
-    when(x >= 0, log1p(exp(-x))).otherwise(-x + log1p(exp(x)))
-
   /** EXACT top-N serving under frozen factor states — implicit MF
     * ranks by the PURE dot x̂ = w_u · h_i (no biases in the BPR
     * criterion), which is [[AlsRecommender.topNExact]]'s score chain
@@ -170,126 +166,50 @@ object BprMf {
       .join(gate(itemDim.select(col("item").as("neg_item"),
         col("i_id").as("n_id")), iDimBytes), "neg_item")
       .select(col("u_id"), col("p_id"), col("n_id"))
-      .repartition(math.max(1L,
-        probe.getLong(0) * cfg.negativesPerUser * 24L / (32L << 20)).toInt,
-        col("u_id"))
-      .persist(StorageLevel.MEMORY_AND_DISK)
-    val nTriplets = facts.count()
+
+    // The epochs' triplet cache, built before the ratings are dropped (an
+    // epochs = 0 fit never reads it): a block per 32 MB at ~24 B per
+    // triplet, one triplet per rated cell, as GdMf sizes its facts.
+    val parts = math.max(1L, probe.getLong(0) * 24L / (32L << 20)).toInt
+    val blocks = if (cfg.epochs > 0) FusedEpoch.triplets(facts, userDim, parts) else null
+    val nTriplets = if (cfg.epochs > 0) blocks.map(_.from.last.toLong).reduce(_ + _) else 0L
     ratingsP.unpersist()
 
-    // the probe's approximate distinct counts are exact enough for a
-    // 64 MB size gate (±2 % HLL error) — no extra count jobs
-    val nUsers = probe.getLong(1)
-    val nItems = probe.getLong(2)
-    def stateBytes(ids: Long): Long = ids * (16L + 8L * cfg.nFactors)
-    val bcastU = stateBytes(nUsers) <= cfg.autoBroadcastDimBytes
-    val bcastI = stateBytes(nItems) <= cfg.autoBroadcastDimBytes
-    def bu(df: DataFrame): DataFrame = if (bcastU) broadcast(df) else df
-    def bi(df: DataFrame): DataFrame = if (bcastI) broadcast(df) else df
-
-    var uState = userDim.withColumn("u_factors",
-      GdMf.initColumn(col("u_id"), cfg.nFactors, cfg.seed, normal = true))
-    var iState = itemDim.withColumn("i_factors",
-      GdMf.initColumn(col("i_id"), cfg.nFactors, cfg.seed + 1, normal = true))
-
-    // scored(u_id, p_id, n_id, x): NARROW — factors re-join at the
-    // consumers, exactly GdMf's err-relation discipline
-    def scoredOn(u: DataFrame, i: DataFrame): DataFrame =
-      facts
-        .join(bu(u.select("u_id", "u_factors")), "u_id")
-        .join(bi(i.select(col("i_id").as("p_id"),
-          col("i_factors").as("__pf"))), "p_id")
-        .join(bi(i.select(col("i_id").as("n_id"),
-          col("i_factors").as("__nf"))), "n_id")
-        .withColumn("x",
-          Serving.dot(col("u_factors"), col("__pf")) -
-            Serving.dot(col("u_factors"), col("__nf")))
-        .select("u_id", "p_id", "n_id", "x")
-
-    import ScaledVectorSum.scaledVecSum
-    val zeros = array((0 until cfg.nFactors).map(_ => lit(0.0)): _*)
-    def step(factors: Column, grad: Column): Column =
-      zip_with(factors, coalesce(grad, zeros),
-        (p, g) => p + lit(cfg.lr) * (g - lit(cfg.reg) * p))
-
-    def userGrad(scored: DataFrame, i: DataFrame): DataFrame =
-      scored
-        .join(bi(i.select(col("i_id").as("p_id"),
-          col("i_factors").as("__pf"))), "p_id")
-        .join(bi(i.select(col("i_id").as("n_id"),
-          col("i_factors").as("__nf"))), "n_id")
-        .withColumn("s", lit(1.0) / (lit(1.0) + exp(col("x"))))
-        .groupBy("u_id")
-        .agg(scaledVecSum(
-          zip_with(col("__pf"), col("__nf"), (p, n) => p - n),
-          col("s")).as("fgrad"))
-
-    def itemGrad(scored: DataFrame, u: DataFrame): DataFrame = {
-      val withU = scored
-        .join(bu(u.select("u_id", "u_factors")), "u_id")
-        .withColumn("s", lit(1.0) / (lit(1.0) + exp(col("x"))))
-      withU.select(col("p_id").as("i_id"), col("u_factors"), col("s"))
-        .unionAll(withU.select(col("n_id").as("i_id"), col("u_factors"),
-          (-col("s")).as("s")))
-        .groupBy("i_id")
-        .agg(scaledVecSum(col("u_factors"), col("s")).as("fgrad"))
-    }
-
+    // the lazy init states: an epochs = 0 Model's, and every fit's schema
+    def initState(dim: DataFrame, idCol: String, factorsCol: String, seed: Long): DataFrame =
+      dim.withColumn(factorsCol, GdMf.initColumn(col(idCol), cfg.nFactors, seed, normal = true))
+    val uInit = initState(userDim, "u_id", "u_factors", cfg.seed)
+    val iInit = initState(itemDim, "i_id", "i_factors", cfg.seed + 1)
     val history = scala.collection.mutable.ArrayBuffer.empty[(Int, EpochMetrics)]
-    var cpU: Option[DatasetBridge.FreshCheckpoint] = None
-    var cpI: Option[DatasetBridge.FreshCheckpoint] = None
-    for (epoch <- 0 until cfg.epochs) {
-      val scored = scoredOn(uState, iState)
-        .persist(StorageLevel.MEMORY_AND_DISK)
-      if (cfg.collectMetrics) {
-        val r = scored.agg(
-          avg(when(col("x") > 0, 1.0).when(col("x") === 0, 0.5)
-            .otherwise(0.0)).as("auc"),
-          avg(softplusNeg(col("x"))).as("loss")).head()
-        history += ((epoch, EpochMetrics(r.getDouble(0), r.getDouble(1))))
+    val (uState, iState, backing) = if (cfg.epochs > 0) {
+      val k = cfg.nFactors
+      val rule = FusedEpoch.Rule(k, cfg.lr, cfg.reg, mean = 0.0, userDimCp.rows,
+        itemDimCp.rows, alternating = false)
+      val fit = new FusedEpoch.States(blocks, rule, FusedEpoch.bprPass,
+        GdMf.initFor(userDim, "u_id", k, cfg.seed, normal = true),
+        GdMf.initFor(itemDim, "i_id", k, cfg.seed + 1, normal = true))
+      for (epoch <- 0 until cfg.epochs) {
+        val (ranked, loss) = fit.epoch()
+        if (cfg.collectMetrics)
+          history += ((epoch, EpochMetrics(ranked / nTriplets, loss / nTriplets)))
       }
-      // simultaneous update from the epoch-start states; user side cut
-      // first, item side reads only OLD states + the shared scored
-      // relation, so neither cut re-executes the other's update
-      val uNew = DatasetBridge.localCheckpointFresh(
-        uState.join(
-          if (bcastU) broadcast(userGrad(scored, iState))
-          else userGrad(scored, iState),
-          Seq("u_id"), "left_outer")
-          .withColumn("u_factors", step(col("u_factors"), col("fgrad")))
-          .drop("fgrad"))
-      val iNew = DatasetBridge.localCheckpointFresh(
-        iState.join(
-          if (bcastI) broadcast(itemGrad(scored, uState))
-          else itemGrad(scored, uState),
-          Seq("i_id"), "left_outer")
-          .withColumn("i_factors", step(col("i_factors"), col("fgrad")))
-          .drop("fgrad"))
-      // both new generations are materialized — the old ones and the
-      // epoch's scored cache are safe to drop
-      cpU.foreach(_.release()); cpI.foreach(_.release())
-      scored.unpersist()
-      cpU = Some(uNew); cpI = Some(iNew)
-      uState = uNew.df
-      iState = iNew.df
-    }
-    if (cfg.epochs > 0) {
-      // the final states are checkpointed by the last epoch's cuts and
-      // no longer reference the dims; with epochs == 0 the lazy init
-      // states still do, so the dims stay resident for the Model's life
+      val uCp = fit.checkpoint(userDimCp, "u_id", users = true, uInit.schema)
+      val iCp = fit.checkpoint(itemDimCp, "i_id", users = false, iInit.schema)
+      fit.release()
       userDimCp.release()
       itemDimCp.release()
+      (uCp.df, iCp.df, Seq(uCp, iCp))
+    } else {
+      // an untrained Model keeps the lazy init states over the dim
+      // checkpoints, which then stay resident for its life
+      (uInit, iInit, Seq(userDimCp, itemDimCp))
     }
-    facts.unpersist()
-    val backing =
-      if (cfg.epochs > 0) Seq(cpU, cpI).flatten
-      else Seq(userDimCp, itemDimCp)
     Model(
       userState = uState.select("user", "u_factors"),
       itemState = iState.select("item", "i_factors"),
       history = history.toSeq,
       backing = backing,
       itemStateBytes = Encoding.dimBytes(
-        nItems, keyBytes(4) + 8.0 * (cfg.nFactors + 1)))
+        itemDimCp.rows, keyBytes(4) + 8.0 * (cfg.nFactors + 1)))
   }
 }

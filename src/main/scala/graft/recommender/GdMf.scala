@@ -146,6 +146,13 @@ object GdMf {
     d
   }
 
+  /** [[initDense]] for the ids of `dim`'s `idCol`, an int or long column. */
+  private[recommender] def initFor(dim: DataFrame, idCol: String, k: Int, seed: Long,
+      normal: Boolean): Array[Int] => FusedEpoch.Dense = {
+    val longId = dim.schema(idCol).dataType == LongType
+    ids => initDense(ids, longId, k, seed, normal)
+  }
+
   /** [[initFactors]] over an int or long id column. Its elements are
     * nullable, as the SQL forms' (divide, log) were, so the states keep
     * their schema.
@@ -275,14 +282,11 @@ object GdMf {
       // the dims' rows with initState's schema, so the Model's states
       // hold exactly the dims' keys and no longer reference the dims.
       val k = cfg.nFactors
-      def init(dim: DataFrame, idCol: String, seed: Long): Array[Int] => FusedEpoch.Dense = {
-        val longId = dim.schema(idCol).dataType == LongType
-        ids => initDense(ids, longId, k, seed, normal)
-      }
       val rule = FusedEpoch.Rule(k, cfg.lr, cfg.reg,
         stats.meanRating, stats.nUsers, stats.nItems, cfg.alternating)
-      val (uInit, iInit) = (init(userDim, "u_id", cfg.seed), init(itemDim, "i_id", cfg.seed + 1))
-      val fit = new FusedEpoch.States(blocks, rule, uInit, iInit)
+      val fit = new FusedEpoch.States(blocks, rule, FusedEpoch.gdPass,
+        initFor(userDim, "u_id", k, cfg.seed, normal),
+        initFor(itemDim, "i_id", k, cfg.seed + 1, normal))
       for (epoch <- 0 until cfg.epochs) {
         val (sae, sse) = fit.epoch()
         if (cfg.collectErrors) history += ((epoch, metrics(sae, sse)))

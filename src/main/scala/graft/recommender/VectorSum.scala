@@ -7,102 +7,11 @@ import org.apache.spark.sql.functions.udaf
 
 import scala.reflect.runtime.universe.TypeTag
 
-/** Elementwise vector-sum UDAF (SURVEY §4.3): the one aggregation the
-  * engine needs that `org.apache.spark.sql.functions` lacks. Used for
-  * gradient accumulation Σᵢ eᵤᵢ·Qᵢ per user id (reference
-  * `models/funk_svd.py:166-167` `error @ i_factors` — a matmul whose
-  * relational form is join + groupBy + vector-sum).
-  *
-  * A typed `Aggregator` registered via `functions.udaf` participates in
-  * hash aggregation with map-side partial combine, so the shuffle moves
-  * one k-vector per (partition, id) — not one per rating.
-  */
-class VectorSum extends Aggregator[Array[Double], Array[Double], Array[Double]] {
-
-  override def zero: Array[Double] = Array.emptyDoubleArray
-
-  override def reduce(buf: Array[Double], a: Array[Double]): Array[Double] =
-    if (a == null) buf
-    else if (buf.isEmpty) a.clone()
-    else {
-      var i = 0
-      while (i < buf.length) { buf(i) += a(i); i += 1 }
-      buf
-    }
-
-  override def merge(a: Array[Double], b: Array[Double]): Array[Double] =
-    reduce(a, b)
-
-  override def finish(r: Array[Double]): Array[Double] = r
-
-  private def enc[T: TypeTag]: Encoder[T] = ExpressionEncoder[T]()
-  override def bufferEncoder: Encoder[Array[Double]] = enc[Array[Double]]
-  override def outputEncoder: Encoder[Array[Double]] = enc[Array[Double]]
-}
-
-object VectorSum {
-  private lazy val fn = udaf(new VectorSum, ExpressionEncoder[Array[Double]]())
-
-  /** `vec_sum(arrayCol)` — elementwise sum of double arrays. */
-  def vecSum(c: Column): Column = fn(c)
-}
-
-/** Σᵢ sᵢ·vᵢ — scaled elementwise vector sum. Fuses the scalar multiply
-  * into the aggregation loop: the alternative (`transform(vec, x =>
-  * x * s)` then [[VectorSum]]) routes every rating row through an
-  * INTERPRETED higher-order function and allocates a k-array per row
-  * (the measured HOF trap); here the multiply-accumulate runs as one
-  * compiled JVM loop with map-side partial combine. This is the
-  * gradient kernel Σ e·Q per id (reference `models/funk_svd.py:166-167`
-  * `error @ i_factors`).
-  */
-class ScaledVectorSum
-    extends Aggregator[(Array[Double], Double), Array[Double], Array[Double]] {
-
-  override def zero: Array[Double] = Array.emptyDoubleArray
-
-  override def reduce(buf: Array[Double], in: (Array[Double], Double)): Array[Double] = {
-    val (v, s) = in
-    if (v == null) buf
-    else if (buf.isEmpty) {
-      val out = new Array[Double](v.length)
-      var i = 0
-      while (i < v.length) { out(i) = v(i) * s; i += 1 }
-      out
-    } else {
-      var i = 0
-      while (i < buf.length) { buf(i) += v(i) * s; i += 1 }
-      buf
-    }
-  }
-
-  override def merge(a: Array[Double], b: Array[Double]): Array[Double] =
-    if (b.isEmpty) a
-    else if (a.isEmpty) b
-    else {
-      var i = 0
-      while (i < a.length) { a(i) += b(i); i += 1 }
-      a
-    }
-
-  override def finish(r: Array[Double]): Array[Double] = r
-
-  private def enc[T: TypeTag]: Encoder[T] = ExpressionEncoder[T]()
-  override def bufferEncoder: Encoder[Array[Double]] = enc[Array[Double]]
-  override def outputEncoder: Encoder[Array[Double]] = enc[Array[Double]]
-}
-
-object ScaledVectorSum {
-  private lazy val fn =
-    udaf(new ScaledVectorSum, ExpressionEncoder[(Array[Double], Double)]())
-
-  /** `scaled_vec_sum(vec, s)` = Σ rows s·vec, elementwise. */
-  def scaledVecSum(vec: Column, s: Column): Column = fn(vec, s)
-}
-
-/** Elementwise long-vector reduce (min or sum) — same partial-combine
-  * shape as [[VectorSum]]; powers MinHash signatures (elementwise min
-  * over per-shingle permutation arrays) and SimHash bit sums.
+/** Elementwise long-vector reduce (min or sum): a typed `Aggregator`
+  * registered via `functions.udaf`, so it runs in hash aggregation with
+  * map-side partial combine and the shuffle moves one array per
+  * (partition, key). Powers MinHash signatures (elementwise min over
+  * per-shingle permutation arrays) and SimHash bit sums.
   */
 class LongVectorReduce(op: (Long, Long) => Long)
     extends Aggregator[Array[Long], Array[Long], Array[Long]] {

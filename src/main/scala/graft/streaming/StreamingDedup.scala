@@ -109,6 +109,9 @@ object StreamingDedup {
       val index = StandingTable.open(spark, tbl,
         indexSchema(docs.schema(idCol).dataType), Some("band_hash"),
         indexBuckets, initialIndex)
+      // the appends' session (see the append below): one clone for the
+      // stream's life, since its batches append one at a time
+      val appendSession = org.apache.spark.sql.graftbridge.DatasetBridge.cloneOf(spark)
       val query = StandingTable.foreachBatch(docs, tbl) {
         (batch: DataFrame, batchId: Long) =>
           // the stream executes in a CLONED SparkSession whose table-
@@ -177,7 +180,7 @@ object StreamingDedup {
           // verdicts' plan is pinned off the table (see above), so the
           // append cannot perturb what onBatch reads — and each leaves
           // most of local[N] idle; overlap them (guide §2.6). The
-          // append runs on a CLONED session: the aligned writer pins
+          // append runs on the CLONED appendSession: the aligned writer pins
           // AQE off around its write (measured ~2× faster and −10
           // jobs/run than an unpinned append), and a session-scoped
           // pin on THIS session would race onBatch's concurrent
@@ -196,8 +199,7 @@ object StreamingDedup {
           val bound = scala.concurrent.duration.Duration(3600L, "s")
           val appendF = Future(
             timed("append")(index.append(
-              org.apache.spark.sql.graftbridge.DatasetBridge
-                .rebindToClone(newRows),
+              org.apache.spark.sql.graftbridge.DatasetBridge.rebind(newRows, appendSession),
               batchId)))(scala.concurrent.ExecutionContext.global)
           try timed("onBatch")(onBatch(verdicts, batchId))
           catch {

@@ -159,7 +159,7 @@ object Bpe {
     * PER-OCCURRENCE replay: the round-9 one-shot that promoted the
     * dictionary-encoded form (+24 %) did not survive a controlled
     * measurement — two interleaved min-of-5/7 sessions on an idle
-    * machine (graft.tools.BpeAbProbe, sf0.1, all-OOV 32k-merge
+    * machine (sf0.1, all-OOV 32k-merge
     * rehearsal) both put per-occurrence ~8–10 % AHEAD (min 0.66 vs
     * 0.74 s), so the pre-agg doesn't pay for itself even in the
     * worst all-OOV case on this corpus. The dictionary-encoded form

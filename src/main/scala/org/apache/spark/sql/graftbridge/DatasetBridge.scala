@@ -48,14 +48,12 @@ object DatasetBridge {
       to.asInstanceOf[org.apache.spark.sql.classic.SparkSession],
       df.queryExecution.logical)
 
-  /** [[rebind]] onto a fresh clone of `df`'s own session (cloneSession
-    * is private[sql]; this is the public doorway the conf-isolated
+  /** A fresh clone of `spark`, for [[rebind]] (cloneSession is
+    * private[sql]; this is the public doorway the conf-isolated
     * side-write pattern needs).
     */
-  def rebindToClone(df: DataFrame): DataFrame =
-    rebind(df, df.sparkSession
-      .asInstanceOf[org.apache.spark.sql.classic.SparkSession]
-      .cloneSession())
+  def cloneOf(spark: org.apache.spark.sql.SparkSession): org.apache.spark.sql.SparkSession =
+    spark.asInstanceOf[org.apache.spark.sql.classic.SparkSession].cloneSession()
 
   def localCheckpointFresh(df: DataFrame): FreshCheckpoint =
     checkpointRows(df.sparkSession, df.queryExecution.toRdd.map(_.copy()), df.schema)

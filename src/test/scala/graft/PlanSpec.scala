@@ -263,6 +263,7 @@ class PlanSpec extends SparkSpec {
       "src/main/scala/graft/recommender/AlsRecommender.scala",
       "src/main/scala/graft/recommender/GdMf.scala",
       "src/main/scala/graft/recommender/BprMf.scala",
+      "src/main/scala/graft/recommender/FusedEpoch.scala",
       "src/main/scala/graft/prep/Prep.scala")
     for (f <- fitFiles) {
       val src = new String(java.nio.file.Files.readAllBytes(

@@ -1,6 +1,8 @@
 package graft.recommender
 
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.graftbridge.DatasetBridge
+import org.apache.spark.sql.types.{ArrayType, DoubleType}
 
 import graft.SparkSpec
 import graft.prep.Prep
@@ -32,24 +34,30 @@ class BprMfSpec extends SparkSpec {
     df.select(idCol, fCol).collect()
       .map(r => r.getString(0) -> r.getSeq[Double](1).toArray).toMap
 
-  /** Naive driver-side full-batch BPR over an explicit triplet list. */
+  /** Naive driver-side full-batch BPR over an explicit triplet list,
+    * with each epoch's (AUC, loss) before its update.
+    */
   private def naive(
       triplets: Seq[(String, String, String)],
       u0: Map[String, Array[Double]],
       i0: Map[String, Array[Double]],
       lr: Double, reg: Double, epochs: Int)
-    : (Map[String, Array[Double]], Map[String, Array[Double]]) = {
+    : (Map[String, Array[Double]], Map[String, Array[Double]], Seq[(Double, Double)]) = {
     var uS = u0.map { case (k, f) => k -> f.clone() }
     var iS = i0.map { case (k, f) => k -> f.clone() }
     val k = u0.head._2.length
+    val history = Seq.newBuilder[(Double, Double)]
     for (_ <- 0 until epochs) {
       val uGrad = collection.mutable.Map.empty[String, Array[Double]]
       val iGrad = collection.mutable.Map.empty[String, Array[Double]]
+      var (ranked, loss) = (0.0, 0.0)
       triplets.foreach { case (u, p, n) =>
         val w = uS(u); val hp = iS(p); val hn = iS(n)
         val x = (0 until k).map(f => w(f) * hp(f)).sum -
           (0 until k).map(f => w(f) * hn(f)).sum
         val s = 1.0 / (1.0 + math.exp(x))
+        ranked += (if (x > 0) 1.0 else if (x == 0) 0.5 else 0.0)
+        loss += math.log(1.0 + math.exp(-x))
         val ug = uGrad.getOrElseUpdate(u, Array.fill(k)(0.0))
         val pg = iGrad.getOrElseUpdate(p, Array.fill(k)(0.0))
         val ng = iGrad.getOrElseUpdate(n, Array.fill(k)(0.0))
@@ -59,6 +67,7 @@ class BprMfSpec extends SparkSpec {
           ng(f) -= s * w(f)
         }
       }
+      history += ((ranked / triplets.size, loss / triplets.size))
       uS = uS.map { case (id, f) =>
         val g = uGrad.getOrElse(id, Array.fill(k)(0.0))
         id -> f.indices.map(j => f(j) + lr * (g(j) - reg * f(j))).toArray
@@ -68,7 +77,7 @@ class BprMfSpec extends SparkSpec {
         id -> f.indices.map(j => f(j) + lr * (g(j) - reg * f(j))).toArray
       }
     }
-    (uS, iS)
+    (uS, iS, history.result())
   }
 
   private def assertClose(got: Map[String, Array[Double]],
@@ -91,13 +100,115 @@ class BprMfSpec extends SparkSpec {
     val m = BprMf.fit(df, cfg0.copy(epochs = 3))
     val triplets = Prep.bprTriplets(df, "user", "item", 3, 6)
       .as[(String, String, String)].collect().toSeq
-    val (wu, wi) = naive(triplets,
+    val (wu, wi, _) = naive(triplets,
       factors(init.userState, "user", "u_factors"),
       factors(init.itemState, "item", "i_factors"),
       lr = 0.05, reg = 0.01, epochs = 3)
     assertClose(factors(m.userState, "user", "u_factors"), wu)
     assertClose(factors(m.itemState, "item", "i_factors"), wi)
     init.release(); m.release()
+  }
+
+  // the fixture on int ids (uN → N, iN → N), plus user 8, who rated
+  // every item and so has no triplet
+  private val nUsers = 9
+  private val nItems = 10
+  private lazy val intTriplets: Seq[(Int, Int, Int)] = {
+    val rated = ratingsSeq.map { case (u, i) => (u.tail.toInt, i.tail.toInt) } ++
+      (0 until nItems).map(i => (8, i))
+    Prep.bprTriplets(rated.toDF("user", "item"), "user", "item", 3, 6)
+      .as[(Int, Int, Int)].collect().toSeq
+  }
+
+  private def initOf(ids: Range, seed: Long): Map[String, Array[Double]] = {
+    val d = GdMf.initDense(ids.toArray, longId = false, k = 3, seed, normal = true)
+    ids.map(id => id.toString -> d.factors.slice(id * 3, id * 3 + 3)).toMap
+  }
+
+  /** `epochs` epochs of the kernel over `intTriplets` in `parts` blocks:
+    * the states and the history sums.
+    */
+  private def viaStates(parts: Int, epochs: Int)
+    : (Map[String, Seq[Double]], Map[String, Seq[Double]], Seq[(Double, Double)]) = {
+    val init: Long => Array[Int] => FusedEpoch.Dense =
+      seed => GdMf.initDense(_, longId = false, k = 3, seed, normal = true)
+    val fit = new FusedEpoch.States(
+      FusedEpoch.triplets(intTriplets.toDF("u_id", "p_id", "n_id"),
+        (0 until nUsers).toDF("u_id"), parts),
+      FusedEpoch.Rule(3, 0.05, 0.01, 0.0, nUsers, nItems, alternating = false),
+      FusedEpoch.bprPass, init(42L), init(43L))
+    val sums = (0 until epochs).map(_ => fit.epoch())
+    def states(n: Int, users: Boolean): Map[String, Seq[Double]] = {
+      val dim = DatasetBridge.localCheckpointFresh((0 until n).toDF("id"))
+      val cp = fit.checkpoint(dim, "id", users,
+        dim.df.schema.add("f", ArrayType(DoubleType, containsNull = true)))
+      val out = cp.df.as[(Int, Seq[Double])].collect()
+        .map { case (id, f) => id.toString -> f }.toMap
+      cp.release(); dim.release()
+      out
+    }
+    val out = (states(nUsers, users = true), states(nItems, users = false), sums)
+    fit.release()
+    out
+  }
+
+  test("the kernel matches naive BPR over 1 and 3 blocks, history included; a refit is bit-equal") {
+    val (wu, wi, history) = naive(
+      intTriplets.map { case (u, p, n) => (u.toString, p.toString, n.toString) },
+      initOf(0 until nUsers, 42L), initOf(0 until nItems, 43L),
+      lr = 0.05, reg = 0.01, epochs = 3)
+    for (parts <- Seq(1, 3)) withClue(s"$parts blocks: ") {
+      val (u, i, sums) = viaStates(parts, epochs = 3)
+      assertClose(u.map { case (id, f) => id -> f.toArray }, wu)
+      assertClose(i.map { case (id, f) => id -> f.toArray }, wi)
+      assert(sums.size === 3)
+      sums.zip(history).foreach { case ((ranked, loss), (auc, meanLoss)) =>
+        assert(math.abs(ranked / intTriplets.size - auc) < 1e-12)
+        assert(math.abs(loss / intTriplets.size - meanLoss) < 1e-9)
+      }
+      // partials and sums add in block order, not arrival order
+      assert(viaStates(parts, epochs = 3) == ((u, i, sums)))
+    }
+  }
+
+  test("a user who rated every item keeps its row and steps by decay only") {
+    val all = (ratingsSeq ++ (0 until 10).map(i => ("uAll", s"i$i"))).toDF("user", "item")
+    val cfg0 = BprMf.Config(nFactors = 3, epochs = 0, lr = 0.05, reg = 0.01,
+      negativesPerUser = 3, oversample = 6)
+    val init = BprMf.fit(all, cfg0)
+    val m = BprMf.fit(all, cfg0.copy(epochs = 3))
+    val triplets = Prep.bprTriplets(all, "user", "item", 3, 6)
+      .as[(String, String, String)].collect().toSeq
+    assert(!triplets.exists(_._1 == "uAll"))
+    val (wu, wi, _) = naive(triplets,
+      factors(init.userState, "user", "u_factors"),
+      factors(init.itemState, "item", "i_factors"),
+      lr = 0.05, reg = 0.01, epochs = 3)
+    val got = factors(m.userState, "user", "u_factors")
+    assertClose(got, wu)
+    assertClose(factors(m.itemState, "item", "i_factors"), wi)
+    assert(got("uAll").toSeq === wu("uAll").toSeq)
+    init.release(); m.release()
+  }
+
+  test("a refit is bit-equal, and an epoch is one job, history or not") {
+    val df = ratingsSeq.toDF("user", "item")
+    def fit(epochs: Int, collectMetrics: Boolean) = shapeOf(BprMf.fit(df,
+      BprMf.Config(nFactors = 4, epochs = epochs, lr = 0.2, reg = 0.001,
+        negativesPerUser = 4, oversample = 6, collectMetrics = collectMetrics)))
+    def exact(m: BprMf.Model) = (
+      m.userState.as[(String, Seq[Double])].collect().toMap,
+      m.itemState.as[(String, Seq[Double])].collect().toMap, m.history)
+    for (collectMetrics <- Seq(false, true)) withClue(s"collectMetrics=$collectMetrics: ") {
+      val (one, oneShape) = fit(1, collectMetrics)
+      val (three, threeShape) = fit(3, collectMetrics)
+      assert(threeShape.jobs === oneShape.jobs + 2,
+        s"3 epochs ran ${threeShape.jobs} jobs, 1 epoch ${oneShape.jobs}")
+      val (again, _) = fit(3, collectMetrics)
+      assert(exact(again) == exact(three))
+      assert(three.history.size === (if (collectMetrics) 3 else 0))
+      Seq(one, three, again).foreach(_.release())
+    }
   }
 
   test("training AUC improves and loss falls on the separable fixture") {

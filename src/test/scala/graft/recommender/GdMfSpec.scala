@@ -225,7 +225,7 @@ class GdMfSpec extends SparkSpec {
       GdMf.initDense(_, longId = false, k = 3, seed = 42L, normal = true)
     for (alternating <- Seq(false, true)) withClue(s"alternating=$alternating: ") {
       val fit = new FusedEpoch.States(FusedEpoch.blocks(facts, 3),
-        FusedEpoch.Rule(3, 0.01, 0.01, 3.0, 20, 12, alternating), init, init)
+        FusedEpoch.Rule(3, 0.01, 0.01, 3.0, 20, 12, alternating), FusedEpoch.gdPass, init, init)
       def length = fit.lineage.linesIterator.size
       fit.epoch()
       val afterOne = length
