@@ -24,27 +24,23 @@ import org.apache.spark.sql.functions._
   *    model; fingerprints first seen by a refresh have no freq row and
   *    are treated as rare (count 0 at build — the [UNK] analog).
   *    Once refresh drift accumulates, rebuild by `drop` + `build`.
-  *  - `<name>_meta` — ONE row (k, w, n_bench, buckets): the gram/
-  *    window geometry AND the bucket layout frozen at build — probes
-  *    derive the corpus fingerprints with the SAME (k, w) and refresh
-  *    appends under the SAME bucket count, so a parameter mismatch is
-  *    impossible (a refresh writing a different bucket count would
-  *    throw at append time, or worse silently diverge layouts if the
-  *    defaults ever changed).
+  *  - `<name>_meta` — ONE row (k, w, n_bench): the gram/window
+  *    geometry frozen at build — probes and refreshes derive
+  *    fingerprints with the SAME (k, w). Refresh appends under the
+  *    fps table's own bucket spec ([[graft.io.Artifact.append]]).
   */
 object WinnowIndex {
 
-  private def fpsTable(name: String): String = name + "_fps"
-  private def freqTable(name: String): String = name + "_freq"
-  private def metaTable(name: String): String = name + "_meta"
+  private def artifact(name: String) =
+    graft.io.Artifact(name, Seq("fps", "freq", "meta"))
 
   /** Fingerprint `bench` once and materialize all three tables. */
   def build(bench: DataFrame, benchIdCol: String, benchTextCol: String,
       name: String, k: Int = graft.text.TextAnalysis.WinnowDefaultK,
-      w: Int = graft.text.TextAnalysis.WinnowDefaultW,
-      buckets: Int = 16): Unit = {
+      w: Int = graft.text.TextAnalysis.WinnowDefaultW): Unit = {
     val spark = bench.sparkSession
     import spark.implicits._
+    val a = artifact(name)
     val fps = graft.text.TextAnalysis
       .winnowFingerprints(bench, benchIdCol, benchTextCol, k, w)
       .select(col("fp"), col("doc_id").as("bench_id"), col("pos"))
@@ -55,46 +51,27 @@ object WinnowIndex {
     // sub-k-length benchmark doc can't skew probe-vs-one-shot parity
     val nBench = fps.select(col("bench_id")).distinct().count()
     try {
-      // bucket-aligned: one file per bucket, not one per (task, bucket)
-      graft.io.Bucketing.writeBucketedAligned(
-        fps, fpsTable(name), "fp", buckets, "overwrite")
-      fps.groupBy(col("fp"))
+      a.bucketed("fps", "fp", fps)
+      a.write("freq", fps.groupBy(col("fp"))
         .agg(count(lit(1)).as("n_rows"),
-          countDistinct(col("bench_id")).as("n_docs"))
-        .write.format("parquet")
-        .mode("overwrite").saveAsTable(freqTable(name))
-      Seq((k, w, nBench, buckets)).toDF("k", "w", "n_bench", "buckets")
-        .coalesce(1).write.format("parquet")
-        .mode("overwrite").saveAsTable(metaTable(name))
+          countDistinct(col("bench_id")).as("n_docs")))
+      a.model("meta", Seq((k, w, nBench)).toDF("k", "w", "n_bench"))
     } finally fps.unpersist()
   }
 
   /** Append-only refresh: fingerprint the new benchmark items under
-    * the FROZEN (k, w) and append under the FROZEN bucket count —
-    * O(batch); freq/meta untouched. Caller contract: batch bench ids
-    * are new (the Bm25Index refresh contract).
+    * the FROZEN (k, w) and append — O(batch); freq/meta untouched.
+    * Caller contract: batch bench ids are new (the Bm25Index refresh
+    * contract).
     */
   def refresh(newBench: DataFrame, benchIdCol: String,
       benchTextCol: String, name: String): Unit = {
-    val spark = newBench.sparkSession
-    val meta = spark.table(metaTable(name))
-    val m = meta.head()
-    // resolve by FIELD NAME with a default: an index built before the
-    // buckets column was frozen into _meta has a 3-column meta row —
-    // those artifacts were all written under the then-hardcoded 16
-    // buckets, so 16 is exact for them, and a positional read here
-    // would throw on every standing pre-change index (silent format
-    // break)
-    val buckets =
-      if (meta.schema.fieldNames.contains("buckets"))
-        m.getInt(meta.schema.fieldIndex("buckets"))
-      else 16
-    graft.io.Bucketing.writeBucketedAligned(
-      graft.text.TextAnalysis
-        .winnowFingerprints(newBench, benchIdCol, benchTextCol,
-          m.getInt(0), m.getInt(1))
-        .select(col("fp"), col("doc_id").as("bench_id"), col("pos")),
-      fpsTable(name), "fp", buckets, "append")
+    val a = artifact(name)
+    val m = a.read(newBench.sparkSession, "meta").head()
+    a.append("fps", graft.text.TextAnalysis
+      .winnowFingerprints(newBench, benchIdCol, benchTextCol,
+        m.getInt(0), m.getInt(1))
+      .select(col("fp"), col("doc_id").as("bench_id"), col("pos")))
   }
 
   /** Refresh-drift report: ONE row
@@ -109,8 +86,8 @@ object WinnowIndex {
     * fps/freq join — index-sized, never corpus-sized.
     */
   def driftReport(spark: SparkSession, name: String): DataFrame =
-    spark.table(fpsTable(name)).select("fp").distinct()
-      .join(spark.table(freqTable(name)).select(col("fp"), lit(1).as("__f")),
+    artifact(name).read(spark, "fps").select("fp").distinct()
+      .join(artifact(name).read(spark, "freq").select(col("fp"), lit(1).as("__f")),
         Seq("fp"), "left")
       .agg(count(lit(1)).as("n_fps_total"),
         count(when(col("__f").isNull, 1)).as("n_fps_without_freq"))
@@ -132,7 +109,7 @@ object WinnowIndex {
   private def rareIdx(spark: SparkSession, name: String, nBench: Long,
       maxBenchFpFreq: Long,
       maxBenchFpDocFrac: Option[Double]): DataFrame = {
-    val freq = spark.table(freqTable(name))
+    val freq = artifact(name).read(spark, "freq")
     val rareVerdict = maxBenchFpDocFrac match {
       case Some(f) =>
         require(f > 0.0 && f <= 1.0,
@@ -146,7 +123,7 @@ object WinnowIndex {
     // LEFT join, not semi: a fingerprint first seen by a refresh has
     // no freq row — build-time count 0, i.e. RARE (the [UNK] analog);
     // a semi join would silently drop every refreshed benchmark item
-    spark.table(fpsTable(name))
+    artifact(name).read(spark, "fps")
       .join(rareVerdict, Seq("fp"), "left")
       .filter(coalesce(col("__rare"), lit(true)))
       .select(col("fp"), col("bench_id"), col("pos").as("__bpos"))
@@ -156,7 +133,7 @@ object WinnowIndex {
       idCol: String, textCol: String, minSharedFps: Int = 2,
       maxBenchFpFreq: Long = 64L,
       maxBenchFpDocFrac: Option[Double] = None): DataFrame = {
-    val m = spark.table(metaTable(name)).head()
+    val m = artifact(name).read(spark, "meta").head()
     val (k, w, nBench) = (m.getInt(0), m.getInt(1), m.getLong(2))
     val idx = rareIdx(spark, name, nBench, maxBenchFpFreq,
       maxBenchFpDocFrac)
@@ -187,7 +164,7 @@ object WinnowIndex {
       corpus: DataFrame, idCol: String, textCol: String,
       minSharedFps: Int = 2, maxBenchFpFreq: Long = 64L,
       maxBenchFpDocFrac: Option[Double] = None): DataFrame = {
-    val m = spark.table(metaTable(name)).head()
+    val m = artifact(name).read(spark, "meta").head()
     val (k, w, nBench) = (m.getInt(0), m.getInt(1), m.getLong(2))
     val d = graft.text.TextAnalysis
       .winnowFingerprintsRaw(corpus, idCol, textCol, k, w)
@@ -211,7 +188,7 @@ object WinnowIndex {
   def contamination(spark: SparkSession, name: String, corpus: DataFrame,
       idCol: String, textCol: String, maxBenchFpFreq: Long = 64L,
       maxBenchFpDocFrac: Option[Double] = None): DataFrame = {
-    val m = spark.table(metaTable(name)).head()
+    val m = artifact(name).read(spark, "meta").head()
     val (k, w, nBench) = (m.getInt(0), m.getInt(1), m.getLong(2))
     val bset = rareIdx(spark, name, nBench, maxBenchFpFreq,
         maxBenchFpDocFrac)
@@ -260,7 +237,7 @@ object WinnowIndex {
     // doc_id exchange, and the cut rides the assembly's own text
     // column — the pre-r18 shape ran the normalized + raw kernels
     // separately and shuffled a batch-text-sized text_clean frame.
-    val m = spark.table(metaTable(name)).head()
+    val m = artifact(name).read(spark, "meta").head()
     val (k, w, nBench) = (m.getInt(0), m.getInt(1), m.getLong(2))
     val matched = Dedup.winnowRawRows(corpus, idCol, textCol, k, w)
       .join(rareIdx(spark, name, nBench, maxBenchFpFreq,
@@ -273,8 +250,5 @@ object WinnowIndex {
   }
 
   /** Drop all three tables (test/maintenance convenience). */
-  def drop(spark: SparkSession, name: String): Unit =
-    Seq(fpsTable _, freqTable _, metaTable _).foreach { t =>
-      spark.sql(s"DROP TABLE IF EXISTS ${t(name)}")
-    }
+  def drop(spark: SparkSession, name: String): Unit = artifact(name).drop(spark)
 }

@@ -10,17 +10,6 @@ import org.apache.spark.sql.DataFrame
   */
 object Bucketing {
 
-  /** Write `df` as a bucketed, bucket-sorted table registered in the
-    * session catalog (parquet under the warehouse dir).
-    */
-  def writeBucketed(df: DataFrame, table: String, key: String, buckets: Int): Unit =
-    df.write
-      .bucketBy(buckets, key)
-      .sortBy(key)
-      .format("parquet")
-      .mode("overwrite")
-      .saveAsTable(table)
-
   /** Bucket-ALIGNED write: the task↔bucket 1:1 discipline of
     * [[compactBucketed]] as a reusable sink for every bucketed-table
     * build and per-batch append in the engine.
@@ -77,7 +66,7 @@ object Bucketing {
     * index-side exchange. This rewrites THROUGH the table's own bucket
     * spec, read back from its catalog entry, into a fresh table and
     * swaps it in under the original name
-    * ([[graft.streaming.StandingTable.swap]]: aside first, so run
+    * ([[Artifact.swap]]: aside first, so run
     * between streaming runs, never under a live query). Returns
     * (rows, files before, files after).
     */
@@ -112,7 +101,7 @@ object Bucketing {
     val rows = spark.table(table)
     val nRows = rows.count()
     writeBucketedAligned(rows, tmp, key, buckets, "overwrite")
-    graft.streaming.StandingTable.swap(spark, Seq(tmp -> table))
+    Artifact.swap(spark, Seq(tmp -> table))
     (nRows, before, parquetFiles(table))
   }
 

@@ -42,7 +42,7 @@ object Ann {
     if (n <= 0) 1.0
     else math.min(1.0, (TrainRowsPerCentroid.toLong * nlist).toDouble / n)
 
-  private def asDouble(v: Column): Column = transform(v, x => x.cast("double"))
+  private[similarity] def asDouble(v: Column): Column = transform(v, x => x.cast("double"))
 
   /** Replace column `v` with its L2-normalized form (zero vectors pass
     * through). The norm is staged as its own projection so the

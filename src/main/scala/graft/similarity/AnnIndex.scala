@@ -230,7 +230,7 @@ object AnnIndex {
   // records the family and derived parameters, so probe/refresh need no
   // re-planning (and no corpus scan) either.
 
-  private def metaTable(name: String): String = name + "_meta"
+  private def meta(name: String) = graft.io.Artifact(name, Seq("meta"))
 
   private def familyTag(f: Family): String = f match {
     case Ivf => "ivf"
@@ -282,26 +282,25 @@ object AnnIndex {
       case _ => // unreachable by construction
     }
     import spark.implicits._
-    Seq((familyTag(plan.family), plan.nlist, plan.nprobe,
-        plan.m, plan.ks, plan.overfetch))
-      .toDF("family", "nlist", "nprobe", "m", "ks", "overfetch")
-      .coalesce(1).write.format("parquet")
-      .mode("overwrite").saveAsTable(metaTable(name))
+    meta(name).model("meta", Seq((familyTag(plan.family), plan.nlist,
+        plan.nprobe, plan.m, plan.ks, plan.overfetch))
+      .toDF("family", "nlist", "nprobe", "m", "ks", "overfetch"))
     plan
   }
 
   /** Reload the resolved plan a [[build]] recorded under `name`. */
   def planOf(spark: SparkSession, name: String): Plan = {
-    val r = spark.table(metaTable(name)).head()
+    val table = meta(name).table("meta")
+    val r = spark.table(table).head()
     val f = r.getString(0) match {
       case "ivf" => Ivf
       case "pq" => Pq
       case other => throw new IllegalStateException(
-        s"AnnIndex: unknown family '$other' in ${metaTable(name)}")
+        s"AnnIndex: unknown family '$other' in $table")
     }
     Plan(f, nlist = r.getInt(1), nprobe = r.getInt(2),
       m = r.getInt(3), ks = r.getInt(4), overfetch = r.getInt(5),
-      reason = s"loaded from ${metaTable(name)}")
+      reason = s"loaded from $table")
   }
 
   /** Probe a [[build]]-persisted index by name: dispatches on the
@@ -340,6 +339,6 @@ object AnnIndex {
   def dropIndex(spark: SparkSession, name: String): Unit = {
     IvfIndex.drop(spark, name)
     PqIndex.drop(spark, name)
-    spark.sql(s"DROP TABLE IF EXISTS ${metaTable(name)}")
+    meta(name).drop(spark)
   }
 }

@@ -27,22 +27,14 @@ import graft.functions.VectorExpressions
   * transform that built the lists (on L2-normalized vectors,
   * argmin |v−c|² = argmax (v·c − |c|²/2)), so built and refreshed
   * rows are indistinguishable.
+  *
+  * Both tables are one [[graft.io.Artifact]]: it owns their writes,
+  * the refresh append, the staged rebuild and the drop.
   */
 object IvfIndex {
 
-  private def centroidsTable(name: String): String = name + "_centroids"
-  private def listsTable(name: String): String = name + "_lists"
-
-  private def asDouble(v: org.apache.spark.sql.Column) =
-    transform(v, x => x.cast("double"))
-
-  private def normalized(df: DataFrame): DataFrame =
-    df.withColumn("__nrm",
-      sqrt(VectorExpressions.dot(col("v"), col("v"))))
-      .withColumn("v",
-        when(col("__nrm") > 0, transform(col("v"), x => x / col("__nrm")))
-          .otherwise(col("v")))
-      .drop("__nrm")
+  private def artifact(name: String) =
+    graft.io.Artifact(name, Seq("centroids", "lists"))
 
   /** Train the quantizer on `corpus` and materialize both tables.
     * One KMeans fit (bounded by `trainSampleFraction`, AUTO by default
@@ -52,12 +44,13 @@ object IvfIndex {
     */
   def build(corpus: DataFrame, idCol: String, vecCol: String, name: String,
       nlist: Int = 16, seed: Long = 42L,
-      trainSampleFraction: Double = -1.0, listBuckets: Int = 16): Unit = {
+      trainSampleFraction: Double = -1.0): Unit = {
     import org.apache.spark.ml.clustering.KMeans
     import org.apache.spark.ml.functions.array_to_vector
     val spark = corpus.sparkSession
-    val c = normalized(corpus.select(col(idCol).as("neighbor_id"),
-      asDouble(col(vecCol)).as("v")))
+    val a = artifact(name)
+    val c = Ann.normalized(corpus.select(col(idCol).as("neighbor_id"),
+      Ann.asDouble(col(vecCol)).as("v")))
       .withColumn("fv", array_to_vector(col("v")))
       .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
     try {
@@ -70,15 +63,11 @@ object IvfIndex {
       val km = new KMeans().setK(nlist).setSeed(seed).setFeaturesCol("fv")
         .setPredictionCol("list_id").fit(trainSet)
       import spark.implicits._
-      km.clusterCenters.zipWithIndex
+      a.model("centroids", km.clusterCenters.zipWithIndex
         .map { case (ctr, i) => (i, ctr.toArray) }.toSeq
-        .toDF("list_id", "centroid")
-        .coalesce(1).write.format("parquet")
-        .mode("overwrite").saveAsTable(centroidsTable(name))
-      // bucket-aligned: one file per bucket, not one per (task, bucket)
-      graft.io.Bucketing.writeBucketedAligned(
-        km.transform(c).select(col("neighbor_id"), col("v"), col("list_id")),
-        listsTable(name), "list_id", listBuckets, "overwrite")
+        .toDF("list_id", "centroid"))
+      a.bucketed("lists", "list_id",
+        km.transform(c).select(col("neighbor_id"), col("v"), col("list_id")))
     } finally c.unpersist()
   }
 
@@ -90,11 +79,11 @@ object IvfIndex {
     * rewritten), the same posture as the dedup indexes' folds.
     */
   def refresh(newVecs: DataFrame, idCol: String, vecCol: String,
-      name: String, listBuckets: Int = 16): Unit = {
-    val spark = newVecs.sparkSession
-    val cent = spark.table(centroidsTable(name))
-    val c = normalized(newVecs.select(col(idCol).as("neighbor_id"),
-      asDouble(col(vecCol)).as("v")))
+      name: String): Unit = {
+    val a = artifact(name)
+    val cent = a.read(newVecs.sparkSession, "centroids")
+    val c = Ann.normalized(newVecs.select(col(idCol).as("neighbor_id"),
+      Ann.asDouble(col(vecCol)).as("v")))
     // euclidean argmin vs the frozen centroids — |c|² − 2 v·c (the v·v
     // term is constant per row); min-struct aggregation instead of a
     // row_number window so the shuffle is map-side combinable
@@ -106,8 +95,7 @@ object IvfIndex {
       .agg(min(struct(col("__dist"), col("list_id"), col("v"))).as("b"))
       .select(col("neighbor_id"), col("b.v").as("v"),
         col("b.list_id").as("list_id"))
-    graft.io.Bucketing.writeBucketedAligned(
-      assigned, listsTable(name), "list_id", listBuckets, "append")
+    a.append("lists", assigned)
   }
 
   // ----- frozen-quantizer (hash-gateable) lifecycle -----------------
@@ -122,7 +110,7 @@ object IvfIndex {
 
   private def fixedCentroidsOf(spark: SparkSession,
       name: String): Seq[Seq[Double]] =
-    spark.table(centroidsTable(name)).orderBy("list_id").collect()
+    artifact(name).read(spark, "centroids").orderBy("list_id").collect()
       .map(_.getSeq[Double](1).toSeq).toSeq
 
   /** Materialize both tables under the FROZEN `centroids` (unit-space
@@ -131,17 +119,14 @@ object IvfIndex {
     * unit vector the integer probe ranks with.
     */
   def buildFixed(corpus: DataFrame, idCol: String, vecCol: String,
-      name: String, centroids: Seq[Seq[Double]],
-      listBuckets: Int = 16): Unit = {
+      name: String, centroids: Seq[Seq[Double]]): Unit = {
     val spark = corpus.sparkSession
     import spark.implicits._
-    centroids.zipWithIndex.map { case (c, i) => (i.toLong, c) }
-      .toDF("list_id", "centroid")
-      .coalesce(1).write.format("parquet")
-      .mode("overwrite").saveAsTable(centroidsTable(name))
-    graft.io.Bucketing.writeBucketedAligned(
-      Ann.fixedAssigned(corpus, idCol, vecCol, centroids),
-      listsTable(name), "list_id", listBuckets, "overwrite")
+    val a = artifact(name)
+    a.model("centroids", centroids.zipWithIndex
+      .map { case (c, i) => (i.toLong, c) }.toDF("list_id", "centroid"))
+    a.bucketed("lists", "list_id",
+      Ann.fixedAssigned(corpus, idCol, vecCol, centroids))
   }
 
   /** Append-only refresh under the STORED frozen centroids (parquet
@@ -149,11 +134,9 @@ object IvfIndex {
     * build time). O(batch), nothing existing re-read.
     */
   def refreshFixed(newVecs: DataFrame, idCol: String, vecCol: String,
-      name: String, listBuckets: Int = 16): Unit =
-    graft.io.Bucketing.writeBucketedAligned(
-      Ann.fixedAssigned(newVecs, idCol, vecCol,
-        fixedCentroidsOf(newVecs.sparkSession, name)),
-      listsTable(name), "list_id", listBuckets, "append")
+      name: String): Unit =
+    artifact(name).append("lists", Ann.fixedAssigned(newVecs, idCol, vecCol,
+      fixedCentroidsOf(newVecs.sparkSession, name)))
 
   /** Probe the frozen-quantizer index: same pure function as
     * [[Ann.ivfTopKFixed]] over the persisted lists. Lazy.
@@ -161,7 +144,7 @@ object IvfIndex {
   def probeFixed(spark: SparkSession, name: String,
       queries: DataFrame, qIdCol: String, qVecCol: String,
       k: Int, nprobe: Int = 4): DataFrame =
-    Ann.probeFixedLists(spark.table(listsTable(name)),
+    Ann.probeFixedLists(artifact(name).read(spark, "lists"),
       queries, qIdCol, qVecCol, fixedCentroidsOf(spark, name), k, nprobe)
 
   /** Probe the persisted index: identical semantics and plan tail to
@@ -173,10 +156,10 @@ object IvfIndex {
       queries: DataFrame, qIdCol: String, qVecCol: String,
       k: Int, nprobe: Int = 4, excludeSelf: Boolean = true,
       broadcastProbes: Boolean = true): DataFrame = {
-    val centroids = spark.table(centroidsTable(name))
-    val lists = spark.table(listsTable(name))
-    val q = normalized(queries.select(col(qIdCol).as("query_id"),
-      asDouble(col(qVecCol)).as("v")))
+    val centroids = artifact(name).read(spark, "centroids")
+    val lists = artifact(name).read(spark, "lists")
+    val q = Ann.normalized(queries.select(col(qIdCol).as("query_id"),
+      Ann.asDouble(col(qVecCol)).as("v")))
       .withColumnRenamed("v", "qv")
     val wProbe = Window.partitionBy(col("query_id"))
       .orderBy(col("c_dist").asc, col("list_id"))
@@ -198,31 +181,20 @@ object IvfIndex {
         round(col("cos_sim"), 4).as("cos_sim"))
   }
 
-  /** Offline REBUILD: retrain the quantizer on the current corpus into
-    * fresh tables, then swap them in under `name`
-    * ([[graft.streaming.StandingTable.swap]]: aside first, so a failed
-    * swap leaves the previous index recoverable; no multi-table atomic
-    * swap, so schedule rebuilds in maintenance windows). This is the
-    * periodic counterpart to [[refresh]]: refresh keeps ingest
-    * O(batch) under frozen centroids, rebuild re-levels the lists once
-    * drift accumulates.
+  /** Offline REBUILD: retrain the quantizer on the current corpus,
+    * staged in full before the swap ([[graft.io.Artifact.rebuild]]:
+    * aside first, so a failed swap leaves the previous index
+    * recoverable; no multi-table atomic swap, so schedule rebuilds in
+    * maintenance windows). This is the periodic counterpart to
+    * [[refresh]]: refresh keeps ingest O(batch) under frozen
+    * centroids, rebuild re-levels the lists once drift accumulates.
     */
   def rebuild(corpus: DataFrame, idCol: String, vecCol: String, name: String,
       nlist: Int = 16, seed: Long = 42L,
-      trainSampleFraction: Double = -1.0, listBuckets: Int = 16): Unit = {
-    val spark = corpus.sparkSession
-    val tmp = name + "__rebuild"
-    drop(spark, tmp)
-    build(corpus, idCol, vecCol, tmp, nlist, seed, trainSampleFraction,
-      listBuckets)
-    graft.streaming.StandingTable.swap(spark, Seq(
-      centroidsTable(tmp) -> centroidsTable(name),
-      listsTable(tmp) -> listsTable(name)))
-  }
+      trainSampleFraction: Double = -1.0): Unit =
+    artifact(name).rebuild(corpus.sparkSession)(
+      build(corpus, idCol, vecCol, _, nlist, seed, trainSampleFraction))
 
   /** Drop both tables (test/maintenance convenience). */
-  def drop(spark: SparkSession, name: String): Unit = {
-    spark.sql(s"DROP TABLE IF EXISTS ${centroidsTable(name)}")
-    spark.sql(s"DROP TABLE IF EXISTS ${listsTable(name)}")
-  }
+  def drop(spark: SparkSession, name: String): Unit = artifact(name).drop(spark)
 }

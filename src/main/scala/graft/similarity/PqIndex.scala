@@ -1,11 +1,11 @@
 package graft.similarity
 
-import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
 import graft.dedup.Dedup.cosine
-import graft.functions.{PqExpressions, VectorExpressions}
+import graft.functions.PqExpressions
 
 /** The PERSISTENT form of [[Ann.pqTopK]] — completing the artifact
   * story for both ANN scale paths ([[IvfIndex]] covers IVF): the
@@ -25,21 +25,14 @@ import graft.functions.{PqExpressions, VectorExpressions}
   * Refresh does NOT retrain (FAISS add-after-train): new vectors are
   * encoded against the stored codebooks — one broadcast-literal
   * codegen pass, O(batch), nothing existing re-read or rewritten.
+  *
+  * Both tables are one [[graft.io.Artifact]]: it owns their writes,
+  * the refresh append, the staged rebuild and the drop.
   */
 object PqIndex {
 
-  private def codebooksTable(name: String): String = name + "_codebooks"
-  private def codesTable(name: String): String = name + "_codes"
-
-  private def asDouble(v: Column): Column = transform(v, x => x.cast("double"))
-
-  private def normalized(df: DataFrame): DataFrame =
-    df.withColumn("__nrm",
-      sqrt(VectorExpressions.dot(col("v"), col("v"))))
-      .withColumn("v",
-        when(col("__nrm") > 0, transform(col("v"), x => x / col("__nrm")))
-          .otherwise(col("v")))
-      .drop("__nrm")
+  private def artifact(name: String) =
+    graft.io.Artifact(name, Seq("codebooks", "codes"))
 
   /** Train the codebooks on `corpus` (same concurrent-fit machinery as
     * [[Ann.pqTopK]], shared via `trainPqCodebooks`) and materialize
@@ -47,11 +40,12 @@ object PqIndex {
     */
   def build(corpus: DataFrame, idCol: String, vecCol: String, name: String,
       m: Int = 8, ks: Int = 16, seed: Long = 42L,
-      trainSampleFraction: Double = -1.0, fitTimeoutSec: Long = 3600L,
-      codeBuckets: Int = 16): Unit = {
+      trainSampleFraction: Double = -1.0,
+      fitTimeoutSec: Long = 3600L): Unit = {
     val spark = corpus.sparkSession
-    val c = normalized(corpus.select(col(idCol).as("neighbor_id"),
-      asDouble(col(vecCol)).as("v")))
+    val a = artifact(name)
+    val c = Ann.normalized(corpus.select(col(idCol).as("neighbor_id"),
+      Ann.asDouble(col(vecCol)).as("v")))
       .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
     try {
       val dim = c.select(size(col("v"))).head().getInt(0)
@@ -66,17 +60,13 @@ object PqIndex {
       val flat = Ann.trainPqCodebooks(trainSet, m, ks, dsub, seed,
         fitTimeoutSec, onFailure = () => ())
       import spark.implicits._
-      (for (j <- 0 until m; ci <- 0 until ks) yield
+      a.model("codebooks", (for (j <- 0 until m; ci <- 0 until ks) yield
         (j, ci, flat.slice((j * ks + ci) * dsub, (j * ks + ci + 1) * dsub).toSeq))
-        .toDF("subspace", "code", "centroid")
-        .coalesce(1).write.format("parquet")
-        .mode("overwrite").saveAsTable(codebooksTable(name))
+        .toDF("subspace", "code", "centroid"))
       val cent = typedLit(flat.toSeq)
-      // bucket-aligned: one file per bucket, not one per (task, bucket)
-      graft.io.Bucketing.writeBucketedAligned(
+      a.bucketed("codes", "neighbor_id",
         c.withColumn("codes", PqExpressions.encode(col("v"), cent, m, ks))
-          .select("neighbor_id", "v", "codes"),
-        codesTable(name), "neighbor_id", codeBuckets, "overwrite")
+          .select("neighbor_id", "v", "codes"))
     } finally c.unpersist()
   }
 
@@ -85,7 +75,7 @@ object PqIndex {
     */
   private def loadCodebooks(spark: SparkSession,
       name: String): (Array[Double], Int, Int, Int) = {
-    val rows = spark.table(codebooksTable(name))
+    val rows = artifact(name).read(spark, "codebooks")
       .select("subspace", "code", "centroid").collect()
     val m = rows.map(_.getInt(0)).max + 1
     val ks = rows.map(_.getInt(1)).max + 1
@@ -105,16 +95,14 @@ object PqIndex {
     * codegen encode pass over the batch — O(batch), index never read.
     */
   def refresh(newVecs: DataFrame, idCol: String, vecCol: String,
-      name: String, codeBuckets: Int = 16): Unit = {
-    val spark = newVecs.sparkSession
-    val (flat, m, ks, _) = loadCodebooks(spark, name)
+      name: String): Unit = {
+    val (flat, m, ks, _) = loadCodebooks(newVecs.sparkSession, name)
     val cent = typedLit(flat.toSeq)
-    graft.io.Bucketing.writeBucketedAligned(
-      normalized(newVecs.select(col(idCol).as("neighbor_id"),
-        asDouble(col(vecCol)).as("v")))
+    artifact(name).append("codes",
+      Ann.normalized(newVecs.select(col(idCol).as("neighbor_id"),
+        Ann.asDouble(col(vecCol)).as("v")))
         .withColumn("codes", PqExpressions.encode(col("v"), cent, m, ks))
-        .select("neighbor_id", "v", "codes"),
-      codesTable(name), "neighbor_id", codeBuckets, "append")
+        .select("neighbor_id", "v", "codes"))
   }
 
   /** Probe the persisted index: ADC shortlist over the stored codes,
@@ -126,9 +114,9 @@ object PqIndex {
       k: Int, overfetch: Int = 4): DataFrame = {
     val (flat, m, ks, _) = loadCodebooks(spark, name)
     val cent = typedLit(flat.toSeq)
-    val codes = spark.table(codesTable(name))
-    val q = normalized(queries.select(col(qIdCol).as("query_id"),
-      asDouble(col(qVecCol)).as("v"))).withColumnRenamed("v", "qv")
+    val codes = artifact(name).read(spark, "codes")
+    val q = Ann.normalized(queries.select(col(qIdCol).as("query_id"),
+      Ann.asDouble(col(qVecCol)).as("v"))).withColumnRenamed("v", "qv")
       .withColumn("qtable", PqExpressions.adcTable(col("qv"), cent, m, ks))
     val wAdc = Window.partitionBy(col("query_id"))
       .orderBy(col("adc").desc, col("neighbor_id"))
@@ -157,7 +145,7 @@ object PqIndex {
 
   private def fixedCodebooksOf(spark: SparkSession,
       name: String): Seq[Seq[Seq[Double]]] = {
-    val rows = spark.table(codebooksTable(name))
+    val rows = artifact(name).read(spark, "codebooks")
       .select("subspace", "code", "centroid").collect()
       .map(r => ((r.getInt(0), r.getInt(1)), r.getSeq[Double](2).toSeq))
       .toMap
@@ -173,34 +161,27 @@ object PqIndex {
     * probe has no re-rank pass needing full vectors.
     */
   def buildFixed(corpus: DataFrame, idCol: String, vecCol: String,
-      name: String, codebooks: Seq[Seq[Seq[Double]]],
-      codeBuckets: Int = 16): Unit = {
+      name: String, codebooks: Seq[Seq[Seq[Double]]]): Unit = {
     val spark = corpus.sparkSession
     import spark.implicits._
-    (for (j <- codebooks.indices; ci <- codebooks(j).indices)
-      yield (j, ci, codebooks(j)(ci)))
-      .toDF("subspace", "code", "centroid")
-      .coalesce(1).write.format("parquet")
-      .mode("overwrite").saveAsTable(codebooksTable(name))
-    graft.io.Bucketing.writeBucketedAligned(
-      Ann.unitized(corpus, idCol, vecCol)
-        .select(col("id").as("neighbor_id"),
-          Ann.pqCodesFixed(codebooks).as("codes")),
-      codesTable(name), "neighbor_id", codeBuckets, "overwrite")
+    val a = artifact(name)
+    a.model("codebooks", (for (j <- codebooks.indices; ci <- codebooks(j).indices)
+      yield (j, ci, codebooks(j)(ci))).toDF("subspace", "code", "centroid"))
+    a.bucketed("codes", "neighbor_id", fixedCodes(corpus, idCol, vecCol, codebooks))
   }
+
+  private def fixedCodes(vecs: DataFrame, idCol: String, vecCol: String,
+      codebooks: Seq[Seq[Seq[Double]]]): DataFrame =
+    Ann.unitized(vecs, idCol, vecCol)
+      .select(col("id").as("neighbor_id"), Ann.pqCodesFixed(codebooks).as("codes"))
 
   /** Append-only refresh: encode `newVecs` under the STORED frozen
     * codebooks (exact parquet round-trip) and append. O(batch).
     */
   def refreshFixed(newVecs: DataFrame, idCol: String, vecCol: String,
-      name: String, codeBuckets: Int = 16): Unit = {
-    val codebooks = fixedCodebooksOf(newVecs.sparkSession, name)
-    graft.io.Bucketing.writeBucketedAligned(
-      Ann.unitized(newVecs, idCol, vecCol)
-        .select(col("id").as("neighbor_id"),
-          Ann.pqCodesFixed(codebooks).as("codes")),
-      codesTable(name), "neighbor_id", codeBuckets, "append")
-  }
+      name: String): Unit =
+    artifact(name).append("codes", fixedCodes(newVecs, idCol, vecCol,
+      fixedCodebooksOf(newVecs.sparkSession, name)))
 
   /** Probe the frozen-codebook index: same pure function as
     * [[Ann.pqTopKFixed]] over the persisted codes. Lazy.
@@ -212,30 +193,19 @@ object PqIndex {
     val q = Ann.unitized(queries, qIdCol, qVecCol)
       .select(col("id").as("query_id"),
         Ann.pqQTableFixed(codebooks).as("qtable"))
-    Ann.pqProbeCodes(spark.table(codesTable(name)), q, k,
+    Ann.pqProbeCodes(artifact(name).read(spark, "codes"), q, k,
       codebooks.size, codebooks.head.size)
   }
 
-  /** Offline REBUILD: retrain codebooks + re-encode into fresh tables,
-    * swap in under `name` — see [[IvfIndex.rebuild]] for the contract.
+  /** Offline REBUILD: retrain codebooks + re-encode, staged in full
+    * before the swap — see [[IvfIndex.rebuild]] for the contract.
     */
   def rebuild(corpus: DataFrame, idCol: String, vecCol: String, name: String,
       m: Int = 8, ks: Int = 16, seed: Long = 42L,
-      trainSampleFraction: Double = -1.0, fitTimeoutSec: Long = 3600L,
-      codeBuckets: Int = 16): Unit = {
-    val spark = corpus.sparkSession
-    val tmp = name + "__rebuild"
-    drop(spark, tmp)
-    build(corpus, idCol, vecCol, tmp, m, ks, seed, trainSampleFraction,
-      fitTimeoutSec, codeBuckets)
-    graft.streaming.StandingTable.swap(spark, Seq(
-      codebooksTable(tmp) -> codebooksTable(name),
-      codesTable(tmp) -> codesTable(name)))
-  }
+      trainSampleFraction: Double = -1.0, fitTimeoutSec: Long = 3600L): Unit =
+    artifact(name).rebuild(corpus.sparkSession)(build(corpus, idCol, vecCol,
+      _, m, ks, seed, trainSampleFraction, fitTimeoutSec))
 
   /** Drop both tables (test/maintenance convenience). */
-  def drop(spark: SparkSession, name: String): Unit = {
-    spark.sql(s"DROP TABLE IF EXISTS ${codebooksTable(name)}")
-    spark.sql(s"DROP TABLE IF EXISTS ${codesTable(name)}")
-  }
+  def drop(spark: SparkSession, name: String): Unit = artifact(name).drop(spark)
 }

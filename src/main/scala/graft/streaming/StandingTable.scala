@@ -39,21 +39,15 @@ final case class StandingTable(name: String) {
     spark.table(name).filter(col("batch_id") < batchId)
 
   /** Append `rows` tagged `batch_id = batchId` through `rows`' own
-    * session, bucket-aligned when the table is bucketed: one file per
-    * bucket per trigger instead of one per (task, bucket) — see
-    * [[graft.io.Bucketing.writeBucketedAligned]]. The first append
-    * creates an unbucketed table.
+    * session, under the table's own bucket spec
+    * ([[graft.io.Artifact.append]]). The first append creates an
+    * unbucketed table.
     */
   def append(rows: DataFrame, batchId: Long): Unit = {
-    val spark = rows.sparkSession
     val tagged = rows.withColumn("batch_id", lit(batchId))
-    if (!spark.catalog.tableExists(name))
+    if (!rows.sparkSession.catalog.tableExists(name))
       tagged.write.format("parquet").saveAsTable(name)
-    else {
-      val e = CatalogBridge.entry(spark, name)
-      StandingTable.write(tagged.select(e.columns.map(col): _*), name,
-        e.bucket, "append")
-    }
+    else graft.io.Artifact.append(tagged, name)
   }
 
   /** Land `rows` as the `batch_id = batchId` partition, replacing any
@@ -108,10 +102,15 @@ object StandingTable {
     * batch_id >= 0 from batch 0 (missed duplicates). Lineage batchIds
     * only mean something when resuming the SAME checkpoint, which goes
     * through the existing-table branch, never through seeding.
+    *
+    * A missing table whose `__old` aside exists throws instead: an
+    * interrupted swap left the last generation there, and an empty
+    * table in its place would pass every earlier duplicate as new.
     */
   def open(spark: SparkSession, name: String, schema: StructType,
       bucketKey: Option[String], buckets: Int = 32,
       seed: Option[DataFrame] = None): StandingTable = {
+    graft.io.Artifact.requireNoOrphanAside(spark, name)
     if (!spark.catalog.tableExists(name)) {
       val rows = seed.getOrElse(spark.createDataFrame(
         spark.sparkContext.emptyRDD[org.apache.spark.sql.Row], schema))
@@ -167,28 +166,7 @@ object StandingTable {
     spark.sql(s"DROP TABLE IF EXISTS $staged")
     write(spark.table(table).withColumn("batch_id", lit(-1L)), staged,
       e.bucket, "error")
-    swap(spark, Seq(staged -> table))
-  }
-
-  /** Put each fully written `staged` table in place of its `live`
-    * one, aside first: every live table is renamed to `<live>__old`
-    * before any staged one takes its name, and the asides are dropped
-    * last. A failure mid-swap leaves the previous generation under
-    * `__old` (rename it back), never silently gone, which a
-    * drop-then-rename order would risk. The catalog has no atomic or
-    * multi-table rename, so a reader racing the renames can see a
-    * missing or mixed generation: swap between runs, never under a
-    * live query.
-    */
-  def swap(spark: SparkSession, staged: Seq[(String, String)]): Unit = {
-    def aside(live: String): String = live + "__old"
-    staged.foreach { case (_, live) => spark.sql(s"DROP TABLE IF EXISTS ${aside(live)}") }
-    staged.foreach { case (_, live) =>
-      if (spark.catalog.tableExists(live))
-        spark.sql(s"ALTER TABLE $live RENAME TO ${aside(live)}")
-    }
-    staged.foreach { case (s, live) => spark.sql(s"ALTER TABLE $s RENAME TO $live") }
-    staged.foreach { case (_, live) => spark.sql(s"DROP TABLE IF EXISTS ${aside(live)}") }
+    graft.io.Artifact.swap(spark, Seq(staged -> table))
   }
 
   private def write(rows: DataFrame, name: String,

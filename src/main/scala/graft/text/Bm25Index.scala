@@ -35,20 +35,23 @@ import org.apache.spark.sql.functions._
   * unlike IVF/PQ the ONE lifecycle is already hash-gateable end to end
   * (q177 gates build(half) → refresh(half) → probe against a DuckDB
   * replay of the frozen-stats scoring).
+  *
+  * The three tables are one [[graft.io.Artifact]]: it owns their
+  * writes, the refresh append, the staged rebuild and the drop.
   */
 object Bm25Index {
 
-  private def postingsTable(name: String): String = name + "_postings"
-  private def dfTable(name: String): String = name + "_df"
-  private def statsTable(name: String): String = name + "_stats"
+  private def artifact(name: String) =
+    graft.io.Artifact(name, Seq("postings", "df", "stats"))
 
   /** Tokenize `corpus` once and materialize all three tables. The one
     * corpus-sized shuffle beyond the tf aggregation is the dl
     * denormalization join — paid once at build, never at probe.
     */
   def build(corpus: DataFrame, idCol: String, textCol: String,
-      name: String, buckets: Int = 16): Unit = {
+      name: String): Unit = {
     val spark = corpus.sparkSession
+    val a = artifact(name)
     val tf = Retrieval.termFreqs(corpus, idCol, textCol)
       .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
     try {
@@ -56,13 +59,9 @@ object Bm25Index {
       require(nDocs > 0, "corpus must be non-empty")
       val nToks = tf.agg(coalesce(sum(col("tf")), lit(0L))).head().getLong(0)
       import spark.implicits._
-      Seq((nDocs, nToks)).toDF("n_docs", "n_toks")
-        .coalesce(1).write.format("parquet")
-        .mode("overwrite").saveAsTable(statsTable(name))
-      tf.groupBy(col("token")).agg(count(lit(1)).as("df"))
-        .write.format("parquet")
-        .mode("overwrite").saveAsTable(dfTable(name))
-      writePostings(tf, name, buckets, overwrite = true)
+      a.model("stats", Seq((nDocs, nToks)).toDF("n_docs", "n_toks"))
+      a.write("df", tf.groupBy(col("token")).agg(count(lit(1)).as("df")))
+      a.bucketed("postings", "token", postings(tf))
     } finally tf.unpersist()
   }
 
@@ -73,19 +72,14 @@ object Bm25Index {
     * second posting set for it — run [[rebuild]] or dedup upstream).
     */
   def refresh(newDocs: DataFrame, idCol: String, textCol: String,
-      name: String, buckets: Int = 16): Unit =
-    writePostings(Retrieval.termFreqs(newDocs, idCol, textCol), name,
-      buckets, overwrite = false)
+      name: String): Unit =
+    artifact(name).append("postings",
+      postings(Retrieval.termFreqs(newDocs, idCol, textCol)))
 
-  private def writePostings(tf: DataFrame, name: String, buckets: Int,
-      overwrite: Boolean): Unit = {
+  private def postings(tf: DataFrame): DataFrame = {
     val dl = tf.groupBy(col("doc_id")).agg(sum(col("tf")).as("dl"))
-    // bucket-aligned: one file per bucket, not one per (task, bucket)
-    graft.io.Bucketing.writeBucketedAligned(
-      tf.join(dl, Seq("doc_id"))
-        .select(col("token"), col("doc_id"), col("tf"), col("dl")),
-      postingsTable(name), "token", buckets,
-      if (overwrite) "overwrite" else "append")
+    tf.join(dl, Seq("doc_id"))
+      .select(col("token"), col("doc_id"), col("tf"), col("dl"))
   }
 
   /** Probe the artifact: [[Retrieval.bm25TopK]]'s exact scoring chain
@@ -102,10 +96,11 @@ object Bm25Index {
     require(k > 0, s"k must be positive, got $k")
     require(maxDfFraction > 0.0 && maxDfFraction <= 1.0,
       s"maxDfFraction must be in (0, 1], got $maxDfFraction")
-    val st = spark.table(statsTable(name)).head()
+    val a = artifact(name)
+    val st = a.read(spark, "stats").head()
     val nDocs = st.getLong(0)
     val avgdl = st.getLong(1).toDouble / nDocs.toDouble
-    val postings = spark.table(postingsTable(name))
+    val postings = a.read(spark, "postings")
     // self-match exclusion only holds meaning when ids share a key
     // space; a cross-type comparison casts to null and drops all rows
     // (the bm25TopK contract)
@@ -113,7 +108,7 @@ object Bm25Index {
       postings.schema("doc_id").dataType == queries.schema(qIdCol).dataType
     val qterms = Retrieval.tokens(queries, qIdCol, qTextCol, "query_id")
       .distinct()
-    val dfTab0 = spark.table(dfTable(name))
+    val dfTab0 = a.read(spark, "df")
       .join(broadcast(qterms.select(col("token")).distinct()), Seq("token"),
         "left_semi")
       .withColumn("idf", Retrieval.idfCol(nDocs.toDouble))
@@ -130,27 +125,16 @@ object Bm25Index {
     Retrieval.rankTopK(contrib, k)
   }
 
-  /** Offline REBUILD: re-tokenize and re-freeze on the current corpus
-    * into fresh `__rebuild` tables, then swap them in under `name`
-    * ([[graft.streaming.StandingTable.swap]]). The expensive build
-    * happens entirely before the live index is touched, and the swap
-    * moves the live tables aside first; it is not atomic across the
-    * three tables, so schedule rebuilds in maintenance windows (the
-    * [[graft.similarity.IvfIndex.rebuild]] contract).
+  /** Offline REBUILD: re-tokenize and re-freeze on the current corpus,
+    * staged in full before the swap ([[graft.io.Artifact.rebuild]]).
+    * The swap moves the live tables aside first but is not atomic
+    * across the three tables, so schedule rebuilds in maintenance
+    * windows (the [[graft.similarity.IvfIndex.rebuild]] contract).
     */
   def rebuild(corpus: DataFrame, idCol: String, textCol: String,
-      name: String, buckets: Int = 16): Unit = {
-    val spark = corpus.sparkSession
-    val tmp = name + "__rebuild"
-    drop(spark, tmp)
-    build(corpus, idCol, textCol, tmp, buckets)
-    graft.streaming.StandingTable.swap(spark,
-      Seq(postingsTable _, dfTable _, statsTable _).map(t => t(tmp) -> t(name)))
-  }
+      name: String): Unit =
+    artifact(name).rebuild(corpus.sparkSession)(build(corpus, idCol, textCol, _))
 
   /** Drop all three tables (test/maintenance convenience). */
-  def drop(spark: SparkSession, name: String): Unit =
-    Seq(postingsTable _, dfTable _, statsTable _).foreach { t =>
-      spark.sql(s"DROP TABLE IF EXISTS ${t(name)}")
-    }
+  def drop(spark: SparkSession, name: String): Unit = artifact(name).drop(spark)
 }

@@ -96,25 +96,6 @@ class WinnowIndexSpec extends SparkSpec {
     } finally WinnowIndex.drop(spark, name)
   }
 
-  test("refresh appends under the FROZEN bucket count from meta") {
-    val name = freshName()
-    try {
-      // non-default bucket count frozen at build; refresh takes NO
-      // bucket parameter — a mismatched append is impossible by
-      // construction, not by caller discipline
-      WinnowIndex.build(Seq((900L, embedded)).toDF("bench_id", "text"),
-        "bench_id", "text", name, k = 5, w = 4, buckets = 4)
-      val m = spark.table(name + "_meta").head()
-      assert(m.getInt(3) === 4)
-      WinnowIndex.refresh(
-        Seq((901L, "a totally different benchmark sentence here"))
-          .toDF("bench_id", "text"), "bench_id", "text", name)
-      // both write epochs remain probe-able through the bucketed table
-      assert(WinnowIndex.probe(spark, name, corpus, "doc_id", "text",
-        minSharedFps = 2).collect().nonEmpty)
-    } finally WinnowIndex.drop(spark, name)
-  }
-
   test("decontaminateRaw: fresh index surgery == the one-shot raw operator") {
     val bench = Seq((900L, embedded)).toDF("bench_id", "text")
     val name = freshName()

@@ -12,8 +12,8 @@ class BucketingSpec extends SparkSpec {
     val lines = (1L to 2000L).flatMap(k => Seq((k, k * 10), (k, k * 10 + 1)))
       .toDF("key", "l")
 
-    Bucketing.writeBucketed(orders, "graft_bkt_orders", "key", 8)
-    Bucketing.writeBucketed(lines, "graft_bkt_lines", "key", 8)
+    Bucketing.writeBucketedAligned(orders, "graft_bkt_orders", "key", 8, "overwrite")
+    Bucketing.writeBucketedAligned(lines, "graft_bkt_lines", "key", 8, "overwrite")
 
     val prevThreshold = spark.conf.get("spark.sql.autoBroadcastJoinThreshold")
     try {
@@ -46,8 +46,9 @@ class BucketingSpec extends SparkSpec {
     try {
       // simulate the streaming-index lifecycle: one create + 5 appends
       // (each append = one small file set, like one micro-batch fold)
-      Bucketing.writeBucketed(
-        (1L to 100L).map(k => (k, s"v$k")).toDF("key", "v"), tbl, "key", 8)
+      Bucketing.writeBucketedAligned(
+        (1L to 100L).map(k => (k, s"v$k")).toDF("key", "v"), tbl, "key", 8,
+        "overwrite")
       (1 to 5).foreach { b =>
         (1L to 100L).map(k => (b * 1000L + k, s"v$b$k")).toDF("key", "v")
           .write.bucketBy(8, "key").sortBy("key")
@@ -62,8 +63,9 @@ class BucketingSpec extends SparkSpec {
       assert(spark.table(tbl).count() === 600L)
       // the property the whole exercise exists for: the compacted
       // table still joins bucket-to-bucket with NO index-side exchange
-      Bucketing.writeBucketed(
-        (1L to 600L).map(k => (k, k)).toDF("key", "x"), other, "key", 8)
+      Bucketing.writeBucketedAligned(
+        (1L to 600L).map(k => (k, k)).toDF("key", "x"), other, "key", 8,
+        "overwrite")
       spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
       val joined = spark.table(tbl).join(spark.table(other), "key")
       joined.collect()

@@ -389,6 +389,26 @@ class AnnSpec extends SparkSpec {
     } finally IvfIndex.drop(spark, name)
   }
 
+  test("PqIndex.rebuild retrains and swaps; probe reflects the new corpus") {
+    val e = spark.read.parquet("/root/testdata/sf0.001/embeddings.parquet")
+    val name = s"graft_pq_rb_${System.nanoTime()}"
+    try {
+      PqIndex.build(e.filter($"vec_id" % 2 === 0), "vec_id", "embedding",
+        name, m = 8, ks = 16)
+      assert(spark.table(s"${name}_codes")
+        .filter($"neighbor_id" % 2 === 1).count() === 0)
+      PqIndex.rebuild(e, "vec_id", "embedding", name, m = 8, ks = 16)
+      // swapped artifact covers the FULL corpus, temp tables are gone
+      assert(spark.table(s"${name}_codes").select("neighbor_id").distinct()
+        .count() === e.count())
+      assert(spark.table(s"${name}_codes").count() === e.count())
+      assert(swapLeftovers(name).isEmpty)
+      val got = PqIndex.probe(spark, name, e.filter($"vec_id" < 3),
+        "vec_id", "embedding", k = 5)
+      assert(got.count() === 15L)
+    } finally PqIndex.drop(spark, name)
+  }
+
   test("PqIndex: probe-after-build matches pqTopK exactly (same seed)") {
     val e = spark.read.parquet("/root/testdata/sf0.001/embeddings.parquet")
     val q = e.filter($"vec_id" < 5)
