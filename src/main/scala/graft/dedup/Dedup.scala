@@ -1983,6 +1983,15 @@ object Dedup {
     // identical, the roster still covers self-loop-only ids).
     val pCp = DatasetBridge.localCheckpointFresh(
       pairs.select(col(idA).as("__pa"), col(idB).as("__pb")))
+    // a pair relation that fits the broadcast threshold at 16 B per
+    // pair finishes on the driver; above it, with broadcasts off (-1)
+    // or with a null id, the star rounds run
+    if (pCp.df.schema.forall(_.dataType == org.apache.spark.sql.types.LongType) &&
+        pCp.rows * 16 <= pairs.sparkSession.sessionState.conf.autoBroadcastJoinThreshold)
+      unionFindLabels(pCp) match {
+        case Some(labels) => pCp.release(); return labels
+        case None =>
+      }
     // every round's checkpoint materialization ALSO folds the
     // convergence checksum (count, xor of xxhash64(hi, lo)) inside the
     // same action — one job per round instead of the r18
@@ -2051,6 +2060,37 @@ object Dedup {
           coalesce(col("root"), col("id")).as("cluster_id"))
         .localCheckpoint(true)
     } finally { cur.release(); pCp.release() }
+  }
+
+  /** [[clustersStar]]'s driver finish: a union-find whose roots are the
+    * components' min ids, the rounds' labels; None when an id is null. */
+  private def unionFindLabels(pairs:
+      org.apache.spark.sql.graftbridge.DatasetBridge.FreshCheckpoint): Option[DataFrame] = {
+    val parts = pairs.rdd.mapPartitions { it =>
+      val b = Array.newBuilder[Long]
+      val ok = it.forall(r => !r.isNullAt(0) && !r.isNullAt(1) &&
+        { b += r.getLong(0); b += r.getLong(1); true })
+      Iterator.single(if (ok) b.result() else null)
+    }.collect()
+    Option.when(!parts.contains(null)) {
+      val flat = parts.flatten
+      val ids = flat.sorted
+      var n = 0 // distinct ids, compacted to the front of `ids`
+      for (x <- ids) if (n == 0 || ids(n - 1) != x) { ids(n) = x; n += 1 }
+      val parent = Array.range(0, n)
+      @annotation.tailrec def find(x: Int): Int = // with path halving
+        if (parent(x) == x) x else { parent(x) = parent(parent(x)); find(parent(x)) }
+      def root(id: Long) = find(java.util.Arrays.binarySearch(ids, 0, n, id))
+      for (e <- 0 until flat.length by 2) {
+        val (a, b) = (root(flat(e)), root(flat(e + 1)))
+        parent(math.max(a, b)) = math.min(a, b)
+      }
+      // over an RDD, so the plan carries no rows
+      val spark = pairs.df.sparkSession
+      spark.createDataFrame(spark.sparkContext.parallelize(
+          (0 until n).map(i => (ids(i), ids(find(i))))))
+        .toDF("id", "cluster_id").localCheckpoint(true)
+    }
   }
 
   /** Incremental connected components: fold a batch of NEW near-dup

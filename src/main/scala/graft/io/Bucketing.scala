@@ -1,6 +1,7 @@
 package graft.io
 
 import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.functions.col
 
 /** Bucketed-table sinks (SCALE.md "Joins"): writing both sides of a
   * recurring fact-fact join bucketed (+sorted) by the join key makes
@@ -10,51 +11,37 @@ import org.apache.spark.sql.DataFrame
   */
 object Bucketing {
 
-  /** Bucket-ALIGNED write: the task↔bucket 1:1 discipline of
+  /** Bucket-ALIGNED write: the task↔bucket discipline of
     * [[compactBucketed]] as a reusable sink for every bucketed-table
     * build and per-batch append in the engine.
     *
     * A bucketed `saveAsTable` does NOT shuffle: each incoming task
     * sorts its rows by bucket id and opens one file per bucket it
-    * holds, so an unaligned write emits up to tasks × buckets files.
-    * Measured on the q95 per-batch index fold (sf0.1, 4k rows/batch):
-    * ~1000 row-sized parquet files and ~2.8 s per append vs 32 files
-    * and ~0.95 s aligned — the append was the dominant per-batch cost
-    * (guide §6 small-files, both write-side open/commit overhead and
-    * read-side listing for every later probe). `repartition(buckets,
-    * key)` uses the same pmod(murmur3) assignment as the bucket-id
-    * function, so partition i holds exactly bucket i; AQE and
-    * autoBucketedScan are pinned off around the write because both can
-    * silently undo the alignment (local-read rewrite of the exchange /
-    * EnsureRequirements dropping it against a bucketed scan — see
-    * [[compactBucketed]]'s note, both observed). The pin is scoped to
-    * this one action: everything in `df`'s plan is O(input) and
-    * per-call; callers' other queries run outside it. A caller that
-    * overlaps this write with other queries on its session passes a
-    * frame rebound to a cloned session (`DatasetBridge.rebind`,
-    * as StreamingDedup does), so the pin lands on the clone.
+    * holds, so an unaligned write emits up to tasks × buckets files
+    * (measured on the q95 per-batch index fold, sf0.1: ~1000 row-sized
+    * files per append). Here the rows are first repartitioned by
+    * Spark's own bucket-id expression (`pmod(murmur3(key), buckets)`,
+    * the one the writer files rows by), so every bucket arrives whole
+    * in one task and a write makes at most one file per bucket. The
+    * shuffle is a by-column repartition, which adaptive execution may
+    * coalesce (whole partitions, so whole buckets) but never splits:
+    * a 400-row append runs in one task, a full build in up to
+    * `buckets`. No session conf is touched, so the write may run
+    * concurrently with other queries on its session.
     */
   def writeBucketedAligned(df: DataFrame, table: String, key: String,
       buckets: Int, mode: String): Unit = {
-    val sess = df.sparkSession
-    val aqe = "spark.sql.adaptive.enabled"
-    val abs = "spark.sql.sources.bucketing.autoBucketedScan.enabled"
-    val aqeWas = sess.conf.get(aqe, "true")
-    val absWas = sess.conf.get(abs, "true")
-    try {
-      sess.conf.set(aqe, "false")
-      sess.conf.set(abs, "false")
-      df.repartition(buckets, org.apache.spark.sql.functions.col(key))
-        .write
-        .bucketBy(buckets, key)
-        .sortBy(key)
-        .format("parquet")
-        .mode(mode)
-        .saveAsTable(table)
-    } finally {
-      sess.conf.set(aqe, aqeWas)
-      sess.conf.set(abs, absWas)
-    }
+    import org.apache.spark.sql.catalyst.plans.physical.HashPartitioning
+    import org.apache.spark.sql.graftbridge.ColumnBridge
+    val bucketId = ColumnBridge.column(HashPartitioning(
+      Seq(ColumnBridge.expression(col(key))), buckets).partitionIdExpression)
+    df.repartition(bucketId)
+      .write
+      .bucketBy(buckets, key)
+      .sortBy(key)
+      .format("parquet")
+      .mode(mode)
+      .saveAsTable(table)
   }
 
   /** Bucket-PRESERVING compaction for the append-only index tables
@@ -87,17 +74,12 @@ object Bucketing {
     val before = parquetFiles(table)
     val tmp = table + "__compact"
     spark.sql(s"DROP TABLE IF EXISTS $tmp")
-    // File count = writing tasks × buckets-per-task, so the write must
-    // arrive with task ↔ bucket 1:1 — [[writeBucketedAligned]]'s
-    // repartition + AQE/autoBucketedScan pin (two optimizer behaviors
-    // silently break the alignment, both observed here, 46-47 files
-    // for 8 buckets: AQE re-splits/coalesces the repartition's shuffle
-    // read, mixing buckets within tasks; with AQE off,
-    // EnsureRequirements drops the repartition as redundant against
-    // the bucketed scan's claimed partitioning, and
-    // DisableUnnecessaryBucketedScan then reverts the scan to
-    // FILE-based splits). The plan is scan → exchange(buckets) →
-    // per-task sort+write, exactly one file per non-empty bucket.
+    // File count = writing tasks × buckets-per-task. The aligning
+    // repartition is on the bucket id, not on `key`: one on `key` into
+    // `buckets` partitions equals the bucketed scan's partitioning, so
+    // the planner drops it and the scan reverts to file splits (46-47
+    // files for 8 buckets, observed). The plan is scan → exchange(bucket
+    // id) → per-task sort+write, one file per non-empty bucket.
     val rows = spark.table(table)
     val nRows = rows.count()
     writeBucketedAligned(rows, tmp, key, buckets, "overwrite")

@@ -586,10 +586,9 @@ object Pipelines {
     * (shard, ord) assignment over the same units — the full epoch-
     * varying read plan, reproducible from the doc ids alone.
     *
-    * Composition only — every stage keeps its own oracle gate; scale
-    * shape is the sum of the documented stage shapes (two corpus
-    * shuffles from curation, the map-only chunk explode, one shard
-    * window, one nShards-row aggregation, one window per epoch).
+    * Composition only — every stage keeps its own oracle gate. The
+    * units are built once ([[DatasetBridge.shuffledOnce]]), so the
+    * assignment, manifest and epoch order share one curation run.
     */
   def exportTrainingData(docs: DataFrame, benchmark: DataFrame,
       cfg: CurationConfig = CurationConfig(), nShards: Int = 1024,
@@ -601,14 +600,14 @@ object Pipelines {
       "chunkStride without chunkTokens — set the window size too")
     val (curated, release) =
       curateCorpusManaged(docs, benchmark, cfg, importanceTarget, embeddings)
-    val units = chunkTokens.fold(curated.select(col("doc_id"), col("text"))) {
-      ct =>
+    val units = DatasetBridge.shuffledOnce(
+      chunkTokens.fold(curated.select(col("doc_id"), col("text"))) { ct =>
         Examples.chunkDocuments(curated, "doc_id", "text", ct,
             chunkStride.getOrElse(ct))
           .select(concat(col("doc_id").cast("string"), lit(":"),
             col("chunk_id").cast("string")).as("doc_id"),
             col("chunk_text").as("text"))
-    }
+      })
     ExportResult(curated, units,
       Examples.shardAssign(units, "doc_id", "text", nShards),
       Examples.shardManifest(units, "doc_id", "text", nShards),

@@ -109,9 +109,6 @@ object StreamingDedup {
       val index = StandingTable.open(spark, tbl,
         indexSchema(docs.schema(idCol).dataType), Some("band_hash"),
         indexBuckets, initialIndex)
-      // the appends' session (see the append below): one clone for the
-      // stream's life, since its batches append one at a time
-      val appendSession = org.apache.spark.sql.graftbridge.DatasetBridge.cloneOf(spark)
       val query = StandingTable.foreachBatch(docs, tbl) {
         (batch: DataFrame, batchId: Long) =>
           // the stream executes in a CLONED SparkSession whose table-
@@ -179,28 +176,26 @@ object StreamingDedup {
           // the append and the caller's sink are INDEPENDENT jobs —
           // verdicts' plan is pinned off the table (see above), so the
           // append cannot perturb what onBatch reads — and each leaves
-          // most of local[N] idle; overlap them (guide §2.6). The
-          // append runs on the CLONED appendSession: the aligned writer pins
-          // AQE off around its write (measured ~2× faster and −10
-          // jobs/run than an unpinned append), and a session-scoped
-          // pin on THIS session would race onBatch's concurrent
-          // planning — the clone isolates the conf while sharing the
-          // external catalog, so the rows land in the same table. The
-          // await before returning keeps the batch-completion contract
-          // (both landed) and the at-least-once replay story exactly
-          // as sequential: a failure of either side replays the batch,
-          // the probe's batch_id guard reproduces the verdicts, and
-          // the fold's no-owner rule suppresses duplicate re-appends.
-          // A failing sink still awaits the append before its exception
-          // propagates, so no append job outlives the failed batch. Both
-          // waits are bounded (3600 s, as GdMf's checkpoint awaits): a
-          // hung append must surface, not wedge the stream.
+          // most of local[N] idle; overlap them (guide §2.6), both on
+          // the batch's session: the aligned writer sets no session
+          // conf, so the concurrent append cannot change how onBatch's
+          // queries plan, and it refreshes this session's relation
+          // cache, so the next batch's probe lists the files it wrote.
+          // The await before returning keeps the batch-completion
+          // contract (both landed) and the at-least-once replay story
+          // exactly as sequential: a failure of either side replays the
+          // batch, the probe's batch_id guard reproduces the verdicts,
+          // and the fold's no-owner rule suppresses duplicate
+          // re-appends. A failing sink still awaits the append before
+          // its exception propagates, so no append job outlives the
+          // failed batch. Both waits are bounded (3600 s, as GdMf's
+          // checkpoint awaits): a hung append must surface, not wedge
+          // the stream.
           import scala.concurrent.{Await, Future}
           val bound = scala.concurrent.duration.Duration(3600L, "s")
           val appendF = Future(
-            timed("append")(index.append(
-              org.apache.spark.sql.graftbridge.DatasetBridge.rebind(newRows, appendSession),
-              batchId)))(scala.concurrent.ExecutionContext.global)
+            timed("append")(index.append(newRows, batchId)))(
+            scala.concurrent.ExecutionContext.global)
           try timed("onBatch")(onBatch(verdicts, batchId))
           catch {
             case sinkFailure: Throwable =>
@@ -209,14 +204,9 @@ object StreamingDedup {
               throw sinkFailure
           }
           Await.result(appendF, bound)
-          // the append refreshed the CLONE's relation cache, not this
-          // session's — refresh here so the next batch's probe lists
-          // the files it just wrote (a stale listing silently misses
-          // duplicates; the original found-empirically failure mode)
-          sess.catalog.refreshTable(tbl)
       }
-      // the appends happened in the stream's cloned session; read
-      // refreshes this session's stale relation cache first
+      // the appends ran on the stream's session (Structured Streaming's
+      // clone); read refreshes this session's relation cache first
       Run(query, finalIndex = () => index.read(spark), release = () => ())
 
     case None =>

@@ -35,26 +35,6 @@ object DatasetBridge {
     def release(): Unit = rdd.unpersist(blocking = false)
   }
 
-  /** Re-plan `df`'s logical plan under another session — for running a
-    * side job (e.g. a table append) on a CLONED session so its conf
-    * pins cannot race queries planned concurrently on the original
-    * session. The clone shares the external catalog, so table writes
-    * land identically; only the session-scoped conf and relation cache
-    * are isolated (the caller refreshes its own cache afterwards when
-    * the side job mutated a table it reads).
-    */
-  def rebind(df: DataFrame, to: org.apache.spark.sql.SparkSession): DataFrame =
-    org.apache.spark.sql.classic.Dataset.ofRows(
-      to.asInstanceOf[org.apache.spark.sql.classic.SparkSession],
-      df.queryExecution.logical)
-
-  /** A fresh clone of `spark`, for [[rebind]] (cloneSession is
-    * private[sql]; this is the public doorway the conf-isolated
-    * side-write pattern needs).
-    */
-  def cloneOf(spark: org.apache.spark.sql.SparkSession): org.apache.spark.sql.SparkSession =
-    spark.asInstanceOf[org.apache.spark.sql.classic.SparkSession].cloneSession()
-
   def localCheckpointFresh(df: DataFrame): FreshCheckpoint =
     checkpointRows(df.sparkSession, df.queryExecution.toRdd.map(_.copy()), df.schema)
 

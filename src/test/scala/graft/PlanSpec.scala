@@ -267,7 +267,7 @@ class PlanSpec extends SparkSpec {
       "src/main/scala/graft/prep/Prep.scala")
     for (f <- fitFiles) {
       val src = new String(java.nio.file.Files.readAllBytes(
-        java.nio.file.Paths.get(s"/root/repo/$f")))
+        java.nio.file.Paths.get(f)))
       // every broadcast( call in these files must sit on a line with an
       // inline size gate (`if (<estimate>) broadcast(...) else ...`);
       // the one allowed raw use is the documented quadratic VERIFIER

@@ -369,6 +369,43 @@ class DedupSpec extends SparkSpec {
     labels
   }
 
+  /** `f` with broadcasts off, so [[Dedup.clustersStar]] runs its star
+    * rounds at any size instead of finishing on the driver.
+    */
+  private def withRounds[T](f: => T): T = {
+    val key = "spark.sql.autoBroadcastJoinThreshold"
+    val was = spark.conf.get(key)
+    spark.conf.set(key, "-1")
+    try f finally spark.conf.set(key, was)
+  }
+
+  test("clustersStar's driver finish equals its star rounds") {
+    def labels(pairs: Seq[(Long, Long)]): Map[Long, Long] =
+      Dedup.clustersStar(pairs.toDF("id_a", "id_b")).as[(Long, Long)].collect().toMap
+    def check(what: String, pairs: Seq[(Long, Long)]): Unit = {
+      val (driver, d) = shapeOf(labels(pairs))
+      val (rounds, r) = shapeOf(withRounds(labels(pairs)))
+      assert(driver === rounds, what)
+      assert(driver.size === pairs.flatMap(p => Seq(p._1, p._2)).distinct.size, what)
+      assert(d.jobs <= r.jobs, s"$what: the driver finish ran ${d.jobs} jobs, " +
+        s"the rounds ${r.jobs}")
+    }
+    val rnd = new scala.util.Random(29)
+    for (g <- 1 to 3)
+      check(s"random graph $g", Seq.fill(40 * g)(
+        (rnd.nextInt(30 * g).toLong, rnd.nextInt(30 * g).toLong)))
+    check("300-node chain", (0L until 299L).map(i => (i, i + 1)))
+    check("stars", (1L to 20L).map(i => (100L, 100L + i)) ++
+      (1L to 5L).map(i => (7L + i, 7L)))
+    check("self-loop-only ids", Seq((1L, 2L), (5L, 5L), (9L, 9L), (9L, 9L)))
+    check("duplicate and reversed pairs",
+      Seq((1L, 2L), (2L, 1L), (1L, 2L), (3L, 2L), (2L, 3L), (8L, 6L), (6L, 8L)))
+    // a null id leaves the labeling to the rounds, (null, null) row included
+    val withNull = Seq((Some(1L), Some(2L)), (None, Some(3L))).toDF("id_a", "id_b")
+    assert(Dedup.clustersStar(withNull).collect().toSet ===
+      withRounds(Dedup.clustersStar(withNull).collect().toSet))
+  }
+
   test("clusters finds connected components with min-id labels") {
     // components: {1,2,3,4} (chain), {10,11}, singletons absent
     val pairs = Seq((1L, 2L), (2L, 3L), (3L, 4L), (10L, 11L))
@@ -480,26 +517,28 @@ class DedupSpec extends SparkSpec {
     // must converge in ~1-2 rounds — the whole point of the
     // incremental entry. Shuffle records are the observable proxy.
     val path = (0L until 1999L).map(i => (i, i + 1))
-    val (labels, full) = shapeOf {
-      Dedup.clustersStar(path.toDF("id_a", "id_b")) // eager checkpoint
+    withRounds {
+      val (labels, full) = shapeOf {
+        Dedup.clustersStar(path.toDF("id_a", "id_b")) // eager checkpoint
+      }
+      val (inc, fold) = shapeOf {
+        Dedup.clustersStarIncremental(labels,
+          Seq((1999L, 2000L), (2000L, 2001L)).toDF("id_a", "id_b"))
+      }
+      val (fullVol, foldVol) = (full.shuffleRecordsWritten, fold.shuffleRecordsWritten)
+      val got = inc.as[(Long, Long)].collect()
+      assert(got.length === 2002 && got.forall(_._2 === 0L))
+      assert(foldVol < fullVol / 2,
+        s"fold shuffled $foldVol records vs $fullVol for the recompute — " +
+          "the incremental path is re-running the round ladder")
     }
-    val (inc, fold) = shapeOf {
-      Dedup.clustersStarIncremental(labels,
-        Seq((1999L, 2000L), (2000L, 2001L)).toDF("id_a", "id_b"))
-    }
-    val (fullVol, foldVol) = (full.shuffleRecordsWritten, fold.shuffleRecordsWritten)
-    val got = inc.as[(Long, Long)].collect()
-    assert(got.length === 2002 && got.forall(_._2 === 0L))
-    assert(foldVol < fullVol / 2,
-      s"fold shuffled $foldVol records vs $fullVol for the recompute — " +
-        "the incremental path is re-running the round ladder")
   }
 
   test("clustersStar: an exhausted round budget still yields one " +
     "consistent row per id") {
     val pairs = (0L until 199L).map(i => (i, i + 1)).toDF("id_a", "id_b")
-    val got = Dedup.clustersStar(pairs, maxIterations = 1)
-      .as[(Long, Long)].collect()
+    val got = withRounds(Dedup.clustersStar(pairs, maxIterations = 1)
+      .as[(Long, Long)].collect())
     // not converged — but the labeling must be a function: one row per
     // id, label <= id (labels only ever move down toward the min)
     assert(got.length === 200)

@@ -1,6 +1,13 @@
 package graft.io
 
+import java.nio.file.{Files, Paths}
+
+import scala.jdk.CollectionConverters._
+
+import org.apache.spark.sql.execution.datasources.BucketingUtils
 import org.apache.spark.sql.execution.exchange.ShuffleExchangeLike
+import org.apache.spark.sql.functions._
+import org.apache.spark.sql.graftbridge.{CatalogBridge, ListenerBridge}
 
 import graft.SparkSpec
 
@@ -80,5 +87,82 @@ class BucketingSpec extends SparkSpec {
       spark.sql(s"DROP TABLE IF EXISTS ${tbl}__compact")
       spark.sql(s"DROP TABLE IF EXISTS $other")
     }
+  }
+
+  /** The bucket ids of `table`'s data files. */
+  private def fileBuckets(table: String): Seq[Int] = {
+    val dir = Paths.get(CatalogBridge.entry(spark, table).location)
+    Files.list(dir).iterator().asScala.map(_.getFileName.toString)
+      .filter(_.endsWith(".parquet")).map(f => BucketingUtils.getBucketId(f).get)
+      .toSeq
+  }
+
+  test("a 400-row append into 32 buckets under AQE writes one file per " +
+    "non-empty bucket, in at most 2 tasks") {
+    val tbl = s"graft_bkt_app_${System.nanoTime()}"
+    val keys = Seq("spark.sql.adaptive.enabled", "spark.sql.shuffle.partitions")
+    val was = keys.map(spark.conf.get)
+    try {
+      spark.conf.set("spark.sql.adaptive.enabled", "true")
+      spark.conf.set("spark.sql.shuffle.partitions", "32")
+      Bucketing.writeBucketedAligned((1L to 4000L).map(k => (k, k)).toDF("key", "v"),
+        tbl, "key", 32, "overwrite")
+      val before = fileBuckets(tbl)
+      assert(before.sorted === (0 until 32))
+      val batch = (10001L to 10400L).map(k => (k, k)).toDF("key", "v")
+      val (_, shape) = shapeOf(
+        Bucketing.writeBucketedAligned(batch, tbl, "key", 32, "append"))
+      val added = fileBuckets(tbl).diff(before)
+      val want = batch.select(pmod(hash(col("key")), lit(32))).distinct()
+        .as[Int].collect().sorted.toSeq
+      assert(added.sorted === want, "one file per non-empty bucket")
+      val writeTasks = shape.stages.filterNot(ListenerBridge.isShuffleMap)
+        .map(_.numTasks).sum
+      assert(writeTasks <= 2, s"the append's write ran $writeTasks tasks")
+      assert(spark.table(tbl).count() === 4400L)
+    } finally {
+      keys.zip(was).foreach { case (k, v) => spark.conf.set(k, v) }
+      spark.sql(s"DROP TABLE IF EXISTS $tbl")
+    }
+  }
+
+  test("concurrent appends on one session leave its AQE setting as it was") {
+    val tbls = Seq("a", "b").map(t => s"graft_bkt_conc_${t}_${System.nanoTime()}")
+    val aqe = spark.conf.get("spark.sql.adaptive.enabled")
+    try {
+      tbls.foreach(t => Bucketing.writeBucketedAligned(
+        (1L to 100L).map(k => (k, k)).toDF("key", "v"), t, "key", 8, "overwrite"))
+      import scala.concurrent.{Await, Future}
+      import scala.concurrent.ExecutionContext.Implicits.global
+      val appends = tbls.map(t => Future(Bucketing.writeBucketedAligned(
+        (101L to 300L).map(k => (k, k)).toDF("key", "v"), t, "key", 8, "append")))
+      appends.foreach(Await.result(_, scala.concurrent.duration.Duration(300, "s")))
+      assert(spark.conf.get("spark.sql.adaptive.enabled") === aqe)
+      tbls.foreach { t =>
+        assert(spark.table(t).count() === 300L)
+        assert(fileBuckets(t).groupBy(identity).values.forall(_.size <= 2),
+          s"$t: more than one file per bucket per write")
+      }
+    } finally tbls.foreach(t => spark.sql(s"DROP TABLE IF EXISTS $t"))
+  }
+
+  test("no io or streaming module sets a session conf") {
+    // a writer that pins a session conf races every query planned
+    // concurrently on that session (the stream's sink overlaps its
+    // index append); the one set allowed is the events readers'
+    // legacy-nanos flag, a permanent read setting that nothing restores
+    val allowed = "spark.sql.legacy.parquet.nanosAsLong"
+    val files = Seq("io", "streaming").flatMap { d =>
+      val dir = Paths.get(s"src/main/scala/graft/$d")
+      assert(Files.isDirectory(dir), dir)
+      Files.list(dir).iterator().asScala.filter(_.toString.endsWith(".scala"))
+    }
+    assert(files.size > 10)
+    val offenders = for {
+      f <- files
+      (l, i) <- Files.readAllLines(f).asScala.zipWithIndex
+      if l.contains("conf.set(") && !l.contains(allowed)
+    } yield s"$f:${i + 1}: ${l.trim}"
+    assert(offenders.isEmpty, offenders.mkString("\n"))
   }
 }

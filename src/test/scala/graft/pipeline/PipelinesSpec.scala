@@ -589,4 +589,33 @@ class PipelinesSpec extends SparkSpec {
       assert(byEpoch(0L) !== byEpoch(1L))
     } finally r.release()
   }
+
+  test("exportTrainingData curates once: after the assignment write the " +
+    "manifest reads no file source and equals a from-scratch one") {
+    import org.apache.spark.sql.execution.FileSourceScanExec
+    import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper
+    def goodText(i: Int): String =
+      (0 until 40).map(j => s"the w${(i * 31 + j * 7) % 97} of").mkString(" ")
+    val dir = java.nio.file.Files.createTempDirectory("graft_export").toString
+    ((1 to 30).map(i => (i.toLong, goodText(i), "en", s"src${i % 3}")) :+
+      (31L, goodText(4), "en", "src1"))
+      .toDF("doc_id", "text", "lang", "source").write.parquet(s"$dir/docs")
+    val docs = spark.read.parquet(s"$dir/docs")
+    val benchmark = Seq(goodText(7)).toDF("text")
+    val cfg = Pipelines.CurationConfig(minQuality = 0.2, seqLen = 100)
+    val r = Pipelines.exportTrainingData(docs, benchmark, cfg, nShards = 4)
+    try {
+      r.assignment.write.parquet(s"$dir/shards")
+      val manifest = r.manifest
+      val got = manifest.collect().toSet
+      val scans = new AdaptiveSparkPlanHelper {}.collect(
+        manifest.queryExecution.executedPlan) { case f: FileSourceScanExec => f }
+      assert(scans.isEmpty, s"the manifest re-ran the curation's scan: $scans")
+      val fresh = Examples.shardManifest(
+        Pipelines.curateCorpus(docs, benchmark, cfg).select("doc_id", "text"),
+        "doc_id", "text", 4)
+      assert(got === fresh.collect().toSet)
+      assert(got.toSeq.map(_.getAs[Long]("n_docs")).sum === 29L)
+    } finally r.release()
+  }
 }
