@@ -297,6 +297,9 @@ object Bench {
     * slot with kernel CPU instead. Each replica shifts BOTH endpoints
     * into its own id range — a forest of R deep trees (depth
     * ~log₂ max(doc_id), the adversarial shape for star rounds).
+    * Broadcasts are off for the slot: at sf0.1 the 128-replica forest
+    * (~640k pairs, ~10.2 MB at 16 B per pair) fits the default
+    * threshold, where clustersStar would finish on the driver instead.
     */
   private[graft] def scaleCc(spark: SparkSession, sfDir: String, reps: Int): Unit = {
     import org.apache.spark.sql.functions._
@@ -305,8 +308,12 @@ object Bench {
       .filter(col("doc_id") >= 2)
       .select(col("doc_id").as("id_a"),
         (col("doc_id") / 2).cast("long").as("id_b"))
-    noop(graft.dedup.Dedup.clustersStar(
+    val threshold = "spark.sql.autoBroadcastJoinThreshold"
+    val was = spark.conf.get(threshold)
+    spark.conf.set(threshold, "-1")
+    try noop(graft.dedup.Dedup.clustersStar(
       replicate(edges, Seq("id_a", "id_b"), reps)))
+    finally spark.conf.set(threshold, was)
   }
 
   /** q273's contamination routing over an R-replicated corpus against

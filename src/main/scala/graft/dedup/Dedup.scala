@@ -3,6 +3,7 @@ package graft.dedup
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.graftbridge.DatasetBridge
 
 import graft.text.TextAnalysis
 
@@ -1971,7 +1972,6 @@ object Dedup {
     */
   def clustersStar(pairs: DataFrame, idA: String = "id_a",
       idB: String = "id_b", maxIterations: Int = 50): DataFrame = {
-    import org.apache.spark.sql.graftbridge.DatasetBridge
 
     // ONE evaluation of the pair derivation: `pairs` is typically an
     // expensive chain (the winnow self-pairing for q280/q281, the
@@ -1988,10 +1988,7 @@ object Dedup {
     // or with a null id, the star rounds run
     if (pCp.df.schema.forall(_.dataType == org.apache.spark.sql.types.LongType) &&
         pCp.rows * 16 <= pairs.sparkSession.sessionState.conf.autoBroadcastJoinThreshold)
-      unionFindLabels(pCp) match {
-        case Some(labels) => pCp.release(); return labels
-        case None =>
-      }
+      unionFindLabels(pCp) match { case Some(l) => pCp.release(); return l; case _ => }
     // every round's checkpoint materialization ALSO folds the
     // convergence checksum (count, xor of xxhash64(hi, lo)) inside the
     // same action — one job per round instead of the r18
@@ -2064,8 +2061,7 @@ object Dedup {
 
   /** [[clustersStar]]'s driver finish: a union-find whose roots are the
     * components' min ids, the rounds' labels; None when an id is null. */
-  private def unionFindLabels(pairs:
-      org.apache.spark.sql.graftbridge.DatasetBridge.FreshCheckpoint): Option[DataFrame] = {
+  private def unionFindLabels(pairs: DatasetBridge.FreshCheckpoint): Option[DataFrame] = {
     val parts = pairs.rdd.mapPartitions { it =>
       val b = Array.newBuilder[Long]
       val ok = it.forall(r => !r.isNullAt(0) && !r.isNullAt(1) &&
@@ -2085,11 +2081,15 @@ object Dedup {
         val (a, b) = (root(flat(e)), root(flat(e + 1)))
         parent(math.max(a, b)) = math.min(a, b)
       }
-      // over an RDD, so the plan carries no rows
-      val spark = pairs.df.sparkSession
-      spark.createDataFrame(spark.sparkContext.parallelize(
-          (0 until n).map(i => (ids(i), ids(find(i))))))
-        .toDF("id", "cluster_id").localCheckpoint(true)
+      val labels = new Array[Long](n)
+      for (i <- 0 until n) labels(i) = ids(find(i))
+      // primitive slices over an RDD: no boxed rows in driver, tasks or plan
+      val size = 1 + n / pairs.rdd.sparkContext.defaultParallelism
+      val slices = ids.take(n).grouped(size).zip(labels.grouped(size)).toSeq
+      DatasetBridge.checkpointRows(pairs.df.sparkSession, pairs.rdd.sparkContext
+          .parallelize(slices, slices.size max 1).flatMap { case (is, ls) => is.indices
+            .iterator.map(i => org.apache.spark.sql.catalyst.InternalRow(is(i), ls(i))) },
+        pairs.df.toDF("id", "cluster_id").schema).df
     }
   }
 

@@ -21,21 +21,26 @@ object Bucketing {
     * (measured on the q95 per-batch index fold, sf0.1: ~1000 row-sized
     * files per append). Here the rows are first repartitioned by
     * Spark's own bucket-id expression (`pmod(murmur3(key), buckets)`,
-    * the one the writer files rows by), so every bucket arrives whole
-    * in one task and a write makes at most one file per bucket. The
-    * shuffle is a by-column repartition, which adaptive execution may
-    * coalesce (whole partitions, so whole buckets) but never splits:
-    * a 400-row append runs in one task, a full build in up to
-    * `buckets`. No session conf is touched, so the write may run
-    * concurrently with other queries on its session.
+    * the one the writer files rows by), used as the shuffle partition
+    * id itself (`DirectShufflePartitionID`, not hashed again): with
+    * `spark.sql.shuffle.partitions` >= `buckets`, partition i holds
+    * exactly bucket i, so a full build writes at `buckets` tasks as
+    * before; below it, partition i holds the buckets ≡ i mod the
+    * partition count, still whole. A write therefore makes at most one
+    * file per bucket. The shuffle is a by-column repartition, which
+    * adaptive execution may coalesce (whole partitions, so whole
+    * buckets) but never splits: a 400-row append runs in one task. No
+    * session conf is touched, so the write may run concurrently with
+    * other queries on its session.
     */
   def writeBucketedAligned(df: DataFrame, table: String, key: String,
       buckets: Int, mode: String): Unit = {
+    import org.apache.spark.sql.catalyst.expressions.DirectShufflePartitionID
     import org.apache.spark.sql.catalyst.plans.physical.HashPartitioning
     import org.apache.spark.sql.graftbridge.ColumnBridge
-    val bucketId = ColumnBridge.column(HashPartitioning(
-      Seq(ColumnBridge.expression(col(key))), buckets).partitionIdExpression)
-    df.repartition(bucketId)
+    val bucketId = HashPartitioning(
+      Seq(ColumnBridge.expression(col(key))), buckets).partitionIdExpression
+    df.repartition(ColumnBridge.column(DirectShufflePartitionID(bucketId)))
       .write
       .bucketBy(buckets, key)
       .sortBy(key)

@@ -422,10 +422,13 @@ class DedupSpec extends SparkSpec {
       (30L, 31L), (31L, 32L), (32L, 30L), // triangle
       (40L, 40L))                         // self-loop only -> singleton
       .toDF("id_a", "id_b")
-    val star = Dedup.clustersStar(pairs).as[(Long, Long)].collect().toMap
+    def star = Dedup.clustersStar(pairs).as[(Long, Long)].collect().toMap
     val naive = clusters(pairs).as[(Long, Long)].collect().toMap
-    assert(star === naive + (40L -> 40L)) // naive drops self-loop-only ids
-    assert(star(4L) === 1L && star(23L) === 20L && star(32L) === 30L)
+    // the driver finish and the star rounds
+    for (got <- Seq(star, withRounds(star))) {
+      assert(got === naive + (40L -> 40L)) // naive drops self-loop-only ids
+      assert(got(4L) === 1L && got(23L) === 20L && got(32L) === 30L)
+    }
   }
 
   test("property: clustersStar == brute-force union-find on random graphs") {
@@ -446,9 +449,10 @@ class DedupSpec extends SparkSpec {
           val r = find(id.toInt)
           edges.flatMap(e => Seq(e._1, e._2)).filter(x => find(x.toInt) == r).min
         }).toMap
-      val got = Dedup.clustersStar(edges.toDF("id_a", "id_b"))
+      def got = Dedup.clustersStar(edges.toDF("id_a", "id_b"))
         .as[(Long, Long)].collect().toMap
-      assert(got === expect)
+      assert(got === expect, "driver finish")
+      assert(withRounds(got) === expect, "star rounds")
     }
   }
 
@@ -456,8 +460,8 @@ class DedupSpec extends SparkSpec {
     // a chain component has diameter 299: min-label propagation needs
     // ~299 rounds; the star rounds square the reach per pass
     val pairs = (0L until 299L).map(i => (i, i + 1)).toDF("id_a", "id_b")
-    val got = Dedup.clustersStar(pairs, maxIterations = 12)
-      .as[(Long, Long)].collect()
+    val got = withRounds(Dedup.clustersStar(pairs, maxIterations = 12)
+      .as[(Long, Long)].collect())
     assert(got.length === 300 && got.forall(_._2 === 0L))
   }
 
@@ -473,13 +477,17 @@ class DedupSpec extends SparkSpec {
       .map(_ => (rnd.nextInt(n).toLong, rnd.nextInt(n).toLong))
     val newPairs = (1 to 25) // overlaps old ids AND introduces new ones
       .map(_ => (rnd.nextInt(2 * n).toLong, rnd.nextInt(2 * n).toLong))
-    val labels = Dedup.clustersStar(oldPairs.toDF("id_a", "id_b"))
-    val inc = Dedup.clustersStarIncremental(labels,
-        newPairs.toDF("id_a", "id_b"))
-      .as[(Long, Long)].collect().toMap
-    val full = Dedup.clustersStar((oldPairs ++ newPairs).toDF("id_a", "id_b"))
-      .as[(Long, Long)].collect().toMap
-    assert(inc === full)
+    def check(what: String): Unit = {
+      val labels = Dedup.clustersStar(oldPairs.toDF("id_a", "id_b"))
+      val inc = Dedup.clustersStarIncremental(labels,
+          newPairs.toDF("id_a", "id_b"))
+        .as[(Long, Long)].collect().toMap
+      val full = Dedup.clustersStar((oldPairs ++ newPairs).toDF("id_a", "id_b"))
+        .as[(Long, Long)].collect().toMap
+      assert(inc === full, what)
+    }
+    check("driver finish")
+    withRounds(check("star rounds"))
     // a merging pair actually merges: all members share the new min
     val merged = Dedup.clustersStarIncremental(
       Seq((10L, 10L), (20L, 20L), (30L, 30L)).toDF("id", "cluster_id")
@@ -505,8 +513,8 @@ class DedupSpec extends SparkSpec {
     val docs = ((0L to 299L) :+ 1000L).map(i => (i, s"d$i"))
       .toDF("doc_id", "text")
     val pairs = (0L until 299L).map(i => (i, i + 1)).toDF("id_a", "id_b")
-    val surv = Dedup.clusterSurvivors(docs, "doc_id", pairs)
-      .select("doc_id").as[Long].collect().sorted.toSeq
+    val surv = withRounds(Dedup.clusterSurvivors(docs, "doc_id", pairs)
+      .select("doc_id").as[Long].collect().sorted.toSeq)
     assert(surv === Seq(0L, 1000L))
   }
 

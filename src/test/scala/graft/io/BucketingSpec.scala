@@ -126,6 +126,35 @@ class BucketingSpec extends SparkSpec {
     }
   }
 
+  test("a build without coalescing writes bucket i from shuffle partition " +
+    "i, or i mod the partition count below `buckets`") {
+    // the aligned write's width: one task per bucket, as wide as the
+    // bucket count allows, never two buckets hashed into one task
+    val keys = Seq("spark.sql.adaptive.coalescePartitions.enabled",
+      "spark.sql.shuffle.partitions")
+    val was = keys.map(spark.conf.get)
+    try {
+      spark.conf.set(keys.head, "false")
+      for (parts <- Seq(64, 8)) {
+        spark.conf.set(keys(1), parts.toString)
+        val tbl = s"graft_bkt_width_${parts}_${System.nanoTime()}"
+        try {
+          Bucketing.writeBucketedAligned((1L to 4000L).map(k => (k, k)).toDF("key", "v"),
+            tbl, "key", 32, "overwrite")
+          val dir = Paths.get(CatalogBridge.entry(spark, tbl).location)
+          val files = Files.list(dir).iterator().asScala.map(_.getFileName.toString)
+            .filter(_.endsWith(".parquet")).toSeq
+          // part-<task partition>-<uuid>_<bucket>.c000...parquet
+          val placed = files.map(f =>
+            (f.stripPrefix("part-").take(5).toInt, BucketingUtils.getBucketId(f).get))
+          assert(placed.map(_._2).sorted === (0 until 32), s"$parts partitions")
+          assert(placed.forall { case (task, bucket) => task == bucket % parts },
+            s"$parts partitions: (task, bucket) ${placed.sorted}")
+        } finally spark.sql(s"DROP TABLE IF EXISTS $tbl")
+      }
+    } finally keys.zip(was).foreach { case (k, v) => spark.conf.set(k, v) }
+  }
+
   test("concurrent appends on one session leave its AQE setting as it was") {
     val tbls = Seq("a", "b").map(t => s"graft_bkt_conc_${t}_${System.nanoTime()}")
     val aqe = spark.conf.get("spark.sql.adaptive.enabled")
