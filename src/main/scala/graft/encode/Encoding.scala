@@ -1,8 +1,10 @@
 package graft.encode
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.graftbridge.DatasetBridge.{localCheckpointFresh, FreshCheckpoint}
+import org.apache.spark.storage.StorageLevel
 
 /** Dense-ID encoding and global statistics (SURVEY §2.5, §1.3).
   *
@@ -11,7 +13,9 @@ import org.apache.spark.sql.functions._
   * Here the mapping IS a distributed dimension table `(key, id)`; encoding
   * is a join (broadcast when the dimension is small, shuffle otherwise),
   * decoding is the same join the other way. Nothing ever lands on the
-  * driver.
+  * driver. [[keyed]] is every trainer's set-up: the slice, the stats,
+  * both dims and the gated encode, in one probe job and one concurrent
+  * pair of dimension checkpoints.
   */
 object Encoding {
 
@@ -120,8 +124,8 @@ object Encoding {
     * size estimates and falls back to a shuffle join above it. An
     * UNCONDITIONAL hint here was the one 100-TB scale-killer left in
     * the engine (a 10⁹-key dimension would be forced through the
-    * driver) — callers that know the exact key counts use the gated
-    * overload below, which keeps the hint's plan stability without
+    * driver) — the trainers, which know the exact key counts, use
+    * [[Keyed.encode]], which keeps the hint's plan stability without
     * the blow-up.
     */
   def encode(ratings: DataFrame, userDim: DataFrame, itemDim: DataFrame): DataFrame =
@@ -129,23 +133,87 @@ object Encoding {
       .join(userDim, Seq("user"))
       .join(itemDim, Seq("item"))
 
-  /** [[encode]] with explicit, size-gated broadcast hints — for fit
-    * paths whose dims are fresh-checkpointed (planner estimates are
-    * unavailable there, so auto-broadcast can't engage) and whose key
-    * counts are already known from a stats/probe pass (zero extra
-    * jobs). Each dim is hinted only while its estimated bytes fit
-    * `thresholdBytes`; an oversized dim degrades to a shuffle join
-    * instead of a driver OOM (the [[dimBytes]] estimate, SURVEY
-    * §1.3).
+  /** `table` with a broadcast hint while its estimated bytes fit
+    * `capBytes`; above it a join with `table` degrades to a shuffle join
+    * instead of a driver-side build (the [[dimBytes]] estimate, SURVEY
+    * §1.3). The one gate of every size-gated hint in the engine.
     */
-  def encode(ratings: DataFrame, userDim: DataFrame, itemDim: DataFrame,
-      userDimBytes: Long, itemDimBytes: Long,
-      thresholdBytes: Long): DataFrame = {
-    def gate(df: DataFrame, est: Long): DataFrame =
-      if (est <= thresholdBytes) broadcast(df) else df
-    ratings
-      .join(gate(userDim, userDimBytes), Seq("user"))
-      .join(gate(itemDim, itemDimBytes), Seq("item"))
+  def gate(table: DataFrame, estBytes: Long, capBytes: Long): DataFrame =
+    if (estBytes <= capBytes) broadcast(table) else table
+
+  /** Every stage of a trainer is as wide as its data: `bytes` / 32 MB,
+    * floored at 1, or `partitions` when it is positive. Local scales get
+    * 1 partition, not the session's shuffle width (32 tasks over 2 MB is
+    * pure scheduler overhead); 100 TB gets thousands, like
+    * files.maxPartitionBytes.
+    */
+  def width(partitions: Int)(bytes: BigInt): Int =
+    if (partitions > 0) partitions
+    else (bytes / (32L << 20)).max(1).min(Int.MaxValue).toInt
+
+  /** `a` and `b` run concurrently (independent jobs, such as a fit's
+    * user- and item-side ones), under one finite await: a hung job
+    * surfaces instead of wedging the caller.
+    */
+  private[graft] def concurrently[A, B](a: => A, b: => B): (A, B) = {
+    import scala.concurrent.{Await, ExecutionContext, Future}
+    import scala.concurrent.duration.Duration
+    implicit val ec: ExecutionContext = ExecutionContext.global
+    val (fa, fb) = (Future(a), Future(b))
+    Await.result(fa.zip(fb), Duration(3600L, "s"))
+  }
+
+  /** A trainer's keyed set-up (reference `models/als.py:17-41`: the ID
+    * encoding and the global statistics) over its projected `slice`:
+    * `user`, `item`, and `rating` and `time` where the trainer has them.
+    *
+    *  - Rows with a null user or item drop here, not in the inner encode
+    *    joins, so the dims hold exactly the keys the facts use and the
+    *    stats count only user-item cells.
+    *  - The slice is persisted and coalesced to [[width]] of its plan's
+    *    size estimate (row order kept: the same dims and facts). It is
+    *    the ONE narrow scan of the source that the dims, the facts and
+    *    any trainer aggregate read.
+    *  - One probe job materializes it: the count, approximate key counts
+    *    (the [[dimensionAuto]] scale switch), the key widths (the gates'
+    *    [[dimBytes]]) and, with a `rating` column, its min, max, mean and
+    *    count.
+    *  - Both dims are fresh checkpoints, built concurrently: every
+    *    consumer of a dim would otherwise re-run its groupBy + window
+    *    plan (measured as the dominant set-up cost), and a fresh
+    *    checkpoint is explicitly releasable (`DataFrame.unpersist` is a
+    *    no-op on checkpoint-backed frames). Ids number the keys by their
+    *    earliest `time` if the slice has it, else by their lowest
+    *    `rating`, else by the key itself.
+    *
+    * `partitions` overrides [[width]]; `capBytes` caps the dims' gated
+    * broadcasts.
+    */
+  def keyed(slice: DataFrame, partitions: Int = 0,
+      capBytes: Long = DefaultAutoBroadcastDimBytes): Keyed = {
+    val columns = slice.columns.toSet
+    val kept = slice.where(col("user").isNotNull && col("item").isNotNull)
+    val persisted = kept
+      .coalesce(width(partitions)(kept.queryExecution.optimizedPlan.stats.sizeInBytes))
+      // Keyed.release drops it, once the trainer has read its facts
+      .persist(StorageLevel.MEMORY_AND_DISK)
+    val rating = if (columns("rating")) col("rating") else lit(null).cast("double")
+    val probe = persisted.agg(
+      count(lit(1)), approx_count_distinct(col("user")), approx_count_distinct(col("item")),
+      avg(length(col("user").cast("string"))), avg(length(col("item").cast("string"))),
+      // the cells a rating error covers: a null rating has none
+      min(rating), max(rating), avg(rating), count(rating)).head()
+    // null where the slice has no rows, or no rating column or rating
+    def num(i: Int, none: Double): Double = if (probe.isNullAt(i)) none else probe.getDouble(i)
+    def dim(key: String, idCol: String, approxKeys: Long): FreshCheckpoint =
+      localCheckpointFresh(dimensionAuto(persisted, key,
+        Seq("time", "rating").find(columns).getOrElse(key), idCol, approxKeys))
+    val (userDim, itemDim) = concurrently(
+      dim("user", "u_id", probe.getLong(1)), dim("item", "i_id", probe.getLong(2)))
+    // the dims' row counts are the distinct users and items
+    val stats = RatingStats(probe.getLong(0), userDim.rows, itemDim.rows,
+      num(5, Double.NaN), num(6, Double.NaN), num(7, Double.NaN), num(3, 0.0), num(4, 0.0))
+    new Keyed(persisted, stats, probe.getLong(8), userDim, itemDim, width(partitions), capBytes)
   }
 
   /** Global statistics in ONE pass (reference `models/als.py:35-41` runs
@@ -173,6 +241,50 @@ object Encoding {
       avgUserKeyBytes = if (row.isNullAt(6)) 0.0 else row.getDouble(6),
       avgItemKeyBytes = if (row.isNullAt(7)) 0.0 else row.getDouble(7))
   }
+}
+
+/** What [[Encoding.keyed]] sets up for a trainer.
+  *
+  * @param slice   the persisted, coalesced, non-null-key slice
+  * @param stats   its global statistics, with the measured key widths
+  * @param rated   its rows with a non-null rating
+  * @param userDim (user, u_id), a fresh checkpoint the trainer owns
+  * @param itemDim (item, i_id), likewise
+  * @param width   [[Encoding.width]] under the trainer's override
+  */
+final class Keyed private[encode] (
+    val slice: DataFrame,
+    val stats: RatingStats,
+    val rated: Long,
+    val userDim: FreshCheckpoint,
+    val itemDim: FreshCheckpoint,
+    val width: BigInt => Int,
+    capBytes: Long) {
+
+  /** `table`, one row per user (`users`) or per item such as a dim or a
+    * bias table, hinted for broadcast while that dim's estimated bytes
+    * fit the cap: the dims are checkpoints with no planner estimates, so
+    * the gate cannot be left to auto-broadcast.
+    */
+  def gate(table: DataFrame, users: Boolean): DataFrame =
+    Encoding.gate(table, if (users) stats.userDimBytes else stats.itemDimBytes, capBytes)
+
+  /** `facts` with `u_id` for its `user`, and for each (key column, id
+    * column) of `itemKeys` (default `item` to `i_id`) the item id: inner
+    * equi-joins with the gated dims.
+    */
+  def encode(facts: DataFrame, itemKeys: (String, String)*): DataFrame =
+    (if (itemKeys.isEmpty) Seq("item" -> "i_id") else itemKeys)
+      .foldLeft(facts.join(gate(userDim.df, users = true), Seq("user"))) {
+        case (df, (key, id)) =>
+          df.join(gate(itemDim.df.select(col("item").as(key), col("i_id").as(id)),
+            users = false), Seq(key))
+      }
+
+  /** Drops the slice; the dims stay with the trainer (its Model's states
+    * or its final checkpoints release them).
+    */
+  def release(): Unit = slice.unpersist()
 }
 
 /** Driver-side scalars of the fit (reference `models/als.py:35-41`) —

@@ -4,6 +4,8 @@ import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
+import graft.encode.Encoding
+
 /** Preparation operators (SURVEY §2.2–2.3): projection/rename, dedup,
   * keep-last-per-key dedup, column drop, train/test split.
   *
@@ -227,7 +229,7 @@ object Prep {
     */
   def negativeSample(ratings: DataFrame, userCol: String, itemCol: String,
       k: Int, oversample: Int = 3,
-      autoBroadcastDimBytes: Long = 64L << 20): DataFrame = {
+      autoBroadcastDimBytes: Long = Encoding.DefaultAutoBroadcastDimBytes): DataFrame = {
     require(k > 0, s"k must be positive, got $k")
     require(oversample >= 1, s"oversample must be >= 1, got $oversample")
     // null users/items are EXCLUDED on both engine sides: NULL sorts
@@ -247,14 +249,13 @@ object Prep {
     val nItems = probe.getLong(0)
     require(nItems > 0, "ratings must contain at least one item")
     val keyBytes = if (probe.isNullAt(1)) 0.0 else probe.getDouble(1)
-    val itemDim = graft.encode.Encoding
+    val itemDim = Encoding
       .dimensionAuto(base, "item", "item", "idx", approxKeys = nItems)
       .withColumn("idx", col("idx").cast("long"))
     // size-gate the dimension broadcast on the Encoding.dimBytes estimate:
     // row overhead + 8-byte idx + the SAMPLED key width
-    val dimFits = graft.encode.Encoding.dimBytes(nItems, keyBytes + 8.0) <=
-      autoBroadcastDimBytes
-    val bDim = if (dimFits) broadcast(itemDim) else itemDim
+    val bDim = Encoding.gate(itemDim, Encoding.dimBytes(nItems, keyBytes + 8.0),
+      autoBroadcastDimBytes)
     val trials = k * oversample
     val cand = ratings.select(col(userCol).as("user")).distinct()
       .filter(col("user").isNotNull)
@@ -411,10 +412,8 @@ object Prep {
     * the per-user negative count is a |users|-row broadcast.
     */
   def bprTriplets(ratings: DataFrame, userCol: String, itemCol: String,
-      k: Int, oversample: Int = 3,
-      autoBroadcastDimBytes: Long = 64L << 20): DataFrame = {
-    val neg = negativeSample(ratings, userCol, itemCol, k, oversample,
-      autoBroadcastDimBytes)
+      k: Int, oversample: Int = 3): DataFrame = {
+    val neg = negativeSample(ratings, userCol, itemCol, k, oversample)
       .select(col("user"), col("item").as("neg_item"), col("neg_no"))
     val negCnt = neg.groupBy(col("user")).agg(count(lit(1)).as("__m"))
     val pos = ratings

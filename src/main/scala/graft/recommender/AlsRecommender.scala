@@ -18,7 +18,10 @@ import graft.encode.{Encoding, RatingStats}
   * user/item biases, let ALS factorize the residuals, and serve through
   * [[Serving.predict]] with the reference's exact clip +
   * cold-start-mean semantics, never MLlib's `coldStartStrategy="drop"`
-  * (which silently changes eval denominators, SURVEY §7.4.5).
+  * (which silently changes eval denominators, SURVEY §7.4.5). The set-up
+  * (the slice without null-key rows, its statistics and both ID
+  * dimensions) is [[Encoding.keyed]], the one [[GdMf]] and [[BprMf]]
+  * share; the fit adds the bias tables and MLlib's factorization.
   */
 object AlsRecommender {
 
@@ -29,10 +32,7 @@ object AlsRecommender {
                          // interactions only, so shrink them harder
 
       seed: Long = 42L,
-      numBlocks: Int = 32,
-      // cap for the explicit dim/bias broadcast hints in fit — above it
-      // the joins degrade to shuffle instead of a driver-side build
-      autoBroadcastDimBytes: Long = Encoding.DefaultAutoBroadcastDimBytes)
+      numBlocks: Int = 32)
 
   final case class Model(
       userState: DataFrame, // user, u_factors, u_bias
@@ -137,10 +137,10 @@ object AlsRecommender {
     // state broadcast is size-gated like every fit-path hint
     val w = Window.partitionBy(col("user"))
       .orderBy(col("score").desc, col("item"))
-    val fitsB = itemStateBytes <= Encoding.DefaultAutoBroadcastDimBytes
     shortlist
       .join(userState.select(col("user"), col("u_factors")), "user")
-      .join(if (fitsB) broadcast(itemState) else itemState, "item")
+      .join(Encoding.gate(itemState, itemStateBytes, Encoding.DefaultAutoBroadcastDimBytes),
+        "item")
       .withColumn("score",
         Serving.dot(col("u_factors"), col("i_factors")) + col("i_bias"))
       .withColumn("rank", row_number().over(w))
@@ -173,68 +173,33 @@ object AlsRecommender {
   }
 
   def fit(ratings: DataFrame, params: Params = Params()): Model = {
-    val orderCol = if (ratings.columns.contains("time")) "time" else "rating"
-    // One scan of the source feeds the dims, stats, bias aggs, and the
-    // encode; dims checkpoint once so their groupBy+window plan doesn't
-    // re-run per broadcast consumer (same measured trap as GdMf.fit).
-    val r = ratings
-      .select(Seq("user", "item", "rating", orderCol).distinct.map(col): _*)
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    // stats first (one pass over the cache): the exact key counts feed
-    // the dimension-build scale switch. Fresh checkpoints (not
-    // Dataset.localCheckpoint): releasable via Model.release(), and
-    // immune to the Spark 4 stats-compounding trap.
-    import org.apache.spark.sql.graftbridge.DatasetBridge
-    import scala.concurrent.{Await, ExecutionContext, Future}
-    import scala.concurrent.duration.Duration
-    implicit val ec: ExecutionContext = ExecutionContext.global
-    val stats = Encoding.ratingStats(r)
-    // independent jobs over the shared cache — run concurrently
-    // (finite await so a hung job surfaces instead of wedging the fit)
+    // The keyed set-up (Encoding.keyed): one scan of the source, over the
+    // rows with a user and an item, feeds the dims, the stats, the bias
+    // aggregates and the encode.
+    val keyed = Encoding.keyed(
+      ratings.select(Seq("user", "item", "rating", "time").filter(ratings.columns.contains)
+        .map(col): _*))
+    val (r, stats) = (keyed.slice, keyed.stats)
     // The reference's decomposition is `mean + u_bias + i_bias + P·Q`
     // (models/als.py:79). Mirror it: damped user/item biases from the
     // training deviations, then ALS factorizes the *residuals* — the
     // published reason its tuned runs beat raw MLlib ALS (BASELINE.md).
-    // The user-bias agg depends only on the shared cache (not on the
-    // dims), so it runs in the same concurrent batch as the two
-    // dimension builds; only the item bias is inherently sequential
-    // (it subtracts u_bias).
+    // The item bias subtracts u_bias. Both are fresh checkpoints
+    // (releasable through Model.release), joined through the keyed gate:
+    // a bias row is a key and one double, as a dim row is a key and an id.
+    import org.apache.spark.sql.graftbridge.DatasetBridge.localCheckpointFresh
     val damping = 5.0
-    val (userDimCp, itemDimCp, ubCp) = {
-      val u = Future(DatasetBridge.localCheckpointFresh(
-        Encoding.dimensionAuto(r, "user", orderCol, "u_id", stats.nUsers)))
-      val i = Future(DatasetBridge.localCheckpointFresh(
-        Encoding.dimensionAuto(r, "item", orderCol, "i_id", stats.nItems)))
-      val b = Future(DatasetBridge.localCheckpointFresh(
-        r.groupBy("user").agg(
-          (sum(col("rating") - stats.meanRating) /
-            (count(lit(1)) + damping)).as("u_bias"))))
-      (Await.result(u, Duration(3600L, "s")),
-        Await.result(i, Duration(3600L, "s")),
-        Await.result(b, Duration(3600L, "s")))
-    }
-    val userDim = userDimCp.df
-    val itemDim = itemDimCp.df
+    val ubCp = localCheckpointFresh(r.groupBy("user").agg(
+      (sum(col("rating") - stats.meanRating) / (count(lit(1)) + damping)).as("u_bias")))
     val ub = ubCp.df
-    // The |users|/|items|-row bias tables and dims are checkpointed
-    // (no planner estimates), so their broadcast hints are size-gated
-    // on the exact stats counts — an oversized side degrades to a
-    // shuffle join instead of a driver-side build (SURVEY §1.3; the
-    // Encoding.dimBytes estimate). Bias rows are key + one double.
-    val ubBytes = Encoding.dimBytes(stats.nUsers, stats.avgUserKeyBytes + 8.0)
-    val ibBytes = Encoding.dimBytes(stats.nItems, stats.avgItemKeyBytes + 8.0)
-    def gate(df: DataFrame, est: Long): DataFrame =
-      if (est <= params.autoBroadcastDimBytes) broadcast(df) else df
-    val ibCp = DatasetBridge.localCheckpointFresh(
-      r.join(gate(ub, ubBytes), "user")
+    val ibCp = localCheckpointFresh(
+      r.join(keyed.gate(ub, users = true), "user")
         .groupBy("item").agg(
           (sum(col("rating") - stats.meanRating - col("u_bias")) /
             (count(lit(1)) + damping)).as("i_bias")))
     val ib = ibCp.df
-    val encoded = Encoding.encode(
-      r.join(gate(ub, ubBytes), "user").join(gate(ib, ibBytes), "item"),
-      userDim, itemDim,
-      stats.userDimBytes, stats.itemDimBytes, params.autoBroadcastDimBytes)
+    val encoded = keyed.encode(
+      r.join(keyed.gate(ub, users = true), "user").join(keyed.gate(ib, users = false), "item"))
       .select(col("u_id"), col("i_id"),
         (col("rating") - stats.meanRating - col("u_bias") - col("i_bias"))
           .cast("float").as("r_centered"))
@@ -246,21 +211,21 @@ object AlsRecommender {
       .setNumUserBlocks(params.numBlocks).setNumItemBlocks(params.numBlocks)
       .setColdStartStrategy("nan")
     val model = als.fit(encoded) // materializes `encoded`: ALS caches
-    // its internal block RDDs up front, so the source cache can go now
-    r.unpersist()
+    // its internal block RDDs up front, so the slice can go now
+    keyed.release()
 
     val toDouble = (c: String) =>
       transform(col("features"), f => f.cast("double")).as(c)
     val userState = model.userFactors
       .select(col("id").as("u_id"), toDouble("u_factors"))
-      .join(userDim, "u_id").join(ub, "user")
+      .join(keyed.userDim.df, "u_id").join(ub, "user")
       .select(col("user"), col("u_factors"), col("u_bias"))
     val itemState = model.itemFactors
       .select(col("id").as("i_id"), toDouble("i_factors"))
-      .join(itemDim, "i_id").join(ib, "item")
+      .join(keyed.itemDim.df, "i_id").join(ib, "item")
       .select(col("item"), col("i_factors"), col("i_bias"))
 
-    Model(userState, itemState, stats, userDim, itemDim, model,
-      backing = Seq(userDimCp, itemDimCp, ubCp, ibCp))
+    Model(userState, itemState, stats, keyed.userDim.df, keyed.itemDim.df, model,
+      backing = Seq(keyed.userDim, keyed.itemDim, ubCp, ibCp))
   }
 }

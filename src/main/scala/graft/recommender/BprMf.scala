@@ -2,7 +2,6 @@ package graft.recommender
 
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
-import org.apache.spark.storage.StorageLevel
 
 import graft.encode.Encoding
 import graft.prep.Prep
@@ -28,7 +27,10 @@ import graft.prep.Prep
   * reference artifacts that do not apply here). No biases: the states
   * are factors only.
   *
-  * Scale shape: [[GdMf]]'s. The encoded triplets are cached once as
+  * Scale shape: [[GdMf]]'s. The set-up is the same [[Encoding.keyed]]
+  * over (user, item) alone, so the dims number the keys in key order,
+  * and the triplets are sampled from its persisted slice and encoded by
+  * its gated joins. The encoded triplets are cached once as
   * user blocks sorted by (u_id, p_id, n_id), every user in one (a user
   * who rated every item has no triplet and steps by decay only), and
   * each epoch is ONE job of the fused kernel ([[FusedEpoch]] with its
@@ -47,8 +49,7 @@ object BprMf {
       // negatives per user handed to Prep.negativeSample
       negativesPerUser: Int = 5,
       oversample: Int = 3,
-      collectMetrics: Boolean = false,
-      autoBroadcastDimBytes: Long = 64L << 20)
+      collectMetrics: Boolean = false)
 
   /** Per-epoch training metrics, recorded BEFORE the epoch's update:
     * `auc` is the fraction of training triplets ranked correctly
@@ -125,91 +126,41 @@ object BprMf {
       userState, itemState.withColumn("i_bias", lit(0.0)), n)
 
   def fit(ratings: DataFrame, cfg: Config): Model = {
-    require(cfg.nFactors > 0 && cfg.epochs >= 0, "bad config")
-    val spark = ratings.sparkSession
-    import org.apache.spark.sql.graftbridge.DatasetBridge
+    FusedEpoch.requireConfig(cfg.nFactors, cfg.epochs)
+    // The keyed set-up (Encoding.keyed) over (user, item) alone, so the
+    // dims number the keys in key order: the ids feed the init.
+    val keyed = Encoding.keyed(ratings.select(col("user"), col("item")))
+    val stats = keyed.stats
 
-    // ONE deterministic sampling pass builds the epoch-stable triplet
-    // set; dims come from the same ratings relation (negatives are
-    // drawn from the rated-item universe, so the item dim covers them)
-    val ratingsP = ratings.select(col("user"), col("item"))
-      .filter(col("user").isNotNull && col("item").isNotNull)
-      .persist(StorageLevel.MEMORY_AND_DISK)
-    val probe = ratingsP.agg(
-      count(lit(1)).as("nnz"),
-      approx_count_distinct(col("user")).as("au"),
-      approx_count_distinct(col("item")).as("ai"),
-      // sampled key widths for the dim-broadcast gates below
-      avg(length(col("user").cast("string"))).as("ukb"),
-      avg(length(col("item").cast("string"))).as("ikb")).head()
-    def keyBytes(i: Int): Double = if (probe.isNullAt(i)) 0.0 else probe.getDouble(i)
-    val userDimCp = DatasetBridge.localCheckpointFresh(
-      Encoding.dimensionAuto(ratingsP, "user", "user", "u_id", probe.getLong(1)))
-    val itemDimCp = DatasetBridge.localCheckpointFresh(
-      Encoding.dimensionAuto(ratingsP, "item", "item", "i_id", probe.getLong(2)))
-    val userDim = userDimCp.df
-    val itemDim = itemDimCp.df
-
-    val triplets = Prep.bprTriplets(ratingsP, "user", "item",
-      cfg.negativesPerUser, cfg.oversample, cfg.autoBroadcastDimBytes)
-
-    // each encode join gated by ITS dim's estimated bytes (probe count
-    // × sampled key width — the Encoding.dimBytes estimate)
-    val uDimBytes = Encoding.dimBytes(probe.getLong(1), keyBytes(3) + 8.0)
-    val iDimBytes = Encoding.dimBytes(probe.getLong(2), keyBytes(4) + 8.0)
-    def gate(df: DataFrame, est: Long): DataFrame =
-      if (est <= cfg.autoBroadcastDimBytes) broadcast(df) else df
-    val facts = triplets
-      .join(gate(userDim, uDimBytes), "user")
-      .join(gate(itemDim.select(col("item").as("pos_item"),
-        col("i_id").as("p_id")), iDimBytes), "pos_item")
-      .join(gate(itemDim.select(col("item").as("neg_item"),
-        col("i_id").as("n_id")), iDimBytes), "neg_item")
+    // ONE deterministic sampling pass over the slice builds the
+    // epoch-stable triplet set (negatives are drawn from the rated-item
+    // universe, so the item dim covers them), encoded through the gated
+    // dims.
+    val facts = keyed.encode(
+      Prep.bprTriplets(keyed.slice, "user", "item", cfg.negativesPerUser, cfg.oversample),
+      "pos_item" -> "p_id", "neg_item" -> "n_id")
       .select(col("u_id"), col("p_id"), col("n_id"))
 
-    // The epochs' triplet cache, built before the ratings are dropped (an
-    // epochs = 0 fit never reads it): a block per 32 MB at ~24 B per
-    // triplet, one triplet per rated cell, as GdMf sizes its facts.
-    val parts = math.max(1L, probe.getLong(0) * 24L / (32L << 20)).toInt
-    val blocks = if (cfg.epochs > 0) FusedEpoch.triplets(facts, userDim, parts) else null
+    // The epochs' triplet cache, built before the slice is dropped (an
+    // epochs = 0 fit never reads it), sized as GdMf sizes its facts: one
+    // triplet per rated cell at ~24 B.
+    val blocks = if (cfg.epochs > 0)
+      FusedEpoch.triplets(facts, keyed.userDim.df, keyed.width(BigInt(stats.nRatings) * 24))
+      else null
     val nTriplets = if (cfg.epochs > 0) blocks.map(_.from.last.toLong).reduce(_ + _) else 0L
-    ratingsP.unpersist()
+    keyed.release()
 
-    // the lazy init states: an epochs = 0 Model's, and every fit's schema
-    def initState(dim: DataFrame, idCol: String, factorsCol: String, seed: Long): DataFrame =
-      dim.withColumn(factorsCol, GdMf.initColumn(col(idCol), cfg.nFactors, seed, normal = true))
-    val uInit = initState(userDim, "u_id", "u_factors", cfg.seed)
-    val iInit = initState(itemDim, "i_id", "i_factors", cfg.seed + 1)
     val history = scala.collection.mutable.ArrayBuffer.empty[(Int, EpochMetrics)]
-    val (uState, iState, backing) = if (cfg.epochs > 0) {
-      val k = cfg.nFactors
-      val rule = FusedEpoch.Rule(k, cfg.lr, cfg.reg, mean = 0.0, userDimCp.rows,
-        itemDimCp.rows, alternating = false)
-      val fit = new FusedEpoch.States(blocks, rule, FusedEpoch.bprPass,
-        GdMf.initFor(userDim, "u_id", k, cfg.seed, normal = true),
-        GdMf.initFor(itemDim, "i_id", k, cfg.seed + 1, normal = true))
-      for (epoch <- 0 until cfg.epochs) {
-        val (ranked, loss) = fit.epoch()
-        if (cfg.collectMetrics)
-          history += ((epoch, EpochMetrics(ranked / nTriplets, loss / nTriplets)))
-      }
-      val uCp = fit.checkpoint(userDimCp, "u_id", users = true, uInit.schema)
-      val iCp = fit.checkpoint(itemDimCp, "i_id", users = false, iInit.schema)
-      fit.release()
-      userDimCp.release()
-      itemDimCp.release()
-      (uCp.df, iCp.df, Seq(uCp, iCp))
-    } else {
-      // an untrained Model keeps the lazy init states over the dim
-      // checkpoints, which then stay resident for its life
-      (uInit, iInit, Seq(userDimCp, itemDimCp))
+    val rule = FusedEpoch.Rule(cfg.nFactors, cfg.lr, cfg.reg, mean = 0.0, stats.nUsers,
+      stats.nItems, alternating = false)
+    val (userState, itemState, backing) = FusedEpoch.train(keyed, blocks, rule,
+      FusedEpoch.bprPass, cfg.epochs, cfg.seed, normal = true, biases = false) {
+      case (epoch, (ranked, loss)) if cfg.collectMetrics =>
+        history += ((epoch, EpochMetrics(ranked / nTriplets, loss / nTriplets)))
+      case _ =>
     }
-    Model(
-      userState = uState.select("user", "u_factors"),
-      itemState = iState.select("item", "i_factors"),
-      history = history.toSeq,
-      backing = backing,
+    Model(userState, itemState, history.toSeq, backing,
       itemStateBytes = Encoding.dimBytes(
-        itemDimCp.rows, keyBytes(4) + 8.0 * (cfg.nFactors + 1)))
+        stats.nItems, stats.avgItemKeyBytes + 8.0 * (cfg.nFactors + 1)))
   }
 }

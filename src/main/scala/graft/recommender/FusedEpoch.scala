@@ -10,6 +10,8 @@ import org.apache.spark.sql.graftbridge.DatasetBridge.{checkpointRows, FreshChec
 import org.apache.spark.sql.types.{LongType, StructType}
 import org.apache.spark.storage.StorageLevel
 
+import graft.encode.{Encoding, Keyed}
+
 import scala.collection.mutable.ArrayBuilder
 import scala.reflect.ClassTag
 
@@ -78,6 +80,42 @@ private[recommender] object FusedEpoch {
     * `itemIds`): the users stepped, and the item partials.
     */
   type Pass[B <: Block] = (B, Dense, Dense, Rule) => (Dense, Partial)
+
+  /** A trainer's states over `keyed`'s dims, from the per-id init
+    * ([[GdMf.initFactors]], seeds `seed` and `seed + 1`; with zero biases
+    * where the trainer has them): `epochs` epochs of `pass` over
+    * `blocks`, one job each, handing `history` each epoch's sums, then
+    * [[States.finish]]. The states' schema is that of the init's lazy
+    * SQL form over the dims (the init is a UDF of the id: no shuffle, no
+    * scan), which is also what an untrained fit returns; its dims then
+    * stay resident for the Model's life. Returns (user, factors[, bias])
+    * and (item, factors[, bias]) with the checkpoints backing them.
+    */
+  def train[B <: Block](keyed: Keyed, blocks: RDD[B], rule: Rule, pass: Pass[B],
+      epochs: Int, seed: Long, normal: Boolean, biases: Boolean)(
+      history: (Int, (Double, Double)) => Unit): (DataFrame, DataFrame, Seq[FreshCheckpoint]) = {
+    def init(dim: DataFrame, side: String, seed: Long): DataFrame = {
+      val withFactors = dim.withColumn(s"${side}_factors",
+        GdMf.initColumn(col(s"${side}_id"), rule.k, seed, normal))
+      if (biases) withFactors.withColumn(s"${side}_bias", lit(0.0)) else withFactors
+    }
+    val (uInit, iInit) = (init(keyed.userDim.df, "u", seed), init(keyed.itemDim.df, "i", seed + 1))
+    val (u, i, backing) = if (epochs > 0) {
+      val fit = new States(blocks, rule, pass,
+        GdMf.initFor(keyed.userDim.df, "u_id", rule.k, seed, normal),
+        GdMf.initFor(keyed.itemDim.df, "i_id", rule.k, seed + 1, normal))
+      for (epoch <- 0 until epochs) history(epoch, fit.epoch())
+      val (uCp, iCp) = fit.finish(keyed, uInit.schema, iInit.schema)
+      (uCp.df, iCp.df, Seq(uCp, iCp))
+    } else (uInit, iInit, Seq(keyed.userDim, keyed.itemDim))
+    (u.drop("u_id"), i.drop("i_id"), backing)
+  }
+
+  /** A trainer's config check, before any job runs. */
+  def requireConfig(nFactors: Int, epochs: Int): Unit = {
+    require(nFactors > 0, s"nFactors must be positive, got $nFactors")
+    require(epochs >= 0, s"epochs must be non-negative, got $epochs")
+  }
 
   /** The reference's update, which steps both states ([[bprPass]] uses
     * `factor` alone: its biases stay zero).
@@ -442,6 +480,21 @@ private[recommender] object FusedEpoch {
     def release(): Unit = {
       shares.unpersist(blocking = false)
       blocks.unpersist()
+    }
+
+    /** The fit's end: both final states checkpointed concurrently over
+      * `keyed`'s dims, as `uSchema` and `iSchema`, then the blocks, the
+      * states and the dims dropped; the states no longer reference them.
+      */
+    def finish(keyed: Keyed, uSchema: StructType,
+        iSchema: StructType): (FreshCheckpoint, FreshCheckpoint) = {
+      val states = Encoding.concurrently(
+        checkpoint(keyed.userDim, "u_id", users = true, uSchema),
+        checkpoint(keyed.itemDim, "i_id", users = false, iSchema))
+      release()
+      keyed.userDim.release()
+      keyed.itemDim.release()
+      states
     }
   }
 }

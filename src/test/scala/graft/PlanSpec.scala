@@ -232,26 +232,25 @@ class PlanSpec extends SparkSpec {
     import spark.implicits._
     val r = Seq(("u1", "i1", 5.0), ("u2", "i2", 3.0))
       .toDF("user", "item", "rating")
-    val ud = Seq(("u1", 0), ("u2", 1)).toDF("user", "u_id")
-    val id = Seq(("i1", 0), ("i2", 1)).toDF("item", "i_id")
-    val thr = 64L << 20
-    val small = graft.encode.Encoding
-      .encode(r, ud, id, 1000L, 1000L, thr)
-      .queryExecution.executedPlan.toString
+    // the trainers' encode: dims of ~50 B each, under the default cap
+    val fits = graft.encode.Encoding.keyed(r)
+    val small = fits.encode(r).queryExecution.executedPlan.toString
     assert("BroadcastHashJoin".r.findAllIn(small).size === 2,
       s"small dims must be broadcast-hinted:\n$small")
     // kill auto-broadcast so only the (absent) hint could broadcast:
-    // over-threshold estimates must degrade to shuffle joins — the
-    // 100 TB posture (SURVEY §1.3), never a forced driver-side build
+    // over-cap estimates must degrade to shuffle joins — the 100 TB
+    // posture (SURVEY §1.3), never a forced driver-side build
     val auto = spark.conf.get("spark.sql.autoBroadcastJoinThreshold")
+    val over = graft.encode.Encoding.keyed(r, capBytes = 0L)
     try {
       spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
-      val big = graft.encode.Encoding
-        .encode(r, ud, id, thr + 1, thr + 1, thr)
-        .queryExecution.executedPlan.toString
+      val big = over.encode(r).queryExecution.executedPlan.toString
       assert(!big.contains("BroadcastHashJoin"),
         s"oversized dim must not carry a broadcast hint:\n$big")
-    } finally spark.conf.set("spark.sql.autoBroadcastJoinThreshold", auto)
+    } finally {
+      spark.conf.set("spark.sql.autoBroadcastJoinThreshold", auto)
+      Seq(fits, over).foreach { k => k.release(); k.userDim.release(); k.itemDim.release() }
+    }
   }
 
   test("no unconditional broadcast of a dimension-cardinality table in fit paths") {
@@ -281,6 +280,26 @@ class PlanSpec extends SparkSpec {
       assert(lines.isEmpty,
         s"$f has ungated broadcast() hints: ${lines.map { case (l, i) => s"${i + 1}: ${l.trim}" }.mkString("; ")}")
     }
+  }
+
+  test("no trainer builds its own dims or stats: the keyed set-up is Encoding.keyed") {
+    // the dims, the probe and the stats of every trainer come from one
+    // function; this greps the recommender sources so a trainer cannot
+    // grow its own copy again
+    val dir = java.nio.file.Paths.get("src/main/scala/graft/recommender")
+    val files = {
+      val s = java.nio.file.Files.list(dir)
+      try s.toArray.toSeq.map(_.asInstanceOf[java.nio.file.Path])
+        .filter(_.toString.endsWith(".scala")) finally s.close()
+    }
+    assert(files.size >= 3, s"no trainer sources under $dir")
+    val banned = Seq("dimensionAuto(", "approx_count_distinct(", "Encoding.ratingStats(")
+    val hits = for {
+      f <- files
+      (l, i) <- new String(java.nio.file.Files.readAllBytes(f)).linesIterator.zipWithIndex
+      b <- banned if l.contains(b)
+    } yield s"${f.getFileName}:${i + 1}: ${l.trim}"
+    assert(hits.isEmpty, s"trainer-side set-up: ${hits.mkString("; ")}")
   }
 
   test("q48b: fixed-LSH candidates come from a bucket equi-join, never a cartesian") {

@@ -74,4 +74,67 @@ class EncodingSpec extends SparkSpec {
     assert(st.minRating === 1.0 && st.maxRating === 5.0)
     assert(math.abs(st.meanRating - 3.25) < 1e-12)
   }
+
+  // user and item keys whose time, rating and key orders all differ, an
+  // exact duplicate row, and a null-user and a null-item row that would
+  // come first by time and by rating, and add a key, if they were kept
+  private def keyedFixture = Seq[(String, String, Double, Long)](
+    ("b", "y", 1.0, 30L), ("c", "x", 3.0, 10L), ("a", "z", 2.0, 20L),
+    ("c", "x", 3.0, 10L), (null, "z", 0.1, 0L), ("d", null, 0.1, 0L))
+    .toDF("user", "item", "rating", "time")
+
+  private def ids(dim: org.apache.spark.sql.DataFrame, key: String, id: String) =
+    dim.select(col(key), col(id).cast("long")).as[(String, Long)].collect().toMap
+
+  test("keyed orders the dims by time, else rating, else the key, from the slice's columns") {
+    val cases = Seq(
+      Seq("user", "item", "rating", "time") -> (Seq("c", "a", "b"), Seq("x", "z", "y")),
+      Seq("user", "item", "rating") -> (Seq("b", "a", "c"), Seq("y", "z", "x")),
+      Seq("user", "item") -> (Seq("a", "b", "c"), Seq("x", "y", "z")))
+    for ((cols, (users, items)) <- cases) withClue(s"$cols: ") {
+      val k = Encoding.keyed(keyedFixture.select(cols.map(col): _*))
+      assert(ids(k.userDim.df, "user", "u_id") === users.zipWithIndex.map {
+        case (u, i) => u -> i.toLong }.toMap)
+      assert(ids(k.itemDim.df, "item", "i_id") === items.zipWithIndex.map {
+        case (it, i) => it -> i.toLong }.toMap)
+      k.release(); k.userDim.release(); k.itemDim.release()
+    }
+  }
+
+  test("keyed drops null keys from the dims and the stats, and counts exact duplicates") {
+    val k = Encoding.keyed(keyedFixture)
+    val facts = k.encode(k.slice)
+    def six(s: RatingStats) =
+      (s.nRatings, s.nUsers, s.nItems, s.minRating, s.maxRating, s.meanRating)
+    assert(six(k.stats) === six(Encoding.ratingStats(facts)))
+    assert(six(k.stats) === ((4L, 3L, 3L, 1.0, 3.0, 2.25)))
+    assert(k.rated === 4L)
+    assert(k.stats.avgUserKeyBytes === 1.0 && k.stats.avgItemKeyBytes === 1.0)
+    assert(k.userDim.rows === 3L && k.itemDim.rows === 3L)
+    // the duplicate stays a fact row; every fact row has both ids
+    assert(facts.count() === 4L)
+    assert(facts.filter(col("u_id").isNull || col("i_id").isNull).count() === 0L)
+    k.release(); k.userDim.release(); k.itemDim.release()
+  }
+
+  test("keyed encode gates BprMf's triplet joins: cap 0 shuffles, the default cap broadcasts") {
+    val slice = Seq(("u1", "i1"), ("u1", "i2"), ("u2", "i2"), ("u2", "i3")).toDF("user", "item")
+    val triplets = Seq(("u1", "i1", "i3"), ("u2", "i2", "i1")).toDF("user", "pos_item", "neg_item")
+    val auto = spark.conf.get("spark.sql.autoBroadcastJoinThreshold")
+    // only a hint can broadcast now
+    spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
+    try for ((cap, broadcasts) <- Seq((0L, 0), (Encoding.DefaultAutoBroadcastDimBytes, 3)))
+      withClue(s"cap $cap: ") {
+        val k = Encoding.keyed(slice, capBytes = cap)
+        val encoded = k.encode(triplets, "pos_item" -> "p_id", "neg_item" -> "n_id")
+        val plan = encoded.queryExecution.executedPlan.toString
+        assert("BroadcastHashJoin".r.findAllIn(plan).size === broadcasts, plan)
+        // the pos and neg items read the same item ids
+        assert(encoded.select("user", "u_id", "pos_item", "p_id", "neg_item", "n_id")
+          .as[(String, Int, String, Int, String, Int)].collect().toSet ===
+          Set(("u1", 0, "i1", 0, "i3", 2), ("u2", 1, "i2", 1, "i1", 0)))
+        k.release(); k.userDim.release(); k.itemDim.release()
+      }
+    finally spark.conf.set("spark.sql.autoBroadcastJoinThreshold", auto)
+  }
 }

@@ -137,4 +137,21 @@ class AlsRecommenderSpec extends SparkSpec {
       }
     } finally spark.conf.set("spark.sql.adaptive.enabled", "true")
   }
+
+  test("fit stats equal ratingStats over the encoded facts: null-key rows are not cells") {
+    import graft.encode.Encoding
+    val raw = (data.map(r => (r.user, r.item, r.rating, r.time)) ++ Seq(
+      (null, "i0", 5.0, 1L), // null user
+      ("u0", null, 1.0, 2L))) // null item
+      .toDF("user", "item", "rating", "time")
+    val facts = Encoding.encode(raw, Encoding.dimension(raw, "user", "time", "u_id"),
+      Encoding.dimension(raw, "item", "time", "i_id"))
+    def six(s: graft.encode.RatingStats) =
+      (s.nRatings, s.nUsers, s.nItems, s.minRating, s.maxRating, s.meanRating)
+    val m = AlsRecommender.fit(raw, AlsRecommender.Params(rank = 4, maxIter = 2, numBlocks = 2))
+    try {
+      assert(six(m.stats) === six(Encoding.ratingStats(facts)))
+      assert(m.stats.nRatings === data.size.toLong)
+    } finally m.release()
+  }
 }

@@ -380,4 +380,18 @@ class GdMfSpec extends SparkSpec {
     assert(after < before,
       s"release() freed no blocks: $before -> $after persistent RDDs")
   }
+
+  test("both trainers reject a negative epoch count or a non-positive factor count by name") {
+    val df = ratingsSeq.toDF
+    val pairs = ratingsSeq.map(r => (r.user, r.item)).toDF("user", "item")
+    for ((nFactors, epochs, field) <- Seq((3, -1, "epochs"), (-1, 2, "nFactors"), (0, 2, "nFactors")))
+      withClue(s"nFactors = $nFactors, epochs = $epochs: ") {
+        val gd = intercept[IllegalArgumentException](
+          GdMf.fit(df, GdMf.Config(nFactors = nFactors, epochs = epochs)))
+        assert(gd.getMessage.contains(field))
+        val bpr = intercept[IllegalArgumentException](
+          BprMf.fit(pairs, BprMf.Config(nFactors = nFactors, epochs = epochs)))
+        assert(bpr.getMessage.contains(field))
+      }
+  }
 }
