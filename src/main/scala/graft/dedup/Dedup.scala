@@ -369,13 +369,17 @@ object Dedup {
   def wordShingles(text: Column, k: Int): Column =
     shinglesFromWords(TextAnalysis.words(TextAnalysis.normalizeText(text)), k)
 
-  /** (id, shingles) with the words array staged as its own projection. */
+  /** (id, shingles) with the words array staged as its own projection.
+    * The barrier keeps the `size > 0` filter above the shingle
+    * projection: pushed below it, the filter would shingle every
+    * document a second time.
+    */
   private def shingleTable(docs: DataFrame, idCol: String, textCol: String,
       k: Int): DataFrame =
-    docs.select(col(idCol).as("id"),
+    graft.plans.PlanBarrier.barrier(docs.select(col(idCol).as("id"),
       TextAnalysis.words(TextAnalysis.normalizeText(col(textCol))).as("__ws"))
       .withColumn("shingles", shinglesFromWords(col("__ws"), k))
-      .drop("__ws")
+      .drop("__ws"))
       .filter(size(col("shingles")) > 0)
 
   /** Exact Jaccard of two shingle arrays (arrays already distinct). */
@@ -495,19 +499,12 @@ object Dedup {
     // (MinHashSig): all numPerm mins in one generated loop at the scan —
     // no explode row blow-up, no aggregation, no shuffle (the previous
     // explode→UDAF form is kept as MinHashAgg for the aggregation-shaped
-    // variant and parity tests). Round-1 persisted this stage as a
-    // CollapseProject barrier; Spark 4.1's CollapseProject cost guard
-    // already refuses to inline non-cheap expressions into HOF lambdas
-    // (verified empirically: an eval-counting expression referenced
-    // inside the 16-band transform evaluates exactly once per row, and
-    // the optimized plan keeps the signature in its own Project), so
-    // the barrier persist only cost an extra cache write. Kept as a
-    // plain plan: one pass computes shingles→sig when `banded` below
-    // materializes. graft.plans.PlanBarrier exists for expressions
-    // that DO need a structural guarantee.
-    val withSig = sh
+    // variant and parity tests). The barrier keeps `isNotNull` above the
+    // signature projection: pushed below it, the filter evaluated the
+    // whole signature once more per document.
+    val withSig = graft.plans.PlanBarrier.barrier(sh
       .select(col("id"),
-        graft.functions.MinHashExpressions.minhashSig(col("shingles"), numPerm).as("sig"))
+        graft.functions.MinHashExpressions.minhashSig(col("shingles"), numPerm).as("sig")))
       .filter(col("sig").isNotNull)
     // banding carries only (id, band, band_hash) — never the shingle
     // arrays — so the self-join shuffles 24 bytes per row
@@ -568,10 +565,10 @@ object Dedup {
     val shB = shingleTable(bench, benchIdCol, benchTextCol, shingleK)
       // evict: LRU — plan-lifetime caches of the plain one-shot overload
       .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    def banded(sh: DataFrame) = sh
+    def banded(sh: DataFrame) = graft.plans.PlanBarrier.barrier(sh
       .select(col("id"),
         graft.functions.MinHashExpressions
-          .minhashSig(col("shingles"), numPerm).as("sig"))
+          .minhashSig(col("shingles"), numPerm).as("sig")))
       .filter(col("sig").isNotNull)
       .select(col("id"),
         bandsOf(col("sig"), bands, rowsPerBand).as(Seq("band", "band_hash")))
@@ -1573,14 +1570,16 @@ object Dedup {
     * materialized as column values — signatures are bit-identical to
     * the staged `shingleTable` + `minhashSig` pipeline (parity
     * property in MinHashSpec) at a fraction of the allocation cost.
-    * Docs too short to shingle are absent (null signatures filtered).
+    * Docs too short to shingle are absent (null signatures filtered
+    * above a barrier, so the filter reads the computed column and does
+    * not sign each document a second time).
     */
   private[graft] def sigTable(docs: DataFrame, idCol: String, textCol: String,
       shingleK: Int, numPerm: Int): DataFrame =
-    docs.select(col(idCol).as("id"),
+    graft.plans.PlanBarrier.barrier(docs.select(col(idCol).as("id"),
       graft.functions.MinHashExpressions.minhashWords(
         TextAnalysis.words(TextAnalysis.normalizeText(col(textCol))),
-        shingleK, numPerm).as("sig"))
+        shingleK, numPerm).as("sig")))
       .filter(col("sig").isNotNull)
 
   /** [[bucketOwners]] over a precomputed [[sigTable]]. */
@@ -1599,25 +1598,16 @@ object Dedup {
     * append-only fold. [[updateIndex]]'s merge rule is existing-owner-
     * wins, so an index row is immutable once written: the only effect
     * a batch can have is claiming buckets nothing owned before, i.e.
-    * the batch's own bucket owners anti-joined against the index. With
-    * the index in storage bucketed on the bucket-hash key the
-    * anti-join's index side needs no exchange, so per-batch SHUFFLE
-    * volume is O(batch bands), independent of index size — the shape
-    * that keeps a continuously-refreshed 10⁹-bucket index viable.
+    * the batch's own bucket owners anti-joined against the index. The
+    * anti-join keys are (band, band_hash), not the stored index's
+    * bucket key `band_hash` alone, so an index too big to broadcast is
+    * read with bucketing disabled and shuffled on both keys: per-batch
+    * shuffle volume is O(index) above the broadcast threshold.
     */
   def newIndexRows(index: DataFrame, survivors: DataFrame,
       idCol: String, textCol: String,
       shingleK: Int = 5, bands: Int = 16, rowsPerBand: Int = 4): DataFrame =
     bucketOwners(survivors, idCol, textCol, shingleK, bands, rowsPerBand)
-      .join(index, Seq("band", "band_hash"), "left_anti")
-
-  /** [[newIndexRows]] over a precomputed [[sigTable]] restricted to
-    * the surviving docs — the shared-signature fold the streaming twin
-    * uses to avoid recomputing the batch's minhash pass.
-    */
-  private[graft] def newIndexRowsFromSigs(index: DataFrame,
-      survivorSigs: DataFrame, bands: Int, rowsPerBand: Int): DataFrame =
-    bucketOwnersFromSigs(survivorSigs, bands, rowsPerBand)
       .join(index, Seq("band", "band_hash"), "left_anti")
 
   /** Probe a new batch against an existing [[bucketIndex]]: a batch doc
@@ -1628,9 +1618,11 @@ object Dedup {
     * short to shingle carry NULL signatures and always survive.
     *
     * Scale shape: the batch's band rows (24 B each) join the index on
-    * (band, band_hash) — broadcast when the index is small, sort-merge
-    * on bucketed storage when it is not; the corpus itself is never
-    * read. Batch-internal duplicates are deliberately out of scope
+    * (band, band_hash) — broadcast when the index is small, a
+    * sort-merge join that shuffles both sides when it is not (the keys
+    * are not a table bucketed by `band_hash` alone, so its bucketing
+    * goes unused); the corpus itself is never read. Batch-internal
+    * duplicates are deliberately out of scope
     * (run [[minHashPairs]] within the batch for those — composing both
     * is the standard two-phase refresh).
     */
@@ -1669,7 +1661,7 @@ object Dedup {
 
   /** Probe AND fold from ONE banded join against the index — the
     * streaming twin's per-batch kernel. The separate
-    * [[dedupAgainstIndexWithSigs]] + [[newIndexRowsFromSigs]] pair
+    * [[dedupAgainstIndexWithSigs]] + [[newIndexRows]] pair
     * scans and shuffle-joins the index twice per batch (probe inner
     * join, fold anti-join); this form LEFT-joins the batch's bands
     * against the full table once and serves both from it:
@@ -1686,13 +1678,20 @@ object Dedup {
     * The joined frame is localCheckpoint'ed here: both outputs must be
     * pinned to the PRE-append table state before the caller mutates
     * the table (a lazy plan would re-probe the mutated listing and
-    * self-match). Downstream derivations stay lazy — in particular the
-    * caller can feed `newRows` straight to the bucketed append with no
-    * second materialization pass.
+    * self-match). The index keeps one owner per bucket, so the join has
+    * one row per band row. When those rows × their width fit
+    * `spark.sql.autoBroadcastJoinThreshold` (the gate
+    * [[clustersStar]]'s driver finish uses) and the ids are non-null
+    * longs, the checkpoint's job also brings the rows to the driver and
+    * the fold runs there ([[foldOnDriver]]): the verdicts join the
+    * batch to the broadcast local hits and the new rows are a local
+    * frame, so neither needs a job of its own. Otherwise the
+    * distributed fold below runs over the checkpoint.
     *
     * Returns (verdicts, newRows): verdicts = every batch row + `dup_of`
-    * (lazy; derives from batch source + checkpointed hits); newRows =
-    * index-schema rows tagged `batch_id = currentBatchId` (lazy).
+    * (lazy; derives from batch source + checkpointed or local hits);
+    * newRows = index-schema rows tagged `batch_id = currentBatchId`
+    * (lazy).
     */
   private[graft] def probeAndFoldFromSigs(batch: DataFrame, sigs: DataFrame,
       fullIndex: DataFrame, currentBatchId: Long, idCol: String,
@@ -1700,18 +1699,24 @@ object Dedup {
       : (DataFrame, DataFrame) = {
     val banded = sigs.select(col("id"), col("sig"),
       bandsOf(col("sig"), bands, rowsPerBand).as(Seq("band", "band_hash")))
-    val joined = banded
-      .join(fullIndex.withColumnRenamed("batch_id", "__idx_batch"),
-        Seq("band", "band_hash"), "left")
-      .localCheckpoint()
+    // a join row holds two signatures (8 B per component) and five scalars
+    val width = 16L * bands * rowsPerBand + 64L
+    val gate = batch.sparkSession.sessionState.conf.autoBroadcastJoinThreshold
+    val maxRows =
+      if (gate >= 0 && sigs.schema("id").dataType == org.apache.spark.sql.types.LongType)
+        gate / width
+      else -1L
+    val (cp, local) = DatasetBridge.localCheckpointCollect(
+      banded.join(fullIndex.withColumnRenamed("batch_id", "__idx_batch"),
+        Seq("band", "band_hash"), "left"),
+      maxRows)
+    val joined = cp.df
     val hits = joined
       .filter(col("owner_id").isNotNull &&
         col("__idx_batch") < currentBatchId &&
         col("owner_id") =!= col("id"))
       .filter(estimatedJaccard(col("sig"), col("owner_sig")) >= threshold)
       .groupBy("id").agg(min(col("owner_id")).as("dup_of"))
-    val verdicts =
-      batch.join(hits.withColumnRenamed("id", idCol), Seq(idCol), "left")
     // survivors = banded ids NOT in hits (docs without sigs are absent
     // from `joined` already) — anti-joining the small derived `hits`
     // keeps the append plan off the batch source entirely.
@@ -1732,7 +1737,70 @@ object Dedup {
       .select(col("__m.id").as("owner_id"), col("__m.sig").as("owner_sig"),
         col("band"), col("band_hash"),
         lit(currentBatchId).as("batch_id"))
-    (verdicts, newRows)
+    local.flatMap(foldOnDriver(_, joined.schema, currentBatchId, threshold)) match {
+      case Some((hitRows, claims)) =>
+        cp.release()
+        val spark = batch.sparkSession
+        import scala.jdk.CollectionConverters._
+        val localHits = spark.createDataFrame(hitRows.asJava, hits.schema)
+        (batch.join(broadcast(localHits.withColumnRenamed("id", idCol)),
+          Seq(idCol), "left"),
+          spark.createDataFrame(claims.asJava, newRows.schema))
+      case None =>
+        (batch.join(hits.withColumnRenamed("id", idCol), Seq(idCol), "left"),
+          newRows)
+    }
+  }
+
+  /** [[probeAndFoldFromSigs]]'s fold over the collected join rows
+    * (`schema`: id, sig, band, band_hash, owner_id, owner_sig,
+    * __idx_batch): the (id, dup_of) hits and the new index rows the
+    * distributed fold computes, with the same estimator, the same
+    * replay guard and the same claimant order (smallest id, then
+    * smallest signature, as `min(struct(id, sig))` orders them); None
+    * when an id is null.
+    */
+  private def foldOnDriver(rows: Array[org.apache.spark.sql.catalyst.InternalRow],
+      schema: org.apache.spark.sql.types.StructType,
+      currentBatchId: Long, threshold: Double)
+      : Option[(Seq[org.apache.spark.sql.Row], Seq[org.apache.spark.sql.Row])] = {
+    val Seq(id, sig, band, hash, owner, ownerSig, idxBatch) =
+      Seq("id", "sig", "band", "band_hash", "owner_id", "owner_sig", "__idx_batch")
+        .map(schema.fieldIndex)
+    Option.when(!rows.exists(_.isNullAt(id))) {
+      import org.apache.spark.sql.Row
+      def longs(r: org.apache.spark.sql.catalyst.InternalRow, i: Int) =
+        r.getArray(i).toLongArray()
+      // estimatedJaccard: agreeing positions over the probe's length
+      def agreement(a: Array[Long], b: Array[Long]): Double = {
+        var same = 0
+        for (i <- 0 until math.min(a.length, b.length)) if (a(i) == b(i)) same += 1
+        same.toDouble / a.length
+      }
+      val hits = scala.collection.mutable.HashMap.empty[Long, Long]
+      for (r <- rows if !r.isNullAt(owner) && !r.isNullAt(ownerSig) &&
+          !r.isNullAt(idxBatch) && r.getLong(idxBatch) < currentBatchId &&
+          r.getLong(owner) != r.getLong(id)) {
+        val s = longs(r, sig)
+        if (s.nonEmpty && agreement(s, longs(r, ownerSig)) >= threshold) {
+          val o = r.getLong(owner)
+          hits(r.getLong(id)) = hits.get(r.getLong(id)).fold(o)(math.min(_, o))
+        }
+      }
+      def before(a: (Long, Array[Long]), b: (Long, Array[Long])): Boolean =
+        a._1 < b._1 || a._1 == b._1 &&
+          java.util.Arrays.compare(a._2, b._2) < 0
+      val claims = scala.collection.mutable.LinkedHashMap
+        .empty[(Int, Long), (Long, Array[Long])]
+      for (r <- rows if r.isNullAt(owner) && !hits.contains(r.getLong(id))) {
+        val c = (r.getLong(id), longs(r, sig))
+        val key = (r.getInt(band), r.getLong(hash))
+        if (claims.get(key).forall(before(c, _))) claims(key) = c
+      }
+      (hits.toSeq.map { case (i, o) => Row(i, o) },
+        claims.toSeq.map { case ((b, h), (i, s)) =>
+          Row(i, s.toSeq, b, h, currentBatchId) })
+    }
   }
 
   /** The standard two-phase refresh in one call: collapse near-dups
@@ -1826,10 +1894,10 @@ object Dedup {
     // explode→LongVectorReduce form remains for the aggregation-shaped
     // variant and parity tests). NULL = empty word array, dropped like
     // the explode form drops rowless docs.
-    val sigs = docs
+    val sigs = graft.plans.PlanBarrier.barrier(docs
       .select(col(idCol).as("id"),
         graft.functions.MinHashExpressions.simhashSig(
-          TextAnalysis.words(TextAnalysis.normalizeText(col(textCol)))).as("sig"))
+          TextAnalysis.words(TextAnalysis.normalizeText(col(textCol)))).as("sig")))
       .filter(col("sig").isNotNull)
     val banded = sigs.select(col("id"), col("sig"),
       posexplode(transform(sequence(lit(0), lit(chunks - 1)),
@@ -1872,10 +1940,11 @@ object Dedup {
       docs: DataFrame, idCol: String, textCol: String, blockCol: String,
       n: Int = 3, threshold: Double = 0.15,
       maxBlockSize: Int = 25000): DataFrame = {
-    val sh = docs.select(col(idCol).as("id"), col(blockCol).as("block"),
+    val sh = graft.plans.PlanBarrier.barrier(docs.select(col(idCol).as("id"),
+      col(blockCol).as("block"),
       TextAnalysis.words(TextAnalysis.normalizeText(col(textCol))).as("__ws"))
       .withColumn("sh", shinglesFromWords(col("__ws"), n))
-      .drop("__ws")
+      .drop("__ws"))
       .filter(size(col("sh")) > 0) // 0/0 jaccard would throw under ANSI
       // evict: LRU — plan-lifetime cache of the plain one-shot overload
       .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
@@ -1913,9 +1982,9 @@ object Dedup {
       // far less). Bounded to [16, 128] bands.
       val bands = math.min(128, math.max(16,
         math.ceil(math.log(0.002) / math.log(1.0 - threshold)).toInt))
-      val withSig = big
+      val withSig = graft.plans.PlanBarrier.barrier(big
         .select(col("id"), col("block"),
-          graft.functions.MinHashExpressions.minhashSig(col("sh"), bands).as("sig"))
+          graft.functions.MinHashExpressions.minhashSig(col("sh"), bands).as("sig")))
         .filter(col("sig").isNotNull)
       // banding carries (id, block, band, band_hash) — never shingles
       val banded = withSig.select(col("id"), col("block"),

@@ -6,9 +6,22 @@ import org.apache.spark.sql.catalyst.plans.logical.{LogicalPlan, UnaryNode}
 import org.apache.spark.sql.execution.{SparkPlan, SparkStrategy}
 import org.apache.spark.sql.graftbridge.PlanBridge
 
-/** A ZERO-COST optimizer barrier against expression inlining.
+/** A ZERO-COST optimizer barrier against expression inlining and
+  * duplication. It guards against two optimizer rules.
   *
-  * `CollapseProject` merges adjacent projections by substituting the
+  * Filter pushdown: `PushPredicateThroughNonJoin` moves a filter below
+  * the projection that computes the filtered column by substituting
+  * the column's defining expression into the predicate. A
+  * `filter(sig.isNotNull)` over `select(minhashSig(shingles) AS sig)`
+  * thus becomes `Filter isnotnull(minhashsig(shingles))` under
+  * `Project [minhashsig(shingles) AS sig]`, and every row computes the
+  * signature twice (PlanBarrierSpec shows the doubled expression). Any
+  * deterministic expression is copied this way, a `ScalaUDF` too (a
+  * counting UDF filtered over 100 rows of an RDD ran 199 times, and 100
+  * times under a barrier). A barrier directly above the projection
+  * keeps the filter above it, reading the computed attribute.
+  *
+  * Collapse: `CollapseProject` merges adjacent projections by substituting the
   * lower project's expressions into the upper one — the hazard being
   * an expensive producer (a whole-signature MinHash, a per-row kernel)
   * substituted into a context that evaluates it more than once per row
@@ -25,10 +38,10 @@ import org.apache.spark.sql.graftbridge.PlanBridge
   * `persist()`-as-barrier idiom this repo used previously, it costs no
   * cache write and needs no release bookkeeping.
   *
-  * Like every custom node, it also blocks pushdown across itself —
-  * place it directly ABOVE the narrow projection that computes the
-  * expensive column (scan pruning below is already settled there, and
-  * whatever sits above only consumes what the barrier emits).
+  * Because it blocks pushdown and pruning across itself, place it
+  * directly ABOVE the narrow projection that computes the expensive
+  * column (scan pruning below is already settled there, and whatever
+  * sits above only consumes what the barrier emits).
   */
 case class ProjectBarrier(child: LogicalPlan) extends UnaryNode {
   override def output: Seq[Attribute] = child.output

@@ -29,14 +29,17 @@ import graft.dedup.Dedup
   *    parquet table bucketed by `band_hash`; because index ownership is
   *    append-only (existing owners always win), each batch writes ONLY
   *    its genuinely-new bucket rows (`Dedup.newIndexRows`) as a
-  *    bucketed APPEND. Per-batch shuffle volume is O(batch bands) —
-  *    the bucketed scan side of both the probe join and the anti-join
-  *    needs no exchange — and nothing index-sized is re-persisted or
-  *    re-shuffled, so a 10⁹-bucket index sustains a 30 s trigger.
-  *    Small appended files are ordinary maintenance — but use
+  *    bucketed APPEND, and nothing index-sized is re-persisted. The
+  *    probe is one left join on (`band`, `band_hash`), which is not the
+  *    bucket key alone: an index too big to broadcast is shuffled on
+  *    both keys (the plan reads the table with bucketing disabled), so
+  *    per-batch shuffle volume is O(index) above the broadcast
+  *    threshold. A batch whose join fits that threshold folds its
+  *    verdicts and new rows on the driver (`Dedup.probeAndFoldFromSigs`).
+  *    Small appended files are ordinary maintenance — use
   *    [[graft.io.Bucketing.compactBucketed]] (offline, between runs),
-  *    NOT `Lake.compact`: a plain rewrite drops the bucket spec and
-  *    the probe join regains its index-side exchange.
+  *    not `Lake.compact`, which drops the bucket spec the appends
+  *    align to.
   *
   *  - `indexTable = None` — in-memory convenience for tests and small
   *    bounded streams: `Dedup.updateIndex` re-merges and re-persists
@@ -116,24 +119,7 @@ object StreamingDedup {
           // write the index through the batch's own session, or the
           // appends refresh the wrong cache and every later batch
           // probes a stale (empty) file listing (found empirically)
-          val sess = batch.sparkSession
-          // opt-in stage timing (-Dgraft.streamingDedup.timing=true or
-          // GRAFT_SD_TIMING=true — sbt's forked `run` drops sysprops,
-          // env survives): stderr per-stage seconds, for attributing
-          // the per-batch cost between signature pass, probe, fold and
-          // table append
-          val timing = sys.props.get("graft.streamingDedup.timing")
-            .orElse(sys.env.get("GRAFT_SD_TIMING")).contains("true")
-          def timed[A](label: String)(body: => A): A =
-            if (!timing) body
-            else {
-              val t0 = System.nanoTime()
-              val r = body
-              System.err.println(f"[sd-timing] batch=$batchId $label%-12s " +
-                f"${(System.nanoTime() - t0) / 1e9}%.3f s")
-              r
-            }
-          val fullIndex = sess.table(tbl)
+          val fullIndex = batch.sparkSession.table(tbl)
           // The batch's MinHash pass (numPerm permutations over every
           // doc's shingles) is the dominant per-batch CPU. Since the
           // r18 one-join reshape BOTH the probe and the fold read the
@@ -156,17 +142,17 @@ object StreamingDedup {
           // uniform first-batch case: no owners, every doc survives.
           // verdicts stay LAZY: their plan derives from the batch
           // source + the join checkpointed inside probeAndFoldFromSigs
-          // — no index-table reference remains, so the append below
-          // cannot perturb them and the old pin-before-mutate
-          // checkpoint would be a pure extra pass
-          val (verdicts, newRows) = timed("probe") {
-            Dedup.probeAndFoldFromSigs(batch, sigs, fullIndex, batchId,
-              idCol, bands, rowsPerBand, threshold)
-          }
+          // (or the hits a small batch folded on the driver) — no
+          // index-table reference remains, so the append below cannot
+          // perturb them and the old pin-before-mutate checkpoint
+          // would be a pure extra pass
+          val (verdicts, newRows) = Dedup.probeAndFoldFromSigs(batch, sigs,
+            fullIndex, batchId, idCol, bands, rowsPerBand, threshold)
           // newRows stays LAZY: it derives only from the checkpointed
-          // join + verdicts, so the append below is its single
-          // materialization pass (the earlier fold checkpoint was a
-          // second full pass before the write). The write itself is
+          // join (or is a local frame, after a driver fold), so the
+          // append below is its single materialization pass (the
+          // earlier fold checkpoint was a second full pass before the
+          // write). The write itself is
           // bucket-ALIGNED (StandingTable.append): one file per bucket per
           // trigger, parallel across buckets — strictly better than
           // both the earlier unaligned multi-file write and the
@@ -193,10 +179,9 @@ object StreamingDedup {
           // the stream.
           import scala.concurrent.{Await, Future}
           val bound = scala.concurrent.duration.Duration(3600L, "s")
-          val appendF = Future(
-            timed("append")(index.append(newRows, batchId)))(
+          val appendF = Future(index.append(newRows, batchId))(
             scala.concurrent.ExecutionContext.global)
-          try timed("onBatch")(onBatch(verdicts, batchId))
+          try onBatch(verdicts, batchId)
           catch {
             case sinkFailure: Throwable =>
               try Await.ready(appendF, bound)

@@ -7,6 +7,9 @@ import org.apache.spark.sql.SparkSession
   * <sfDir> <query> [query...]`. Same session config and warmup
   * discipline as [[graft.Bench]] so numbers are comparable to headliner
   * seconds; used to before/after operators that have no bench slot yet.
+  * With `GRAFT_TIME_TRACE=1` every job prints its wall time, the
+  * description of the SQL execution that submitted it and its stages'
+  * names, so a query's time can be split by phase.
   */
 object TimeQueries {
   def main(args: Array[String]): Unit = {
@@ -24,7 +27,8 @@ object TimeQueries {
     spark.sparkContext.setLogLevel("WARN")
     val trace = sys.env.get("GRAFT_TIME_TRACE").contains("1")
     val jobs = new java.util.concurrent.atomic.AtomicInteger()
-    val starts = new java.util.concurrent.ConcurrentHashMap[Int, Long]()
+    val starts = new java.util.concurrent.ConcurrentHashMap[Int, (Long, String)]()
+    val sqlDescs = new java.util.concurrent.ConcurrentHashMap[Long, String]()
     // aggregate task metrics per timed region (r19: the shuffle-vs-CPU
     // profile the trainer-epoch audit needs): bytes through the shuffle
     // both ways, executor CPU, spill
@@ -37,14 +41,28 @@ object TimeQueries {
         override def onJobStart(
             j: org.apache.spark.scheduler.SparkListenerJobStart): Unit = {
           jobs.incrementAndGet()
-          if (trace) starts.put(j.jobId, System.nanoTime())
+          if (trace) {
+            val sql = Option(j.properties)
+              .flatMap(p => Option(p.getProperty("spark.sql.execution.id")))
+              .map(id => s"sql $id: " + sqlDescs.getOrDefault(id.toLong, "?"))
+              .getOrElse("no sql execution")
+            val stages = j.stageInfos.map(s => s"${s.stageId} ${s.name}")
+            starts.put(j.jobId, (System.nanoTime(),
+              s"$sql | stages ${stages.mkString("; ")}"))
+          }
           ()
         }
         override def onJobEnd(
             j: org.apache.spark.scheduler.SparkListenerJobEnd): Unit =
-          if (trace) Option(starts.remove(j.jobId)).foreach { t0 =>
-            println(f"[trace]   job ${j.jobId}%4d ${(System.nanoTime() - t0) / 1e9}%7.3f s")
+          if (trace) Option(starts.remove(j.jobId)).foreach { case (t0, what) =>
+            println(f"[trace]   job ${j.jobId}%4d ${(System.nanoTime() - t0) / 1e9}%7.3f s  $what")
           }
+        override def onOtherEvent(
+            e: org.apache.spark.scheduler.SparkListenerEvent): Unit = e match {
+          case s: org.apache.spark.sql.execution.ui.SparkListenerSQLExecutionStart
+              if trace => sqlDescs.put(s.executionId, s.description)
+          case _ => ()
+        }
         override def onTaskEnd(
             t: org.apache.spark.scheduler.SparkListenerTaskEnd): Unit = {
           val m = t.taskMetrics

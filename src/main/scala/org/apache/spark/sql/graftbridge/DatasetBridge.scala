@@ -38,6 +38,44 @@ object DatasetBridge {
   def localCheckpointFresh(df: DataFrame): FreshCheckpoint =
     checkpointRows(df.sparkSession, df.queryExecution.toRdd.map(_.copy()), df.schema)
 
+  /** `df.localCheckpoint()` as Spark builds it (the frame keeps `df`'s
+    * partitioning, ordering and statistics), whose one materializing
+    * job also counts the rows and, when there are at most `maxRows` of
+    * them, returns them to the driver as well. Each task ships its rows
+    * only while it holds at most its even share of `maxRows`, so the
+    * driver never receives more than `maxRows` rows; a skewed relation
+    * that would fit comes back as None, like one that does not fit.
+    */
+  def localCheckpointCollect(df: DataFrame, maxRows: Long)
+      : (FreshCheckpoint, Option[Array[InternalRow]]) = {
+    import org.apache.spark.sql.execution.{LogicalRDD, SQLExecution}
+    val ds = df.asInstanceOf[org.apache.spark.sql.classic.Dataset[org.apache.spark.sql.Row]]
+    val qe = ds.queryExecution
+    SQLExecution.withNewExecutionId(qe, Some("localCheckpoint")) {
+      val rdd = qe.executedPlan.execute().map(_.copy())
+      rdd.localCheckpoint()
+      val share = maxRows / math.max(1, rdd.getNumPartitions)
+      // this collect is the RDD's first action: it computes (and, via
+      // the localCheckpoint mark, caches) every partition, as the count
+      // in checkpointRows does
+      val parts = rdd.mapPartitions { it =>
+        val kept = Array.newBuilder[InternalRow]
+        var n = 0L
+        while (it.hasNext) {
+          val r = it.next()
+          n += 1L
+          if (n <= share) kept += r
+        }
+        Iterator.single((n, if (n <= share) kept.result() else null))
+      }.collect()
+      val rows = parts.map(_._1).sum
+      val cut = org.apache.spark.sql.classic.Dataset.ofRows(ds.sparkSession,
+        LogicalRDD.fromDataset(rdd, ds, ds.isStreaming).newInstance())
+      (FreshCheckpoint(cut, rdd, rows),
+        Option.when(rows <= maxRows && parts.forall(_._2 != null))(parts.flatMap(_._2)))
+    }
+  }
+
   /** [[localCheckpointFresh]]'s cut of rows already produced as an RDD
     * of `schema` (e.g. by GdMf's epoch kernel). */
   def checkpointRows(spark: SparkSession, rdd: RDD[InternalRow],

@@ -48,6 +48,22 @@ class PlanBarrierSpec extends SparkSpec {
     assert(sumBarried === sumPlain)
   }
 
+  test("a filter on a computed column: doubled by pushdown without the barrier, once with it") {
+    // PushPredicateThroughNonJoin substitutes the column's definition
+    // into the predicate it moves below the projection, so the plain
+    // plan computes the hash once in the filter and once in the project
+    def hashes(df: org.apache.spark.sql.DataFrame): Int =
+      df.queryExecution.optimizedPlan.collect { case n => n.expressions }.flatten
+        .map(_.collect { case h: org.apache.spark.sql.catalyst.expressions.XxHash64 => h }.size)
+        .sum
+    val hashed = spark.range(100).toDF("id").select($"id", xxhash64($"id").as("h"))
+    val plain = hashed.filter($"h" =!= 0L)
+    val barred = PlanBarrier.barrier(hashed).filter($"h" =!= 0L)
+    assert(hashes(plain) === 2, plain.queryExecution.optimizedPlan.toString)
+    assert(hashes(barred) === 1, barred.queryExecution.optimizedPlan.toString)
+    assert(barred.orderBy("id").collect().toSeq === plain.orderBy("id").collect().toSeq)
+  }
+
   test("barrier survives optimization but vanishes from the physical plan") {
     val b = PlanBarrier.barrier(
       spark.range(10).toDF("id").withColumn("h", xxhash64($"id")))
